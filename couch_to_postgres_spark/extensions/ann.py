@@ -348,16 +348,12 @@ def _read_tombstones(spark, path: str) -> DataFrame | None:
     any Hadoop-supported filesystem (HDFS/S3), where a local stat is
     always false and deletes would be silently ignored — breaking the
     incremental-SemDeDup "a deleted doc must not block re-entry"
-    contract (same probe discipline as
-    ``streaming.search_stream._read_or_empty``)."""
+    contract (:func:`streaming.meta_io.try_open_parquet`)."""
     import os
 
-    from pyspark.errors import AnalysisException
+    from couch_to_postgres_spark.streaming.meta_io import try_open_parquet
 
-    try:
-        return spark.read.parquet(os.path.join(path, "tombstones"))
-    except AnalysisException:
-        return None
+    return try_open_parquet(spark, os.path.join(path, "tombstones"))
 
 
 def _live_cells(spark, path: str, cells: DataFrame) -> DataFrame:
@@ -532,7 +528,12 @@ def _score_probed(
     the cell-partitioned corpus, rank per query on rounded cosine."""
     from pyspark.sql import Window
 
-    from couch_to_postgres_spark.extensions.similarity import _as_double, _dot, _norm
+    from couch_to_postgres_spark.extensions.similarity import (
+        _as_double,
+        _dot,
+        _norm,
+        _not_self,
+    )
 
     c = corpus_cells.select(
         F.col(id_col).alias("neighbor_id"),
@@ -547,7 +548,7 @@ def _score_probed(
     sim = (
         F.broadcast(q)
         .join(c, on=["cell"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .filter(_not_self(q, c))
         .select(
             "query_id",
             "neighbor_id",

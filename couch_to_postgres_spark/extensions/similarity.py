@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 
 def _as_double(vec: Column) -> Column:
@@ -25,6 +26,21 @@ def _norm(vec: Column) -> Column:
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _not_self(q: DataFrame, c: DataFrame) -> Column:
+    """Self-exclusion of a (``q.query_id``, ``c.neighbor_id``) pair,
+    built at plan time from the two frames' schemas. When exactly one
+    side is a string the pair compares as strings — long query ids
+    probing a string-id corpus (couch ``_id``s) would otherwise ANSI-cast
+    the doc ids to bigint and throw CAST_INVALID_INPUT. Otherwise the
+    raw columns compare (numeric ids keep Spark's numeric promotion)."""
+    qid, nid = F.col("query_id"), F.col("neighbor_id")
+    if isinstance(q.schema["query_id"].dataType, StringType) != isinstance(
+        c.schema["neighbor_id"].dataType, StringType
+    ):
+        qid, nid = qid.cast("string"), nid.cast("string")
+    return qid != nid
 
 
 def cosine_topk(
@@ -54,7 +70,7 @@ def cosine_topk(
     ).withColumn("cn", _norm(F.col("cv")))
     sim = (
         F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
+        .join(c, _not_self(q, c))
         .select(
             "query_id",
             "neighbor_id",
@@ -172,7 +188,7 @@ def cosine_topk_blocked(
     ).withColumn("cn", _norm(F.col("cv")))
     sim = (
         F.broadcast(q)
-        .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("neighbor_id")))
+        .join(c, (F.col("qb") == F.col("cb")) & _not_self(q, c))
         .select(
             "query_id",
             "neighbor_id",

@@ -35,7 +35,9 @@ def register_catalog(
     mirrors: dict[str, DataFrame] | None = None,
 ) -> None:
     """Register driver tables (from ``sf_dir``) and mirror DataFrames as
-    temp views, plus the JSON UDF surface, for `spark.sql` use."""
+    temp views, plus the JSON UDF surface, for `spark.sql` use. The JSON
+    functions are registered once per session: a session that already
+    has ``json_object_set_key`` keeps its registration."""
     if sf_dir is not None:
         for name in DRIVER_TABLES:
             try:
@@ -44,4 +46,5 @@ def register_catalog(
                 continue
     for name, df in (mirrors or {}).items():
         df.createOrReplaceTempView(name)
-    register_sql_functions(spark)
+    if not spark.catalog.functionExists("json_object_set_key"):
+        register_sql_functions(spark)

@@ -35,13 +35,13 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from couch_to_postgres_spark.extensions import dedup as X
 from couch_to_postgres_spark.extensions.text import fingerprint
+from couch_to_postgres_spark.streaming.meta_io import read_components
 
 
 @dataclass
@@ -53,24 +53,11 @@ class DedupBatchStats:
     accepted: int
 
 
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    # probe by attempting the read (PATH_NOT_FOUND raises
-    # AnalysisException) rather than a driver-local os.path.exists — the
-    # index may live on any Hadoop-supported filesystem (HDFS/S3), where
-    # a local stat is always false and would silently treat an existing
-    # corpus/index as empty (same fix as search_stream._read_or_empty)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
-
-
 def read_accepted(spark: SparkSession, corpus_path: str) -> DataFrame:
-    return _read_or_empty(
-        spark,
-        corpus_path,
-        "doc_id long, text string",
+    (accepted,) = read_components(
+        spark, [(corpus_path, "doc_id long, text string")], "doc_id"
     )
+    return accepted
 
 
 def dedup_batch(
@@ -101,7 +88,14 @@ def dedup_batch(
 
     # 2. cross-batch exact: normalized-md5 join against the index.
     # The index side stays where it is; the batch md5 set broadcasts.
-    md5_index = _read_or_empty(spark, md5_path, "doc_id long, fp_md5 string")
+    md5_index, sig_index = read_components(
+        spark,
+        [
+            (md5_path, "doc_id long, fp_md5 string"),
+            (sig_path, "doc_id long, band int, signature string"),
+        ],
+        "doc_id",
+    )
     batch_fp = fingerprint(local, text_col, id_col).select(id_col, "fp_md5")
     exact_dups = (
         md5_index.join(
@@ -116,9 +110,6 @@ def dedup_batch(
     # 3-4. cross-batch near: LSH candidates against the sig index, then
     # exact-jaccard verify against the accepted texts of just the
     # candidate partners.
-    sig_index = _read_or_empty(
-        spark, sig_path, "doc_id long, band int, signature string"
-    )
     batch_sigs = X.minhash_signatures(
         after_exact, text_col, id_col, num_bands, shingle_n
     ).persist()

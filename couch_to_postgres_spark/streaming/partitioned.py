@@ -53,6 +53,11 @@ from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.operators.cdc import apply_changes, latest_changes
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
+from couch_to_postgres_spark.streaming.meta_io import (
+    _data_files,
+    open_parquet,
+    parquet_rows,
+)
 
 DEFAULT_BUCKETS = 64
 META_FILE = "_mirror_meta.json"
@@ -203,15 +208,7 @@ def _delta_path(path: str) -> str:
 
 
 def _has_delta(path: str) -> bool:
-    d = _delta_path(path)
-    if not os.path.isdir(d):
-        return False
-    for entry in os.listdir(d):
-        sub = os.path.join(d, entry)
-        if entry.startswith("bucket=") and os.path.isdir(sub):
-            if any(f.endswith(".parquet") for f in os.listdir(sub)):
-                return True
-    return False
+    return bool(_delta_buckets(path))
 
 
 def write_partitioned_mirror(
@@ -228,9 +225,7 @@ def write_partitioned_mirror(
         .parquet(path)
     )
     shutil.rmtree(_delta_path(path), ignore_errors=True)
-    spark = mirror.sparkSession
-    # parquet count() is footer-metadata only — cheap even at scale
-    total = spark.read.parquet(path).count()
+    total = parquet_rows([path])
     write_meta(path, {"num_buckets": num_buckets, "total_rows": total, "delta_rows": 0})
 
 
@@ -254,13 +249,13 @@ def _mor_view(
     bucket subset): base rows whose id has no delta entry, plus the
     delta's live resolved rows. The anti-join's delta side is fold-
     threshold-bounded and AQE broadcasts it — base never shuffles."""
-    base = spark.read.parquet(path)
+    base = open_parquet(spark, path)
     if buckets is not None:
         base = base.filter(F.col("bucket").isin(buckets))
     base = base.drop("bucket")
     if not _has_delta(path):
         return base
-    delta = spark.read.parquet(_delta_path(path))
+    delta = open_parquet(spark, _delta_path(path))
     if buckets is not None:
         delta = delta.filter(F.col("bucket").isin(buckets))
     latest = _resolve_delta(delta.drop("bucket"))
@@ -306,7 +301,7 @@ def _update_count_views(
     for name, key in count_views.items():
         vdir = os.path.join(path, "_views", name)
         if os.path.exists(vdir):
-            view = spark.read.parquet(vdir)
+            view = open_parquet(spark, vdir)
         else:
             view = full_pre.groupBy(key.alias("key")).agg(
                 F.count(F.lit(1)).alias("cnt")
@@ -493,6 +488,7 @@ def _append_delta(
     pre = _mor_view(spark, path, touched) if count_views else None
     full_pre = _mor_view(spark, path) if count_views else None
     epoch = time.time_ns()
+    delta_dir = _delta_path(path)
     rows = prepared.select(
         F.lit(epoch).alias("epoch"),
         "seq",
@@ -501,19 +497,20 @@ def _append_delta(
         "doc",
         bucket_of(F.col("id"), num_buckets).alias("bucket"),
     )
-    # a plain count, not an Observation riding the write: a
-    # runtime-empty observed write (type_filter dropping the whole
-    # batch) gets its CollectMetrics optimizer-eliminated and the
-    # dangling observation corrupts the session for later RDD-closure
-    # jobs (found via test_quality_classifier after delete-all churn).
-    # The count recomputes from the persisted batch — one small job.
-    n_appended = rows.count()
+    # the appended row count is the footers' rows of the files this
+    # append created (the path lock keeps the listing ours) — no count
+    # job, and no Observation riding the write: a runtime-empty observed
+    # write (type_filter dropping the whole batch) gets its
+    # CollectMetrics optimizer-eliminated and the dangling observation
+    # corrupts the session for later RDD-closure jobs
+    before = set(_data_files(delta_dir))
     (
         rows.repartition("bucket")  # one file per touched bucket, not per task
         .write.mode("append")
         .partitionBy("bucket")
-        .parquet(_delta_path(path))
+        .parquet(delta_dir)
     )
+    n_appended = parquet_rows(set(_data_files(delta_dir)) - before)
     meta["delta_rows"] = int(meta.get("delta_rows") or 0) + n_appended
     write_meta(path, meta)
     if count_views:
@@ -562,16 +559,31 @@ def _rewrite_buckets(
             path,
             count_views,
             pre=current,
-            post=spark.read.parquet(staging).drop("bucket"),
+            post=open_parquet(spark, staging).drop("bucket"),
             touched_ids=batch.select("id").distinct(),
             full_pre=_mor_view(spark, path),
         )
-    # swap only the touched bucket directories; retire their deltas.
-    # Replaced dirs go to the grace-period trash, not rmtree — the
-    # operator's undo window for a bad merge (see TRASH_GRACE_SECONDS).
-    for b in touched:
-        src = os.path.join(staging, f"bucket={b}")
-        dst = os.path.join(path, f"bucket={b}")
+    _swap_buckets(path, staging, touched, meta)
+
+
+def _swap_buckets(path: str, staging: str, buckets: list[int], meta: dict) -> None:
+    """Swap the staged ``bucket=`` dirs in for ``buckets``, retire the
+    replaced base dirs and those buckets' delta dirs, and commit the
+    row accounting. Replaced dirs go to the grace-period trash, not
+    rmtree — the operator's undo window for a bad merge (see
+    TRASH_GRACE_SECONDS).
+
+    ``total_rows`` advances by the footer rows swapped in minus those
+    swapped out — O(touched) file opens, no Spark job (a legacy mirror
+    without accounting counts every base footer once). ``delta_rows``
+    is the remaining delta log's footer rows, bounded by the fold
+    threshold."""
+    staged = [os.path.join(staging, f"bucket={b}") for b in buckets]
+    live = [os.path.join(path, f"bucket={b}") for b in buckets]
+    total = meta.get("total_rows")
+    if total is not None:
+        total += parquet_rows(staged) - parquet_rows(live)
+    for b, src, dst in zip(buckets, staged, live):
         old = dst + ".old"
         if os.path.exists(dst):
             os.rename(dst, old)
@@ -582,10 +594,8 @@ def _rewrite_buckets(
         _retire(old, path)
         _retire(os.path.join(_delta_path(path), f"bucket={b}"), path)
     shutil.rmtree(staging, ignore_errors=True)
-    meta["total_rows"] = spark.read.parquet(path).count()
-    meta["delta_rows"] = (
-        spark.read.parquet(_delta_path(path)).count() if _has_delta(path) else 0
-    )
+    meta["total_rows"] = total if total is not None else parquet_rows([path])
+    meta["delta_rows"] = parquet_rows([_delta_path(path)])
     write_meta(path, meta)
 
 
@@ -646,22 +656,7 @@ def fold_deltas(
     folded.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(staging)
-    for b in buckets:
-        src = os.path.join(staging, f"bucket={b}")
-        dst = os.path.join(path, f"bucket={b}")
-        old = dst + ".old"
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        else:  # bucket emptied by deletions
-            os.makedirs(dst, exist_ok=True)
-        _retire(old, path)  # grace-period trash (recovery window)
-        _retire(os.path.join(_delta_path(path), f"bucket={b}"), path)
-    shutil.rmtree(staging, ignore_errors=True)
-    meta["total_rows"] = spark.read.parquet(path).count()
-    meta["delta_rows"] = 0
-    write_meta(path, meta)
+    _swap_buckets(path, staging, buckets, meta)
     return buckets
 
 
@@ -710,7 +705,10 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
       hashes to (a misplaced row is silently invisible to pruned merges
       and point lookups);
     * **key uniqueness** — no id appears in two base buckets;
-    * **delta accounting** — meta's ``delta_rows`` matches the log;
+    * **row accounting** — meta's ``total_rows`` matches the base and
+      its ``delta_rows`` matches the log (both are maintained
+      incrementally from footers; a legacy mirror without accounting
+      has no ``total_rows`` to check);
     * **no stranded staging/old dirs** from an interrupted swap.
 
     Read-mostly: one pruned-column scan of (id, bucket) pairs + parquet
@@ -719,7 +717,7 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     if meta is None:
         return {"ok": False, "error": f"no partitioned mirror at {path}"}
     n = int(meta["num_buckets"])
-    base = spark.read.parquet(path).select("id", "bucket")
+    base = open_parquet(spark, path).select("id", "bucket")
     misplaced = base.filter(
         F.col("bucket") != bucket_of(F.col("id"), n)
     ).count()
@@ -728,9 +726,10 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     )
     base_rows = base.count()
     delta_actual = (
-        spark.read.parquet(_delta_path(path)).count() if _has_delta(path) else 0
+        open_parquet(spark, _delta_path(path)).count() if _has_delta(path) else 0
     )
     delta_meta = int(meta.get("delta_rows") or 0)
+    total_meta = meta.get("total_rows")
     stranded = [
         d
         for d in (path + ".staging", path + ".folding", path + ".rebucket")
@@ -743,6 +742,7 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     ok = (
         misplaced == 0
         and dup_keys == 0
+        and (total_meta is None or int(total_meta) == base_rows)
         and delta_actual == delta_meta
         and not stranded
     )
@@ -750,6 +750,7 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
         "ok": ok,
         "num_buckets": n,
         "base_rows": base_rows,
+        "total_rows_meta": total_meta,
         "misplaced_rows": misplaced,
         "duplicate_keys": dup_keys,
         "delta_rows_meta": delta_meta,
@@ -844,7 +845,7 @@ def compact_mirror(
         for b in sorted(todo):
             src = os.path.join(path, f"bucket={b}")
             tmp = src + ".compact"
-            spark.read.parquet(src).coalesce(target_files).write.mode(
+            open_parquet(spark, src).coalesce(target_files).write.mode(
                 "overwrite"
             ).parquet(tmp)
             old = src + ".old"

@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from couch_to_postgres_spark.operators.cdc import apply_changes
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
 from couch_to_postgres_spark.sources.changes import read_change_stream
+from couch_to_postgres_spark.streaming.meta_io import open_parquet
 
 
 CURRENT_LINK = "current"
@@ -72,14 +73,14 @@ def read_mirror(spark: SparkSession, mirror_path: str) -> DataFrame:
         return read_partitioned_mirror(spark, mirror_path)
     version = _current_version(mirror_path)
     if version is not None:
-        return spark.read.parquet(version)
+        return open_parquet(spark, version)
     return spark.createDataFrame([], MIRROR_SCHEMA)
 
 
 def read_count_view(spark: SparkSession, mirror_path: str, name: str) -> DataFrame:
     """Current state of a live count view maintained by ``upsert_mirror``
     (``count_views=...``). Columns ``(key, cnt)``."""
-    return spark.read.parquet(os.path.join(mirror_path, "_views", name))
+    return open_parquet(spark, os.path.join(mirror_path, "_views", name))
 
 
 def _update_count_view(
@@ -108,7 +109,7 @@ def _update_count_view(
 
     vdir = os.path.join(mirror_path, "_views", name)
     if os.path.exists(vdir):
-        view = spark.read.parquet(vdir)
+        view = open_parquet(spark, vdir)
     else:
         # bootstrap: one full GROUP BY over the PRE state, then the delta
         # brings it to post — after this, never a full recompute again
@@ -177,7 +178,7 @@ def upsert_mirror(
             # live views advance by O(touched) deltas between the pre
             # state (`current`, already resolved to its immutable version)
             # and the just-written post version — never a full recompute
-            post = spark.read.parquet(version_dir)
+            post = open_parquet(spark, version_dir)
             touched = batch.select("id").distinct()
             for name, key in count_views.items():
                 _update_count_view(

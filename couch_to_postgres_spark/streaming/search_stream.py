@@ -73,7 +73,10 @@ from pyspark.sql.streaming import StreamingQuery
 from couch_to_postgres_spark.extensions.search import bm25_rank_components
 from couch_to_postgres_spark.extensions.text import _words
 from couch_to_postgres_spark.streaming.meta_io import (
+    open_parquet,
+    read_components,
     read_meta_rows,
+    try_open_parquet,
     write_meta_rows,
 )
 
@@ -84,52 +87,6 @@ class SearchIndexBatchStats:
     upserts: int
     deletes: int
     postings_rows: int
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    # probe by attempting the read (PATH_NOT_FOUND / empty-dir schema
-    # inference both raise AnalysisException) rather than a driver-local
-    # os.path.exists — the index may live on any Hadoop-supported
-    # filesystem (HDFS/S3), where a local stat is always false and would
-    # silently read an existing index as empty
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
-
-
-def _read_components(
-    spark: SparkSession, specs: list[tuple[str, str]], id_col: str
-) -> list[DataFrame]:
-    """Read sibling index components ``[(path, fallback_schema), …]``;
-    a MISSING component's id column takes the dtype of whichever sibling
-    exists. The index must never cast ids: a string-id corpus (couch doc
-    ids like ``'100009-6'``) with, say, no tombstones yet must not get a
-    long-typed empty tombstone frame — the later join/union would
-    ANSI-cast the real ids to bigint and throw mid-query."""
-    reads: list[DataFrame | None] = []
-    like = None
-    for path, _ in specs:
-        try:
-            df = spark.read.parquet(path)
-            if like is None:
-                like = df
-        except AnalysisException:
-            df = None
-        reads.append(df)
-    out = []
-    for df, (_, schema) in zip(reads, specs):
-        if df is None:
-            if like is not None and id_col in dict(like.dtypes):
-                id_t = dict(like.dtypes)[id_col]
-                fields = [f.strip() for f in schema.split(",")]
-                schema = ", ".join(
-                    f"{id_col} {id_t}" if f.startswith(f"{id_col} ") else f
-                    for f in fields
-                )
-            df = spark.createDataFrame([], schema)
-        out.append(df)
-    return out
 
 
 def _all_attrs(
@@ -146,9 +103,8 @@ def _all_attrs(
         os.path.join(index_path, "attrs"),
         os.path.join(index_path, "base", "attrs"),
     ):
-        try:
-            df = spark.read.parquet(p)
-        except AnalysisException:
+        df = try_open_parquet(spark, p)
+        if df is None:
             continue
         if "id_bucket" in df.columns:
             df = df.drop("id_bucket")
@@ -190,7 +146,7 @@ def _open_partition_dirs(spark, root: str, rel_dirs) -> DataFrame | None:
     ]
     if not dirs:
         return None
-    return spark.read.option("basePath", root).parquet(*dirs)
+    return open_parquet(spark, *dirs, base_path=root)
 
 
 def _paths(index_path: str) -> tuple[str, str, str]:
@@ -383,7 +339,7 @@ def live_doclen(
     doclen_path, _, tomb_path = _paths(index_path)
     base_doclen_path, _, _ = _base_paths(index_path)
     schema = f"{id_col} long, dl double, seq long"
-    tail, base, tomb = _read_components(
+    tail, base, tomb = read_components(
         spark,
         [
             (doclen_path, schema),
@@ -466,7 +422,7 @@ def _full_postings(
     _, postings_path, _ = _paths(index_path)
     _, base_postings_path, _ = _base_paths(index_path)
     schema = f"{id_col} long, token string, tf double, seq long"
-    tail, base = _read_components(
+    tail, base = read_components(
         spark, [(postings_path, schema), (base_postings_path, schema)], id_col
     )
     return tail.select(id_col, "token", "tf", "seq").unionByName(
@@ -524,20 +480,12 @@ def base_is_live(spark: SparkSession, index_path: str) -> bool:
     can then skip the live-version merge entirely: every base postings
     row is live and unique (compaction dropped dead versions and
     deduplicated replays)."""
-
-    def _has(p: str) -> bool:
-        try:
-            spark.read.parquet(p)
-            return True
-        except AnalysisException:
-            return False
-
     doclen_path, _, tomb_path = _paths(index_path)
     _, _, meta_path = _base_paths(index_path)
     return (
         bool(read_meta_rows(spark, meta_path))
-        and not _has(doclen_path)
-        and not _has(tomb_path)
+        and try_open_parquet(spark, doclen_path) is None
+        and try_open_parquet(spark, tomb_path) is None
     )
 
 
@@ -675,16 +623,10 @@ def query_postings(
     else:
         # legacy flat base (or a non-local FS where the dir probe is
         # blind): read-attempt the whole component as before
-        try:
-            base = spark.read.parquet(base_postings_path)
-        except AnalysisException:
-            base = None
-    try:
-        tail = spark.read.parquet(postings_path)
-    except AnalysisException:
-        tail = None
+        base = try_open_parquet(spark, base_postings_path)
+    tail = try_open_parquet(spark, postings_path)
     # never-cast-ids: whichever component is missing takes the id dtype
-    # of the sibling that exists (the _read_components discipline)
+    # of the sibling that exists (the read_components discipline)
     like = base if base is not None else tail
     if like is not None and id_col in dict(like.dtypes):
         id_t = dict(like.dtypes)[id_col]
@@ -1240,12 +1182,6 @@ def bm25_topk_from_index(
     if not terms:
         raise ValueError("bm25_topk_from_index: queries must be non-empty")
 
-    def _try(p: str) -> DataFrame | None:
-        try:
-            return spark.read.parquet(p)
-        except AnalysisException:
-            return None
-
     # read-mostly fast path: a compacted base with NO tail and NO
     # tombstones IS the live set (unique row per doc, stats in meta) —
     # take N/avgdl from meta and skip the per-query corpus-wide doclen
@@ -1261,8 +1197,8 @@ def bm25_topk_from_index(
     has_stats = bool(meta_rows) and "n_live" in meta_rows[0]
     fast = (
         has_stats
-        and _try(doclen_path) is None
-        and _try(tomb_path) is None
+        and try_open_parquet(spark, doclen_path) is None
+        and try_open_parquet(spark, tomb_path) is None
     )
     # MaxScore / block-max early termination (VERDICT r12 #1): on the
     # read-mostly base with the impact layer present, answer from the
@@ -1319,7 +1255,7 @@ def bm25_topk_from_index(
             "n double, avgdl double",
         )
         # used once below (the per-candidate dl join) — no persist
-        live = spark.read.parquet(base_doclen_path).select(
+        live = open_parquet(spark, base_doclen_path).select(
             id_col, "dl", "seq"
         )
     else:
@@ -1416,7 +1352,7 @@ def bm25_topk_from_index(
                 # statement of that, keeping the fast path
                 dfs_df = spark.createDataFrame([], "token string, dft double")
         else:
-            dfs_df = _try(dfs_root)  # legacy flat dfs
+            dfs_df = try_open_parquet(spark, dfs_root)  # legacy flat dfs
     if dft_local is not None:
         dft = dft_local
     elif dfs_df is not None:
@@ -1936,7 +1872,7 @@ def compact_index(
         written = staged
         dfs_frame = _dfs_rows(written, impacts=True)
     else:
-        written = spark.read.parquet(base_postings_path)
+        written = open_parquet(spark, base_postings_path)
         dfs_frame = (
             _dfs_rows_arrow(written)
             if impacts
@@ -2066,7 +2002,7 @@ def compact_index_inplace(
     retired into the index's hidden ``.trash`` (grace-window GC, the
     exact mechanism of ``partitioned._retire``) and the staged
     replacement renamed into place. A reader planning mid-swap can see
-    a component transiently absent — ``_read_components`` degrades that
+    a component transiently absent — ``read_components`` degrades that
     to an empty frame, not a path-not-found crash — and a reader that
     PLANNED before the swap races file replacement exactly as
     partitioned.py documents for its bucket swaps: recovery window, not
@@ -2218,7 +2154,7 @@ def compact_index_incremental(
 
         schema_dl = f"{id_col} long, dl double, seq long"
         schema_tb = f"{id_col} long, seq long"
-        tail_dl, tomb = _read_components(
+        tail_dl, tomb = read_components(
             spark, [(doclen_path, schema_dl), (tomb_path, schema_tb)], id_col
         )
         if tail_dl.isEmpty() and tomb.isEmpty():
@@ -2313,9 +2249,10 @@ def compact_index_incremental(
         )
         _mark("churned_discovery")
         schema_po = f"{id_col} {id_t}, token string, tf double, seq long"
-        tail_po = _read_or_empty(spark, postings_path, schema_po).select(
-            id_col, "token", "tf", "seq"
+        (tail_po,) = read_components(
+            spark, [(postings_path, schema_po)], id_col
         )
+        tail_po = tail_po.select(id_col, "token", "tf", "seq")
         sub_of_id = F.pmod(F.hash(F.col(id_col)), F.lit(n_sub))
         tail_pairs = tail_po.select(
             F.pmod(F.hash("token"), F.lit(n_buckets)).alias("tb"),
@@ -2431,7 +2368,9 @@ def compact_index_incremental(
         # (never-cast-ids rule): if churn deleted every live row in the
         # affected pairs, a hardcoded bigint empty frame joining
         # string-id `churned` would ANSI-cast-throw mid-compaction
-        staged_po = _read_or_empty(spark, staged_postings, base_schema_po)
+        (staged_po,) = read_components(
+            spark, [(staged_postings, base_schema_po)], id_col
+        )
         _mark("staged_postings")
         # dfs + doclen are INDEPENDENT derivations of the staged
         # postings (both read the files just written, never each
@@ -2578,10 +2517,7 @@ def compact_index_incremental(
         attrs_mode = None
         base_attrs_root = os.path.join(index_path, "base", "attrs")
         has_base_attrs = _has_partition_prefix(base_attrs_root, "id_bucket=")
-        try:
-            tail_attrs = spark.read.parquet(os.path.join(index_path, "attrs"))
-        except AnalysisException:
-            tail_attrs = None
+        tail_attrs = try_open_parquet(spark, os.path.join(index_path, "attrs"))
         if has_base_attrs:
             aff_dirs_a = [f"id_bucket={b}" for b in aff_id_buckets]
             base_a_aff = _open_partition_dirs(
@@ -2652,7 +2588,7 @@ def compact_index_incremental(
                 *[F.max_by(c, "seq").alias(c) for c in other],
             )
             alive = (
-                spark.read.parquet(base_doclen_path)
+                open_parquet(spark, base_doclen_path)
                 .select(id_col)
                 .join(churned, on=id_col, how="left_anti")
                 .unionByName(churned_live.select(id_col))
@@ -2781,7 +2717,7 @@ def _live_delta_for_churn(
     meta's ``n_live`` so a watchdog tick never aggregates the corpus."""
     doclen_path, _, tomb_path = _paths(index_path)
     base_doclen_path, _, _ = _base_paths(index_path)
-    tail_dl, tomb = _read_components(
+    tail_dl, tomb = read_components(
         spark,
         [
             (doclen_path, f"{id_col} long, dl double, seq long"),
@@ -2846,16 +2782,20 @@ def index_status(
     * ``base_present`` / ``token_buckets`` — whether the read-mostly
       compacted base (and its partition-pruned postings layout) exists.
 
-    All probes are read-attempt (:func:`_read_or_empty`) — correct on
-    HDFS/S3, never a driver-local stat."""
+    All probes are read-attempt (:func:`read_components`) — correct
+    on HDFS/S3, never a driver-local stat."""
     doclen_path, _, tomb_path = _paths(index_path)
     base_doclen_path, _, meta_path = _base_paths(index_path)
-    tail_rows = _read_or_empty(
-        spark, doclen_path, f"{id_col} string, dl double, seq long"
-    ).count()
-    n_tomb = _read_or_empty(
-        spark, tomb_path, f"{id_col} string, seq long"
-    ).count()
+    tail_dl, tomb = read_components(
+        spark,
+        [
+            (doclen_path, f"{id_col} string, dl double, seq long"),
+            (tomb_path, f"{id_col} string, seq long"),
+        ],
+        id_col,
+    )
+    tail_rows = tail_dl.count()
+    n_tomb = tomb.count()
     meta_rows = read_meta_rows(spark, meta_path)
     token_buckets = (
         int(meta_rows[0]["token_buckets"]) if meta_rows else None
@@ -2933,7 +2873,7 @@ def search_index_fsck(
         base_doclen_path, "id_bucket="
     ):
         return {"ok": None, "reason": "no compacted base"}
-    dl = spark.read.parquet(base_doclen_path)
+    dl = open_parquet(spark, base_doclen_path)
     agg = dl.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0.0)).alias("s"),

@@ -50,11 +50,11 @@ from couch_to_postgres_spark.extensions.text import (
 )
 from couch_to_postgres_spark.streaming.meta_io import (
     read_meta_rows,
+    try_open_parquet,
     write_meta_rows,
 )
 from couch_to_postgres_spark.streaming.search_stream import (
     SearchIndexBatchStats,
-    _read_or_empty,
     live_doclen,
     search_index_batch,
 )
@@ -117,7 +117,7 @@ def live_attrs(
     live_all = live_doclen(spark, index_path, id_col)
     # a missing attrs component must carry the LIVE set's id dtype —
     # string-id corpora would otherwise hit an ANSI string→bigint cast
-    # in the join below (same discipline as search_stream._read_components)
+    # in the join below (same discipline as meta_io.read_components)
     id_t = dict(live_all.dtypes)[id_col]
     schema = ", ".join(
         [f"{id_col} {id_t}"] + [f"{c} string" for c in attr_cols] + ["seq long"]
@@ -516,14 +516,11 @@ def contamination_from_index(
         # holds exactly the live distinct fingerprints (derived FROM the
         # base postings at compaction; base_is_live ⟹ live == base).
         # Partial per-(bucket, id_sub) rows may repeat a token across
-        # sub-dirs — the distinct below collapses them.
-        from pyspark.errors import AnalysisException
-
-        dfs_root = os.path.join(index_path, "base", "dfs")
-        try:
-            train_src = spark.read.parquet(dfs_root).select("token")
-        except AnalysisException:  # no dfs: pre-dfs-layout base
-            train_src = None
+        # sub-dirs — the distinct below collapses them. None: a
+        # pre-dfs-layout base.
+        dfs = try_open_parquet(spark, os.path.join(index_path, "base", "dfs"))
+        if dfs is not None:
+            train_src = dfs.select("token")
     if train_src is None:
         train_src = live_postings(spark, index_path, id_col).select("token")
     # semi-join the postings against the BROADCAST eval vocabulary

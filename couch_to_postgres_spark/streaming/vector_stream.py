@@ -104,14 +104,14 @@ from couch_to_postgres_spark.extensions.ann import (
     train_centroids,
 )
 from couch_to_postgres_spark.streaming.meta_io import (
+    read_components,
     read_meta_rows,
+    try_open_parquet,
     write_meta_rows,
 )
 from couch_to_postgres_spark.streaming.search_stream import (
     _has_partition_prefix,
     _open_partition_dirs,
-    _read_components,
-    _read_or_empty,
 )
 
 _ASSIGNERS = {"vectorized": assign_cells, "hof": assign_cells_hof}
@@ -339,12 +339,8 @@ def append_pending(
 
 def pending_upsert_count(spark: SparkSession, index_path: str) -> int:
     """Upsert rows buffered in ``pending`` (0 when no buffer exists)."""
-    pend = _read_or_empty(
-        spark,
-        _pending_path(index_path),
-        "vec_id long, seq long, deleted boolean, embedding array<double>",
-    )
-    return pend.filter(~F.col("deleted")).count()
+    pend = try_open_parquet(spark, _pending_path(index_path))
+    return pend.filter(~F.col("deleted")).count() if pend is not None else 0
 
 
 def flush_pending(
@@ -372,9 +368,8 @@ def flush_pending(
 
     with _path_lock(index_path):
         pend_path = _pending_path(index_path)
-        try:
-            pend = spark.read.parquet(pend_path)
-        except Exception:
+        pend = try_open_parquet(spark, pend_path)
+        if pend is None:
             return None
         if not read_meta_rows(spark, _quantizer_path(index_path)):
             latest_up = (
@@ -510,7 +505,7 @@ def live_vector_ids(
     cells_path, tomb_path = _paths(index_path)
     base_ids_path, _, _ = _base_paths(index_path)
     schema = f"{id_col} long, seq long"
-    tail, base, tomb = _read_components(
+    tail, base, tomb = read_components(
         spark,
         [(cells_path, schema), (base_ids_path, schema), (tomb_path, schema)],
         id_col,
@@ -529,15 +524,6 @@ def live_vector_ids(
         .filter(F.col("_t").isNull() | (F.col("_t") < F.col("seq")))
         .select(id_col, "seq")
     )
-
-
-def _try(spark: SparkSession, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
 
 
 def vector_topk_live(
@@ -585,7 +571,7 @@ def vector_topk_live(
     base_probed = _open_partition_dirs(
         spark, base_cells_path, [f"cell={c}" for c in probed]
     )
-    tail_all = _try(spark, cells_path)
+    tail_all = try_open_parquet(spark, cells_path)
     tail_probed = (
         tail_all.filter(F.col("cell").isin(probed))
         if tail_all is not None
@@ -612,7 +598,7 @@ def vector_topk_live(
         bool(meta_rows)
         and "n_live" in meta_rows[0]
         and tail_all is None
-        and _try(spark, tomb_path) is None
+        and try_open_parquet(spark, tomb_path) is None
     )
     if not fast:
         # replay dedup on the probed slice (a version lands in exactly
@@ -675,7 +661,10 @@ def compact_vector_index(
         live = live_vector_ids(spark, index_path, id_col).persist()
         frames = [
             f
-            for f in (_try(spark, base_cells_path), _try(spark, cells_path))
+            for f in (
+                try_open_parquet(spark, base_cells_path),
+                try_open_parquet(spark, cells_path),
+            )
             if f is not None
         ]
         if not frames:
@@ -829,7 +818,7 @@ def compact_vector_index_incremental(
         fold_epoch = _fold_epoch(spark, index_path, meta_rows)
 
         schema = f"{id_col} long, seq long"
-        tail, tomb = _read_components(
+        tail, tomb = read_components(
             spark, [(cells_path, schema), (tomb_path, schema)], id_col
         )
         tail_skinny = (
@@ -987,10 +976,11 @@ def compact_vector_index_incremental(
         # staged-postings pattern — never re-run the merge lineage); the
         # empty-read fallback carries the tail's id dtype
         # (never-cast-ids rule)
-        staged_c = _read_or_empty(
-            spark,
-            staged_cells,
-            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int",
+        staged_schema = (
+            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int"
+        )
+        (staged_c,) = read_components(
+            spark, [(staged_cells, staged_schema)], id_col
         )
         _mark("staged_cells")
         # sidecar: affected id buckets only — non-churned rows pass
@@ -1108,8 +1098,11 @@ def vector_index_status(
     cells_path, tomb_path = _paths(index_path)
     _, _, meta_path = _base_paths(index_path)
     schema = f"{id_col} long, seq long"
-    tail_rows = _read_or_empty(spark, cells_path, schema).count()
-    n_tomb = _read_or_empty(spark, tomb_path, schema).count()
+    tail, tomb = read_components(
+        spark, [(cells_path, schema), (tomb_path, schema)], id_col
+    )
+    tail_rows = tail.count()
+    n_tomb = tomb.count()
     meta_rows = read_meta_rows(spark, meta_path)
     q = read_meta_rows(spark, _quantizer_path(index_path))
     if meta_rows and "n_live" in meta_rows[0] and not tail_rows and not n_tomb:
@@ -1199,7 +1192,7 @@ def vector_cell_counts(
     cells_path, _ = _paths(index_path)
     base_ids_path, _, _ = _base_paths(index_path)
     schema = f"{id_col} long, seq long, cell int"
-    tail, base = _read_components(
+    tail, base = read_components(
         spark, [(cells_path, schema), (base_ids_path, schema)], id_col
     )
     placed = (
@@ -1265,7 +1258,10 @@ def rebuild_vector_quantizer(
         live = live_vector_ids(spark, index_path, id_col).persist()
         frames = [
             f.select(id_col, "seq", vec_col)
-            for f in (_try(spark, base_cells_path), _try(spark, cells_path))
+            for f in (
+                try_open_parquet(spark, base_cells_path),
+                try_open_parquet(spark, cells_path),
+            )
             if f is not None
         ]
         if not frames:
@@ -1301,10 +1297,11 @@ def rebuild_vector_quantizer(
         # rows' id dtype — couch `_id`s are STRINGS (never-cast-ids
         # rule; VERDICT r11 #4)
         id_t = dict(live_rows.dtypes)[id_col]
-        staged_c = _read_or_empty(
-            spark,
-            staged_cells,
-            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int",
+        staged_schema = (
+            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int"
+        )
+        (staged_c,) = read_components(
+            spark, [(staged_cells, staged_schema)], id_col
         )
         staged_ids = os.path.join(staging, "ids")
         (
@@ -1430,7 +1427,7 @@ def vector_index_fsck(
     n_cells = int(q[0]["n_cells"])
     n_centroids = len(read_meta_rows(spark, _centroids_path(index_path)))
     schema = f"{id_col} long, seq long, cell int"
-    base_ids, base_cells = _read_components(
+    base_ids, base_cells = read_components(
         spark, [(base_ids_path, schema), (base_cells_path, schema)], id_col
     )
     sidecar = base_ids.select(id_col, "seq", "cell")
@@ -1489,12 +1486,12 @@ def vector_index_fsck(
         int(q_epoch) if q_epoch is not None else 0
     )
     n_live_actual = live_vector_ids(spark, index_path, id_col).count()
-    tail_rows = _read_or_empty(
-        spark, cells_path, f"{id_col} long, seq long"
-    ).count()
-    n_tomb = _read_or_empty(
-        spark, tomb_path, f"{id_col} long, seq long"
-    ).count()
+    schema = f"{id_col} long, seq long"
+    tail, tomb = read_components(
+        spark, [(cells_path, schema), (tomb_path, schema)], id_col
+    )
+    tail_rows = tail.count()
+    n_tomb = tomb.count()
     # meta is only claimed exact on a churn-free base; with churn it is
     # the last compaction's count and the live set legitimately differs
     meta_exact = (

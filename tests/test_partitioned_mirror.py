@@ -400,7 +400,8 @@ def test_point_lookup_partitioned_prunes_to_one_bucket(spark, sf_dir, tmp_path):
 
 def test_validate_mirror_detects_corruption(spark, sf_dir, tmp_path):
     """fsck: a healthy mirror (with deltas) validates; a row planted in
-    the wrong bucket directory and a stale meta count are both caught."""
+    the wrong bucket directory and stale meta counts (delta and total)
+    are all caught."""
     import shutil
 
     from couch_to_postgres_spark.streaming.partitioned import (
@@ -436,6 +437,15 @@ def test_validate_mirror_detects_corruption(spark, sf_dir, tmp_path):
     write_meta(mirror_path, meta)
     drifted = validate_mirror(spark, mirror_path)
     assert not drifted["ok"] and drifted["delta_rows_meta"] == 999
+
+    # restore, then corruption 3: meta base-row accounting drift (the
+    # footer-maintained total a crash mid-swap could leave stale)
+    meta["delta_rows"] = 3
+    meta["total_rows"] = 499
+    write_meta(mirror_path, meta)
+    stale = validate_mirror(spark, mirror_path)
+    assert not stale["ok"]
+    assert stale["total_rows_meta"] == 499 and stale["base_rows"] == 500
 
 
 def test_trash_recovery_window_after_bad_merge(spark, sf_dir, tmp_path):

@@ -1,0 +1,82 @@
+"""Source guard: stored state under ``streaming/`` opens through
+``meta_io.open_parquet`` (footer schema, zero Spark jobs), never through
+a schema-inferring ``spark.read…parquet(…)`` call. ``meta_io.py`` owns
+the Spark fallback; no other streaming module reads parquet directly."""
+
+import ast
+import os
+
+STREAMING = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "couch_to_postgres_spark",
+    "streaming",
+)
+
+
+def _reads_spark(node: ast.AST) -> bool:
+    """True for a receiver chain that reaches ``<x>.read`` before any
+    ``.write`` (a write of a read frame is a write)."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            if node.attr in ("read", "write"):
+                return node.attr == "read"
+            node = node.value
+        else:
+            node = node.func
+    return False
+
+
+def _direct_parquet_reads(source: str) -> dict[str, int]:
+    """Count of ``….read….parquet(…)`` calls per enclosing top-level
+    function (``<module>`` outside any)."""
+    tree = ast.parse(source)
+    out: dict[str, int] = {}
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            name = owner
+            if owner == "<module>" and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                name = child.name
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "parquet"
+                and _reads_spark(child.func.value)
+            ):
+                out[name] = out.get(name, 0) + 1
+            visit(child, name)
+
+    visit(tree, "<module>")
+    return out
+
+
+def test_detector_sees_every_read_form():
+    src = (
+        "def f(spark, p):\n"
+        "    a = spark.read.parquet(p)\n"
+        "    b = spark.read.option('basePath', p)\n"
+        "    c = b.parquet(p)\n"
+        "    d = spark.read.schema('x int').parquet(p)\n"
+        "    df.write.mode('overwrite').parquet(p)\n"
+        "    spark.read.parquet(p).coalesce(1).write.parquet(p)\n"
+    )
+    # `b.parquet` hides its reader behind a name: three of the four
+    # reads are visible, the writes never count
+    assert _direct_parquet_reads(src) == {"f": 3}
+
+
+def test_streaming_opens_stored_state_through_meta_io():
+    found = {}
+    for name in sorted(os.listdir(STREAMING)):
+        if not name.endswith(".py") or name == "meta_io.py":
+            continue
+        with open(os.path.join(STREAMING, name)) as f:
+            reads = _direct_parquet_reads(f.read())
+        for owner, n in reads.items():
+            found[(name, owner)] = n
+    assert not found, (
+        "open stored parquet state with meta_io.open_parquet / "
+        f"try_open_parquet (zero-job footer schema): {found}"
+    )

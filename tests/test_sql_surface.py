@@ -81,3 +81,26 @@ def test_driver_tables_registered(catalog):
     assert catalog.sql(
         "SELECT count(*) AS n FROM documents WHERE lang = 'en'"
     ).head()["n"] >= 0
+
+
+def test_json_functions_registered_once_per_session(spark, monkeypatch):
+    """A second register_catalog call on a session that already has the
+    JSON functions registers nothing; a fresh session still gets them."""
+    import couch_to_postgres_spark.sql as sqlmod
+
+    calls = []
+    real = sqlmod.register_sql_functions
+    monkeypatch.setattr(
+        sqlmod,
+        "register_sql_functions",
+        lambda s: (calls.append(s), real(s)),
+    )
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists("json_object_set_key")
+    register_catalog(fresh)
+    register_catalog(fresh)
+    assert calls == [fresh]
+    assert fresh.catalog.functionExists("json_object_set_key")
+    assert fresh.sql(
+        "SELECT json_object_set_key('{\"a\":\"1\"}', 'b', '2') AS d"
+    ).first()["d"] == '{"a":"1","b":"2"}'

@@ -757,6 +757,46 @@ def _schanges(spark, rows):
     )
 
 
+def test_long_queries_over_string_ids_match_cosine_topk(spark, tmp_path):
+    """Self-exclusion compares a long/string id pair as strings: long
+    query ids probing a string-id corpus must not ANSI-cast the doc ids
+    (CAST_INVALID_INPUT); with every cell probed the live index equals
+    the exact ranking."""
+    from couch_to_postgres_spark.extensions.similarity import cosine_topk
+
+    p = str(tmp_path / "sid_idx")
+    init_vector_index(spark, p, centroids=ANCHORS, assigner="hof")
+    vector_index_batch(
+        spark, p,
+        _schanges(spark, [(i, f"doc-{i}", False, v) for i, v in V0.items()]),
+    )
+    queries = _queries(spark, V0)
+    corpus = spark.createDataFrame(
+        [(f"doc-{i}", v) for i, v in V0.items()],
+        "vec_id string, embedding array<double>",
+    )
+    got = _rows(vector_topk_live(spark, p, queries, k=4, nprobe=len(ANCHORS)))
+    want = _rows(cosine_topk(queries, corpus, k=4))
+    assert got == want and len(got) == 3 * 4
+
+
+def test_not_self_casts_only_a_string_nonstring_pair(spark):
+    """The self-exclusion predicate is chosen at plan time: same-typed
+    (and numeric/numeric) ids compare raw, only a string/non-string pair
+    pays the per-pair string cast."""
+    from couch_to_postgres_spark.extensions.similarity import _not_self
+
+    def pred(qt, nt):
+        q = spark.createDataFrame([], f"query_id {qt}")
+        c = spark.createDataFrame([], f"neighbor_id {nt}")
+        return str(_not_self(q, c)).upper()
+
+    for qt, nt in (("long", "long"), ("string", "string"), ("int", "long")):
+        assert "CAST" not in pred(qt, nt), (qt, nt)
+    for qt, nt in (("long", "string"), ("string", "long")):
+        assert "CAST" in pred(qt, nt), (qt, nt)
+
+
 def test_string_id_full_lifecycle(spark, tmp_path):
     """Couch `_id`s ARE strings (reference data model): the vector twin
     must run its whole maintenance lifecycle — ingest, incremental

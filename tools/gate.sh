@@ -2,7 +2,9 @@
 # Pre-commit gate (VERDICT r04 #2): the round-4 regression was a
 # snapshot commit that pushed oracle-less queries into the driver
 # prefix 8 minutes before round end, untested. These contract checks
-# run in ~2 s — run them before ANY commit touching __spark_entry__.py;
+# (doc counts, oracle coverage, and the source guard that keeps
+# streaming/ opening stored state through meta_io.open_parquet) run
+# in ~2 s — run them before ANY commit touching __spark_entry__.py;
 # run the full suite (pytest tests/ -q) before the end-of-round
 # snapshot.
 #
@@ -14,5 +16,5 @@ if [ "$1" = "full" ]; then
     exec python -m pytest tests/ -q
 fi
 python tools/update_counts.py --check
-exec python -m pytest tests/test_doc_counts.py \
+exec python -m pytest tests/test_doc_counts.py tests/test_source_guard.py \
     "tests/test_oracle_parity.py::test_every_query_has_oracle_or_is_flagged" -q
