@@ -373,44 +373,46 @@ def compact_ivf_index(spark, path: str) -> list[int]:
     cell ids.
 
     The tombstone PROBE is filesystem-agnostic (read-attempt, see
-    ``_read_tombstones``); the staged swap itself uses local renames —
-    on HDFS/S3 swap the ``os.rename``/``shutil`` calls for the Hadoop
-    FileSystem API (rename is atomic on HDFS; on S3 stage to a new
-    prefix). The READ paths (``_live_cells``, ``ivf_topk_indexed``)
-    never depend on local-FS semantics."""
+    ``_read_tombstones``); the rewritten cells and the tombstone retire
+    go out in one ``streaming.commit.publish``. The READ paths
+    (``_live_cells``, ``ivf_topk_indexed``) never depend on local-FS
+    semantics."""
     import os
     import shutil
 
-    t = _read_tombstones(spark, path)
-    if t is None:
-        return []
-    tdir = os.path.join(path, "tombstones")
-    cells_dir = os.path.join(path, "cells")
-    id_col = t.columns[0]
-    all_cells = spark.read.parquet(cells_dir)
-    affected = sorted(
-        r["cell"]
-        for r in all_cells.join(t, on=id_col, how="left_semi")
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    for c in affected:
-        src = os.path.join(cells_dir, f"cell={c}")
-        tmp = src + ".compact"
-        (
-            spark.read.parquet(src)
-            .join(t, on=id_col, how="left_anti")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+    from couch_to_postgres_spark.streaming.commit import publish, writing
+
+    with writing(path):
+        t = _read_tombstones(spark, path)
+        if t is None:
+            return []
+        cells_dir = os.path.join(path, "cells")
+        id_col = t.columns[0]
+        all_cells = spark.read.parquet(cells_dir)
+        affected = sorted(
+            r["cell"]
+            for r in all_cells.join(t, on=id_col, how="left_semi")
+            .select("cell")
+            .distinct()
+            .collect()
         )
-        old = src + ".old"
-        os.rename(src, old)
-        os.rename(tmp, src)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tdir, ignore_errors=True)
-    return affected
+        staging = path.rstrip("/") + ".compacting-ivf"
+        shutil.rmtree(staging, ignore_errors=True)
+        steps = []
+        for c in affected:
+            src = os.path.join(cells_dir, f"cell={c}")
+            tmp = os.path.join(staging, f"cell={c}")
+            (
+                spark.read.parquet(src)
+                .join(t, on=id_col, how="left_anti")
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
+            steps.append((src, tmp))
+        steps.append((os.path.join(path, "tombstones"), None))
+        publish(path, steps, staging)
+        return affected
 
 
 def ivf_index_stats(spark, path: str) -> DataFrame:

@@ -50,23 +50,6 @@ from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.extensions.text import _words
 
-#: r14 A/B knob — SCAN-path dl-carry: carry the per-doc length ``dl``
-#: on the tf rows into scoring (min(dl) inside the (id, token)
-#: aggregate — exact: dl is functionally dependent on id) instead of
-#: joining the corpus doclen frame back by id. MEASURED NEGATIVE at
-#: sf0.1 and kept OFF: the in-process alternating A/B (both pair
-#: orders, 9 + 5 pairs) showed the 100-query batch shape losing every
-#: old-first pair by ~12% (e.g. 19.3/22.1, 19.6/22.3, 17.4/19.6 s) and
-#: the 3-term scan shape ~neutral — the min(dl) aggregate state rides
-#: EVERY exploded hit row (hit-token-proportional, ~5M rows for the
-#: 15-term batch), which costs more than the join it saves (the plan
-#: shows doclen joins as one BroadcastHashJoin of the corpus-skinny
-#: (id, dl) cache — /tmp-era dumps committed as
-#: plans/r14/scan_scoring_{join,dlcarry}.txt). The INDEX-side carry is
-#: the opposite regime (stored dl read back from parquet, zero
-#: aggregate cost) and is ON — see search_stream._DL_CARRY_INDEX.
-_DL_CARRY = False
-
 #: r14 — batch query-set dedup: queries whose (distinct) term sets are
 #: EQUAL provably produce identical (id, score, rank) rows — score is a
 #: sum over the query's distinct terms of per-(doc, term) contributions
@@ -198,19 +181,10 @@ def bm25_topk_batch(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.avg("dl").alias("avgdl"),
     )
-    # dl rides the hit explode when carrying (it is functionally
-    # dependent on id, so min() inside the same aggregate attaches the
-    # exact value the old doclen join produced — one column instead of
-    # a corpus-scale join downstream)
-    tok = comb.select(
-        F.col(id_col),
-        *(["dl"] if _DL_CARRY else []),
-        F.explode("hits").alias("token"),
-    )
+    tok = comb.select(F.col(id_col), F.explode("hits").alias("token"))
     # query-hit-proportional (tiny); feeds both df(t) and the scoring join
     tf = tok.groupBy(id_col, "token").agg(
-        F.count(F.lit(1)).cast("double").alias("tf"),
-        *([F.min("dl").alias("dl")] if _DL_CARRY else []),
+        F.count(F.lit(1)).cast("double").alias("tf")
     ).persist()
     dft = tf.groupBy("token").agg(
         F.count(F.lit(1)).cast("double").alias("dft")

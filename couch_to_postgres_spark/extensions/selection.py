@@ -229,9 +229,9 @@ def ngram_lm_stream(
         _commit_versioned,
         read_sketch_state,
     )
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
+    from couch_to_postgres_spark.streaming.commit import writing
 
-    with _path_lock(state_path):
+    with writing(state_path):
         cur = read_sketch_state(spark, state_path)
         key = str(batch_id)
         if cur is not None and (

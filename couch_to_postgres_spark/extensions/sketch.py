@@ -268,10 +268,10 @@ def sketch_stream(
     local ``open``/``os.replace`` for the Hadoop FileSystem
     create+rename (rename is atomic on HDFS; S3 needs a pointer object
     PUT, which is atomic per-key) — same note as
-    ``ann.compact_ivf_index``.
+    ``streaming.commit``.
 
     The whole read→merge→commit span holds the shared per-path lock
-    (``partitioned._path_lock`` — same discipline as
+    (``streaming.commit.writing`` — same discipline as
     ``search_index_batch``): one streaming query serializes its own
     ``foreachBatch`` calls, but the daemon can drive multiple feeds,
     and two unserialized writers on one state path would both read the
@@ -279,9 +279,9 @@ def sketch_stream(
     first's batch (lost update), beyond racing the pointer swap."""
     import os
 
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
+    from couch_to_postgres_spark.streaming.commit import writing
 
-    with _path_lock(state_path):
+    with writing(state_path):
         fresh = bottomk_sketch(batch, group_col, value, k=k)
         cur = _sketch_state_current(state_path)
         if cur is None:
@@ -298,7 +298,7 @@ def sketch_stream(
 #: could delete its parquet files mid-scan. Superseded versions are
 #: therefore retained in place (their paths stay valid — a rename into a
 #: trash dir would break pinned paths just like a delete) and pruned only
-#: once older than this window, mirroring ``partitioned.TRASH_GRACE_SECONDS``.
+#: once older than this window, mirroring ``commit.TRASH_GRACE_SECONDS``.
 STATE_RETAIN_SECONDS = 300.0
 
 
@@ -322,9 +322,9 @@ def _commit_versioned(
     import shutil
     import time
 
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
+    from couch_to_postgres_spark.streaming.commit import writing
 
-    with _path_lock(state_path):
+    with writing(state_path):
         cur = _sketch_state_current(state_path)
         next_n = int(cur.split("-")[1]) + 1 if cur else 0
         next_name = f"v-{next_n:010d}"
@@ -440,12 +440,12 @@ def reservoir_stream(
     kept so merges never recompute hashes)."""
     import os
 
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
+    from couch_to_postgres_spark.streaming.commit import writing
 
     key = F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string")))
     from pyspark.sql import Window as W
 
-    with _path_lock(state_path):
+    with writing(state_path):
         cand = batch.withColumn("_rk", key).withColumn("_pref", F.lit(1))
         cur = _sketch_state_current(state_path)
         if cur is not None:

@@ -21,8 +21,7 @@ Three kinds of stored-state access never need a Spark job:
   accounting costs file opens, not a job per recount.
 
 All of this applies to LOCAL paths — the only filesystem the
-rename-based swap machinery (``_retire`` + ``os.rename``) operates on
-anyway. For any other scheme (hdfs://, s3a://, …) the meta tables and
+rename-based publish step (``commit.publish``) operates on anyway. For any other scheme (hdfs://, s3a://, …) the meta tables and
 opens take the Spark route — as does an open of a local path with no
 data file yet, so PATH_NOT_FOUND and empty-directory errors surface
 exactly as Spark raises them — and :func:`parquet_rows` refuses the

@@ -14,9 +14,9 @@ Two merge strategies, chosen per batch (``mode="auto"``):
 
 * **bucket rewrite** — for large batches: read ONLY the touched buckets
   (``bucket IN (…)`` prunes at the directory level), merge with
-  ``apply_changes`` (broadcast-anti-join core), atomically swap the
-  touched bucket directories. Untouched partitions are not read, not
-  rewritten, not even stat'd.
+  ``apply_changes`` (broadcast-anti-join core), publish the touched
+  bucket directories (``commit.publish``). Untouched partitions are
+  not read, not rewritten, not even stat'd.
 * **delta append** — for steady-state micro-batches: collapse the batch
   (``latest_changes``) and APPEND it under ``_delta/bucket=…``. Write
   cost is O(batch) regardless of mirror size — the property bucket
@@ -44,7 +44,6 @@ import json
 import math
 import os
 import shutil
-import threading
 import time
 from typing import Callable
 
@@ -53,6 +52,7 @@ from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.operators.cdc import apply_changes, latest_changes
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
+from couch_to_postgres_spark.streaming.commit import PLAN_FILE, publish, writing
 from couch_to_postgres_spark.streaming.meta_io import (
     _data_files,
     open_parquet,
@@ -77,67 +77,6 @@ DELTA_FOLD_FRACTION = 0.05
 #: delta row shape: change events + append-order epoch
 DELTA_SCHEMA = "epoch long, seq long, id string, deleted boolean, doc string"
 
-# In-process serialization of merge vs compaction per mirror path: the
-# daemon's watchdog compacts on its own thread while foreachBatch merges
-# on the stream thread, and both move directories. A real multi-driver
-# deployment serializes maintenance through its table format or job
-# scheduler; in one process a lock per path is sufficient.
-_PATH_LOCKS: dict[str, threading.RLock] = {}
-_PATH_LOCKS_GUARD = threading.Lock()
-
-
-def _path_lock(path: str) -> threading.RLock:
-    # RLock (same-thread reentrant, cross-thread exclusive): public
-    # entry points lock the whole read→transform→commit span while
-    # inner commit helpers (sketch._commit_versioned) lock their own
-    # swap — both hold the one per-path lock without deadlocking.
-    key = os.path.abspath(path)
-    with _PATH_LOCKS_GUARD:
-        return _PATH_LOCKS.setdefault(key, threading.RLock())
-
-
-#: how long replaced bucket/delta dirs are RETAINED after a swap — an
-#: operator recovery window: a bad merge's previous bucket state can be
-#: restored from ``.trash`` until GC (which runs on later merges).
-#: NOTE this is recovery, not reader snapshot isolation: Spark readers
-#: pin absolute file paths at planning, so an in-flight scan racing a
-#: swap fails fast with FAILED_READ_FILE either way and must re-plan —
-#: the documented trade of directory-swap layouts vs the flat sink's
-#: true MVCC (or a manifest-based table format, which solves both).
-TRASH_GRACE_SECONDS = 300.0
-
-
-def _retire(dirpath: str, mirror_root: str) -> None:
-    """Move a replaced directory into the mirror's hidden trash
-    (dot-prefixed → invisible to Spark's file listing) for the recovery
-    window, then GC entries older than the grace period."""
-    if not os.path.exists(dirpath):
-        return
-    trash = os.path.join(mirror_root, ".trash")
-    os.makedirs(trash, exist_ok=True)
-    os.rename(
-        dirpath,
-        os.path.join(
-            trash, f"{time.time_ns()}-{os.path.basename(dirpath)}"
-        ),
-    )
-    _gc_trash(mirror_root)
-
-
-def _gc_trash(mirror_root: str, grace_s: float = TRASH_GRACE_SECONDS) -> None:
-    trash = os.path.join(mirror_root, ".trash")
-    if not os.path.isdir(trash):
-        return
-    cutoff = time.time_ns() - int(grace_s * 1e9)
-    for entry in os.listdir(trash):
-        try:
-            ts = int(entry.split("-", 1)[0])
-        except ValueError:
-            ts = 0
-        if ts < cutoff:
-            shutil.rmtree(os.path.join(trash, entry), ignore_errors=True)
-
-
 def bucket_of(id_col: Column, num_buckets: int = DEFAULT_BUCKETS) -> Column:
     return F.pmod(F.crc32(id_col.cast("binary")), F.lit(num_buckets)).cast("int")
 
@@ -154,8 +93,12 @@ def auto_num_buckets(n_rows: int) -> int:
 
 
 def write_meta(path: str, meta: dict) -> None:
-    with open(os.path.join(path, META_FILE), "w") as f:
+    """Replace the meta file atomically (dot-temp + ``os.replace``): a
+    crash mid-write leaves the previous meta, never truncated JSON."""
+    tmp = os.path.join(path, f".{META_FILE}.tmp")
+    with open(tmp, "w") as f:
         json.dump(meta, f)
+    os.replace(tmp, os.path.join(path, META_FILE))
 
 
 def read_meta(path: str) -> dict | None:
@@ -309,11 +252,7 @@ def _update_count_views(
         new = apply_count_delta(view, count_view_delta(pre, post, touched_ids, key))
         tmp = vdir + ".tmp"
         new.write.mode("overwrite").parquet(tmp)
-        old = vdir + ".old"
-        if os.path.exists(vdir):
-            os.rename(vdir, old)
-        os.rename(tmp, vdir)
-        _retire(old, path)  # grace-period trash (recovery window)
+        publish(path, [(vdir, tmp)])
 
 
 def upsert_partitioned_mirror(
@@ -339,7 +278,7 @@ def upsert_partitioned_mirror(
     the batch row count (the initial backfill IS the mirror size)."""
     if mode not in ("auto", "delta", "rewrite"):
         raise ValueError(f"unknown mode {mode!r}: use 'auto', 'delta' or 'rewrite'")
-    with _path_lock(path):
+    with writing(path):
         return _upsert_locked(
             spark, path, batch, num_buckets, type_filter, map_hook, count_views, mode
         )
@@ -539,7 +478,7 @@ def _rewrite_buckets(
 ) -> None:
     """Bucket-rewrite merge: partition-pruned read of the touched buckets
     (through the MoR view, folding any pending deltas for them), merge,
-    staged write, atomic per-directory swap. Touched buckets' delta dirs
+    staged write, one publish. Touched buckets' delta dirs
     are retired by the fold."""
     current = _mor_view(spark, path, touched)
     merged = apply_changes(
@@ -567,11 +506,9 @@ def _rewrite_buckets(
 
 
 def _swap_buckets(path: str, staging: str, buckets: list[int], meta: dict) -> None:
-    """Swap the staged ``bucket=`` dirs in for ``buckets``, retire the
-    replaced base dirs and those buckets' delta dirs, and commit the
-    row accounting. Replaced dirs go to the grace-period trash, not
-    rmtree — the operator's undo window for a bad merge (see
-    TRASH_GRACE_SECONDS).
+    """Publish the staged ``bucket=`` dirs for ``buckets``: per bucket,
+    the base dir swaps and the delta dir retires; the row accounting
+    (staged as the new meta file) is the last step.
 
     ``total_rows`` advances by the footer rows swapped in minus those
     swapped out — O(touched) file opens, no Spark job (a legacy mirror
@@ -580,23 +517,20 @@ def _swap_buckets(path: str, staging: str, buckets: list[int], meta: dict) -> No
     threshold."""
     staged = [os.path.join(staging, f"bucket={b}") for b in buckets]
     live = [os.path.join(path, f"bucket={b}") for b in buckets]
+    deltas = [os.path.join(_delta_path(path), f"bucket={b}") for b in buckets]
+    for d in staged:  # a bucket emptied by deletions swaps in empty
+        os.makedirs(d, exist_ok=True)
     total = meta.get("total_rows")
-    if total is not None:
-        total += parquet_rows(staged) - parquet_rows(live)
-    for b, src, dst in zip(buckets, staged, live):
-        old = dst + ".old"
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        if os.path.exists(src):
-            os.rename(src, dst)
-        else:  # bucket emptied by deletions
-            os.makedirs(dst, exist_ok=True)
-        _retire(old, path)
-        _retire(os.path.join(_delta_path(path), f"bucket={b}"), path)
-    shutil.rmtree(staging, ignore_errors=True)
-    meta["total_rows"] = total if total is not None else parquet_rows([path])
-    meta["delta_rows"] = parquet_rows([_delta_path(path)])
-    write_meta(path, meta)
+    if total is None:
+        total = parquet_rows([path])
+    meta["total_rows"] = total + parquet_rows(staged) - parquet_rows(live)
+    meta["delta_rows"] = parquet_rows([_delta_path(path)]) - parquet_rows(deltas)
+    write_meta(staging, meta)
+    steps = []
+    for base_dir, staged_dir, delta_dir in zip(live, staged, deltas):
+        steps += [(base_dir, staged_dir), (delta_dir, None)]
+    steps.append((os.path.join(path, META_FILE), os.path.join(staging, META_FILE)))
+    publish(path, steps, staging)
 
 
 def bucket_file_counts(path: str) -> dict[int, int]:
@@ -636,7 +570,8 @@ def fold_deltas(
     bounds BOTH read-side resolution cost and the fold's amortized write
     amplification (~1/fraction). Returns the folded bucket ids.
 
-    Callers must hold the path lock (compact_mirror does)."""
+    Callers must hold the root's :func:`commit.writing` (compact_mirror
+    does)."""
     meta = read_meta(path)
     if meta is None:
         return []
@@ -673,12 +608,12 @@ def snapshot_mirror(path: str, dest: str) -> dict:
     on a different filesystem. Read it with
     :func:`read_partitioned_mirror` (deltas resolve as of the snapshot
     moment); delete the directory to release it."""
-    with _path_lock(path):
+    with writing(path):
         n_linked = n_copied = 0
         for root, dirs, files in os.walk(path):
             rel = os.path.relpath(root, path)
-            # skip trash and staging remnants; keep everything live
-            if rel.split(os.sep, 1)[0] in (".trash",):
+            # skip the trash; keep everything live
+            if rel.split(os.sep, 1)[0] == ".trash":
                 dirs[:] = []
                 continue
             out_root = dest if rel == "." else os.path.join(dest, rel)
@@ -709,7 +644,9 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
       its ``delta_rows`` matches the log (both are maintained
       incrementally from footers; a legacy mirror without accounting
       has no ``total_rows`` to check);
-    * **no stranded staging/old dirs** from an interrupted swap.
+    * **no unfinished publish** — no stranded staging dir or publish
+      plan (the next writer completes a plan; until then the layout is
+      mid-swap).
 
     Read-mostly: one pruned-column scan of (id, bucket) pairs + parquet
     footer counts. Returns a dict with ``ok`` plus per-check numbers."""
@@ -732,12 +669,14 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     total_meta = meta.get("total_rows")
     stranded = [
         d
-        for d in (path + ".staging", path + ".folding", path + ".rebucket")
+        for d in (
+            path + ".staging",
+            path + ".folding",
+            path + ".rebucket",
+            path + ".compact",
+            os.path.join(path, PLAN_FILE),
+        )
         if os.path.exists(d)
-    ] + [
-        os.path.join(path, d)
-        for d in os.listdir(path)
-        if d.endswith(".old") or d.endswith(".compact")
     ]
     ok = (
         misplaced == 0
@@ -796,10 +735,11 @@ def rebucket_mirror(
     TARGET_ROWS_PER_BUCKET. Powers of two keep the shuffle friendly
     (bucket b of 2N receives only rows from bucket b mod N of N).
     Pending deltas fold in transit (the rewrite reads the MoR view).
-    The new layout stages beside the live one and swaps with two renames
-    — readers in flight keep their pinned file listing of the old
-    directory until the rmtree. Returns the OLD bucket count."""
-    with _path_lock(path):
+    The new layout stages beside the live one; one publish moves its
+    bucket dirs in, retires the old buckets and the delta log, and
+    swaps the meta last. Count views are bucket-agnostic (keyed
+    aggregates) and stay in place. Returns the OLD bucket count."""
+    with writing(path):
         meta = read_meta(path)
         if meta is None:
             raise ValueError(f"no partitioned mirror at {path}")
@@ -809,15 +749,15 @@ def rebucket_mirror(
         staging = path + ".rebucket"
         shutil.rmtree(staging, ignore_errors=True)
         write_partitioned_mirror(_mor_view(spark, path), staging, new_num_buckets)
-        # count views are bucket-agnostic (keyed aggregates) — carry them
-        views = os.path.join(path, "_views")
-        if os.path.isdir(views):
-            shutil.copytree(views, os.path.join(staging, "_views"))
-        old_dir = path + ".old"
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(path, old_dir)
-        os.rename(staging, path)
-        _retire(old_dir, path)  # whole old layout kept for the grace window
+        new = {d for d in os.listdir(staging) if d.startswith("bucket=")}
+        old = {d for d in os.listdir(path) if d.startswith("bucket=")} - new
+        steps = [(os.path.join(path, d), os.path.join(staging, d)) for d in sorted(new)]
+        steps += [(os.path.join(path, d), None) for d in sorted(old)]
+        steps += [
+            (_delta_path(path), None),
+            (os.path.join(path, META_FILE), os.path.join(staging, META_FILE)),
+        ]
+        publish(path, steps, staging)
         return old_n
 
 
@@ -830,28 +770,30 @@ def compact_mirror(
 ) -> list[int]:
     """Maintenance: fold over-threshold deltas into base, then rewrite
     buckets whose file count exceeds the threshold into ``target_files``
-    files each (atomic per-bucket swap). Run periodically/off-peak — the
-    daemon's watchdog calls this every supervision pass (cheap when
-    nothing exceeds a threshold — one listdir). Serialized against
-    concurrent merges via the per-path lock. Returns the touched bucket
-    ids (folded ∪ compacted)."""
-    with _path_lock(path):
+    files each (staged beside the mirror, one publish). Run
+    periodically/off-peak — the daemon's watchdog calls this every
+    supervision pass (cheap when nothing exceeds a threshold — one
+    listdir). Serialized against concurrent merges via the per-path
+    lock. Returns the touched bucket ids (folded ∪ compacted)."""
+    with writing(path):
         folded = fold_deltas(spark, path, force=force_fold)
-        todo = [
+        todo = sorted(
             b
             for b, n in bucket_file_counts(path).items()
             if n > max_files_per_bucket
-        ]
-        for b in sorted(todo):
-            src = os.path.join(path, f"bucket={b}")
-            tmp = src + ".compact"
-            open_parquet(spark, src).coalesce(target_files).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            old = src + ".old"
-            os.rename(src, old)
-            os.rename(tmp, src)
-            _retire(old, path)  # grace-period trash (recovery window)
+        )
+        if todo:
+            staging = path + ".compact"
+            shutil.rmtree(staging, ignore_errors=True)
+            steps = []
+            for b in todo:
+                src = os.path.join(path, f"bucket={b}")
+                tmp = os.path.join(staging, f"bucket={b}")
+                open_parquet(spark, src).coalesce(target_files).write.mode(
+                    "overwrite"
+                ).parquet(tmp)
+                steps.append((src, tmp))
+            publish(path, steps, staging)
         return sorted(set(folded) | set(todo))
 
 

@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from couch_to_postgres_spark.operators.cdc import apply_changes
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
 from couch_to_postgres_spark.sources.changes import read_change_stream
+from couch_to_postgres_spark.streaming.commit import publish, writing
 from couch_to_postgres_spark.streaming.meta_io import open_parquet
 
 
@@ -108,20 +109,19 @@ def _update_count_view(
     )
 
     vdir = os.path.join(mirror_path, "_views", name)
-    if os.path.exists(vdir):
-        view = open_parquet(spark, vdir)
-    else:
-        # bootstrap: one full GROUP BY over the PRE state, then the delta
-        # brings it to post — after this, never a full recompute again
-        view = pre.groupBy(key.alias("key")).agg(F.count(F.lit(1)).alias("cnt"))
-    new = apply_count_delta(view, count_view_delta(pre, post, touched, key))
-    tmp = vdir + ".tmp"
-    new.write.mode("overwrite").parquet(tmp)  # materializes before the swap
-    old = vdir + ".old"
-    if os.path.exists(vdir):
-        os.rename(vdir, old)
-    os.rename(tmp, vdir)
-    shutil.rmtree(old, ignore_errors=True)
+    with writing(mirror_path):
+        if os.path.exists(vdir):
+            view = open_parquet(spark, vdir)
+        else:
+            # bootstrap: one full GROUP BY over the PRE state, then the
+            # delta brings it to post — after this, never a full recompute
+            view = pre.groupBy(key.alias("key")).agg(
+                F.count(F.lit(1)).alias("cnt")
+            )
+        new = apply_count_delta(view, count_view_delta(pre, post, touched, key))
+        tmp = vdir + ".tmp"
+        new.write.mode("overwrite").parquet(tmp)  # materializes before the swap
+        publish(mirror_path, [(vdir, tmp)])
 
 
 def upsert_mirror(
@@ -354,9 +354,7 @@ def _feed_vector_index(
     # quantizer check and its append, sweeping the appended rows away
     # un-ingested (ADVICE r11). The lock is reentrant, so the inner
     # append/flush/batch calls re-acquire it safely.
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
-
-    with _path_lock(vector_index_path):
+    with writing(vector_index_path):
         if not read_meta_rows(spark, _quantizer_path(vector_index_path)):
             buffered = append_pending(spark, vector_index_path, changes)
             if buffered >= 0:

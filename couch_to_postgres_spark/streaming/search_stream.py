@@ -72,6 +72,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from couch_to_postgres_spark.extensions.search import bm25_rank_components
 from couch_to_postgres_spark.extensions.text import _words
+from couch_to_postgres_spark.streaming.commit import publish, writing
 from couch_to_postgres_spark.streaming.meta_io import (
     open_parquet,
     read_components,
@@ -196,9 +197,7 @@ def search_index_batch(
     partitioned mirror's merges) so the daemon watchdog's IN-PLACE
     compaction (:func:`compact_index_inplace`) can never swap the index
     out from under a half-written batch."""
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
-
-    with _path_lock(index_path):
+    with writing(index_path):
         return _search_index_batch_locked(
             spark, index_path, changes, text_col, id_col, seq_col, deleted_col
         )
@@ -1621,49 +1620,20 @@ _SEARCH_META_SCHEMA = (
 )
 
 
-#: full-compaction dfs engine (r14 A/B knob): "window_cache" (the r13
-#: shape: persist the staged exchange+sort, window over the cache) vs
-#: "arrow_readback" (no staged persist; dfs from the Arrow
-#: partial-merge aggregator over a column-pruned read-back of the
-#: written base). MEASURED (interleaved fresh-process pairs, sf0.1,
-#: r14): window_cache wins the FULL rewrite both pairs (28.8/33.7 s vs
-#: arrow 33.4/36.1 s) while arrow wins the INCREMENTAL fold both pairs
-#: (11.1/13.0 s vs window 12.8/13.6 s) — structurally consistent: the
-#: full rewrite must exchange+sort staged postings anyway for the
-#: impact-ordered partitioned write, so its dfs window rides that cache
-#: nearly free and the arrow read-back adds a whole extra scan +
-#: Python boundary; the fold's staged postings are dir-clustered with
-#: NO exchange, so there the window ADDS a posting-scale Exchange+Sort
-#: that the arrow partials avoid. Production default: the measured
-#: winner per path (this knob for the full rewrite; the fold always
-#: uses the arrow aggregator).
-_FULL_COMPACT_DFS = "window_cache"
-
 #: r14 knob — INDEX-side dl-carry: on an impacts-mode compacted base
 #: with no tail, ride the postings' stored DENORMALIZED ``dl`` column
 #: into scoring instead of scanning base/doclen and joining it back by
 #: id (full fast path), and pass the pruned rescore's ``tf_cand.dl``
 #: through instead of reconstructing a doclen frame with distinct()+
-#: join (MaxScore path). Unlike the scan-path carry (measured negative,
-#: see extensions.search._DL_CARRY), the stored dl costs NO aggregate
-#: state — it is parquet column bytes on rows the scan already reads —
-#: and the avoided work is a corpus-skinny doclen scan + join per
+#: join (MaxScore path). Unlike a scan-path carry (measured negative in
+#: r14: a min(dl) aggregate riding every hit row), the stored dl costs
+#: NO aggregate state — it is parquet column bytes on rows the scan
+#: already reads — and the avoided work is a corpus-skinny doclen scan + join per
 #: query. MEASURED: in-process alternating A/B at sf0.1 won all 4
 #: pairs on q_bm25_from_index (2.57/3.45, 3.63/4.46, 3.38/3.70,
 #: 3.02/3.26 s carry/join). Exactness pinned by
 #: test_bm25_dl_carry_equals_doclen_join.
 _DL_CARRY_INDEX = True
-
-#: r14 A/B knob — order of the full rewrite's replay dedup relative to
-#: the live join. True (default): join first, dedup second — the dedup
-#: aggregate's ClusteredDistribution on (id, token, seq) is satisfied
-#: by the join's HashPartitioning on the subset (id, seq), so the
-#: dedup rides the join exchange instead of paying its own
-#: posting-scale Exchange, and it deduplicates the post-join LIVE rows
-#: only. False = the r03-r13 dedup-first order. Exactly commutative
-#: (replay copies byte-identical; live is 1 row per (id, seq)); see
-#: OPTIMIZATION_r14.md for the measurement.
-_DEDUP_AFTER_JOIN = True
 
 #: r14 A/B knob — tokenize each micro-batch ONCE into the persisted
 #: `latest` cache (token arrays) instead of caching text and letting
@@ -1752,9 +1722,9 @@ def compact_index(
 
     ``out_path`` must not share component directories with
     ``index_path``: the dfs/doclen derivations read back files this
-    function has already written under ``out_path`` (and the r13
-    ``window_cache`` A/B shape can lazily recompute its staged cache
-    through lineage that re-reads ``index_path``), so an overlapping
+    function has already written under ``out_path`` (and the staged
+    postings cache can lazily recompute through lineage that re-reads
+    ``index_path``), so an overlapping
     target would mix half-written state into its own inputs.
     :func:`compact_index_inplace` (staging sibling + atomic swap) is
     the supported same-path flow and guarantees this."""
@@ -1792,16 +1762,11 @@ def compact_index(
     # versions already dropped) instead of every replay/dead row.
     # Semantics are unchanged: replay copies are byte-identical, live
     # has exactly one row per (id, seq), and the inner join is 1:1 —
-    # dedup before or after commutes exactly. `_DEDUP_AFTER_JOIN` is
-    # the r14 A/B knob (False = the r03-r13 dedup-first order).
-    joined = (
-        postings.join(live.select(id_col, "seq", "dl"), on=[id_col, "seq"])
-        .dropDuplicates([id_col, "token", "seq"])
-        if _DEDUP_AFTER_JOIN
-        else postings.dropDuplicates([id_col, "token", "seq"]).join(
-            live.select(id_col, "seq", "dl"), on=[id_col, "seq"]
-        )
-    )
+    # dedup before or after commutes exactly (OPTIMIZATION_r14.md has
+    # the measurement).
+    joined = postings.join(
+        live.select(id_col, "seq", "dl"), on=[id_col, "seq"]
+    ).dropDuplicates([id_col, "token", "seq"])
     staged = (
         joined
         .withColumn(
@@ -1811,7 +1776,7 @@ def compact_index(
             "id_sub", F.pmod(F.hash(F.col(id_col)), F.lit(id_subbuckets))
         )
     )
-    if impacts and _FULL_COMPACT_DFS == "window_cache":
+    if impacts:
         staged = staged.withColumn(
             "impact0", _impact0_expr(IMPACT_K1, IMPACT_B, avgdl_now)
         ).repartition(
@@ -1819,34 +1784,16 @@ def compact_index(
         ).sortWithinPartitions(
             "token_bucket", "id_sub", "token", F.desc("impact0")
         )
-        # Production default (r13 shape, re-measured the winner in the
-        # r14 A/B — see _FULL_COMPACT_DFS): persist the staged
-        # (exchanged + impact-sorted) postings so the dfs window and
-        # doc_buckets consume the cache instead of re-reading the
-        # written files. The exchange+sort is paid anyway for the
-        # impact-ordered partitioned write, so the window rides it
-        # nearly free.
+        # persist the staged (exchanged + impact-sorted) postings so
+        # the dfs window and doc_buckets consume the cache instead of
+        # re-reading the written files. The exchange+sort is paid
+        # anyway for the impact-ordered partitioned write, so the
+        # window rides it nearly free (r14 A/B: faster than the Arrow
+        # read-back the incremental fold uses, whose staged rows have
+        # no exchange to ride)
         from pyspark.storagelevel import StorageLevel
 
         staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
-    elif impacts:
-        # A/B comparator arm: no persist — dfs comes from the Arrow
-        # partial-merge aggregator over a column-pruned read-back of
-        # the files just written (see ``written`` below). Measured
-        # ~10-15% SLOWER than window_cache for the full rewrite (the
-        # read-back + Python boundary costs more than the cache saves
-        # when the exchange+sort exists anyway); kept so the r14
-        # interleaved A/B stays reproducible. NOTE the fold
-        # (compact_index_incremental) is the opposite regime — its
-        # staged rows are dir-clustered with no exchange — and always
-        # uses the arrow aggregator, where it measured the winner.
-        staged = staged.withColumn(
-            "impact0", _impact0_expr(IMPACT_K1, IMPACT_B, avgdl_now)
-        ).repartition(
-            F.col("token_bucket"), F.col("id_sub")
-        ).sortWithinPartitions(
-            "token_bucket", "id_sub", "token", F.desc("impact0")
-        )
     else:
         # no bound layer: skinny rows (no dl/impact0), no impact sort —
         # the per-pair ordering only exists for block-max skipping
@@ -1868,16 +1815,8 @@ def compact_index(
     # with them; tail appends after this compaction are simply unknown
     # to it, which only ever makes a term LOOK rarer — safe for probe
     # selection, never used for correctness.
-    if impacts and _FULL_COMPACT_DFS == "window_cache":
-        written = staged
-        dfs_frame = _dfs_rows(written, impacts=True)
-    else:
-        written = open_parquet(spark, base_postings_path)
-        dfs_frame = (
-            _dfs_rows_arrow(written)
-            if impacts
-            else _dfs_rows(written, impacts=False)
-        )
+    written = staged if impacts else open_parquet(spark, base_postings_path)
+    dfs_frame = _dfs_rows(written, impacts=impacts)
     (
         dfs_frame
         .repartition(F.col("token_bucket"), F.col("id_sub"))
@@ -1939,7 +1878,7 @@ def compact_index(
             .parquet(os.path.join(out_path, "base", "attrs"))
         )
     live.unpersist()
-    if impacts and _FULL_COMPACT_DFS == "window_cache":
+    if impacts:
         staged.unpersist()
     # corpus stats ride the meta file (computed up front, before the
     # postings write needed avgdl): with no tail yet, a query takes
@@ -1997,28 +1936,16 @@ def compact_index_inplace(
 
     Swap discipline (the daemon watchdog triggers this automatically,
     so UNLOCKED readers — ``bm25_topk_from_index``, ``index_status`` —
-    can race it): the index ROOT is never renamed or removed; instead
-    each COMPONENT directory (base/doclen/postings/tombstones) is
-    retired into the index's hidden ``.trash`` (grace-window GC, the
-    exact mechanism of ``partitioned._retire``) and the staged
-    replacement renamed into place. A reader planning mid-swap can see
-    a component transiently absent — ``read_components`` degrades that
+    can race it): the index ROOT is never renamed or removed; each
+    COMPONENT directory (base/doclen/postings/tombstones/attrs) is one
+    step of a ``commit.publish``. A reader planning mid-swap can see a
+    component transiently absent — ``read_components`` degrades that
     to an empty frame, not a path-not-found crash — and a reader that
-    PLANNED before the swap races file replacement exactly as
-    partitioned.py documents for its bucket swaps: recovery window, not
-    snapshot isolation. The former implementation renamed the root away
-    (a window where ``index_path`` did not exist) and ``rmtree``'d the
-    old tree instantly. On HDFS swap via the FileSystem API (rename is
-    atomic there); on S3 stage to a new prefix and move a pointer, as
-    in ``ann.compact_ivf_index``."""
+    PLANNED before the swap races file replacement: recovery window,
+    not snapshot isolation."""
     import shutil
 
-    from couch_to_postgres_spark.streaming.partitioned import (
-        _path_lock,
-        _retire,
-    )
-
-    with _path_lock(index_path):
+    with writing(index_path):
         _, _, meta_path = _base_paths(index_path)
         meta_rows = read_meta_rows(spark, meta_path)
         if token_buckets is None:
@@ -2041,16 +1968,14 @@ def compact_index_inplace(
             token_buckets=token_buckets, id_subbuckets=id_subbuckets,
             impacts=impacts,
         )
-        # component-level swap under the live root: retire old pieces
-        # into .trash (grace-window recovery, never instant delete),
-        # move staged pieces in. The root itself never vanishes.
-        for comp in ("base", "doclen", "postings", "tombstones", "attrs"):
-            old_comp = os.path.join(index_path, comp)
-            new_comp = os.path.join(staging, comp)
-            _retire(old_comp, index_path)
-            if os.path.exists(new_comp):
-                os.rename(new_comp, old_comp)
-        shutil.rmtree(staging, ignore_errors=True)
+        publish(
+            index_path,
+            [
+                (os.path.join(index_path, comp), os.path.join(staging, comp))
+                for comp in ("base", "doclen", "postings", "tombstones", "attrs")
+            ],
+            staging,
+        )
 
 
 def compact_index_incremental(
@@ -2112,11 +2037,6 @@ def compact_index_incremental(
     import shutil
     import time as _time
 
-    from couch_to_postgres_spark.streaming.partitioned import (
-        _path_lock,
-        _retire,
-    )
-
     _t0 = [_time.monotonic()]
 
     def _mark(phase: str) -> None:
@@ -2125,16 +2045,7 @@ def compact_index_incremental(
             diag[phase] = round(now - _t0[0], 3)
             _t0[0] = now
 
-    def _swap_dirs(old_root: str, staged_root: str, rel_dirs) -> None:
-        for rel in rel_dirs:
-            old_d = os.path.join(old_root, rel)
-            new_d = os.path.join(staged_root, rel)
-            _retire(old_d, index_path)
-            if os.path.exists(new_d):
-                os.makedirs(os.path.dirname(old_d), exist_ok=True)
-                os.rename(new_d, old_d)
-
-    with _path_lock(index_path):
+    with writing(index_path):
         doclen_path, postings_path, tomb_path = _paths(index_path)
         base_doclen_path, base_postings_path, meta_path = _base_paths(
             index_path
@@ -2615,44 +2526,39 @@ def compact_index_incremental(
         churned_live.unpersist()
 
         _mark("unpersist")
-        # swap — base components first (per affected dir: everything
+        # publish — base components first (per affected dir: everything
         # else is never touched), tail dirs retire LAST so "no tail" can
         # only become true after the fresh meta and doclen are in place
         # (the fast path's consistency), and tombstones retire only
         # after the dead rows are really gone from the swapped-in base
-        _swap_dirs(base_postings_path, staged_postings, pair_dirs)
-        _swap_dirs(
-            os.path.join(index_path, "base", "dfs"), staged_dfs, pair_dirs
-        )
-        _swap_dirs(
-            base_doclen_path,
-            staged_doclen,
-            [f"id_bucket={b}" for b in aff_id_buckets],
-        )
-        _retire(meta_path, index_path)
-        os.rename(staged_meta, meta_path)
+        id_dirs = [f"id_bucket={b}" for b in aff_id_buckets]
+        steps = [
+            (os.path.join(live, d), os.path.join(staged, d))
+            for live, staged, dirs in (
+                (base_postings_path, staged_postings, pair_dirs),
+                (os.path.join(index_path, "base", "dfs"), staged_dfs, pair_dirs),
+                (base_doclen_path, staged_doclen, id_dirs),
+            )
+            for d in dirs
+        ]
+        steps.append((meta_path, staged_meta))
         if attrs_mode == "pruned":
             # only the churn's id-bucket dirs move; every other
             # base/attrs dir is never touched (bit-identical, by test)
-            _swap_dirs(
-                base_attrs_root,
-                staged_attrs,
-                [f"id_bucket={b}" for b in aff_id_buckets],
-            )
+            steps += [
+                (os.path.join(base_attrs_root, d), os.path.join(staged_attrs, d))
+                for d in id_dirs
+            ]
         elif attrs_mode == "migrated":
-            os.makedirs(os.path.dirname(base_attrs_root), exist_ok=True)
-            os.rename(staged_attrs, base_attrs_root)
-        _mark("swaps")
+            steps.append((base_attrs_root, staged_attrs))
         tails = [doclen_path, postings_path, tomb_path]
         if attrs_mode is not None:
             # the flat attrs tail is folded into base/attrs above —
             # retire it with the other tails (after the base swaps, so
             # a racing reader sees base∪tail or base-only, never neither)
             tails.append(os.path.join(index_path, "attrs"))
-        for tail_dir in tails:
-            _retire(tail_dir, index_path)
-        shutil.rmtree(staging, ignore_errors=True)
-        _mark("tail_retire")
+        publish(index_path, steps + [(t, None) for t in tails], staging)
+        _mark("swaps")
         return {
             "mode": "incremental",
             "churned_docs": n_churned,

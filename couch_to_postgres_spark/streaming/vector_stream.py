@@ -103,6 +103,7 @@ from couch_to_postgres_spark.extensions.ann import (
     assign_cells_hof,
     train_centroids,
 )
+from couch_to_postgres_spark.streaming.commit import publish, writing
 from couch_to_postgres_spark.streaming.meta_io import (
     read_components,
     read_meta_rows,
@@ -328,9 +329,7 @@ def append_pending(
     at-least-once (ADVICE r11). If the quantizer appeared since the
     caller's check (a flush won the race), returns ``-1``: the caller
     must route the batch to :func:`vector_index_batch` instead."""
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
-
-    with _path_lock(index_path):
+    with writing(index_path):
         if read_meta_rows(spark, _quantizer_path(index_path)):
             return -1
         changes.write.mode("append").parquet(_pending_path(index_path))
@@ -361,12 +360,7 @@ def flush_pending(
     docs this index never held. Idempotent against a crash between the
     quantizer write and the ingest: re-entry sees the quantizer and
     ingests the still-present buffer (:func:`_drain_pending`'s path)."""
-    from couch_to_postgres_spark.streaming.partitioned import (
-        _path_lock,
-        _retire,
-    )
-
-    with _path_lock(index_path):
+    with writing(index_path):
         pend_path = _pending_path(index_path)
         pend = try_open_parquet(spark, pend_path)
         if pend is None:
@@ -406,7 +400,7 @@ def flush_pending(
         stats = vector_index_batch(
             spark, index_path, pend, id_col=id_col, vec_col=vec_col
         )
-        _retire(pend_path, index_path)
+        publish(index_path, [(pend_path, None)])
         return stats
 
 
@@ -432,10 +426,8 @@ def vector_index_batch(
     invariant to preserve (r11; the r10 layout's tail ids file was a
     fourth job per batch whose only role the column-pruned cells read
     covers)."""
-    from couch_to_postgres_spark.streaming.partitioned import _path_lock
-
     cells_path, tomb_path = _paths(index_path)
-    with _path_lock(index_path):
+    with writing(index_path):
         # quantizer read INSIDE the lock: a rebuild
         # (:func:`rebuild_vector_quantizer`) swaps centroids + base
         # under the same lock, and a batch assigning cells with the
@@ -638,21 +630,15 @@ def compact_vector_index(
     needs). Steady-state maintenance goes through
     :func:`compact_vector_index_incremental` instead — this rewrite is
     corpus-proportional by construction. Runs under the per-path lock;
-    components swap via ``_retire`` (grace-window trash, never instant
-    delete), so unlocked readers racing the swap degrade to the
-    documented recovery window, exactly as ``compact_index_inplace``
-    describes."""
+    components swap in one ``commit.publish``, so unlocked readers
+    racing the swap degrade to the documented recovery window, exactly
+    as ``compact_index_inplace`` describes."""
     import shutil
-
-    from couch_to_postgres_spark.streaming.partitioned import (
-        _path_lock,
-        _retire,
-    )
 
     _, _, n_cells = _quantizer(spark, index_path)
     cells_path, tomb_path = _paths(index_path)
     base_ids_path, base_cells_path, meta_path = _base_paths(index_path)
-    with _path_lock(index_path):
+    with writing(index_path):
         # epoch to carry forward — checked FIRST so a torn rebuild is
         # refused before any work (and never masked, ADVICE r12)
         fold_epoch = _fold_epoch(
@@ -711,22 +697,20 @@ def compact_vector_index(
             _BASE_META_SCHEMA,
         )
         live.unpersist()
-        for old, new in (
-            (base_cells_path, staged_cells),
-            (base_ids_path, staged_ids),
-            (meta_path, staged_meta),
-        ):
-            _retire(old, index_path)
-            os.makedirs(os.path.dirname(old), exist_ok=True)
-            if os.path.exists(new):
-                os.rename(new, old)
-        # retire the tails (plus a legacy r10 tail "ids" dir, if this
-        # index predates the sidecar-free tail layout)
-        for tail_dir in (
-            cells_path, tomb_path, os.path.join(index_path, "ids")
-        ):
-            _retire(tail_dir, index_path)
-        shutil.rmtree(staging, ignore_errors=True)
+        # the tails retire last (plus a legacy r10 tail "ids" dir, if
+        # this index predates the sidecar-free tail layout)
+        publish(
+            index_path,
+            [
+                (base_cells_path, staged_cells),
+                (base_ids_path, staged_ids),
+                (meta_path, staged_meta),
+                (cells_path, None),
+                (tomb_path, None),
+                (os.path.join(index_path, "ids"), None),
+            ],
+            staging,
+        )
         return {"mode": "full", "n_live": n_live}
 
 
@@ -778,11 +762,6 @@ def compact_vector_index_incremental(
     import shutil
     import time as _time
 
-    from couch_to_postgres_spark.streaming.partitioned import (
-        _path_lock,
-        _retire,
-    )
-
     _t0 = [_time.monotonic()]
 
     def _mark(phase: str) -> None:
@@ -791,7 +770,7 @@ def compact_vector_index_incremental(
             diag[phase] = round(now - _t0[0], 3)
             _t0[0] = now
 
-    with _path_lock(index_path):
+    with writing(index_path):
         cells_path, tomb_path = _paths(index_path)
         base_ids_path, base_cells_path, meta_path = _base_paths(index_path)
         # a crash can strand this fold's staging sibling; clear it on
@@ -995,7 +974,7 @@ def compact_vector_index_incremental(
 
         # keeps come only from EFFECTIVE buckets — a bucket whose only
         # churn is never-indexed tombstones is not rewritten (and must
-        # not be: _swap_dirs retires the old dir whenever it runs, so
+        # not be: its publish step retires the old dir regardless, so
         # the rewrite list below is eff_id_buckets to match)
         ids_keep = (
             base_ids_aff.filter(F.col("id_bucket").isin(eff_id_buckets))
@@ -1045,30 +1024,27 @@ def compact_vector_index_incremental(
         base_ids_churned.unpersist()
         churned_live.unpersist()
 
-        def _swap_dirs(old_root: str, staged_root: str, rel_dirs) -> None:
-            for rel in rel_dirs:
-                old_d = os.path.join(old_root, rel)
-                new_d = os.path.join(staged_root, rel)
-                _retire(old_d, index_path)
-                if os.path.exists(new_d):
-                    os.makedirs(os.path.dirname(old_d), exist_ok=True)
-                    os.rename(new_d, old_d)
-
-        # swap — base dirs first (per affected dir: everything else is
-        # never touched), tails retire LAST so "no tail" can only become
-        # true after the fresh base and meta are in place (the fast
-        # path's consistency)
-        _swap_dirs(base_cells_path, staged_cells, cell_dirs)
-        _swap_dirs(
-            base_ids_path,
-            os.path.join(staging, "ids"),
-            [f"id_bucket={b}" for b in eff_id_buckets],
+        # publish — base dirs first (per affected dir: everything else
+        # is never touched), tails retire LAST so "no tail" can only
+        # become true after the fresh base and meta are in place (the
+        # fast path's consistency)
+        steps = [
+            (os.path.join(live, d), os.path.join(staged, d))
+            for live, staged, dirs in (
+                (base_cells_path, staged_cells, cell_dirs),
+                (
+                    base_ids_path,
+                    os.path.join(staging, "ids"),
+                    [f"id_bucket={b}" for b in eff_id_buckets],
+                ),
+            )
+            for d in dirs
+        ]
+        publish(
+            index_path,
+            steps + [(meta_path, staged_meta), (cells_path, None), (tomb_path, None)],
+            staging,
         )
-        _retire(meta_path, index_path)
-        os.rename(staged_meta, meta_path)
-        for tail_dir in (cells_path, tomb_path):
-            _retire(tail_dir, index_path)
-        shutil.rmtree(staging, ignore_errors=True)
         _mark("swaps")
         return {
             "mode": "incremental",
@@ -1243,12 +1219,7 @@ def rebuild_vector_quantizer(
     the centroids too."""
     import shutil
 
-    from couch_to_postgres_spark.streaming.partitioned import (
-        _path_lock,
-        _retire,
-    )
-
-    with _path_lock(index_path):
+    with writing(index_path):
         old_assigner, _, old_n = _quantizer(spark, index_path)
         use_assigner = assigner or old_assigner
         if use_assigner not in _ASSIGNERS:
@@ -1326,14 +1297,14 @@ def rebuild_vector_quantizer(
         # EVERYTHING the new layout needs — base meta, centroids,
         # quantizer marker — is staged alongside the cells/ids BEFORE
         # any swap, stamped with the bumped layout epoch. The swap
-        # itself is then a pure rename sequence (microseconds), not the
+        # itself is then one publish (microseconds of renames), not the
         # prior base-swap → Spark-job centroids write → quantizer write
         # (ADVICE r11: a crash in that multi-second window persisted
         # (old centroids, new base), probes silently missed neighbors,
-        # and fsck could not tell when n_cells was unchanged). Any
-        # crash inside the rename sequence now leaves base/meta at
-        # epoch N+1 with the quantizer still at N — exactly what
-        # vector_index_fsck's epoch cross-check reports.
+        # and fsck could not tell when n_cells was unchanged). A crash
+        # inside the publish leaves base/meta at epoch N+1 with the
+        # quantizer still at N — what vector_index_fsck's epoch
+        # cross-check reports — until the next writer completes it.
         new_epoch = _layout_epoch(spark, index_path) + 1
         staged_meta = os.path.join(staging, "meta")
         write_meta_rows(
@@ -1354,32 +1325,26 @@ def rebuild_vector_quantizer(
             [(use_assigner, len(centroids), len(centroids), new_epoch)],
             _QUANTIZER_SCHEMA,
         )
-        # rename order: base first (a racing reader sees old centroids
+        # step order: base first (a racing reader sees old centroids
         # + new base — the documented stale-probe window — rather than
         # new centroids + no base), tails before the quantizer pair (an
         # old tail assigned under the old centroids must never survive
         # into the new layout where a later fold would merge its stale
         # cell placements), centroids before the marker that declares
         # them current
-        for old, new in (
-            (base_cells_path, staged_cells),
-            (base_ids_path, staged_ids),
-            (meta_path, staged_meta),
-        ):
-            _retire(old, index_path)
-            os.makedirs(os.path.dirname(old), exist_ok=True)
-            if os.path.exists(new):
-                os.rename(new, old)
-        for tail_dir in (cells_path, tomb_path):
-            _retire(tail_dir, index_path)
-        for old, new in (
-            (_centroids_path(index_path), staged_centroids),
-            (_quantizer_path(index_path), staged_quantizer),
-        ):
-            _retire(old, index_path)
-            if os.path.exists(new):
-                os.rename(new, old)
-        shutil.rmtree(staging, ignore_errors=True)
+        publish(
+            index_path,
+            [
+                (base_cells_path, staged_cells),
+                (base_ids_path, staged_ids),
+                (meta_path, staged_meta),
+                (cells_path, None),
+                (tomb_path, None),
+                (_centroids_path(index_path), staged_centroids),
+                (_quantizer_path(index_path), staged_quantizer),
+            ],
+            staging,
+        )
         return {
             "mode": "rebuild",
             "n_live": n_live,

@@ -477,7 +477,7 @@ def test_trash_recovery_window_after_bad_merge(spark, sf_dir, tmp_path):
 
     # operator recovery: restore every bucket from its trash entry
     for entry in retired:
-        name = entry.split("-", 1)[1]  # "<ts>-bucket=N.old"
+        name = entry.split("-", 1)[1]  # "<ts>-bucket=N"
         if not name.startswith("bucket="):
             continue
         b = name.split("=", 1)[1].split(".", 1)[0]
@@ -557,7 +557,7 @@ def test_snapshot_survives_full_rewrite_of_source(spark, sf_dir, tmp_path):
     ).withColumn("doc", F.regexp_replace("doc", '"1-', '"9-'))
     upsert_partitioned_mirror(spark, mirror_path, bulk, N_BUCKETS, mode="rewrite")
     # and expire the trash so the old source files are truly gone
-    from couch_to_postgres_spark.streaming.partitioned import _gc_trash
+    from couch_to_postgres_spark.streaming.commit import _gc_trash
 
     _gc_trash(mirror_path, grace_s=0.0)
 

@@ -1024,21 +1024,15 @@ def test_maxscore_gate_short_circuits_from_meta(spark, tmp_path):
 
 
 def test_bm25_dl_carry_equals_doclen_join(spark, tmp_path, monkeypatch):
-    """r14 pin for the dl-carry scoring shapes: carrying the per-doc
-    length on the tf rows (it is functionally dependent on the doc id)
-    must produce IDENTICAL rows to the r03-r13 corpus-doclen-join shape
-    on every path that has the knob — the scan/batch path
-    (search._DL_CARRY, production default False: measured negative),
-    and the index-side stored-dl passthrough
-    (search_stream._DL_CARRY_INDEX, production default True) on both
-    the compacted read-mostly full fast path and the forced MaxScore
-    rescore."""
-    from couch_to_postgres_spark.extensions import search as search_ext
+    """r14 pin for the index-side dl-carry scoring shape: the stored-dl
+    passthrough (search_stream._DL_CARRY_INDEX, production default
+    True) must produce IDENTICAL rows to the r03-r13 corpus-doclen-join
+    shape on both the compacted read-mostly full fast path and the
+    forced MaxScore rescore."""
     from couch_to_postgres_spark.streaming import search_stream as ss
 
     docs = _skewed_corpus()
     idx = _compacted(spark, tmp_path, docs, "dl_carry_idx")
-    corpus = spark.createDataFrame(docs, "doc_id long, text string")
     qtab = spark.createDataFrame(
         # hot+x: the skippable-cohort shape (forced pruning engages);
         # cold+y: nothing skippable — covers the fallback-union branch
@@ -1046,13 +1040,7 @@ def test_bm25_dl_carry_equals_doclen_join(spark, tmp_path, monkeypatch):
         "query_id int, term string",
     )
 
-    assert search_ext._DL_CARRY is False  # measured-negative default
     assert ss._DL_CARRY_INDEX is True  # production default
-
-    # scan/batch path: both knob arms equal
-    joined_batch = _rows(bm25_topk_batch(corpus, qtab, k=7))
-    monkeypatch.setattr(search_ext, "_DL_CARRY", True)
-    assert _rows(bm25_topk_batch(corpus, qtab, k=7)) == joined_batch
 
     # index paths: both knob arms equal
     def index_paths():

@@ -1,7 +1,9 @@
-"""Source guard: stored state under ``streaming/`` opens through
+"""Source guards. Stored state under ``streaming/`` opens through
 ``meta_io.open_parquet`` (footer schema, zero Spark jobs), never through
-a schema-inferring ``spark.read…parquet(…)`` call. ``meta_io.py`` owns
-the Spark fallback; no other streaming module reads parquet directly."""
+a schema-inferring ``spark.read…parquet(…)`` call: ``meta_io.py`` owns
+the Spark fallback. And stored-state directory swaps go through
+``commit.publish``: no other module under ``streaming/`` (nor
+``extensions/ann.py``) renames or moves paths itself."""
 
 import ast
 import os
@@ -79,4 +81,59 @@ def test_streaming_opens_stored_state_through_meta_io():
     assert not found, (
         "open stored parquet state with meta_io.open_parquet / "
         f"try_open_parquet (zero-job footer schema): {found}"
+    )
+
+
+PACKAGE = os.path.dirname(STREAMING)
+
+#: the moves only ``streaming/commit.py`` may make: every directory swap
+#: of stored state goes through ``commit.publish`` (single-file
+#: ``os.replace`` stays allowed)
+_MOVES = {("os", "rename"), ("shutil", "move")}
+
+
+def _raw_moves(source: str) -> list[int]:
+    """Line numbers of ``os.rename``/``shutil.move`` references,
+    imported names included."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and (node.value.id, node.attr) in _MOVES
+        ) or (
+            isinstance(node, ast.ImportFrom)
+            and any((node.module, a.name) in _MOVES for a in node.names)
+        ):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_move_detector_sees_every_form():
+    src = (
+        "import os, shutil\n"
+        "from os import rename\n"
+        "os.rename(a, b)\n"
+        "shutil.move(a, b)\n"
+        "f = os.rename\n"
+        "os.replace(a, b)\n"
+    )
+    assert _raw_moves(src) == [2, 3, 4, 5]
+
+
+def test_directory_swaps_go_through_commit():
+    files = [
+        os.path.join(STREAMING, n)
+        for n in sorted(os.listdir(STREAMING))
+        if n.endswith(".py") and n != "commit.py"
+    ] + [os.path.join(PACKAGE, "extensions", "ann.py")]
+    found = {}
+    for path in files:
+        with open(path) as f:
+            lines = _raw_moves(f.read())
+        if lines:
+            found[os.path.relpath(path, PACKAGE)] = lines
+    assert not found, (
+        "publish stored-state swaps with streaming.commit.publish, not a "
+        f"raw rename/move: {found}"
     )
