@@ -378,9 +378,12 @@ def compact_ivf_index(spark, path: str) -> list[int]:
     (``_live_cells``, ``ivf_topk_indexed``) never depend on local-FS
     semantics."""
     import os
-    import shutil
 
-    from couch_to_postgres_spark.streaming.commit import publish, writing
+    from couch_to_postgres_spark.streaming.commit import (
+        publish,
+        staging,
+        writing,
+    )
 
     with writing(path):
         t = _read_tombstones(spark, path)
@@ -396,12 +399,11 @@ def compact_ivf_index(spark, path: str) -> list[int]:
             .distinct()
             .collect()
         )
-        staging = path.rstrip("/") + ".compacting-ivf"
-        shutil.rmtree(staging, ignore_errors=True)
+        stage = staging(path, "compacting-ivf")
         steps = []
         for c in affected:
             src = os.path.join(cells_dir, f"cell={c}")
-            tmp = os.path.join(staging, f"cell={c}")
+            tmp = os.path.join(stage, f"cell={c}")
             (
                 spark.read.parquet(src)
                 .join(t, on=id_col, how="left_anti")
@@ -411,7 +413,7 @@ def compact_ivf_index(spark, path: str) -> list[int]:
             )
             steps.append((src, tmp))
         steps.append((os.path.join(path, "tombstones"), None))
-        publish(path, steps, staging)
+        publish(path, steps, stage)
         return affected
 
 

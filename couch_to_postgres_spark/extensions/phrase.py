@@ -153,12 +153,8 @@ def _probe_terms(
         # rejected loudly there (matching _phrase_words) and this guard
         # only keeps a direct _probe_terms call from min([])-crashing
         return terms
+    from couch_to_postgres_spark.streaming import lsm
     from couch_to_postgres_spark.streaming.meta_io import read_meta_rows
-    from couch_to_postgres_spark.streaming.search_stream import (
-        _has_partition_prefix,
-        _open_partition_dirs,
-        _term_buckets,
-    )
 
     base = os.path.join(index_path, "base")
     dfs_root = os.path.join(base, "dfs")
@@ -166,19 +162,15 @@ def _probe_terms(
     if not meta or "n_live" not in meta[0]:
         return terms
     n_live = float(meta[0]["n_live"]) or 1.0
-    if _has_partition_prefix(dfs_root, "token_bucket="):
-        # bucketed dfs layout (r09): open ONLY the terms' bucket dirs by
-        # name (r10, VERDICT r09 #6 — a whole-root reader pays a full
-        # file listing at scaled bucket counts, which would put a
-        # directory-count cost inside every phrase probe's planning)
-        dfs = _open_partition_dirs(
+    if lsm.has_partition_prefix(dfs_root, "token_bucket="):
+        # bucketed dfs layout: open only the terms' bucket dirs by name,
+        # so a phrase probe's planning never lists every dir
+        dfs = lsm.open_dirs(
             spark,
             dfs_root,
             [
                 f"token_bucket={b}"
-                for b in _term_buckets(
-                    spark, terms, int(meta[0]["token_buckets"])
-                )
+                for b in lsm.term_buckets(terms, int(meta[0]["token_buckets"]))
             ],
         )
         if dfs is None:

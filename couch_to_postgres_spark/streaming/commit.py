@@ -2,8 +2,9 @@
 
 Every writer that replaces directories of a stored-state root (the
 partitioned mirror, its count views, the search, vector and IVF
-indexes) stages the new pieces beside the root and publishes them with
-:func:`publish`, inside :func:`writing`:
+indexes) stages the new pieces in a sibling of the root
+(:func:`staging`) and publishes them with :func:`publish`, inside
+:func:`writing`:
 
 1. **plan** — the ordered steps ``(live, staged_or_None)`` are written
    atomically to ``<root>/_PUBLISH.json`` (dot-temp + ``os.replace``);
@@ -63,6 +64,14 @@ def _path_lock(path: str) -> threading.RLock:
     key = os.path.abspath(path)
     with _LOCKS_GUARD:
         return _LOCKS.setdefault(key, threading.RLock())
+
+
+def staging(root: str, tag: str) -> str:
+    """The staging sibling ``<root>.<tag>`` a writer builds its new
+    pieces in, cleared of whatever a crashed writer left there."""
+    path = root.rstrip("/") + "." + tag
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 @contextmanager

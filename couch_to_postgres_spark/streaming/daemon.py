@@ -301,10 +301,8 @@ class Daemon:
             debt = index_status(self.spark, sip).get("compaction_debt")
             if debt is None or debt <= self.search_compaction_debt:
                 return None
-            diag: dict = {}
             done = compact_index_incremental(
-                self.spark, sip, diag=diag,
-                impacts_default=(twin == "search"),
+                self.spark, sip, impacts_default=(twin == "search")
             )
             return {
                 "debt": debt,
@@ -313,7 +311,6 @@ class Daemon:
                 "affected_buckets": done.get("affected_buckets"),
                 "total_buckets": done.get("total_buckets"),
                 "churned_docs": done.get("churned_docs"),
-                "phase_timings": diag or None,
             }
 
         def _vector_unit(fc, vip):
@@ -346,10 +343,7 @@ class Daemon:
             debt = vst.get("compaction_debt")
             if debt is None or debt <= self.search_compaction_debt:
                 return None
-            diag: dict = {}
-            done = compact_vector_index_incremental(
-                self.spark, vip, diag=diag
-            )
+            done = compact_vector_index_incremental(self.spark, vip)
             return {
                 "debt": debt,
                 "mode": done.get("mode"),
@@ -357,7 +351,6 @@ class Daemon:
                 "churned_docs": done.get("churned_docs"),
                 "affected_cells": done.get("affected_cells"),
                 "total_cells": done.get("total_cells"),
-                "phase_timings": diag or None,
             }
 
         units: list = []  # (bucket_key, feed, twin_or_None, thunk)
@@ -509,7 +502,7 @@ class Daemon:
                 "shingle_index": shingle,
                 "vector_index": vector,
                 # last watchdog-triggered compaction per index twin
-                # (mode/affected_pairs/churned_docs/phase_timings) —
+                # (mode/affected_pairs/churned_docs) —
                 # maintenance cost belongs on the operator surface
                 "index_maintenance": self._last_maintenance.get(fc.name),
                 "sketch_states": sketch_states,

@@ -52,7 +52,12 @@ from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.operators.cdc import apply_changes, latest_changes
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
-from couch_to_postgres_spark.streaming.commit import PLAN_FILE, publish, writing
+from couch_to_postgres_spark.streaming.commit import (
+    PLAN_FILE,
+    publish,
+    staging,
+    writing,
+)
 from couch_to_postgres_spark.streaming.meta_io import (
     _data_files,
     open_parquet,
@@ -484,11 +489,10 @@ def _rewrite_buckets(
     merged = apply_changes(
         current, batch, type_filter=type_filter, map_hook=map_hook
     ).withColumn("bucket", bucket_of(F.col("id"), num_buckets))
-    staging = path + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
+    stage = staging(path, "staging")
     merged.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
-    ).parquet(staging)
+    ).parquet(stage)
     if count_views:
         # delta BEFORE the swap: `current` plans over the pre-swap
         # bucket dirs, which the swap below destroys; full_pre is the
@@ -498,14 +502,14 @@ def _rewrite_buckets(
             path,
             count_views,
             pre=current,
-            post=open_parquet(spark, staging).drop("bucket"),
+            post=open_parquet(spark, stage).drop("bucket"),
             touched_ids=batch.select("id").distinct(),
             full_pre=_mor_view(spark, path),
         )
-    _swap_buckets(path, staging, touched, meta)
+    _swap_buckets(path, stage, touched, meta)
 
 
-def _swap_buckets(path: str, staging: str, buckets: list[int], meta: dict) -> None:
+def _swap_buckets(path: str, stage: str, buckets: list[int], meta: dict) -> None:
     """Publish the staged ``bucket=`` dirs for ``buckets``: per bucket,
     the base dir swaps and the delta dir retires; the row accounting
     (staged as the new meta file) is the last step.
@@ -515,7 +519,7 @@ def _swap_buckets(path: str, staging: str, buckets: list[int], meta: dict) -> No
     without accounting counts every base footer once). ``delta_rows``
     is the remaining delta log's footer rows, bounded by the fold
     threshold."""
-    staged = [os.path.join(staging, f"bucket={b}") for b in buckets]
+    staged = [os.path.join(stage, f"bucket={b}") for b in buckets]
     live = [os.path.join(path, f"bucket={b}") for b in buckets]
     deltas = [os.path.join(_delta_path(path), f"bucket={b}") for b in buckets]
     for d in staged:  # a bucket emptied by deletions swaps in empty
@@ -525,12 +529,12 @@ def _swap_buckets(path: str, staging: str, buckets: list[int], meta: dict) -> No
         total = parquet_rows([path])
     meta["total_rows"] = total + parquet_rows(staged) - parquet_rows(live)
     meta["delta_rows"] = parquet_rows([_delta_path(path)]) - parquet_rows(deltas)
-    write_meta(staging, meta)
+    write_meta(stage, meta)
     steps = []
     for base_dir, staged_dir, delta_dir in zip(live, staged, deltas):
         steps += [(base_dir, staged_dir), (delta_dir, None)]
-    steps.append((os.path.join(path, META_FILE), os.path.join(staging, META_FILE)))
-    publish(path, steps, staging)
+    steps.append((os.path.join(path, META_FILE), os.path.join(stage, META_FILE)))
+    publish(path, steps, stage)
 
 
 def bucket_file_counts(path: str) -> dict[int, int]:
@@ -586,12 +590,11 @@ def fold_deltas(
     folded = _mor_view(spark, path, buckets).withColumn(
         "bucket", bucket_of(F.col("id"), num_buckets)
     )
-    staging = path + ".folding"
-    shutil.rmtree(staging, ignore_errors=True)
+    stage = staging(path, "folding")
     folded.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
-    ).parquet(staging)
-    _swap_buckets(path, staging, buckets, meta)
+    ).parquet(stage)
+    _swap_buckets(path, stage, buckets, meta)
     return buckets
 
 
@@ -670,10 +673,10 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     stranded = [
         d
         for d in (
-            path + ".staging",
-            path + ".folding",
-            path + ".rebucket",
-            path + ".compact",
+            *(
+                path.rstrip("/") + "." + tag
+                for tag in ("staging", "folding", "rebucket", "compact")
+            ),
             os.path.join(path, PLAN_FILE),
         )
         if os.path.exists(d)
@@ -746,18 +749,17 @@ def rebucket_mirror(
         old_n = int(meta["num_buckets"])
         if new_num_buckets == old_n:
             return old_n
-        staging = path + ".rebucket"
-        shutil.rmtree(staging, ignore_errors=True)
-        write_partitioned_mirror(_mor_view(spark, path), staging, new_num_buckets)
-        new = {d for d in os.listdir(staging) if d.startswith("bucket=")}
+        stage = staging(path, "rebucket")
+        write_partitioned_mirror(_mor_view(spark, path), stage, new_num_buckets)
+        new = {d for d in os.listdir(stage) if d.startswith("bucket=")}
         old = {d for d in os.listdir(path) if d.startswith("bucket=")} - new
-        steps = [(os.path.join(path, d), os.path.join(staging, d)) for d in sorted(new)]
+        steps = [(os.path.join(path, d), os.path.join(stage, d)) for d in sorted(new)]
         steps += [(os.path.join(path, d), None) for d in sorted(old)]
         steps += [
             (_delta_path(path), None),
-            (os.path.join(path, META_FILE), os.path.join(staging, META_FILE)),
+            (os.path.join(path, META_FILE), os.path.join(stage, META_FILE)),
         ]
-        publish(path, steps, staging)
+        publish(path, steps, stage)
         return old_n
 
 
@@ -783,17 +785,16 @@ def compact_mirror(
             if n > max_files_per_bucket
         )
         if todo:
-            staging = path + ".compact"
-            shutil.rmtree(staging, ignore_errors=True)
+            stage = staging(path, "compact")
             steps = []
             for b in todo:
                 src = os.path.join(path, f"bucket={b}")
-                tmp = os.path.join(staging, f"bucket={b}")
+                tmp = os.path.join(stage, f"bucket={b}")
                 open_parquet(spark, src).coalesce(target_files).write.mode(
                     "overwrite"
                 ).parquet(tmp)
                 steps.append((src, tmp))
-            publish(path, steps, staging)
+            publish(path, steps, stage)
         return sorted(set(folded) | set(todo))
 
 

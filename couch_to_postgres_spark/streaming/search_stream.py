@@ -1,63 +1,40 @@
-"""Streaming-incremental BM25: keep a ranked-retrieval index maintained
-under the CDC change feed instead of re-tokenizing the corpus per query.
+"""Streaming-incremental BM25: a ranked-retrieval index maintained under
+the CDC change feed, so tokenization is paid once per changed doc, not
+once per query.
 
-The batch search stack (:mod:`couch_to_postgres_spark.extensions.search`)
-rebuilds doc lengths, term frequencies, and df(t) from the corpus on every
-call — correct, but a live pipeline ingesting a change feed (reference
-lib/index.js follow loop) should pay tokenization once per CHANGED doc,
-not once per query over 100 TB. This module maintains the searchable
-state append-only (the `streaming/dedup_stream.py` index pattern) and
-answers BM25 top-k from the state alone.
+State (plain parquet under one index root):
 
-State (all plain parquet; the tail is append-only — no rewrite of
-accumulated state between compactions):
+* ``doclen`` — (doc_id, dl, seq), one row per ingested doc version;
+* ``postings`` — (doc_id, token, tf, seq), per-version term frequencies;
+* ``tombstones`` — (doc_id, seq) delete markers;
+* ``base/`` (after :func:`compact_index`) — the compacted base:
+  ``base/doclen`` (live rows, ``id_bucket=N`` dirs, each row carrying
+  the doc's token buckets), ``base/postings`` and ``base/dfs`` in
+  ``token_bucket=N/id_sub=M`` dirs, ``base/meta`` (1-row: bucket
+  counts, ``n_live``/``sum_dl``, the impact-bound stamp).
 
-* ``<index>/doclen``   — (doc_id, dl, seq): one row per ingested doc
-  VERSION (seq = the change's sequence number);
-* ``<index>/postings`` — (doc_id, token, tf, seq): per-version term
-  frequencies — the inverted-index rows;
-* ``<index>/tombstones`` — (doc_id, seq): delete markers;
-* ``<index>/base/`` (optional, written by :func:`compact_index`) — the
-  compacted BASE: ``base/doclen`` (live rows only), ``base/postings``
-  laid out in ``token_bucket=N`` partition directories, ``base/meta``
-  (1-row parquet: bucket count + live-corpus stats ``n_live``/``sum_dl``
-  for the read-mostly query fast path). The tail dirs above keep
-  receiving appends AFTER compaction — reads merge base ∪ tail (the
-  log-structured-merge shape).
+The three tail dirs keep receiving appends after compaction, and reads
+merge base ∪ tail. Liveness, bucketing, churn discovery, the
+read-mostly gate and the fold's publish are the shared LSM core
+(:mod:`streaming.lsm`); this module supplies the payload — the
+postings, dfs and impact fold and BM25 scoring over it.
 
-Liveness rule (evaluated at query time, no state rewrite): a doc's live
-version is its max-seq doclen row, unless a tombstone with a higher seq
-exists — updates simply append the new version (higher seq supersedes),
-deletes append a tombstone. This is exactly the rev-wins merge discipline
-of the CDC mirror (operators/cdc.py), re-expressed over append-only files.
+Plan shape:
 
-Plan shape at 100 TB:
-
-* ingest cost is O(changed docs): tokenize + one skinny append per batch
-  — the corpus is never rescanned;
-* query-time liveness is ONE partial-aggregated groupBy over the skinny
-  doclen/tombstone files (bytes per doc-version, not corpus bytes);
-* the postings scan is filtered to the query terms BEFORE any shuffle;
-  on the compacted base the scan additionally prunes to the
-  ``token_bucket`` partition directories holding the query terms
-  (PartitionFilters, verified by test), so only
-  terms/token_buckets-worth of the base is ever opened — everything
-  downstream is query-hit-proportional;
-* the live-version join is hint-free: AQE broadcasts the query-hit
-  slice when it is genuinely small and falls back to a shuffle join for
-  high-df (stop-word-like) terms instead of OOMing a forced broadcast;
-  ``max_df_frac`` applies the batch path's classic df cap when
-  near-zero-idf terms should be dropped from scoring outright;
+* ingest is O(changed docs): tokenize the batch, append skinny rows;
+* query-time liveness is one partial-aggregated groupBy over the skinny
+  doclen/tombstone files, never postings or text;
+* the postings scan is filtered to the query terms before any shuffle,
+  and on the base opens only the query terms' ``token_bucket`` dirs;
+* on a read-mostly base (:func:`base_is_live`) the dedup and liveness
+  join are skipped, and the MaxScore read (:func:`_bm25_pruned_topk`)
+  answers gate-accepted queries from the impact-sorted blocks;
 * scoring reuses :func:`extensions.search.bm25_rank_components`, so the
-  index path and the fresh-build path cannot drift numerically — the
-  equivalence is pinned by tests and by the ``x_bm25_incremental``
-  cross-engine oracle.
+  index path and the fresh-build path cannot drift numerically.
 
-At-least-once safety: a replayed micro-batch re-appends byte-identical
-(doc, token, tf, seq) and (doc, dl, seq) rows; liveness takes max/max_by
-over seq (duplicate-insensitive) and the query path applies
-``dropDuplicates`` on the pruned, query-hit-proportional slice — so
-replays change nothing (same idempotence argument as the CDC merge).
+At-least-once safety: a replayed micro-batch re-appends identical
+rows; liveness takes max over seq and readers drop duplicate
+(id, token, seq) rows, so replays change nothing.
 """
 
 from __future__ import annotations
@@ -72,7 +49,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from couch_to_postgres_spark.extensions.search import bm25_rank_components
 from couch_to_postgres_spark.extensions.text import _words
-from couch_to_postgres_spark.streaming.commit import publish, writing
+from couch_to_postgres_spark.streaming import lsm
+from couch_to_postgres_spark.streaming.commit import publish, staging, writing
 from couch_to_postgres_spark.streaming.meta_io import (
     open_parquet,
     read_components,
@@ -116,38 +94,6 @@ def _all_attrs(
     for df in frames[1:]:
         out = out.unionByName(df, allowMissingColumns=True)
     return out
-
-
-def _has_partition_prefix(root: str, prefix: str) -> bool:
-    """True when ``root`` holds ``prefix``-style partition dirs —
-    the layout probe that decides whether a by-name pruned open is
-    possible. Local-FS dir probe, like the swap machinery; on HDFS/S3
-    this is a FileSystem listStatus / table-format manifest read."""
-    try:
-        return any(e.startswith(prefix) for e in os.listdir(root))
-    except OSError:
-        return False
-
-
-def _open_partition_dirs(spark, root: str, rel_dirs) -> DataFrame | None:
-    """Construct a reader over ONLY the named partition dirs of a
-    bucketed component (``basePath`` keeps the partition columns).
-    Constructing a reader over the whole root pays a full file LISTING
-    at DataFrame-construction time — measured 10-15 s on a 5 k-dir
-    dataset (SCALING.md r09) — even when execution would partition-prune
-    every other dir; when the caller already knows the bucket set (query
-    terms → token buckets via meta, churned ids → id buckets), opening
-    the dirs by name skips the listing entirely. A missing dir just
-    means that bucket never materialized. Returns ``None`` when none of
-    the named dirs exist (caller supplies its empty frame)."""
-    dirs = [
-        d
-        for d in (os.path.join(root, rel) for rel in rel_dirs)
-        if os.path.exists(d)
-    ]
-    if not dirs:
-        return None
-    return open_parquet(spark, *dirs, base_path=root)
 
 
 def _paths(index_path: str) -> tuple[str, str, str]:
@@ -227,7 +173,7 @@ def _search_index_batch_locked(
             ).alias("c"),
             F.count(F.lit(1)).alias("_n_changes"),
         )
-        # tokenize ONCE, into the cache (r14, guide §2.4/§1.2): the
+        # tokenize ONCE, into the cache: the
         # stats aggregate, the doclen rows and the postings explode all
         # consumed `_words(text)` from the cached TEXT, so a bulk build
         # ran the tokenizer over the whole batch three times (three
@@ -235,7 +181,7 @@ def _search_index_batch_locked(
         # Caching the token array instead runs it once at cache
         # materialization; deleted/NULL-text rows hold NULL (the
         # downstream coalesce/greatest guards are unchanged).
-        # `_TOKENIZE_ONCE` is the r14 A/B knob (False = cache text).
+        # `_TOKENIZE_ONCE` is the A/B knob (False = cache text).
         .select(
             id_col,
             "c.seq",
@@ -276,7 +222,7 @@ def _search_index_batch_locked(
                     ~F.col("deleted"),
                     # a NULL-text upsert (custom search_text hook) holds
                     # zero postings; bare size(NULL) is -1 (legacy
-                    # sizeOfNull) and would skew the stat (ADVICE r10)
+                    # sizeOfNull) and would skew the stat
                     F.greatest(
                         F.coalesce(
                             F.size(F.array_distinct(words)), F.lit(0)
@@ -350,66 +296,7 @@ def live_doclen(
     doclen = tail.select(id_col, "dl", "seq").unionByName(
         base.select(id_col, "dl", "seq")
     )
-    latest = doclen.groupBy(id_col).agg(
-        F.max("seq").alias("seq"), F.max_by("dl", "seq").alias("dl")
-    )
-    tomb_max = tomb.groupBy(id_col).agg(F.max("seq").alias("_tomb_seq"))
-    return (
-        latest.join(tomb_max, id_col, "left")
-        .filter(
-            F.col("_tomb_seq").isNull() | (F.col("_tomb_seq") < F.col("seq"))
-        )
-        .select(id_col, "dl", "seq")
-    )
-
-
-def _spark_hash_str(s: str, seed: int = 42) -> int:
-    """Driver-side twin of ``F.hash`` over ONE string column: Spark's
-    ``Murmur3_x86_32.hashUnsafeBytes`` on the UTF-8 bytes, seed 42,
-    signed-int32 result. Spark deviates from canonical murmur3 in the
-    tail — each remaining byte (SIGNED) runs through the full
-    mixK1/mixH1 round individually — replicated here. The drift hazard
-    of reimplementing an engine hash is pinned by
-    ``test_search_stream.test_spark_hash_str_matches_engine``: any Spark
-    upgrade that changed this hash would fail that test loudly, not
-    probe wrong buckets silently."""
-    data = s.encode("utf-8")
-    n = len(data)
-    mask = 0xFFFFFFFF
-    c1, c2 = 0xCC9E2D51, 0x1B873593
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (32 - r))) & mask
-
-    def mix(h1: int, k1: int) -> int:
-        k1 = rotl((k1 * c1) & mask, 15)
-        k1 = (k1 * c2) & mask
-        h1 ^= k1
-        return (rotl(h1, 13) * 5 + 0xE6546B64) & mask
-
-    h1 = seed & mask
-    for i in range(0, n - n % 4, 4):
-        h1 = mix(h1, int.from_bytes(data[i:i + 4], "little"))
-    for i in range(n - n % 4, n):
-        b = data[i]
-        h1 = mix(h1, b - 256 if b >= 128 else b)
-    h1 ^= n
-    h1 = ((h1 ^ (h1 >> 16)) * 0x85EBCA6B) & mask
-    h1 = ((h1 ^ (h1 >> 13)) * 0xC2B2AE35) & mask
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def _term_buckets(
-    spark: SparkSession, terms: list[str], n_buckets: int
-) -> list[int]:
-    """The ``pmod(hash(token), n_buckets)`` bucket ids for the query
-    terms — driver-side (:func:`_spark_hash_str`, engine-equality
-    pinned), so planning a bucket-pruned probe launches no Spark job.
-    ``% n_buckets`` with a positive modulus matches ``F.pmod`` on a
-    negative hash."""
-    del spark  # kept for call-site compatibility; no job is launched
-    return sorted({_spark_hash_str(t) % n_buckets for t in terms})
+    return lsm.live_versions(doclen, tomb, id_col, carry=("dl",))
 
 
 def _full_postings(
@@ -436,11 +323,9 @@ def live_postings(
     terms: list[str] | None = None,
 ) -> DataFrame:
     """(id, token, tf, seq) postings restricted to LIVE doc versions,
-    with at-least-once replay copies removed — THE reader every
-    postings consumer must go through (VERDICT r08 #1: the replay-dedup
-    discipline had three hand-rolled copies and one missing one —
-    ``decontaminate_from_index`` double-counted replayed rows — so the
-    discipline now has exactly one owner).
+    with at-least-once replay copies removed — the one reader every
+    postings consumer goes through, so the replay-dedup discipline has
+    one owner.
 
     Two invariants every row of the result satisfies:
 
@@ -471,20 +356,15 @@ def live_postings(
 
 
 def base_is_live(spark: SparkSession, index_path: str) -> bool:
-    """True when the compacted base IS the live corpus: stats-bearing
-    meta present, no tail doclen, no tombstones — the same read-mostly
-    test ``bm25_topk_from_index``'s fast path applies (safe on tail-
-    DOCLEN absence alone because ``search_index_batch`` appends doclen
-    before postings — its documented write-order invariant). Callers
-    can then skip the live-version merge entirely: every base postings
-    row is live and unique (compaction dropped dead versions and
-    deduplicated replays)."""
+    """True when the compacted base IS the live corpus
+    (:func:`lsm.base_is_live`: stats-bearing meta, no tail, no
+    tombstones). "No tail" is decided from tail-doclen absence alone,
+    which is safe because ``search_index_batch`` appends doclen before
+    postings (its write-order invariant)."""
     doclen_path, _, tomb_path = _paths(index_path)
     _, _, meta_path = _base_paths(index_path)
-    return (
-        bool(read_meta_rows(spark, meta_path))
-        and try_open_parquet(spark, doclen_path) is None
-        and try_open_parquet(spark, tomb_path) is None
+    return lsm.base_is_live(
+        spark, read_meta_rows(spark, meta_path), doclen_path, tomb_path
     )
 
 
@@ -586,18 +466,15 @@ def query_postings(
 ) -> DataFrame:
     """(id, token, tf, seq) rows matching the query terms: compacted
     base ∪ append tail. The term filter pushes into both parquet scans;
-    on a bucketed base the ``token_bucket=N`` partition dirs holding the
-    query terms are opened BY NAME (bucket ids from ``base/meta``;
-    r10, VERDICT r09 #6) — constructing a reader over the whole base
-    root pays a full file listing at scaled bucket counts even though
-    execution would prune, so the probe's planning cost now scales with
-    the term set, not the directory count. An un-compacted-since append
-    tail is the only unpruned bytes — bounded by the update rate
-    between compactions, not corpus size.
+    on a bucketed base only the ``token_bucket=N`` dirs holding the
+    query terms are opened, by name (:func:`lsm.open_dirs`), so the
+    probe's planning cost scales with the term set, not the directory
+    count. The append tail is the only unpruned read — bounded by the
+    update rate between compactions, not corpus size.
 
     ``with_dl=True`` additionally returns the base's DENORMALIZED
     per-doc length column (written by impacts-mode compaction) so the
-    scoring stage can skip its doclen join (r14 dl-carry) — honored
+    scoring stage can skip its doclen join — honored
     only when the base actually carries ``dl`` AND no tail exists
     (tail rows have no stored dl); otherwise the column is silently
     omitted and callers fall back to the join by checking
@@ -609,15 +486,12 @@ def query_postings(
     schema = f"{id_col} long, token string, tf double, seq long"
     meta = read_meta_rows(spark, meta_path)
     base = None
-    if meta and _has_partition_prefix(base_postings_path, "token_bucket="):
+    if meta and lsm.has_partition_prefix(base_postings_path, "token_bucket="):
         n_buckets = int(meta[0]["token_buckets"])
-        base = _open_partition_dirs(
+        base = lsm.open_dirs(
             spark,
             base_postings_path,
-            [
-                f"token_bucket={b}"
-                for b in _term_buckets(spark, terms, n_buckets)
-            ],
+            [f"token_bucket={b}" for b in lsm.term_buckets(terms, n_buckets)],
         )
     else:
         # legacy flat base (or a non-local FS where the dir probe is
@@ -678,7 +552,7 @@ def _bm25_pruned_topk(
 
     Exact BM25 scores every posting of every query term, so a 33%-df
     term at 100 TB scores a third of the corpus's postings per query
-    (VERDICT r12 #1). This read instead:
+    This read instead:
 
     1. **plans driver-side from dfs bounds** — per query it derives a
        provable lower bound θ of the k-th best final score (the k-th
@@ -709,7 +583,7 @@ def _bm25_pruned_topk(
     strictly below the k-th best ROUNDED score, so ties at the boundary
     always survive.
 
-    **Cost gate** (r13): MaxScore's known degenerate regime is the
+    **Cost gate**: MaxScore's known degenerate regime is the
     all-common-term query — similar per-term upper bounds leave every
     term but one with cut 0, phase B reads ~everything, and the pruned
     plan COSTS more than the exact full path (measured: a 20-query
@@ -770,7 +644,7 @@ def _bm25_pruned_topk(
                 query_id_col, F.col(term_col).alias("t")
             ).distinct().collect()
         ]
-    # META-ONLY refusal short-circuit (r14, VERDICT r13 #4): the global
+    # META-ONLY refusal short-circuit: the global
     # decision needs net predicted pair savings ≥ extra_scan + FLOOR,
     # and net_pairs ≤ Σ_q Σ_{t∈q} dft_t ≤ |(query, term) pairs| ×
     # n_live (df of any term is at most the live doc count) while
@@ -791,9 +665,9 @@ def _bm25_pruned_topk(
         return None
     dfs_root = os.path.join(index_path, "base", "dfs")
     _, base_postings_path, _ = _base_paths(index_path)
-    if not _has_partition_prefix(dfs_root, "token_bucket="):
+    if not lsm.has_partition_prefix(dfs_root, "token_bucket="):
         return None
-    if not _has_partition_prefix(base_postings_path, "token_bucket="):
+    if not lsm.has_partition_prefix(base_postings_path, "token_bucket="):
         return None
     import math
 
@@ -807,9 +681,9 @@ def _bm25_pruned_topk(
     r_max = max(1.0, avgdl / lo)
     s_min = min(1.0, avgdl / hi)
     bucket_dirs = [
-        f"token_bucket={tb}" for tb in _term_buckets(spark, terms, n_buckets)
+        f"token_bucket={tb}" for tb in lsm.term_buckets(terms, n_buckets)
     ]
-    dfs_df = _open_partition_dirs(spark, dfs_root, bucket_dirs)
+    dfs_df = lsm.open_dirs(spark, dfs_root, bucket_dirs)
     try:
         rows = (
             dfs_df.filter(F.col("token").isin(terms))
@@ -1011,7 +885,7 @@ def _bm25_pruned_topk(
     # phase B: the candidate scan. Terms whose cut exceeds their max
     # stored impact cannot seed a candidate — skipped entirely (their
     # postings still return in phase C for candidates found elsewhere).
-    base = _open_partition_dirs(spark, base_postings_path, bucket_dirs)
+    base = lsm.open_dirs(spark, base_postings_path, bucket_dirs)
     if base is None:
         return None
     phase_b_preds = [
@@ -1070,7 +944,7 @@ def _bm25_pruned_topk(
     engaged_queries = queries.filter(
         F.col(query_id_col).isin(sorted(engaged, key=str))
     )
-    # r14 dl-carry: tf_cand already holds the stored denormalized dl —
+    # dl-carry: tf_cand already holds the stored denormalized dl —
     # pass it through instead of reconstructing a doclen frame with a
     # distinct() and joining it back (two shuffles of the rescore slice)
     out = bm25_rank_components(
@@ -1153,7 +1027,7 @@ def bm25_topk_from_index(
 
     On a read-mostly compacted base the read takes the MaxScore /
     block-max pruned path (:func:`_bm25_pruned_topk` — exact top-k from
-    provably-sufficient posting blocks; VERDICT r12 #1) for each query
+    provably-sufficient posting blocks) for each query
     whose histogram-estimated win clears the cost gate; gate-refused
     queries (the all-common-term shape, where pruning provably reads
     ~everything and the pruned plan is a measured LOSS) ride the exact
@@ -1193,13 +1067,8 @@ def bm25_topk_from_index(
     doclen_path, _, tomb_path = _paths(index_path)
     base_doclen_path, _, meta_path = _base_paths(index_path)
     meta_rows = read_meta_rows(spark, meta_path)
-    has_stats = bool(meta_rows) and "n_live" in meta_rows[0]
-    fast = (
-        has_stats
-        and try_open_parquet(spark, doclen_path) is None
-        and try_open_parquet(spark, tomb_path) is None
-    )
-    # MaxScore / block-max early termination (VERDICT r12 #1): on the
+    fast = lsm.base_is_live(spark, meta_rows, doclen_path, tomb_path)
+    # MaxScore / block-max early termination: on the
     # read-mostly base with the impact layer present, answer from the
     # provably-sufficient posting blocks instead of scoring every
     # posting of every term — exact top-k, sub-df-proportional reads.
@@ -1271,7 +1140,7 @@ def bm25_topk_from_index(
         index_path,
         terms,
         id_col,
-        # r14 dl-carry: on an impacts-mode compacted base (meta stamps
+        # dl-carry: on an impacts-mode compacted base (meta stamps
         # impact_k1) with no tail, the postings' denormalized dl IS the
         # live per-doc length — ride it into scoring and skip the
         # doclen join there (query_postings silently omits the column
@@ -1331,25 +1200,19 @@ def bm25_topk_from_index(
             "token string, dft double",
         )
     elif fast:
-        if _has_partition_prefix(dfs_root, "token_bucket="):
-            # bucketed dfs layout: open ONLY the query terms' bucket
-            # dirs by name (r10, VERDICT r09 #6 — a whole-root reader
-            # pays a full listing at scaled bucket counts)
-            dfs_df = _open_partition_dirs(
+        if lsm.has_partition_prefix(dfs_root, "token_bucket="):
+            # bucketed dfs layout: open only the query terms' bucket
+            # dirs by name. No dir at all means no live doc holds any
+            # query term — an empty dfs states exactly that
+            dfs_df = lsm.open_dirs(
                 spark,
                 dfs_root,
                 [
                     f"token_bucket={b}"
-                    for b in _term_buckets(
-                        spark, terms, int(m["token_buckets"])
-                    )
+                    for b in lsm.term_buckets(terms, int(m["token_buckets"]))
                 ],
+                empty_schema="token string, dft double",
             )
-            if dfs_df is None:
-                # the terms' buckets never materialized: no live doc
-                # holds any query term — an empty dfs is the exact
-                # statement of that, keeping the fast path
-                dfs_df = spark.createDataFrame([], "token string, dft double")
         else:
             dfs_df = try_open_parquet(spark, dfs_root)  # legacy flat dfs
     if dft_local is not None:
@@ -1395,9 +1258,8 @@ def bm25_topk_from_index(
 
 
 def _auto_id_subbuckets(n_live: int) -> int:
-    """Corpus-adaptive ``id_sub`` fan-out for the two-level base layout
-    (VERDICT r09 #1): the sub-bucket level caps the incremental
-    compactor's rewrite unit on Zipf-head token buckets — churn vocab
+    """Corpus-adaptive ``id_sub`` fan-out for the two-level base layout:
+    the sub-bucket level caps the incremental compactor's rewrite unit on Zipf-head token buckets — churn vocab
     ALWAYS contains the ubiquitous JSON-key tokens, so the affected
     bucket set always includes the head buckets and ``n_sub`` is the
     only lever on how much of them one churned doc drags into a fold.
@@ -1481,7 +1343,7 @@ def _dfs_rows(staged_po: DataFrame, impacts: bool = True) -> DataFrame:
 
 
 def _dfs_rows_arrow(staged_po: DataFrame) -> DataFrame:
-    """Arrow-native impacts-mode dfs derivation (r14, guide §4): the
+    """Arrow-native impacts-mode dfs derivation: the
     same rows as :func:`_dfs_rows(impacts=True)` — bit-exact, pinned by
     ``test_dfs_rows_arrow_equals_window`` — computed WITHOUT pushing
     every posting row through an Exchange + Sort + window.
@@ -1620,7 +1482,7 @@ _SEARCH_META_SCHEMA = (
 )
 
 
-#: r14 knob — INDEX-side dl-carry: on an impacts-mode compacted base
+#: INDEX-side dl-carry: on an impacts-mode compacted base
 #: with no tail, ride the postings' stored DENORMALIZED ``dl`` column
 #: into scoring instead of scanning base/doclen and joining it back by
 #: id (full fast path), and pass the pruned rescore's ``tf_cand.dl``
@@ -1635,7 +1497,7 @@ _SEARCH_META_SCHEMA = (
 #: test_bm25_dl_carry_equals_doclen_join.
 _DL_CARRY_INDEX = True
 
-#: r14 A/B knob — tokenize each micro-batch ONCE into the persisted
+#: A/B knob — tokenize each micro-batch ONCE into the persisted
 #: `latest` cache (token arrays) instead of caching text and letting
 #: the stats job, the doclen write and the postings write each re-run
 #: `_words(text)` over the cache. False = the r03-r13 cache-text shape.
@@ -1709,7 +1571,7 @@ def compact_index(
     slower at 512 buckets), and bucket-pruned reads open ~1 file per
     bucket instead of one per task.
 
-    ``impacts=False`` (r13) skips the MaxScore bound layer — the
+    ``impacts=False`` skips the MaxScore bound layer — the
     denormalized dl/impact0 posting columns, the per-pair impact sort,
     the top-G arrays and histograms — and stamps the meta's impact
     columns ``NULL`` as an explicit "disabled by choice" sentinel (a
@@ -1752,7 +1614,7 @@ def compact_index(
     # skips the provably-losing blocks at the storage layer (block-max
     # pruning, Ding & Suel 2011 / Turtle & Flood 1995 — public
     # knowledge, re-expressed as columnar statistics).
-    # replay dedup AFTER the live join (r14, guide §2.4): the join
+    # replay dedup AFTER the live join: the join
     # already hash-exchanges postings by (id, seq), and HashPartitioning
     # on a SUBSET of the dedup keys satisfies the dedup aggregate's
     # ClusteredDistribution on (id, token, seq) — so ordered this way
@@ -1769,12 +1631,8 @@ def compact_index(
     ).dropDuplicates([id_col, "token", "seq"])
     staged = (
         joined
-        .withColumn(
-            "token_bucket", F.pmod(F.hash("token"), F.lit(token_buckets))
-        )
-        .withColumn(
-            "id_sub", F.pmod(F.hash(F.col(id_col)), F.lit(id_subbuckets))
-        )
+        .withColumn("token_bucket", lsm.bucket("token", token_buckets))
+        .withColumn("id_sub", lsm.bucket(id_col, id_subbuckets))
     )
     if impacts:
         staged = staged.withColumn(
@@ -1838,9 +1696,7 @@ def compact_index(
             F.coalesce(F.col("buckets"), F.array().cast("array<int>")).alias(
                 "buckets"
             ),
-            F.pmod(F.hash(F.col(id_col)), F.lit(token_buckets)).alias(
-                "id_bucket"
-            ),
+            lsm.bucket(id_col, token_buckets).alias("id_bucket"),
         )
         .repartition(F.col("id_bucket"))
         .write.mode("overwrite")
@@ -1868,9 +1724,7 @@ def compact_index(
                 id_col,
                 *other,
                 "seq",
-                F.pmod(F.hash(F.col(id_col)), F.lit(token_buckets)).alias(
-                    "id_bucket"
-                ),
+                lsm.bucket(id_col, token_buckets).alias("id_bucket"),
             )
             .repartition(F.col("id_bucket"))
             .write.mode("overwrite")
@@ -1943,8 +1797,6 @@ def compact_index_inplace(
     to an empty frame, not a path-not-found crash — and a reader that
     PLANNED before the swap races file replacement: recovery window,
     not snapshot isolation."""
-    import shutil
-
     with writing(index_path):
         _, _, meta_path = _base_paths(index_path)
         meta_rows = read_meta_rows(spark, meta_path)
@@ -1961,20 +1813,19 @@ def compact_index_inplace(
                 and "impact_hist_bins" in meta_rows[0]
                 and meta_rows[0]["impact_hist_bins"] is None
             )
-        staging = index_path.rstrip("/") + ".compacting"
-        shutil.rmtree(staging, ignore_errors=True)
+        stage = staging(index_path, "compacting")
         compact_index(
-            spark, index_path, staging, id_col=id_col,
+            spark, index_path, stage, id_col=id_col,
             token_buckets=token_buckets, id_subbuckets=id_subbuckets,
             impacts=impacts,
         )
         publish(
             index_path,
             [
-                (os.path.join(index_path, comp), os.path.join(staging, comp))
+                (os.path.join(index_path, comp), os.path.join(stage, comp))
                 for comp in ("base", "doclen", "postings", "tombstones", "attrs")
             ],
-            staging,
+            stage,
         )
 
 
@@ -1982,69 +1833,41 @@ def compact_index_incremental(
     spark: SparkSession,
     index_path: str,
     id_col: str = "doc_id",
-    diag: dict | None = None,
     impacts_default: bool = True,
 ) -> dict:
-    """Fold the append tail into ONLY the partition directories it
-    touches — the maintenance step that keeps recurring compaction cost
-    churn-proportional instead of corpus-proportional (VERDICT r08 #2;
-    the precedent is ``ann.compact_ivf_index``'s affected-cell-only
-    compaction). :func:`compact_index_inplace` rewrites the WHOLE base
-    even when a micro-batch touched a handful of tokens; at 100 TB the
-    base is the corpus and that rewrite is the one remaining repeated
-    corpus-proportional job.
+    """Fold the append tail into only the partition dirs it touches, so
+    recurring compaction cost is churn-proportional, not
+    corpus-proportional (:func:`compact_index_inplace` rewrites the
+    whole base).
 
-    Cost model — every stage is churn- or affected-slice-proportional
-    (grow bucket counts with the corpus, the way IVF grows cells, so
-    slices stay bounded):
+    The LSM core (:mod:`streaming.lsm`) discovers the churned ids and
+    their id buckets, resolves their liveness and publishes the fold.
+    This function supplies the search payload:
 
-    * **affected units are (token_bucket, id_sub) PAIRS**, not token
-      buckets: posting volume per token bucket is frequency-weighted,
-      so one stop-word-like token (JSON keys here; Zipf heads in real
-      text) puts a corpus-scale row count behind a single bucket and
-      ANY churned doc touches it — measured 69% of all rows behind
-      46/5120 "affected buckets". A churned doc lands in exactly one
-      ``id_sub``, so the rewrite unit is ``bucket_rows/id_subbuckets``;
-    * **discovery is churn-proportional**: a churned doc's old pairs
-      come from its base DOCLEN row's ``buckets`` column
-      (id-bucket-pruned read) × its own ``id_sub`` — never a postings
-      scan (a column-pruned id scan was measured corpus-proportional
-      and replaced);
-    * **reads open only the affected dirs by name** (``basePath``
-      keeps the partition columns): constructing a reader over the
-      whole dataset pays a full file listing — measured 10-15 s per
-      dataset at 5120 buckets;
-    * **liveness is churn-scoped**: non-churned rows in affected pairs
-      are live and unique by the compaction invariant and pass through
-      with no join and no dedup; only churned-doc rows (tail-sized) pay
-      the max-seq merge;
-    * **dfs holds per-pair partial counts** (readers sum a token's
-      partials), so the compactor recounts exactly the pair dirs it
-      rewrote; doclen swaps per affected ``id_bucket``; meta updates by
-      exact delta — no corpus-wide aggregate anywhere.
+    * **affected units are (token_bucket, id_sub) pairs**: a
+      stop-word-like token puts a corpus-scale row count behind one
+      token bucket, but a churned doc lands in exactly one ``id_sub``,
+      so the rewrite unit is ``bucket_rows/id_subbuckets``;
+    * **old pairs come from base doclen**: a churned doc's
+      ``buckets`` column (id-bucket-pruned read) × its own ``id_sub`` —
+      never a postings scan; new pairs come from the tail postings;
+    * **non-churned rows in affected pairs pass through** with their
+      stored ``dl``/``impact0`` (live and unique by the compaction
+      invariant); churned-doc rows pay the replay dedup and liveness
+      join, and get ``impact0`` stamped under the pre-fold avgdl, which
+      the meta's ``[impact_avgdl_min, impact_avgdl_max]`` bracket
+      widens to cover;
+    * **dfs holds per-pair partial counts**, recounted for exactly the
+      rewritten pairs; doclen and attrs rewrite per affected
+      ``id_bucket``; meta moves by the exact churn delta.
 
-    Residuals, documented: a LEGACY base (flat dfs / un-sub-bucketed
-    postings) upgrades via one full rewrite, and a legacy FLAT ``attrs``
-    file migrates into the id-bucketed ``base/attrs`` layout with one
-    final doc-count-sized pass — after which the attrs fold is
-    churn-scoped like everything else (r10: this was the last
-    doc-count-proportional residual).
-
-    Falls back to a FULL :func:`compact_index_inplace` when the index
-    has never been compacted or carries the legacy layout; returns a
-    stats dict (``mode`` = ``full`` | ``noop`` | ``incremental``,
-    pair/bucket counts, affected dir lists) the daemon watchdog logs."""
-    import shutil
-    import time as _time
-
-    _t0 = [_time.monotonic()]
-
-    def _mark(phase: str) -> None:
-        if diag is not None:
-            now = _time.monotonic()
-            diag[phase] = round(now - _t0[0], 3)
-            _t0[0] = now
-
+    Falls back to a full :func:`compact_index_inplace` when the index
+    has never been compacted, has an empty base, or carries a legacy
+    layout (flat dfs, no ``id_sub``, no impact stamp); a legacy flat
+    ``attrs`` file migrates into ``base/attrs`` with one doc-count-sized
+    pass. Returns a stats dict (``mode`` = ``full`` | ``noop`` |
+    ``incremental``, pair/bucket counts, affected dir lists) the daemon
+    watchdog logs."""
     with writing(index_path):
         doclen_path, postings_path, tomb_path = _paths(index_path)
         base_doclen_path, base_postings_path, meta_path = _base_paths(
@@ -2060,13 +1883,17 @@ def compact_index_incremental(
                 spark, index_path, id_col=id_col, impacts=impacts_default
             )
             return {"mode": "full"}
-        n_buckets = int(meta_rows[0]["token_buckets"])
-        n_sub = meta_rows[0].get("id_subbuckets")
+        m = meta_rows[0]
+        n_buckets = int(m["token_buckets"])
+        n_sub = m.get("id_subbuckets")
 
-        schema_dl = f"{id_col} long, dl double, seq long"
-        schema_tb = f"{id_col} long, seq long"
         tail_dl, tomb = read_components(
-            spark, [(doclen_path, schema_dl), (tomb_path, schema_tb)], id_col
+            spark,
+            [
+                (doclen_path, f"{id_col} long, dl double, seq long"),
+                (tomb_path, f"{id_col} long, seq long"),
+            ],
+            id_col,
         )
         if tail_dl.isEmpty() and tomb.isEmpty():
             return {
@@ -2076,98 +1903,67 @@ def compact_index_incremental(
                 "total_buckets": n_buckets,
             }
 
-        # layout check WITHOUT a full dataset listing: the current base
-        # writes id_bucket=/token_bucket= partition dirs and records
-        # id_subbuckets in meta; anything else is a legacy or
-        # half-written base → one full rewrite upgrades it. A base
-        # whose meta predates the impact-bound layer (no ``impact_k1``)
-        # upgrades the same way — folding new impact-bearing rows into
-        # impact-less dirs would leave the base schema-mixed, and the
-        # pruned read must be all-or-nothing per index. An EMPTY base
-        # (n_live 0) also takes the full path: there is no prior avgdl
-        # to stamp fold rows with, and the rewrite is tail-sized anyway.
+        # a base without the current layout (id_bucket/token_bucket
+        # dirs, id_subbuckets and the impact columns in meta) upgrades
+        # by one full rewrite: folding impact-bearing rows into
+        # impact-less dirs would leave the base schema-mixed. An empty
+        # base has no prior avgdl to stamp fold rows with, and its
+        # rewrite is tail-sized anyway.
         if (
             n_sub is None
-            or "impact_k1" not in meta_rows[0]
-            or "impact_hist_bins" not in meta_rows[0]
-            or int(meta_rows[0]["n_live"]) == 0
-            or not _has_partition_prefix(base_doclen_path, "id_bucket=")
-            or not _has_partition_prefix(base_postings_path, "token_bucket=")
+            or "impact_k1" not in m
+            or "impact_hist_bins" not in m
+            or int(m["n_live"]) == 0
+            or not lsm.has_partition_prefix(base_doclen_path, "id_bucket=")
+            or not lsm.has_partition_prefix(
+                base_postings_path, "token_bucket="
+            )
         ):
             compact_index_inplace(
                 spark, index_path, id_col=id_col, impacts=impacts_default
             )
             return {"mode": "full"}
         n_sub = int(n_sub)
-        # the explicit-NULL sentinel (r13): an index compacted with
-        # ``impacts=False`` (the shingle/fingerprint twin) carries the
-        # impact meta columns as NULL — its folds stay impact-less
-        # forever (no bound columns, no per-pair impact sort, plain df
-        # partials), which is the whole point: the bound layer is the
-        # dominant write cost and nothing ever BM25-ranks those tokens
-        has_impacts = meta_rows[0]["impact_hist_bins"] is not None
-        # the avgdl this fold stamps its rewritten rows with (the
-        # PRE-fold corpus average — known without any job; post-fold
-        # meta widens the [impact_avgdl_min, impact_avgdl_max] bracket
-        # to include it, keeping every stored impact0 provably
-        # correctable at read time)
+        # an index compacted with ``impacts=False`` (the shingle twin)
+        # carries the impact meta columns as NULL and its folds stay
+        # impact-less: no bound columns, no impact sort, plain df
+        # partials
+        has_impacts = m["impact_hist_bins"] is not None
+        # rewritten rows are stamped with the pre-fold avgdl, known
+        # from meta without a job
         avgdl_stamp = (
-            float(meta_rows[0]["sum_dl"] or 0.0)
-            / int(meta_rows[0]["n_live"])
+            float(m["sum_dl"] or 0.0) / int(m["n_live"])
             if has_impacts
             else None
         )
 
-        def _pruned_read(root, rel_dirs, schema):
-            """:func:`_open_partition_dirs` with an empty-frame fallback
-            (a missing dir just means that bucket never materialized)."""
-            got = _open_partition_dirs(spark, root, rel_dirs)
-            return got if got is not None else spark.createDataFrame([], schema)
-
-        _mark("probe")
-        # churned docs: any doc with a tail version or a tombstone.
-        # Tail-sized; persisted — it anchors every churn-scoped join.
-        churned = (
-            tail_dl.select(id_col)
-            .unionByName(tomb.select(id_col))
-            .distinct()
-            .persist()
+        churned, n_churned, aff_id_buckets = lsm.churn(
+            tail_dl, tomb, id_col, n_buckets
         )
-        # one job materializes the persist AND yields both discovery
-        # outputs: the churn count (headline `/_status` telemetry) and
-        # the affected id buckets (driver-bounded: <= n_buckets rows)
-        bucket_counts = churned.groupBy(
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("b")
-        ).count().collect()
-        n_churned = sum(int(r["count"]) for r in bucket_counts)
-        aff_id_buckets = sorted(r["b"] for r in bucket_counts)
+        id_dirs = [f"id_bucket={b}" for b in aff_id_buckets]
         id_t = dict(tail_dl.dtypes).get(id_col, "long")
-        # the affected id buckets' doclen rows — opened by dir name,
-        # never a full doclen listing
-        base_dl_aff = _pruned_read(
+        base_dl_aff = lsm.open_dirs(
+            spark,
             base_doclen_path,
-            [f"id_bucket={b}" for b in aff_id_buckets],
+            id_dirs,
             f"{id_col} {id_t}, dl double, seq long, "
             "buckets array<int>, id_bucket int",
         ).persist()
-        # churned docs' OLD doclen rows — the discovery source for
-        # their old (token_bucket × own id_sub) pairs AND the
-        # old-version seq for liveness
+        # churned docs' old doclen rows: the source of their old pairs
+        # and their old-version seq for liveness
         base_dl_churned = (
             base_dl_aff.join(churned, on=id_col, how="left_semi")
             .select(id_col, "dl", "seq", "buckets")
             .persist()
         )
-        _mark("churned_discovery")
         schema_po = f"{id_col} {id_t}, token string, tf double, seq long"
         (tail_po,) = read_components(
             spark, [(postings_path, schema_po)], id_col
         )
         tail_po = tail_po.select(id_col, "token", "tf", "seq")
-        sub_of_id = F.pmod(F.hash(F.col(id_col)), F.lit(n_sub))
+        sub_of_id = lsm.bucket(id_col, n_sub)
         tail_pairs = tail_po.select(
-            F.pmod(F.hash("token"), F.lit(n_buckets)).alias("tb"),
-            sub_of_id.alias("sb"),
+            lsm.bucket("token", n_buckets).alias("tb"), sub_of_id.alias("sb")
         ).distinct()
         old_pairs = base_dl_churned.select(
             F.explode("buckets").alias("tb"), sub_of_id.alias("sb")
@@ -2178,57 +1974,33 @@ def compact_index_incremental(
         )  # driver-bounded: <= token_buckets × id_subbuckets ints
         pair_dirs = [f"token_bucket={tb}/id_sub={sb}" for tb, sb in pairs]
 
-        _mark("affected_pairs")
-        # churn-scoped liveness: max-seq over (old base version ∪ tail
-        # versions) minus higher-seq tombstones — tail-sized everywhere
-        cand = base_dl_churned.select(id_col, "dl", "seq").unionByName(
-            tail_dl.select(id_col, "dl", "seq")
-        )
-        latest = cand.groupBy(id_col).agg(
-            F.max("seq").alias("seq"), F.max_by("dl", "seq").alias("dl")
-        )
-        tomb_max = tomb.groupBy(id_col).agg(F.max("seq").alias("_tomb_seq"))
-        churned_live = (
-            latest.join(tomb_max, id_col, "left")
-            .filter(
-                F.col("_tomb_seq").isNull()
-                | (F.col("_tomb_seq") < F.col("seq"))
-            )
-            .select(id_col, "dl", "seq")
-            .persist()
-        )
+        churned_live = lsm.live_versions(
+            base_dl_churned.select(id_col, "dl", "seq").unionByName(
+                tail_dl.select(id_col, "dl", "seq")
+            ),
+            tomb,
+            id_col,
+            carry=("dl",),
+        ).persist()
+        stage = staging(index_path, "compacting-incr")
 
-        _mark("churned_live")
-        staging = index_path.rstrip("/") + ".compacting-incr"
-        shutil.rmtree(staging, ignore_errors=True)
-
-        # affected-pair postings — opened by dir name. Non-churned rows
-        # in these pairs are live and unique by the compaction invariant
-        # and pass through with no join and no dedup; only churned-doc
-        # rows (old base slice ∪ the whole tail, both churn-proportional)
-        # pay the replay dedup and the live-version filter.
+        # affected-pair postings, opened by dir name
         impact_cols = ["dl", "impact0"] if has_impacts else []
         base_schema_po = (
             f"{id_col} {id_t}, token string, tf double, seq long, "
             + ("dl double, impact0 double, " if has_impacts else "")
             + "token_bucket int, id_sub int"
         )
-        base_aff = _pruned_read(
-            base_postings_path, pair_dirs, base_schema_po
+        base_aff = lsm.open_dirs(
+            spark, base_postings_path, pair_dirs, base_schema_po
         ).select(id_col, "token", "tf", "seq", *impact_cols)
-        # keep side passes through with its STORED dl/impact0 — those
-        # rows were stamped under some earlier fold/compaction's avgdl,
-        # which the meta bracket already covers; re-stamping them would
-        # turn the pass-through into a recompute
         keep = base_aff.join(churned, on=id_col, how="left_anti")
-        # churn side: live versions only, then the inner join against
-        # churned_live's (id, seq) both enforces liveness and (impact
-        # mode) carries the live dl onto every surviving posting row
-        # (tail rows have no stored dl); impact0 is stamped fresh under
-        # avgdl_stamp
+        # churn side: the inner join against churned_live's (id, seq)
+        # enforces liveness and, in impact mode, carries the live dl
+        # onto every posting (tail rows have no stored dl)
         churn_rows = (
             base_aff.select(id_col, "token", "tf", "seq")
-            .unionByName(tail_po.select(id_col, "token", "tf", "seq"))
+            .unionByName(tail_po)
             .join(churned, on=id_col, how="left_semi")
             .dropDuplicates([id_col, "token", "seq"])
         )
@@ -2250,60 +2022,39 @@ def compact_index_incremental(
             ).select(id_col, "token", "tf", "seq")
         merged = (
             keep.unionByName(churn_rows)
-            .withColumn(
-                "token_bucket", F.pmod(F.hash("token"), F.lit(n_buckets))
-            )
+            .withColumn("token_bucket", lsm.bucket("token", n_buckets))
             .withColumn("id_sub", sub_of_id)
         )
-        staged_postings = os.path.join(staging, "postings")
+        staged_postings = os.path.join(stage, "postings")
         # no repartition before the partitioned write: the keep side —
-        # ~all of the data — was READ dir-clustered from the affected
-        # pair dirs and only passed through broadcast joins against the
-        # tiny churn set (map-side, partitioning preserved), so each
-        # write task already holds rows of ~one pair and a shuffle here
-        # would move the whole affected slice to restore a clustering it
-        # never lost. The churn slice's rows fan a handful of extra
-        # small files across its pairs — rewritten away by the next fold
-        # that touches those dirs, never accumulated.
-        # sortWithinPartitions (no shuffle — the keep side's dir
-        # clustering survives): each written file holds (token, impact0
-        # desc) runs, so parquet row-group/page statistics stay tight
-        # for the pruned read's pushed (token, impact0) predicates
+        # ~all of the data — was read dir-clustered and only passed
+        # broadcast joins against the tiny churn set, so each write
+        # task already holds rows of ~one pair. sortWithinPartitions
+        # (no shuffle) keeps (token, impact0 desc) runs per file, so
+        # parquet statistics stay tight for the pruned read.
         sort_keys = ["token_bucket", "id_sub", "token"] + (
             [F.desc("impact0")] if has_impacts else []
         )
         merged.sortWithinPartitions(*sort_keys).write.mode(
             "overwrite"
         ).partitionBy("token_bucket", "id_sub").parquet(staged_postings)
-        # empty-read fallback schema carries the tail's ACTUAL id type
-        # (never-cast-ids rule): if churn deleted every live row in the
-        # affected pairs, a hardcoded bigint empty frame joining
-        # string-id `churned` would ANSI-cast-throw mid-compaction
+        # the empty-read fallback carries the tail's id type: churn that
+        # deleted every row of the affected pairs must not leave a
+        # bigint frame joining string ids
         (staged_po,) = read_components(
             spark, [(staged_postings, base_schema_po)], id_col
         )
-        _mark("staged_postings")
-        # dfs + doclen are INDEPENDENT derivations of the staged
-        # postings (both read the files just written, never each
-        # other's output) — run their write jobs concurrently on two
-        # driver threads; Spark schedules concurrent actions in one
-        # session natively. The meta delta (a tiny churn-sized
-        # aggregate, see below) overlaps on the main thread.
+        # dfs and doclen both derive from the staged postings, never
+        # from each other: their writes run on two driver threads while
+        # the meta delta aggregates on the main one
         from concurrent.futures import ThreadPoolExecutor
 
-        staged_dfs = os.path.join(staging, "dfs")
+        staged_dfs = os.path.join(stage, "dfs")
 
         def _write_dfs() -> None:
-            # recount ONLY the affected pairs from the staged postings
-            # (partial per-pair counts + impact bounds — readers sum a
-            # token's dft partials and merge its top-impact arrays);
-            # unaffected dfs pair dirs are never touched. Impacts mode
-            # uses the Arrow partial-merge aggregator (r14): the staged
-            # files are dir-clustered, never hash-exchanged, so the
-            # window formulation paid a full Exchange + Sort of every
-            # affected-pair row here — the fold's dominant write cost;
-            # the aggregator's exchange carries only vocab-sized
-            # partials and reads just (token, impact0) file bytes.
+            # impacts mode merges per-pair partials with the Arrow
+            # aggregator: the staged files are dir-clustered, and its
+            # exchange carries only vocab-sized partials
             (
                 (
                     _dfs_rows_arrow(staged_po)
@@ -2316,10 +2067,9 @@ def compact_index_incremental(
                 .parquet(staged_dfs)
             )
 
-        # doclen: rewrite ONLY the affected id buckets — their
-        # non-churned rows pass through, churned docs re-enter with
-        # their LIVE version + fresh token-bucket sets (from the staged
-        # postings, which hold every live churned row by construction)
+        # doclen: non-churned rows of the affected id buckets pass
+        # through; churned docs re-enter with their live version and
+        # fresh token-bucket sets from the staged postings
         dl_keep = base_dl_aff.join(churned, on=id_col, how="left_anti").select(
             id_col, "dl", "seq", "buckets"
         )
@@ -2328,26 +2078,20 @@ def compact_index_incremental(
             .groupBy(id_col)
             .agg(F.collect_set("token_bucket").alias("buckets"))
         )
-        dl_new = (
-            churned_live.join(churned_buckets, id_col, "left")
-            .select(
-                id_col,
-                "dl",
-                "seq",
-                F.coalesce(
-                    F.col("buckets"), F.array().cast("array<int>")
-                ).alias("buckets"),
-            )
+        dl_new = churned_live.join(churned_buckets, id_col, "left").select(
+            id_col,
+            "dl",
+            "seq",
+            F.coalesce(F.col("buckets"), F.array().cast("array<int>")).alias(
+                "buckets"
+            ),
         )
-        staged_doclen = os.path.join(staging, "doclen")
+        staged_doclen = os.path.join(stage, "doclen")
 
         def _write_doclen() -> None:
             (
                 dl_keep.unionByName(dl_new)
-                .withColumn(
-                    "id_bucket",
-                    F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)),
-                )
+                .withColumn("id_bucket", lsm.bucket(id_col, n_buckets))
                 .repartition(F.col("id_bucket"))
                 .write.mode("overwrite")
                 .partitionBy("id_bucket")
@@ -2357,208 +2101,62 @@ def compact_index_incremental(
         with ThreadPoolExecutor(max_workers=2) as pool:
             dfs_f = pool.submit(_write_dfs)
             dl_f = pool.submit(_write_doclen)
-            # meta by exact CHURN-sized delta, overlapped with the two
-            # staged writes: non-churned rows pass through both sides of
-            # the bucket rewrite untouched, so the net change is
-            # (churned docs' live rows in) minus (their old base rows
-            # out) — one tiny union-aggregate over two persisted
-            # churn-sized frames. No Observation on the doclen write: a
-            # runtime-empty observed write (churn deleting every doc in
-            # the affected buckets) gets its CollectMetrics optimizer-
-            # eliminated and the dangling observation corrupts the
-            # session for later RDD-closure jobs.
-            delta = (
-                base_dl_churned.select(
-                    F.lit(-1).alias("sgn"), F.col("dl")
-                )
-                .unionByName(
-                    churned_live.select(F.lit(1).alias("sgn"), F.col("dl"))
-                )
-                .agg(
-                    F.coalesce(F.sum("sgn"), F.lit(0)).alias("dn"),
-                    F.coalesce(
-                        F.sum(F.col("sgn") * F.col("dl")), F.lit(0.0)
-                    ).alias("ds"),
-                )
-                .collect()[0]
-            )
+            # no Observation on the doclen write instead: a
+            # runtime-empty observed write gets its CollectMetrics
+            # optimized away, and the dangling observation corrupts the
+            # session for later RDD-closure jobs
+            delta = lsm.meta_delta(base_dl_churned, churned_live, sums=("dl",))
             dfs_f.result()
-            _mark("staged_dfs")
             dl_f.result()
-        _mark("staged_doclen")
-        n_live = int(meta_rows[0]["n_live"]) + int(delta["dn"])
-        sum_dl = float(meta_rows[0]["sum_dl"] or 0.0) + float(delta["ds"])
-        staged_meta = os.path.join(staging, "meta")
-        # widen the impact avgdl bracket with THIS fold's stamp; the
-        # impact params and top-G carry forward unchanged (the gate
-        # above guarantees they exist). The bracket only ever widens
-        # between full compactions — each full rewrite re-stamps every
-        # row and collapses it back to a point.
+        staged_meta = os.path.join(stage, "meta")
+        # the avgdl bracket widens with this fold's stamp; a full
+        # compaction collapses it back to a point
         write_meta_rows(
             spark,
             staged_meta,
             [(
                 n_buckets,
                 n_sub,
-                n_live,
-                sum_dl,
-                float(meta_rows[0]["impact_k1"]) if has_impacts else None,
-                float(meta_rows[0]["impact_b"]) if has_impacts else None,
-                min(float(meta_rows[0]["impact_avgdl_min"]), avgdl_stamp)
+                int(m["n_live"]) + int(delta["n"]),
+                float(m["sum_dl"] or 0.0) + float(delta["dl"]),
+                float(m["impact_k1"]) if has_impacts else None,
+                float(m["impact_b"]) if has_impacts else None,
+                min(float(m["impact_avgdl_min"]), avgdl_stamp)
                 if has_impacts
                 else None,
-                max(float(meta_rows[0]["impact_avgdl_max"]), avgdl_stamp)
+                max(float(m["impact_avgdl_max"]), avgdl_stamp)
                 if has_impacts
                 else None,
-                int(meta_rows[0]["impact_topg"]) if has_impacts else None,
-                int(meta_rows[0]["impact_hist_bins"])
-                if has_impacts
-                else None,
+                int(m["impact_topg"]) if has_impacts else None,
+                int(m["impact_hist_bins"]) if has_impacts else None,
             )],
             _SEARCH_META_SCHEMA,
         )
-        _mark("meta_delta")
-        # attrs (if present): latest per live doc. Since r10 the base
-        # attrs live id-bucketed next to doclen, so the steady-state
-        # fold rewrites ONLY the affected id buckets (churn-scoped —
-        # this was the last doc-count-proportional residual); a legacy
-        # FLAT attrs file migrates into the bucketed layout with one
-        # final doc-count-sized pass.
-        staged_attrs = None
-        attrs_mode = None
-        base_attrs_root = os.path.join(index_path, "base", "attrs")
-        has_base_attrs = _has_partition_prefix(base_attrs_root, "id_bucket=")
-        tail_attrs = try_open_parquet(spark, os.path.join(index_path, "attrs"))
-        if has_base_attrs:
-            aff_dirs_a = [f"id_bucket={b}" for b in aff_id_buckets]
-            base_a_aff = _open_partition_dirs(
-                spark, base_attrs_root, aff_dirs_a
-            )
-            if base_a_aff is not None:
-                base_a_aff = base_a_aff.drop("id_bucket")
-            parts = [
-                df for df in (base_a_aff, tail_attrs) if df is not None
-            ]
-        if has_base_attrs and parts:
-            attrs_mode = "pruned"
-            staged_attrs = os.path.join(staging, "attrs")
-            like_a = base_a_aff if base_a_aff is not None else tail_attrs
-            other = [
-                c for c in like_a.columns if c not in (id_col, "seq")
-            ]
-            cand_a = parts[0]
-            for df in parts[1:]:
-                cand_a = cand_a.unionByName(df, allowMissingColumns=True)
-            # every attrs tail row's doc is churned (stats_index_batch
-            # writes attrs only alongside an ingest that also wrote the
-            # doclen tail), so: non-churned affected-bucket rows pass
-            # through; churned docs re-enter with their max-seq attrs,
-            # restricted to the live set
-            keep_a = (
-                base_a_aff.join(churned, on=id_col, how="left_anti")
-                if base_a_aff is not None
-                else None
-            )
-            new_a = (
-                cand_a.join(churned, on=id_col, how="left_semi")
-                .groupBy(id_col)
-                .agg(
-                    F.max("seq").alias("seq"),
-                    *[F.max_by(c, "seq").alias(c) for c in other],
-                )
-                .join(churned_live.select(id_col), id_col, "left_semi")
-                .select(id_col, *other, "seq")
-            )
-            staged_a = (
-                keep_a.select(id_col, *other, "seq").unionByName(new_a)
-                if keep_a is not None
-                else new_a
-            )
-            (
-                staged_a.withColumn(
-                    "id_bucket",
-                    F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)),
-                )
-                .repartition(F.col("id_bucket"))
-                .write.mode("overwrite")
-                .partitionBy("id_bucket")
-                .parquet(staged_attrs)
-            )
-        elif tail_attrs is not None:
-            # one-time migration: the flat file holds latest rows for
-            # EVERY doc (old-layout compaction output ∪ appends), so
-            # this last pass is doc-count-sized by necessity; every
-            # later fold is churn-scoped
-            attrs_mode = "migrated"
-            staged_attrs = os.path.join(staging, "attrs")
-            other = [
-                c for c in tail_attrs.columns if c not in (id_col, "seq")
-            ]
-            latest_a = tail_attrs.groupBy(id_col).agg(
-                F.max("seq").alias("seq"),
-                *[F.max_by(c, "seq").alias(c) for c in other],
-            )
-            alive = (
-                open_parquet(spark, base_doclen_path)
-                .select(id_col)
-                .join(churned, on=id_col, how="left_anti")
-                .unionByName(churned_live.select(id_col))
-            )
-            (
-                latest_a.join(alive, id_col, "left_semi")
-                .select(
-                    id_col,
-                    *other,
-                    "seq",
-                    F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias(
-                        "id_bucket"
-                    ),
-                )
-                .repartition(F.col("id_bucket"))
-                .write.mode("overwrite")
-                .partitionBy("id_bucket")
-                .parquet(staged_attrs)
-            )
-        _mark("attrs")
+        attrs_mode, attrs_groups = _fold_attrs(
+            spark, index_path, stage, churned, churned_live, id_dirs,
+            n_buckets, id_col,
+        )
         churned.unpersist()
         base_dl_aff.unpersist()
         base_dl_churned.unpersist()
         churned_live.unpersist()
 
-        _mark("unpersist")
-        # publish — base components first (per affected dir: everything
-        # else is never touched), tail dirs retire LAST so "no tail" can
-        # only become true after the fresh meta and doclen are in place
-        # (the fast path's consistency), and tombstones retire only
-        # after the dead rows are really gone from the swapped-in base
-        id_dirs = [f"id_bucket={b}" for b in aff_id_buckets]
-        steps = [
-            (os.path.join(live, d), os.path.join(staged, d))
-            for live, staged, dirs in (
+        tails = [doclen_path, postings_path, tomb_path]
+        if attrs_mode is not None:
+            # the flat attrs tail is folded into base/attrs
+            tails.append(os.path.join(index_path, "attrs"))
+        lsm.fold_publish(
+            index_path,
+            [
                 (base_postings_path, staged_postings, pair_dirs),
                 (os.path.join(index_path, "base", "dfs"), staged_dfs, pair_dirs),
                 (base_doclen_path, staged_doclen, id_dirs),
-            )
-            for d in dirs
-        ]
-        steps.append((meta_path, staged_meta))
-        if attrs_mode == "pruned":
-            # only the churn's id-bucket dirs move; every other
-            # base/attrs dir is never touched (bit-identical, by test)
-            steps += [
-                (os.path.join(base_attrs_root, d), os.path.join(staged_attrs, d))
-                for d in id_dirs
-            ]
-        elif attrs_mode == "migrated":
-            steps.append((base_attrs_root, staged_attrs))
-        tails = [doclen_path, postings_path, tomb_path]
-        if attrs_mode is not None:
-            # the flat attrs tail is folded into base/attrs above —
-            # retire it with the other tails (after the base swaps, so
-            # a racing reader sees base∪tail or base-only, never neither)
-            tails.append(os.path.join(index_path, "attrs"))
-        publish(index_path, steps + [(t, None) for t in tails], staging)
-        _mark("swaps")
+                *attrs_groups,
+            ],
+            (meta_path, staged_meta),
+            tails,
+            stage,
+        )
         return {
             "mode": "incremental",
             "churned_docs": n_churned,
@@ -2570,6 +2168,91 @@ def compact_index_incremental(
             "affected_dirs": pair_dirs,
             "affected_id_buckets": aff_id_buckets,
         }
+
+
+def _fold_attrs(
+    spark: SparkSession,
+    index_path: str,
+    stage: str,
+    churned: DataFrame,
+    churned_live: DataFrame,
+    id_dirs: list[str],
+    n_buckets: int,
+    id_col: str,
+) -> tuple[str | None, list[tuple[str, str, list[str]]]]:
+    """Stage the fold of per-doc attrs (latest row per live doc) and
+    return its mode (``pruned`` | ``migrated``) with its publish groups
+    for :func:`lsm.fold_publish` — ``(None, [])`` when the index has no
+    attrs. On an id-bucketed ``base/attrs`` only the
+    churn's id buckets rewrite; a legacy flat ``attrs`` file migrates
+    into that layout with one doc-count-sized pass."""
+    base_attrs_root = os.path.join(index_path, "base", "attrs")
+    staged_attrs = os.path.join(stage, "attrs")
+    tail_attrs = try_open_parquet(spark, os.path.join(index_path, "attrs"))
+    if lsm.has_partition_prefix(base_attrs_root, "id_bucket="):
+        base_a_aff = lsm.open_dirs(spark, base_attrs_root, id_dirs)
+        if base_a_aff is not None:
+            base_a_aff = base_a_aff.drop("id_bucket")
+        parts = [df for df in (base_a_aff, tail_attrs) if df is not None]
+        if not parts:
+            return None, []
+        other = [c for c in parts[0].columns if c not in (id_col, "seq")]
+        cand_a = parts[0]
+        for df in parts[1:]:
+            cand_a = cand_a.unionByName(df, allowMissingColumns=True)
+        # every attrs tail row's doc is churned (stats_index_batch
+        # writes attrs only beside a doclen tail append): non-churned
+        # rows pass through, churned docs re-enter with their max-seq
+        # attrs, restricted to the live set
+        new_a = (
+            cand_a.join(churned, on=id_col, how="left_semi")
+            .groupBy(id_col)
+            .agg(
+                F.max("seq").alias("seq"),
+                *[F.max_by(c, "seq").alias(c) for c in other],
+            )
+            .join(churned_live.select(id_col), id_col, "left_semi")
+            .select(id_col, *other, "seq")
+        )
+        staged_a = (
+            base_a_aff.join(churned, on=id_col, how="left_anti")
+            .select(id_col, *other, "seq")
+            .unionByName(new_a)
+            if base_a_aff is not None
+            else new_a
+        )
+        mode, groups = "pruned", [(base_attrs_root, staged_attrs, id_dirs)]
+    elif tail_attrs is not None:
+        # the flat file holds latest rows for every doc, so this one
+        # migration pass is doc-count-sized
+        other = [c for c in tail_attrs.columns if c not in (id_col, "seq")]
+        alive = (
+            open_parquet(spark, _base_paths(index_path)[0])
+            .select(id_col)
+            .join(churned, on=id_col, how="left_anti")
+            .unionByName(churned_live.select(id_col))
+        )
+        staged_a = (
+            tail_attrs.groupBy(id_col)
+            .agg(
+                F.max("seq").alias("seq"),
+                *[F.max_by(c, "seq").alias(c) for c in other],
+            )
+            .join(alive, id_col, "left_semi")
+            .select(id_col, *other, "seq")
+        )
+        mode = "migrated"
+        groups = [(os.path.join(index_path, "base"), stage, ["attrs"])]
+    else:
+        return None, []
+    (
+        staged_a.withColumn("id_bucket", lsm.bucket(id_col, n_buckets))
+        .repartition(F.col("id_bucket"))
+        .write.mode("overwrite")
+        .partitionBy("id_bucket")
+        .parquet(staged_attrs)
+    )
+    return mode, groups
 
 
 def search_index_stream(
@@ -2613,14 +2296,11 @@ def search_index_stream(
 def _live_delta_for_churn(
     spark: SparkSession, index_path: str, id_col: str, n_buckets: int
 ) -> int:
-    """EXACT net change in live-doc count contributed by the
-    post-compaction churn (tail appends + tombstones), computed
-    churn-proportionally: the churned ids' old base doclen rows are
-    opened id-bucket-pruned (never a full base listing or scan) and
-    their current liveness resolved with the same max-seq-minus-
-    tombstone rule the compactor uses. Every frame here is churn- or
-    affected-bucket-sized; ``index_status`` adds the result to the
-    meta's ``n_live`` so a watchdog tick never aggregates the corpus."""
+    """Exact net change in live-doc count made by the churn since the
+    last compaction, churn-proportionally: the churned ids' old base
+    doclen rows are opened id-bucket-pruned and their liveness resolved
+    by the LSM rule. ``index_status`` adds it to meta's ``n_live``, so a
+    watchdog tick never aggregates the corpus."""
     doclen_path, _, tomb_path = _paths(index_path)
     base_doclen_path, _, _ = _base_paths(index_path)
     tail_dl, tomb = read_components(
@@ -2631,36 +2311,23 @@ def _live_delta_for_churn(
         ],
         id_col,
     )
-    churned = (
-        tail_dl.select(id_col).unionByName(tomb.select(id_col)).distinct()
-    ).persist()
+    churned, _, aff = lsm.churn(tail_dl, tomb, id_col, n_buckets)
     try:
-        aff = [
-            r["b"]
-            for r in churned.select(
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("b")
-            ).distinct().collect()
-        ]
-        base_aff = _open_partition_dirs(
-            spark, base_doclen_path, [f"id_bucket={b}" for b in aff]
+        id_t = dict(tail_dl.dtypes).get(id_col, "long")
+        base_aff = lsm.open_dirs(
+            spark,
+            base_doclen_path,
+            [f"id_bucket={b}" for b in aff],
+            f"{id_col} {id_t}, dl double, seq long",
         )
-        if base_aff is None:
-            id_t = dict(tail_dl.dtypes).get(id_col, "long")
-            base_aff = spark.createDataFrame(
-                [], f"{id_col} {id_t}, dl double, seq long"
-            )
         # base rows are unique per doc by the compaction invariant
         base_churned = base_aff.join(churned, id_col, "left_semi").select(
             id_col, "seq"
         )
-        latest = (
-            base_churned.unionByName(tail_dl.select(id_col, "seq"))
-            .groupBy(id_col)
-            .agg(F.max("seq").alias("seq"))
-        )
-        tmax = tomb.groupBy(id_col).agg(F.max("seq").alias("_t"))
-        live_now = latest.join(tmax, id_col, "left").filter(
-            F.col("_t").isNull() | (F.col("_t") < F.col("seq"))
+        live_now = lsm.live_versions(
+            base_churned.unionByName(tail_dl.select(id_col, "seq")),
+            tomb,
+            id_col,
         )
         return live_now.count() - base_churned.count()
     finally:
@@ -2673,63 +2340,44 @@ def index_status(
     """Operator health numbers for one LSM search index — the payload the
     daemon's `/_status` control plane surfaces per search-flagged feed:
 
-    * ``live_docs`` — current live corpus size, EXACT and
-      churn-proportional: on a stats-bearing compacted base it is the
-      meta's ``n_live`` adjusted by the churned ids' live delta (their
-      old base rows read id-bucket-pruned, their live status resolved
-      tail-side — the incremental compactor's exact discovery
-      discipline), so a watchdog tick never aggregates the corpus; a
-      never-compacted / legacy index falls back to the two skinny
-      aggregates of :func:`live_doclen` (still never postings or text);
-    * ``tail_doclen_rows`` / ``tombstones`` — post-compaction churn:
-      the read path merges these on every query, so together they ARE
-      the compaction-debt signal (``compaction_debt`` = churn rows per
-      live doc, the number an operator alarms on);
-    * ``base_present`` / ``token_buckets`` — whether the read-mostly
-      compacted base (and its partition-pruned postings layout) exists.
-
-    All probes are read-attempt (:func:`read_components`) — correct
-    on HDFS/S3, never a driver-local stat."""
+    * ``live_docs`` — the live corpus size, exact: meta's ``n_live`` on
+      a churn-free base, adjusted by the churned ids' live delta
+      (:func:`_live_delta_for_churn`) on a bucketed base with churn, and
+      the skinny :func:`live_doclen` count on a never-compacted or
+      legacy index;
+    * ``tail_doclen_rows`` / ``tombstones`` — the churn since the last
+      compaction, which every query merges; ``compaction_debt`` is churn
+      rows per live doc, the number an operator alarms on;
+    * ``base_present`` / ``token_buckets`` — whether a compacted base
+      (and its bucketed postings layout) exists."""
     doclen_path, _, tomb_path = _paths(index_path)
     base_doclen_path, _, meta_path = _base_paths(index_path)
-    tail_dl, tomb = read_components(
-        spark,
-        [
-            (doclen_path, f"{id_col} string, dl double, seq long"),
-            (tomb_path, f"{id_col} string, seq long"),
-        ],
-        id_col,
-    )
-    tail_rows = tail_dl.count()
-    n_tomb = tomb.count()
     meta_rows = read_meta_rows(spark, meta_path)
+    tail_rows, n_tomb, n_live = lsm.tail_status(
+        spark, doclen_path, tomb_path, id_col, meta_rows
+    )
     token_buckets = (
         int(meta_rows[0]["token_buckets"]) if meta_rows else None
     )
-    n_live = None
     if (
-        meta_rows
+        n_live is None
+        and meta_rows
         and "n_live" in meta_rows[0]
-        and _has_partition_prefix(base_doclen_path, "id_bucket=")
+        and lsm.has_partition_prefix(base_doclen_path, "id_bucket=")
     ):
-        if tail_rows == 0 and n_tomb == 0:
-            # read-mostly steady state: meta IS the live count
-            n_live = int(meta_rows[0]["n_live"])
-        else:
-            n_live = int(meta_rows[0]["n_live"]) + _live_delta_for_churn(
-                spark, index_path, id_col, int(meta_rows[0]["token_buckets"])
-            )
+        n_live = int(meta_rows[0]["n_live"]) + _live_delta_for_churn(
+            spark, index_path, id_col, token_buckets
+        )
     if n_live is None:
         # never-compacted or legacy base: exact skinny aggregate
         n_live = live_doclen(spark, index_path, id_col).count()
-    churn = tail_rows + n_tomb
     return {
         "live_docs": n_live,
         "tail_doclen_rows": tail_rows,
         "tombstones": n_tomb,
         "base_present": token_buckets is not None,
         "token_buckets": token_buckets,
-        "compaction_debt": round(churn / n_live, 4) if n_live else None,
+        "compaction_debt": lsm.compaction_debt(tail_rows, n_tomb, n_live),
     }
 
 
@@ -2775,7 +2423,7 @@ def search_index_fsck(
         index_path
     )
     meta_rows = read_meta_rows(spark, meta_path)
-    if not meta_rows or not _has_partition_prefix(
+    if not meta_rows or not lsm.has_partition_prefix(
         base_doclen_path, "id_bucket="
     ):
         return {"ok": None, "reason": "no compacted base"}
@@ -2820,13 +2468,13 @@ def search_index_fsck(
     undiscoverable_rows = 0
     id_t = dict(dl.dtypes).get(id_col, "string")
     for rel in sampled:
-        po = _open_partition_dirs(spark, base_postings_path, [rel])
+        po = lsm.open_dirs(spark, base_postings_path, [rel])
         if po is None:
             continue
         fresh = po.groupBy("token").agg(
             F.count(F.lit(1)).cast("double").alias("dft_fresh")
         )
-        stored = _open_partition_dirs(
+        stored = lsm.open_dirs(
             spark, os.path.join(index_path, "base", "dfs"), [rel]
         )
         if stored is None:
@@ -2853,10 +2501,10 @@ def search_index_fsck(
         doc_buckets = sorted(
             r["b"]
             for r in po.select(
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("b")
+                lsm.bucket(id_col, n_buckets).alias("b")
             ).distinct().collect()
         )
-        dl_aff = _open_partition_dirs(
+        dl_aff = lsm.open_dirs(
             spark, base_doclen_path,
             [f"id_bucket={b}" for b in doc_buckets],
         )

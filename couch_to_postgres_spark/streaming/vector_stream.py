@@ -1,92 +1,52 @@
-"""Streaming-incremental vector search: keep an IVF ANN index maintained
-under the CDC change feed, with full UPDATE/DELETE/replay semantics.
+"""Streaming-incremental vector search: an IVF ANN index maintained under
+the CDC change feed, with full UPDATE/DELETE/replay semantics.
 
-The batch ANN stack (:mod:`couch_to_postgres_spark.extensions.ann`)
-persists an IVF index with append-only growth and id-tombstone deletes —
-the right contract for its consumer (incremental SemDeDup admission,
-where admitted vectors never change). A CouchDB change feed is harder:
-a doc UPDATE replaces its embedding, and the new vector may land in a
-DIFFERENT cell than the old one, so an id-only tombstone would kill the
-new version along with the old and "tombstone then re-append" cannot
-express supersession. This module re-expresses the search index's
-seq-wins liveness (:mod:`search_stream` — the rev-wins merge discipline
-of operators/cdc.py over append-only files) for vectors:
+A doc UPDATE replaces its embedding, and the new vector may land in a
+different cell than the old one, so an id-only tombstone (the batch
+:mod:`extensions.ann` contract) cannot express supersession. This index
+uses the seq-wins liveness of the shared LSM core (:mod:`streaming.lsm`)
+instead, and supplies only the vector payload: cell assignment and the
+quantizer.
 
-State (all plain parquet under one index root):
+State (plain parquet under one index root):
 
-* ``<index>/centroids``  — (cell, centroid) coarse quantizer, written
-  once at :func:`init_vector_index` (KMeans fit or caller-fixed
-  anchors) and FROZEN — appends and queries reuse it (standard IVF
-  maintenance; monitor drift and rebuild off-peak, as
-  ``ann.ivf_index_stats`` documents);
-* ``<index>/quantizer``  — 1-row config marker (assigner, n_cells,
-  configured_cells), recorded write-once so a later batch or query
-  declaring a different quantizer fails loudly instead of probing
-  wrong cells silently (the ``shingle_n`` lesson, ADVICE r09); the
-  trained-vs-configured pair surfaces bootstrap degradation in
-  ``/_status`` (ADVICE r10);
-* ``<index>/pending``    — pre-init bootstrap buffer: raw change rows
-  accumulated until enough upserts exist to train a full-width
-  quantizer (a trickle feed's 2-doc first batch must not freeze a
-  2-cell quantizer forever — ADVICE r10; :func:`flush_pending`);
-* ``<index>/cells``      — TAIL (vec_id, seq, embedding, cell) in
-  ``cell=N`` partition dirs, append-only — one row per ingested
-  vector VERSION. Liveness needs only its (vec_id, seq) columns, and
-  parquet column projection keeps those reads skinny, so no separate
-  tail ids sidecar exists (r11: the r10 layout carried one, which
-  cost every micro-batch a fourth write job and bought nothing the
-  column-pruned cells read doesn't);
-* ``<index>/tombstones`` — (vec_id, seq) delete markers;
-* ``<index>/base/``      — compacted base: ``base/cells`` (live rows
-  only, one per doc, ``cell=N`` dirs), ``base/ids`` ((vec_id, seq,
-  cell) — the skinny liveness sidecar, laid out in ``id_bucket=H``
-  dirs (H = pmod(hash(id), id_buckets)) and carrying each doc's CELL
-  so the incremental compactor can find a churned doc's old cell from
-  an id-bucket-pruned read, never a base/cells scan — ``doclen``'s
-  ``buckets``-column role), ``base/meta`` (1-row: n_cells, n_live,
-  id_buckets — the read-mostly fast-path stats + layout continuity).
+* ``centroids`` — (cell, centroid), the coarse quantizer, frozen after
+  :func:`init_vector_index` until :func:`rebuild_vector_quantizer`;
+* ``quantizer`` — 1-row marker (assigner, n_cells, configured_cells,
+  layout_epoch): a batch or query declaring a different quantizer
+  fails loudly instead of probing wrong cells, and trained-vs-configured
+  cells surface a degraded bootstrap in ``/_status``;
+* ``pending`` — the pre-init buffer: change rows held until enough
+  upserts exist to train a full-width quantizer (:func:`flush_pending`);
+* ``cells`` — the tail: (vec_id, seq, embedding, cell) in ``cell=N``
+  dirs, one row per ingested version; liveness reads only its
+  (vec_id, seq) columns;
+* ``tombstones`` — (vec_id, seq) delete markers;
+* ``base/`` — the compacted base: ``base/cells`` (live rows, one per
+  doc, ``cell=N`` dirs), ``base/ids`` ((vec_id, seq, cell) in
+  ``id_bucket=H`` dirs — the skinny liveness sidecar, from which a
+  fold finds a churned doc's old cell without a base/cells scan) and
+  ``base/meta`` (1-row: n_cells, n_live, id_buckets, layout_epoch).
 
-Liveness rule (query-time, no state rewrite): a doc's live vector is
-its max-seq version unless a higher-seq tombstone exists. Updates
-append; deletes append a tombstone; replays re-append byte-identical
-rows that max/dropDuplicates absorb — the exact idempotence argument of
-the search index and the CDC merge.
+Plan shape:
 
-Plan shape at 100 TB:
+* ingest is O(changed docs): one Arrow pass assigns cells, two skinny
+  appends (cells, tombstones);
+* a query probes ``nprobe`` cells: base cell dirs are opened by name,
+  the tail is update-rate-bounded, and liveness joins only skinny
+  (id, seq) projections — skipped on a read-mostly base;
+* compaction is churn-proportional
+  (:func:`compact_vector_index_incremental`): only the churned ids'
+  old and new ``cell=N`` dirs and their ``id_bucket=H`` dirs rewrite;
+  the full live-only rewrite (:func:`compact_vector_index`) is the
+  first-compaction and legacy-layout path;
+* quantizer drift is watched on skinny frames
+  (:func:`vector_index_balance`) and repaired by the operator-scheduled
+  :func:`rebuild_vector_quantizer`.
 
-* ingest is O(changed docs): assign cells for the batch (one Arrow
-  pass, seq carried through the assigner — no rejoin), two skinny
-  appends (cells, tombstones) — the corpus is never rescanned;
-* a query probes ``nprobe`` cells: the base dirs are opened BY NAME
-  (never a full listing — VERDICT r09 #6), the tail is
-  update-rate-bounded, and liveness joins only skinny (id, seq)
-  projections;
-* on a compacted churn-free index (no tail, no tombstones,
-  stats-bearing meta) the probed slice IS live and unique — the
-  replay dedup and liveness join are skipped outright;
-* compaction is churn-proportional (:func:`compact_vector_index_incremental`,
-  r11 — the same affected-unit fold the search index walked in
-  r09/r10, ``compact_index_incremental`` being the template): churned
-  ids → their OLD cells from the id-bucket-pruned ``base/ids`` read
-  and their NEW cells from the tail itself; only those ``cell=N``
-  dirs (and the churned ids' ``id_bucket=H`` dirs) are rewritten,
-  every other dir passes through untouched (bit-identical, by test);
-  meta updates by exact churn-sized delta. The full live-only rewrite
-  (:func:`compact_vector_index`) remains as the first-compaction /
-  legacy-layout upgrade path only;
-* the quantizer lifecycle is complete and honest: buffered bootstrap
-  (full configured width), frozen serving, drift monitoring on skinny
-  frames (:func:`vector_index_balance` — `/_balance`), and the
-  operator-scheduled off-peak retrain
-  (:func:`rebuild_vector_quantizer` — the one sanctioned config
-  change; corpus-proportional by nature, which is why the watchdog
-  never triggers it).
-
-Reference parity note: the reference (couch-to-postgres, lib/index.js)
-has no vector search; this is extension-stratum capability for the
-LLM-training-data pipeline (ANN retrieval over a LIVE corpus mirror),
-built from the public IVF design (Jégou et al., PAMI 2011) on the
-repo's own LSM machinery.
+The reference (couch-to-postgres) has no vector search; this is
+extension capability built from the public IVF design (Jégou et al.,
+PAMI 2011) on the repo's own LSM machinery.
 """
 
 from __future__ import annotations
@@ -103,16 +63,13 @@ from couch_to_postgres_spark.extensions.ann import (
     assign_cells_hof,
     train_centroids,
 )
-from couch_to_postgres_spark.streaming.commit import publish, writing
+from couch_to_postgres_spark.streaming import lsm
+from couch_to_postgres_spark.streaming.commit import publish, staging, writing
 from couch_to_postgres_spark.streaming.meta_io import (
     read_components,
     read_meta_rows,
     try_open_parquet,
     write_meta_rows,
-)
-from couch_to_postgres_spark.streaming.search_stream import (
-    _has_partition_prefix,
-    _open_partition_dirs,
 )
 
 _ASSIGNERS = {"vectorized": assign_cells, "hof": assign_cells_hof}
@@ -122,7 +79,7 @@ _ASSIGNERS = {"vectorized": assign_cells, "hof": assign_cells_hof}
 #: in ``base/meta``, and :func:`vector_index_fsck` cross-checks the
 #: pair — a crash inside :func:`rebuild_vector_quantizer`'s swap
 #: sequence (new base in place, old centroids still current) is
-#: otherwise silently invisible when n_cells is unchanged (ADVICE r11)
+#: otherwise silently invisible when n_cells is unchanged
 _QUANTIZER_SCHEMA = (
     "assigner string, n_cells int, configured_cells int, layout_epoch long"
 )
@@ -162,11 +119,11 @@ def _fold_epoch(
 ) -> int:
     """The epoch a FOLD must stamp on its staged ``base/meta``: the
     base's OWN epoch, carried forward. A fold preserves the layout, so
-    it must never re-derive the epoch from the quantizer (ADVICE r12:
-    in the torn-rebuild state — base at N+1, quantizer still at N — a
+    it must never re-derive the epoch from the quantizer: in the
+    torn-rebuild state — base at N+1, quantizer still at N — a
     routine watchdog fold that read the quantizer would rewrite the
     base back to N, permanently masking exactly the corruption the
-    epoch cross-check was added for). When the two sides already
+    epoch cross-check was added for. When the two sides already
     disagree the fold refuses (:class:`TornVectorIndexError`); a base
     with no meta / a pre-epoch meta inherits the quantizer's epoch
     (its rows' cells were assigned under the current quantizer)."""
@@ -246,7 +203,7 @@ def init_vector_index(
     incompatible cell layouts in one index. ``configured_cells`` records
     the cell count the OPERATOR asked for when it exceeds what the
     bootstrap sample could train (``/_status`` surfaces the mismatch as
-    ``quantizer_degraded`` — ADVICE r10)."""
+    ``quantizer_degraded``)."""
     if assigner not in _ASSIGNERS:
         raise ValueError(f"unknown assigner {assigner!r}")
     existing = read_meta_rows(spark, _quantizer_path(index_path))
@@ -326,7 +283,7 @@ def append_pending(
     force-flush lists→ingests→retires the buffer under the same lock,
     so an unserialized append racing that flush could land rows after
     the list and lose them to the retire — silent vector loss breaking
-    at-least-once (ADVICE r11). If the quantizer appeared since the
+    at-least-once. If the quantizer appeared since the
     caller's check (a flush won the race), returns ``-1``: the caller
     must route the batch to :func:`vector_index_batch` instead."""
     with writing(index_path):
@@ -421,11 +378,9 @@ def vector_index_batch(
     upsert-only batch): one folded stats aggregate that also
     materializes the per-id collapse, the cells append (seq rides the
     assigner's passthrough — no rejoin), and the tombstone append.
-    The read-mostly fast-path gate reads the cells/tombstone data dirs
+    The read-mostly gate reads the cells/tombstone data dirs
     themselves, so there is no sidecar write and no write-order
-    invariant to preserve (r11; the r10 layout's tail ids file was a
-    fourth job per batch whose only role the column-pruned cells read
-    covers)."""
+    invariant to preserve."""
     cells_path, tomb_path = _paths(index_path)
     with writing(index_path):
         # quantizer read INSIDE the lock: a rebuild
@@ -502,19 +457,10 @@ def live_vector_ids(
         [(cells_path, schema), (base_ids_path, schema), (tomb_path, schema)],
         id_col,
     )
-    latest = (
-        tail.select(id_col, "seq")
-        .unionByName(base.select(id_col, "seq"))
-        .groupBy(id_col)
-        .agg(F.max("seq").alias("seq"))
-    )
-    tmax = tomb.select(id_col, "seq").groupBy(id_col).agg(
-        F.max("seq").alias("_t")
-    )
-    return (
-        latest.join(tmax, id_col, "left")
-        .filter(F.col("_t").isNull() | (F.col("_t") < F.col("seq")))
-        .select(id_col, "seq")
+    return lsm.live_versions(
+        tail.select(id_col, "seq").unionByName(base.select(id_col, "seq")),
+        tomb.select(id_col, "seq"),
+        id_col,
     )
 
 
@@ -541,7 +487,7 @@ def vector_topk_live(
     liveness join. The query-side assignment runs twice (once for the
     probed-cell list, once inside scoring) rather than persisting
     q_cells: a query-sized Arrow pass repeated is cheaper than a cached
-    block a long-running daemon leaks until session GC (ADVICE r10).
+    block a long-running daemon leaks until session GC.
 
     ``candidates`` (optional, an id frame) restricts neighbors to the
     given set — metadata-filtered ANN ("nearest among docs with
@@ -560,18 +506,20 @@ def vector_topk_live(
     probed = sorted(
         r["cell"] for r in q_cells.select("cell").distinct().collect()
     )
-    base_probed = _open_partition_dirs(
+    # read-mostly base: the probed base slice is live and unique, and
+    # there is no tail to read
+    fast = lsm.base_is_live(
+        spark, read_meta_rows(spark, meta_path), cells_path, tomb_path
+    )
+    base_probed = lsm.open_dirs(
         spark, base_cells_path, [f"cell={c}" for c in probed]
     )
-    tail_all = try_open_parquet(spark, cells_path)
-    tail_probed = (
-        tail_all.filter(F.col("cell").isin(probed))
-        if tail_all is not None
-        else None
-    )
+    tail = None if fast else try_open_parquet(spark, cells_path)
+    if tail is not None:
+        tail = tail.filter(F.col("cell").isin(probed))
     frames = [
         f.select(id_col, "seq", vec_col, "cell")
-        for f in (base_probed, tail_probed)
+        for f in (base_probed, tail)
         if f is not None
     ]
     if not frames:
@@ -584,27 +532,14 @@ def vector_topk_live(
     slice_df = frames[0]
     for f in frames[1:]:
         slice_df = slice_df.unionByName(f)
-
-    meta_rows = read_meta_rows(spark, meta_path)
-    fast = (
-        bool(meta_rows)
-        and "n_live" in meta_rows[0]
-        and tail_all is None
-        and try_open_parquet(spark, tomb_path) is None
-    )
     if not fast:
         # replay dedup on the probed slice (a version lands in exactly
         # one cell, so (id, seq) identifies it), then the seq-wins
         # liveness semi-join against the skinny global live set.
-        # DELIBERATELY global (r12 measured negative): a slice-scoped
-        # variant (base placements from the sliced ids' id_bucket dirs
-        # opened by name) was built and A/B'd at 600k AND 6M vectors —
-        # global won both (6M: 1.97 s vs 2.26 s) because the slice's
-        # ids hash across every bucket (no read pruning) while the
-        # global merge is one partial-aggregated columnar pass, and the
-        # scoped plan pays ~4 extra driver actions of pure job latency.
-        # Bucket-name pruning pays for REWRITES (the incremental fold),
-        # not for per-query reads.
+        # Deliberately global: a slice-scoped variant measured slower at
+        # 600k and 6M vectors, because the slice's ids hash across every
+        # id bucket while the global merge is one partial-aggregated
+        # columnar pass.
         slice_df = slice_df.dropDuplicates([id_col, "seq"]).join(
             live_vector_ids(spark, index_path, id_col),
             on=[id_col, "seq"],
@@ -617,6 +552,74 @@ def vector_topk_live(
     return _score_probed(q_cells, slice_df, k, id_col, vec_col)
 
 
+def _live_rows(
+    spark: SparkSession, index_path: str, live: DataFrame, id_col: str,
+    vec_col: str,
+) -> DataFrame | None:
+    """The ``(id, seq, vec, cell)`` rows of base ∪ tail whose version is
+    in ``live``, replay copies dropped; ``None`` when the index holds no
+    cells at all."""
+    cells_path, _ = _paths(index_path)
+    _, base_cells_path, _ = _base_paths(index_path)
+    frames = [
+        f.select(id_col, "seq", vec_col, "cell")
+        for f in (
+            try_open_parquet(spark, base_cells_path),
+            try_open_parquet(spark, cells_path),
+        )
+        if f is not None
+    ]
+    if not frames:
+        return None
+    allc = frames[0]
+    for f in frames[1:]:
+        allc = allc.unionByName(f)
+    return allc.dropDuplicates([id_col, "seq"]).join(
+        live, on=[id_col, "seq"], how="left_semi"
+    )
+
+
+def _stage_base(
+    spark: SparkSession,
+    rows: DataFrame,
+    stage: str,
+    id_col: str,
+    vec_col: str,
+    id_buckets: int,
+) -> int:
+    """Write live ``rows`` (one ``(id, seq, vec, cell)`` per doc) as a
+    staged base under ``stage``: ``cells`` in ``cell=N`` dirs, then the
+    ``ids`` sidecar in ``id_bucket=H`` dirs derived from the staged
+    files, never from the rows' lineage. Returns the staged live
+    count."""
+    staged_cells = os.path.join(stage, "cells")
+    rows.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(staged_cells)
+    # the empty-read fallback keeps the rows' id type (couch ids are
+    # strings — the never-cast-ids rule)
+    id_t = dict(rows.dtypes)[id_col]
+    (staged_c,) = read_components(
+        spark,
+        [(
+            staged_cells,
+            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int",
+        )],
+        id_col,
+    )
+    (
+        staged_c.select(
+            id_col, "seq", "cell",
+            lsm.bucket(id_col, id_buckets).alias("id_bucket"),
+        )
+        .repartition(F.col("id_bucket"))
+        .write.mode("overwrite")
+        .partitionBy("id_bucket")
+        .parquet(os.path.join(stage, "ids"))
+    )
+    return int(staged_c.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"])
+
+
 def compact_vector_index(
     spark: SparkSession,
     index_path: str,
@@ -624,72 +627,33 @@ def compact_vector_index(
     vec_col: str = "embedding",
     id_buckets: int = DEFAULT_ID_BUCKETS,
 ) -> dict:
-    """FULL fold of base ∪ tail into a live-only base, clearing tail +
-    tombstones — the first-compaction / legacy-layout-upgrade path (it
+    """Full fold of base ∪ tail into a live-only base, clearing the tail
+    and tombstones — the first-compaction and legacy-layout path (it
     lays down the id-bucketed ``base/ids`` sidecar the incremental fold
-    needs). Steady-state maintenance goes through
-    :func:`compact_vector_index_incremental` instead — this rewrite is
-    corpus-proportional by construction. Runs under the per-path lock;
-    components swap in one ``commit.publish``, so unlocked readers
-    racing the swap degrade to the documented recovery window, exactly
-    as ``compact_index_inplace`` describes."""
-    import shutil
-
+    needs). Steady-state maintenance is
+    :func:`compact_vector_index_incremental`; this rewrite is
+    corpus-proportional. Runs under the per-path lock and publishes in
+    one ``commit.publish``."""
     _, _, n_cells = _quantizer(spark, index_path)
     cells_path, tomb_path = _paths(index_path)
-    base_ids_path, base_cells_path, meta_path = _base_paths(index_path)
+    _, _, meta_path = _base_paths(index_path)
     with writing(index_path):
-        # epoch to carry forward — checked FIRST so a torn rebuild is
-        # refused before any work (and never masked, ADVICE r12)
+        # refuse a torn rebuild before any work
         fold_epoch = _fold_epoch(
             spark, index_path, read_meta_rows(spark, meta_path)
         )
         live = live_vector_ids(spark, index_path, id_col).persist()
-        frames = [
-            f
-            for f in (
-                try_open_parquet(spark, base_cells_path),
-                try_open_parquet(spark, cells_path),
-            )
-            if f is not None
-        ]
-        if not frames:
+        live_rows = _live_rows(spark, index_path, live, id_col, vec_col)
+        if live_rows is None:
             live.unpersist()
             return {"mode": "noop", "n_live": 0}
-        allc = frames[0].select(id_col, "seq", vec_col, "cell")
-        for f in frames[1:]:
-            allc = allc.unionByName(f.select(id_col, "seq", vec_col, "cell"))
-        live_rows = (
-            allc.dropDuplicates([id_col, "seq"])
-            .join(live, on=[id_col, "seq"], how="left_semi")
-            .persist()
-        )
-        staging = index_path.rstrip("/") + ".compacting-vec"
-        shutil.rmtree(staging, ignore_errors=True)
-        staged_cells = os.path.join(staging, "cells")
-        live_rows.repartition(F.col("cell")).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(staged_cells)
-        staged_ids = os.path.join(staging, "ids")
-        (
-            live_rows.select(
-                id_col,
-                "seq",
-                "cell",
-                F.pmod(F.hash(F.col(id_col)), F.lit(id_buckets)).alias(
-                    "id_bucket"
-                ),
-            )
-            .repartition(F.col("id_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("id_bucket")
-            .parquet(staged_ids)
-        )
-        n_live = int(
-            live_rows.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
+        live_rows = live_rows.persist()
+        stage = staging(index_path, "compacting-vec")
+        n_live = _stage_base(
+            spark, live_rows, stage, id_col, vec_col, id_buckets
         )
         live_rows.unpersist()
-        staged_meta = os.path.join(staging, "meta")
+        staged_meta = os.path.join(stage, "meta")
         write_meta_rows(
             spark,
             staged_meta,
@@ -697,19 +661,13 @@ def compact_vector_index(
             _BASE_META_SCHEMA,
         )
         live.unpersist()
-        # the tails retire last (plus a legacy r10 tail "ids" dir, if
-        # this index predates the sidecar-free tail layout)
-        publish(
+        # a legacy tail "ids" dir retires with the other tails
+        lsm.fold_publish(
             index_path,
-            [
-                (base_cells_path, staged_cells),
-                (base_ids_path, staged_ids),
-                (meta_path, staged_meta),
-                (cells_path, None),
-                (tomb_path, None),
-                (os.path.join(index_path, "ids"), None),
-            ],
-            staging,
+            [(os.path.join(index_path, "base"), stage, ["cells", "ids"])],
+            (meta_path, staged_meta),
+            [cells_path, tomb_path, os.path.join(index_path, "ids")],
+            stage,
         )
         return {"mode": "full", "n_live": n_live}
 
@@ -719,81 +677,50 @@ def compact_vector_index_incremental(
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    diag: dict | None = None,
 ) -> dict:
-    """Fold the tail into ONLY the cell directories it touches — the
-    steady-state maintenance step the daemon watchdog runs, keeping
-    recurring compaction cost churn-proportional instead of
-    corpus-proportional (VERDICT r10 #1; ``compact_index_incremental``
-    is the template, ``ann.compact_ivf_index``'s affected-cell
-    discovery the precedent).
+    """Fold the tail into only the cell dirs it touches — the watchdog's
+    steady-state step, churn-proportional instead of
+    corpus-proportional.
 
-    Cost model — every stage is churn- or affected-slice-proportional:
+    The LSM core (:mod:`streaming.lsm`) discovers the churned ids and
+    their id buckets, resolves their liveness and publishes the fold.
+    This function supplies the vector payload:
 
-    * **churned ids** come from the tail's column-pruned (id) read ∪
-      tombstones — update-rate-sized;
     * **old cells** come from the churned ids' ``base/ids`` rows,
-      opened by ``id_bucket=H`` dir NAME (never a base/cells scan —
-      the ``doclen.buckets`` discovery trick); **new cells** from the
-      tail rows themselves. The affected set is their union —
-      driver-bounded at n_cells ints;
+      opened by ``id_bucket=H`` dir name (never a base/cells scan);
+      **new cells** from the tail rows. Their union is the affected
+      set, at most n_cells ints;
     * **non-churned rows in affected cells pass through** with no join
-      and no dedup (live and unique by the compaction invariant); only
-      churned-doc rows (old base slice ∪ the tail, both
-      churn-proportional) pay the replay dedup and seq-wins liveness
-      merge — all on skinny frames until the single embedding-bearing
-      rewrite of the affected dirs;
-    * **meta updates by exact churn-sized delta** (live churned
-      versions in, old base versions out) — no corpus aggregate;
-    * unaffected ``cell=N`` and ``id_bucket=H`` dirs are never opened,
-      never rewritten (bit-identical, by test);
-    * **rewrites scale with EFFECTIVE churn** — churned ids the index
-      actually holds. Never-indexed tombstones (a mostly-plain feed's
-      field-less upserts each tombstone this index) are read-probed but
-      rewrite nothing: they kill nothing and the tombstone retire
-      erases them regardless (ADVICE r11).
+      and no dedup; churned-doc rows pay the replay dedup and the
+      liveness filter, on skinny frames until the one embedding-bearing
+      rewrite;
+    * **rewrites follow effective churn** — churned ids the index
+      actually holds. Tombstones for never-indexed ids (a mostly-plain
+      feed tombstones every field-less upsert) are read-probed but
+      rewrite nothing, and the tombstone retire erases them;
+    * meta moves by the exact churn delta; unaffected ``cell=N`` and
+      ``id_bucket=H`` dirs are never opened (bit-identical, by test).
 
-    Falls back to the FULL :func:`compact_vector_index` when the index
-    has never been compacted or carries the legacy (r10, flat
-    ``base/ids``) layout. Returns the stats dict the daemon watchdog
-    logs (``mode`` = ``full`` | ``noop`` | ``incremental``, churn and
-    affected-dir counts, updated ``n_live``); ``diag`` collects phase
-    wall-times like the search compactor's."""
-    import shutil
-    import time as _time
-
-    _t0 = [_time.monotonic()]
-
-    def _mark(phase: str) -> None:
-        if diag is not None:
-            now = _time.monotonic()
-            diag[phase] = round(now - _t0[0], 3)
-            _t0[0] = now
-
+    Falls back to :func:`compact_vector_index` when the index has never
+    been compacted or has a flat ``base/ids``. Returns the stats dict
+    the daemon watchdog logs (``mode`` = ``full`` | ``noop`` |
+    ``incremental``, churn and affected-dir counts, ``n_live``)."""
     with writing(index_path):
         cells_path, tomb_path = _paths(index_path)
         base_ids_path, base_cells_path, meta_path = _base_paths(index_path)
-        # a crash can strand this fold's staging sibling; clear it on
-        # entry (every exit path below rewrites or removes it anyway,
-        # but the FULL-fallback path never visits it)
-        shutil.rmtree(
-            index_path.rstrip("/") + ".compacting-vec-incr",
-            ignore_errors=True,
-        )
+        # cleared on entry: the full fallback below never visits it
+        stage = staging(index_path, "compacting-vec-incr")
         meta_rows = read_meta_rows(spark, meta_path)
         if (
             not meta_rows
             or "id_buckets" not in meta_rows[0]
-            or not _has_partition_prefix(base_ids_path, "id_bucket=")
+            or not lsm.has_partition_prefix(base_ids_path, "id_bucket=")
         ):
-            # never compacted, or a legacy base without the bucketed
-            # sidecar — one full rewrite lays down the foldable layout
             done = compact_vector_index(spark, index_path, id_col, vec_col)
             return {**done, "mode": "full"}
         n_id_buckets = int(meta_rows[0]["id_buckets"])
         n_cells = int(meta_rows[0]["n_cells"])
-        # epoch to carry forward — checked FIRST so a torn rebuild is
-        # refused before any work (and never masked, ADVICE r12)
+        # refuse a torn rebuild before any work
         fold_epoch = _fold_epoch(spark, index_path, meta_rows)
 
         schema = f"{id_col} long, seq long"
@@ -816,71 +743,30 @@ def compact_vector_index_incremental(
                 "n_live": int(meta_rows[0]["n_live"]),
             }
 
-        _mark("probe")
-        # churned docs: any doc with a tail version or a tombstone.
-        # Tail-sized; persisted — it anchors every churn-scoped join.
-        churned = (
-            tail_skinny.select(id_col)
-            .unionByName(tomb.select(id_col))
-            .distinct()
-            .persist()
+        churned, n_churned, aff_id_buckets = lsm.churn(
+            tail_skinny, tomb, id_col, n_id_buckets
         )
-        # one job materializes the persist AND yields both discovery
-        # outputs: the churn count and the affected id buckets
-        # (driver-bounded: <= id_buckets rows)
-        bucket_counts = churned.groupBy(
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_id_buckets)).alias("b")
-        ).count().collect()
-        n_churned = sum(int(r["count"]) for r in bucket_counts)
-        aff_id_buckets = sorted(r["b"] for r in bucket_counts)
         id_t = dict(tail_skinny.dtypes).get(id_col, "long")
-
-        def _pruned_read(root, rel_dirs, schema):
-            got = _open_partition_dirs(spark, root, rel_dirs)
-            return (
-                got
-                if got is not None
-                else spark.createDataFrame([], schema)
-            )
-
-        # the affected id buckets' sidecar rows — opened by dir name
-        base_ids_aff = _pruned_read(
+        base_ids_aff = lsm.open_dirs(
+            spark,
             base_ids_path,
             [f"id_bucket={b}" for b in aff_id_buckets],
             f"{id_col} {id_t}, seq long, cell int, id_bucket int",
         ).persist()
-        # churned docs' OLD sidecar rows: their old CELL (the dir their
-        # superseded embedding row still occupies) + old seq for the
-        # liveness merge and the meta delta
+        # churned docs' old sidecar rows: their old cell and old seq
         base_ids_churned = (
             base_ids_aff.join(churned, on=id_col, how="left_semi")
             .select(id_col, "seq", "cell")
             .persist()
         )
-        _mark("churned_discovery")
-        # ONE churn-sized aggregate yields the whole rewrite plan:
-        # affected cells (old ∪ new) AND the EFFECTIVE churn buckets.
-        # Effective churn = churned ids the index actually HOLDS (a
-        # base sidecar row or a tail upsert). A mostly-plain feed
-        # tombstones every field-less upsert (pipeline's
-        # old-vector-must-die rule), so feed churn can dwarf embedded
-        # churn — never-indexed tombstones kill nothing, leave zero
-        # trace after the fold (tombstones retire wholesale below),
-        # and must not drag their id buckets into the REWRITE set
-        # (ADVICE r11: sidecar rewrites otherwise scale with the whole
-        # feed's update rate). The full churn set still drives the
-        # pruned *read* above — that's how "never held" is learned —
-        # but reads are skinny and listing-free; only writes are the
-        # scale hazard. Output is driver-bounded: <= id_buckets rows,
-        # each with a <= n_cells cell set.
+        # one churn-sized aggregate yields the whole rewrite plan: the
+        # affected cells (old ∪ new) and the effective churn buckets
+        # (ids the index holds: a base sidecar row or a tail upsert).
+        # At most id_buckets rows, each with at most n_cells cells.
         discovery = (
             base_ids_churned.select(id_col, "cell")
             .unionByName(tail_skinny.select(id_col, "cell"))
-            .groupBy(
-                F.pmod(F.hash(F.col(id_col)), F.lit(n_id_buckets)).alias(
-                    "b"
-                )
-            )
+            .groupBy(lsm.bucket(id_col, n_id_buckets).alias("b"))
             .agg(
                 F.countDistinct(F.col(id_col)).alias("n"),
                 F.collect_set("cell").alias("cells"),
@@ -891,51 +777,29 @@ def compact_vector_index_incremental(
         n_eff_churned = sum(int(r["n"]) for r in discovery)
         aff_cells = sorted(
             {c for r in discovery for c in r["cells"] if c is not None}
-        )  # collect_set drops the legacy no-cell tail's NULLs itself
+        )
         cell_dirs = [f"cell={c}" for c in aff_cells]
+        churned_live = lsm.live_versions(
+            base_ids_churned.select(id_col, "seq").unionByName(
+                tail_skinny.select(id_col, "seq")
+            ),
+            tomb.select(id_col, "seq"),
+            id_col,
+        ).persist()
 
-        _mark("affected_cells")
-        # churn-scoped liveness: max-seq over (old base version ∪ tail
-        # versions) minus higher-seq tombstones — tail-sized everywhere
-        cand = base_ids_churned.select(id_col, "seq").unionByName(
-            tail_skinny.select(id_col, "seq")
+        # affected-cell embedding rows, opened by dir name — the only
+        # embedding-bearing stage
+        staged_schema = (
+            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int"
         )
-        latest = cand.groupBy(id_col).agg(F.max("seq").alias("seq"))
-        tomb_max = tomb.select(id_col, "seq").groupBy(id_col).agg(
-            F.max("seq").alias("_tomb_seq")
-        )
-        churned_live = (
-            latest.join(tomb_max, id_col, "left")
-            .filter(
-                F.col("_tomb_seq").isNull()
-                | (F.col("_tomb_seq") < F.col("seq"))
-            )
-            .select(id_col, "seq")
-            .persist()
-        )
-
-        _mark("churned_live")
-        staging = index_path.rstrip("/") + ".compacting-vec-incr"
-        shutil.rmtree(staging, ignore_errors=True)
-
-        # affected-cell embedding rows — opened by dir name. Non-churned
-        # rows pass through joinless; churned-doc rows (old base slice ∪
-        # the whole tail) pay the replay dedup and the live-version
-        # filter. This is the ONLY embedding-bearing stage.
-        base_c_aff = _pruned_read(
-            base_cells_path,
-            cell_dirs,
-            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int",
+        base_c_aff = lsm.open_dirs(
+            spark, base_cells_path, cell_dirs, staged_schema
         ).select(id_col, "seq", vec_col, "cell")
         keep = base_c_aff.join(churned, on=id_col, how="left_anti")
         tail_rows = (
             tail.select(id_col, "seq", vec_col, "cell")
             if "cell" in tail.columns
-            else spark.createDataFrame(
-                [],
-                f"{id_col} {id_t}, seq long, {vec_col} array<double>, "
-                "cell int",
-            )
+            else spark.createDataFrame([], staged_schema)
         )
         churn_rows = (
             base_c_aff.join(churned, on=id_col, how="left_semi")
@@ -943,39 +807,19 @@ def compact_vector_index_incremental(
             .dropDuplicates([id_col, "seq"])
             .join(churned_live, on=[id_col, "seq"], how="left_semi")
         )
-        staged_cells = os.path.join(staging, "cells")
-        # no repartition: the keep side was read dir-clustered from the
-        # affected cell dirs and only passed a broadcast anti-join
-        # (map-side, clustering preserved) — the compact_index_incremental
-        # argument verbatim
+        staged_cells = os.path.join(stage, "cells")
+        # no repartition: the keep side was read dir-clustered and only
+        # passed a broadcast anti-join
         keep.unionByName(churn_rows).write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(staged_cells)
-        # read the staged rows back for the sidecar derivation (the
-        # staged-postings pattern — never re-run the merge lineage); the
-        # empty-read fallback carries the tail's id dtype
-        # (never-cast-ids rule)
-        staged_schema = (
-            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int"
-        )
+        # the sidecar derives from the staged rows, never the merge
+        # lineage; the empty-read fallback keeps the tail's id type
         (staged_c,) = read_components(
             spark, [(staged_cells, staged_schema)], id_col
         )
-        _mark("staged_cells")
-        # sidecar: affected id buckets only — non-churned rows pass
-        # through, live churned versions re-enter with their NEW cell.
-        # The write derives from the STAGED cells (never the merge
-        # lineage); the meta delta derives from the two persisted
-        # churn-sized frames — independent, so the write runs on a
-        # second driver thread while the delta aggregate overlaps on
-        # the main one (the search fold's staged-write discipline,
-        # ARCHITECTURE.md "Job-launch budget")
-        from concurrent.futures import ThreadPoolExecutor
-
-        # keeps come only from EFFECTIVE buckets — a bucket whose only
-        # churn is never-indexed tombstones is not rewritten (and must
-        # not be: its publish step retires the old dir regardless, so
-        # the rewrite list below is eff_id_buckets to match)
+        # sidecar keeps come only from effective buckets: a bucket whose
+        # only churn is never-indexed tombstones is not rewritten
         ids_keep = (
             base_ids_aff.filter(F.col("id_bucket").isin(eff_id_buckets))
             .join(churned, on=id_col, how="left_anti")
@@ -984,68 +828,53 @@ def compact_vector_index_incremental(
         ids_new = staged_c.join(churned, on=id_col, how="left_semi").select(
             id_col, "seq", "cell"
         )
+        staged_ids = os.path.join(stage, "ids")
 
         def _write_ids() -> None:
             (
                 ids_keep.unionByName(ids_new)
-                .withColumn(
-                    "id_bucket",
-                    F.pmod(F.hash(F.col(id_col)), F.lit(n_id_buckets)),
-                )
+                .withColumn("id_bucket", lsm.bucket(id_col, n_id_buckets))
                 .repartition(F.col("id_bucket"))
                 .write.mode("overwrite")
                 .partitionBy("id_bucket")
-                .parquet(os.path.join(staging, "ids"))
+                .parquet(staged_ids)
             )
+
+        # the sidecar write and the meta delta are independent: the
+        # write runs on a second driver thread
+        from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=1) as pool:
             ids_f = pool.submit(_write_ids)
-            # meta by exact churn-sized delta: live churned versions in,
-            # old base versions out — one tiny union-aggregate
-            delta = (
-                base_ids_churned.select(F.lit(-1).alias("sgn"))
-                .unionByName(churned_live.select(F.lit(1).alias("sgn")))
-                .agg(F.coalesce(F.sum("sgn"), F.lit(0)).alias("dn"))
-                .collect()[0]
-            )
+            delta = lsm.meta_delta(base_ids_churned, churned_live)
             ids_f.result()
-        _mark("staged_ids")
-        n_live = int(meta_rows[0]["n_live"]) + int(delta["dn"])
-        staged_meta = os.path.join(staging, "meta")
+        n_live = int(meta_rows[0]["n_live"]) + int(delta["n"])
+        staged_meta = os.path.join(stage, "meta")
         write_meta_rows(
             spark,
             staged_meta,
             [(n_cells, n_live, n_id_buckets, fold_epoch)],
             _BASE_META_SCHEMA,
         )
-        _mark("meta_delta")
         churned.unpersist()
         base_ids_aff.unpersist()
         base_ids_churned.unpersist()
         churned_live.unpersist()
 
-        # publish — base dirs first (per affected dir: everything else
-        # is never touched), tails retire LAST so "no tail" can only
-        # become true after the fresh base and meta are in place (the
-        # fast path's consistency)
-        steps = [
-            (os.path.join(live, d), os.path.join(staged, d))
-            for live, staged, dirs in (
+        lsm.fold_publish(
+            index_path,
+            [
                 (base_cells_path, staged_cells, cell_dirs),
                 (
                     base_ids_path,
-                    os.path.join(staging, "ids"),
+                    staged_ids,
                     [f"id_bucket={b}" for b in eff_id_buckets],
                 ),
-            )
-            for d in dirs
-        ]
-        publish(
-            index_path,
-            steps + [(meta_path, staged_meta), (cells_path, None), (tomb_path, None)],
-            staging,
+            ],
+            (meta_path, staged_meta),
+            [cells_path, tomb_path],
+            stage,
         )
-        _mark("swaps")
         return {
             "mode": "incremental",
             "churned_docs": n_churned,
@@ -1063,29 +892,22 @@ def vector_index_status(
     spark: SparkSession, index_path: str, id_col: str = "vec_id"
 ) -> dict:
     """Operator health for one vector index — the `/_status` payload:
-    live count, post-compaction churn (tail versions + tombstones =
-    the compaction-debt signal), quantizer shape — including trained vs
-    configured cells (``quantizer_degraded`` marks a bootstrap that
-    trained fewer cells than asked, ADVICE r10) — and any pre-init
-    bootstrap buffer. The live count is meta-exact on a churn-free
-    compacted base; with churn it is one aggregate over the SKINNY
-    (id, seq) projections — never the embeddings (tail row counts come
-    from parquet footer metadata)."""
+    live count, churn since the last compaction (tail versions +
+    tombstones, the compaction-debt signal), quantizer shape — trained
+    vs configured cells (``quantizer_degraded`` marks a bootstrap that
+    trained fewer cells than asked) — and any pre-init buffer. The live
+    count is meta-exact on a churn-free base; with churn it is one
+    aggregate over the skinny (id, seq) projections, never the
+    embeddings."""
     cells_path, tomb_path = _paths(index_path)
     _, _, meta_path = _base_paths(index_path)
-    schema = f"{id_col} long, seq long"
-    tail, tomb = read_components(
-        spark, [(cells_path, schema), (tomb_path, schema)], id_col
-    )
-    tail_rows = tail.count()
-    n_tomb = tomb.count()
     meta_rows = read_meta_rows(spark, meta_path)
+    tail_rows, n_tomb, n_live = lsm.tail_status(
+        spark, cells_path, tomb_path, id_col, meta_rows
+    )
     q = read_meta_rows(spark, _quantizer_path(index_path))
-    if meta_rows and "n_live" in meta_rows[0] and not tail_rows and not n_tomb:
-        n_live = int(meta_rows[0]["n_live"])
-    else:
+    if n_live is None:
         n_live = live_vector_ids(spark, index_path, id_col).count()
-    churn = tail_rows + n_tomb
     trained = int(q[0]["n_cells"]) if q else None
     configured = (
         int(q[0].get("configured_cells") or trained) if q else None
@@ -1109,7 +931,7 @@ def vector_index_status(
         "pending_upserts": (
             pending_upsert_count(spark, index_path) if not q else 0
         ),
-        "compaction_debt": round(churn / n_live, 4) if n_live else None,
+        "compaction_debt": lsm.compaction_debt(tail_rows, n_tomb, n_live),
     }
 
 
@@ -1217,8 +1039,6 @@ def rebuild_vector_quantizer(
     readers racing the swap can probe stale cells for the swap's
     duration — the documented recovery-window trade, here applied to
     the centroids too."""
-    import shutil
-
     with writing(index_path):
         old_assigner, _, old_n = _quantizer(spark, index_path)
         use_assigner = assigner or old_assigner
@@ -1227,28 +1047,14 @@ def rebuild_vector_quantizer(
         cells_path, tomb_path = _paths(index_path)
         base_ids_path, base_cells_path, meta_path = _base_paths(index_path)
         live = live_vector_ids(spark, index_path, id_col).persist()
-        frames = [
-            f.select(id_col, "seq", vec_col)
-            for f in (
-                try_open_parquet(spark, base_cells_path),
-                try_open_parquet(spark, cells_path),
-            )
-            if f is not None
-        ]
-        if not frames:
+        live_rows = _live_rows(spark, index_path, live, id_col, vec_col)
+        if live_rows is None:
             live.unpersist()
             raise ValueError(
                 f"vector index at {index_path} holds no vectors to "
                 f"rebuild the quantizer from"
             )
-        allc = frames[0]
-        for f in frames[1:]:
-            allc = allc.unionByName(f)
-        live_rows = (
-            allc.dropDuplicates([id_col, "seq"])
-            .join(live, on=[id_col, "seq"], how="left_semi")
-            .persist()
-        )
+        live_rows = live_rows.drop("cell").persist()
         if centroids is None:
             centroids = train_centroids(
                 live_rows, n_cells or old_n, vec_col, seed
@@ -1257,68 +1063,32 @@ def rebuild_vector_quantizer(
             live_rows, centroids, id_col, vec_col, nprobe=1,
             extra_cols=("seq",),
         ).select(id_col, "seq", vec_col, "cell")
-        staging = index_path.rstrip("/") + ".rebuilding-vec"
-        shutil.rmtree(staging, ignore_errors=True)
-        staged_cells = os.path.join(staging, "cells")
-        assigned.repartition(F.col("cell")).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(staged_cells)
-        # sidecar + count from the staged files (never re-run the
-        # assignment lineage); the empty-read fallback carries the live
-        # rows' id dtype — couch `_id`s are STRINGS (never-cast-ids
-        # rule; VERDICT r11 #4)
-        id_t = dict(live_rows.dtypes)[id_col]
-        staged_schema = (
-            f"{id_col} {id_t}, seq long, {vec_col} array<double>, cell int"
-        )
-        (staged_c,) = read_components(
-            spark, [(staged_cells, staged_schema)], id_col
-        )
-        staged_ids = os.path.join(staging, "ids")
-        (
-            staged_c.select(
-                id_col,
-                "seq",
-                "cell",
-                F.pmod(F.hash(F.col(id_col)), F.lit(id_buckets)).alias(
-                    "id_bucket"
-                ),
-            )
-            .repartition(F.col("id_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("id_bucket")
-            .parquet(staged_ids)
-        )
-        n_live = int(
-            staged_c.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
+        stage = staging(index_path, "rebuilding-vec")
+        n_live = _stage_base(
+            spark, assigned, stage, id_col, vec_col, id_buckets
         )
         live_rows.unpersist()
         live.unpersist()
-        # EVERYTHING the new layout needs — base meta, centroids,
-        # quantizer marker — is staged alongside the cells/ids BEFORE
-        # any swap, stamped with the bumped layout epoch. The swap
-        # itself is then one publish (microseconds of renames), not the
-        # prior base-swap → Spark-job centroids write → quantizer write
-        # (ADVICE r11: a crash in that multi-second window persisted
-        # (old centroids, new base), probes silently missed neighbors,
-        # and fsck could not tell when n_cells was unchanged). A crash
-        # inside the publish leaves base/meta at epoch N+1 with the
-        # quantizer still at N — what vector_index_fsck's epoch
-        # cross-check reports — until the next writer completes it.
+        # everything the new layout needs — base meta, centroids,
+        # quantizer marker — is staged before any swap, stamped with
+        # the bumped layout epoch, so the swap is one publish. A crash
+        # inside it leaves base/meta at epoch N+1 with the quantizer
+        # still at N — what vector_index_fsck's epoch cross-check
+        # reports — until the next writer completes it.
         new_epoch = _layout_epoch(spark, index_path) + 1
-        staged_meta = os.path.join(staging, "meta")
+        staged_meta = os.path.join(stage, "meta")
         write_meta_rows(
             spark,
             staged_meta,
             [(len(centroids), n_live, int(id_buckets), new_epoch)],
             _BASE_META_SCHEMA,
         )
-        staged_centroids = os.path.join(staging, "centroids")
+        staged_centroids = os.path.join(stage, "centroids")
         spark.createDataFrame(
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cell int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(staged_centroids)
-        staged_quantizer = os.path.join(staging, "quantizer")
+        staged_quantizer = os.path.join(stage, "quantizer")
         write_meta_rows(
             spark,
             staged_quantizer,
@@ -1335,15 +1105,15 @@ def rebuild_vector_quantizer(
         publish(
             index_path,
             [
-                (base_cells_path, staged_cells),
-                (base_ids_path, staged_ids),
+                (base_cells_path, os.path.join(stage, "cells")),
+                (base_ids_path, os.path.join(stage, "ids")),
                 (meta_path, staged_meta),
                 (cells_path, None),
                 (tomb_path, None),
                 (_centroids_path(index_path), staged_centroids),
                 (_quantizer_path(index_path), staged_quantizer),
             ],
-            staging,
+            stage,
         )
         return {
             "mode": "rebuild",

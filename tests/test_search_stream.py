@@ -177,10 +177,8 @@ def test_tail_appends_after_compaction(spark, index, tmp_path):
 
 
 def test_bucket_pruning_reads_only_matching_dirs(spark, index, tmp_path):
-    from couch_to_postgres_spark.streaming.search_stream import (
-        _term_buckets,
-        query_postings,
-    )
+    from couch_to_postgres_spark.streaming.lsm import term_buckets
+    from couch_to_postgres_spark.streaming.search_stream import query_postings
 
     search_index_batch(
         spark, index, _changes(spark, [(s, d, False, t) for s, (d, t) in
@@ -189,7 +187,7 @@ def test_bucket_pruning_reads_only_matching_dirs(spark, index, tmp_path):
     compacted = str(tmp_path / "compacted")
     compact_index(spark, index, compacted, token_buckets=8)
     terms = ["spark", "window"]
-    buckets = _term_buckets(spark, terms, 8)
+    buckets = term_buckets(terms, 8)
     hits = query_postings(spark, compacted, terms)
     # r10 (VERDICT r09 #6): the base's matching token_bucket dirs are
     # opened BY NAME — the pruning happens at LISTING time, before the
@@ -412,13 +410,11 @@ def test_index_status_live_docs_exact_without_corpus_aggregate(
 
 
 def test_spark_hash_str_matches_engine(spark):
-    """_spark_hash_str must equal F.hash(string) byte-for-byte — the pin
-    that makes the driver-side bucket computation safe. Covers every
+    """lsm.spark_hash_str must equal F.hash(string) byte-for-byte — the
+    pin that makes the driver-side bucket computation safe. Covers every
     UTF-8 tail length (0-3 residual bytes), multi-byte code points,
     high-bit (signed-byte) tails, and long strings."""
-    from couch_to_postgres_spark.streaming.search_stream import (
-        _spark_hash_str,
-    )
+    from couch_to_postgres_spark.streaming.lsm import spark_hash_str
 
     cases = [
         "", "a", "ab", "abc", "abcd", "abcde",
@@ -434,8 +430,8 @@ def test_spark_hash_str_matches_engine(spark):
         .collect()
     }
     for c in cases:
-        assert _spark_hash_str(c) == got[c], repr(c)
-    # and the pmod identity used by _term_buckets
+        assert spark_hash_str(c) == got[c], repr(c)
+    # and the pmod identity used by lsm.term_buckets
     pm = {
         r["s"]: r["b"]
         for r in spark.createDataFrame([(c,) for c in cases if c], "s string")
@@ -444,7 +440,7 @@ def test_spark_hash_str_matches_engine(spark):
     }
     for c in cases:
         if c:
-            assert _spark_hash_str(c) % 64 == pm[c], repr(c)
+            assert spark_hash_str(c) % 64 == pm[c], repr(c)
 
 
 def test_randomized_lifecycle_equivalence(spark, index):

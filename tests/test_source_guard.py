@@ -3,7 +3,10 @@
 a schema-inferring ``spark.read…parquet(…)`` call: ``meta_io.py`` owns
 the Spark fallback. And stored-state directory swaps go through
 ``commit.publish``: no other module under ``streaming/`` (nor
-``extensions/ann.py``) renames or moves paths itself."""
+``extensions/ann.py``) renames or moves paths itself. And the LSM
+bucket rule (``F.hash``) appears under ``streaming/`` only in
+``lsm.py``, which the vector index uses instead of reaching into the
+search index."""
 
 import ast
 import os
@@ -136,4 +139,70 @@ def test_directory_swaps_go_through_commit():
     assert not found, (
         "publish stored-state swaps with streaming.commit.publish, not a "
         f"raw rename/move: {found}"
+    )
+
+
+def _hash_calls(source: str) -> list[int]:
+    """Line numbers of ``<module>.hash(…)`` calls (``F.hash``)."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "hash"
+        and isinstance(node.func.value, ast.Name)
+    )
+
+
+def _imports_module(source: str, module: str) -> list[int]:
+    """Line numbers of imports that name ``module`` (its dotted path's
+    last part), in any import form."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module or ""] + [
+                f"{node.module}.{a.name}" for a in node.names
+            ]
+        else:
+            continue
+        if any(n.split(".")[-1] == module for n in names):
+            lines.append(node.lineno)
+    return sorted(set(lines))
+
+
+def test_lsm_detectors_see_every_form():
+    src = (
+        "from pyspark.sql import functions as F\n"
+        "F.pmod(F.hash('t'), F.lit(4))\n"
+        "x.hash\n"
+        "from couch_to_postgres_spark.streaming.search_stream import f\n"
+        "from couch_to_postgres_spark.streaming import search_stream\n"
+        "import couch_to_postgres_spark.streaming.search_stream as ss\n"
+        "from couch_to_postgres_spark.streaming import lsm\n"
+    )
+    assert _hash_calls(src) == [2]
+    assert _imports_module(src, "search_stream") == [4, 5, 6]
+
+
+def test_bucket_rule_lives_in_lsm():
+    """The ``pmod(hash(x), n)`` bucket rule has one owner,
+    ``streaming/lsm.py``, and the vector index takes the shared LSM
+    machinery from there, never from the search index."""
+    found = {}
+    for name in sorted(os.listdir(STREAMING)):
+        if not name.endswith(".py") or name == "lsm.py":
+            continue
+        with open(os.path.join(STREAMING, name)) as f:
+            lines = _hash_calls(f.read())
+        if lines:
+            found[name] = lines
+    with open(os.path.join(STREAMING, "vector_stream.py")) as f:
+        lines = _imports_module(f.read(), "search_stream")
+    if lines:
+        found["vector_stream.py imports search_stream"] = lines
+    assert not found, (
+        "bucket with lsm.bucket / lsm.term_buckets and take LSM helpers "
+        f"from streaming.lsm: {found}"
     )

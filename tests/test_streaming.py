@@ -590,14 +590,13 @@ def test_watchdog_compacts_search_index_on_debt(spark, sf_dir, tmp):
     m3 = r3["search_compacted"]["search-feed"]
     assert m3["debt"] > 0.2
     # second pass folds incrementally and reports its cost: churned doc
-    # count, affected (token_bucket x id_sub) pairs out of the total,
-    # and per-phase wall-clock — the numbers an operator needs to judge
-    # maintenance load without reading logs
+    # count and affected (token_bucket x id_sub) pairs out of the total —
+    # the numbers an operator needs to judge maintenance load without
+    # reading logs
     assert m3["mode"] == "incremental"
     assert m3["churned_docs"] >= 2
     assert 0 < m3["affected_pairs"]
     assert m3["total_buckets"] > 0
-    assert m3["phase_timings"] and "swaps" in m3["phase_timings"]
     # ... and the same telemetry lands on the feed's /_status row
     maint = d.status()["search-feed"]["index_maintenance"]
     assert maint["search"]["mode"] == "incremental"
@@ -889,7 +888,6 @@ def test_daemon_maintains_vector_index(spark, sf_dir, tmp):
     assert tel["churned_docs"] == 15
     assert 0 < tel["affected_cells"] <= tel["total_cells"] == 4
     assert tel["n_live"] == 55
-    assert tel["phase_timings"] and "staged_cells" in tel["phase_timings"]
     st3 = vector_index_status(spark, vidx)
     assert st3["compaction_debt"] == 0.0
     got3 = sorted(
@@ -1228,7 +1226,7 @@ def test_watchdog_overlaps_maintenance_units(spark, tmp, monkeypatch):
     def fake_status(spark_, sip):
         return {"compaction_debt": 1.0}
 
-    def fake_fold(spark_, sip, id_col="doc_id", diag=None, **kwargs):
+    def fake_fold(spark_, sip, id_col="doc_id", **kwargs):
         t0 = time.monotonic()
         time.sleep(0.8)
         with lock:
