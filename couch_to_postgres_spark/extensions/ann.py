@@ -1,23 +1,48 @@
 """IVF approximate nearest neighbor search — the 100 TB scale path for
 embedding similarity.
 
-Build: train coarse centroids with ``pyspark.ml`` KMeans (public Spark
-MLlib) on a sample, assign every corpus vector to its nearest centroid
-(one broadcast of the centroid matrix, numpy-vectorized per Arrow batch),
-and store the corpus partitioned by ``cell``.
+Build: train coarse centroids on the driver — one bounded collect of a
+seeded sample, then seeded k-means++ and Lloyd iterations in numpy
+(:func:`train_centroids`) — assign every corpus vector to its nearest
+centroid (one broadcast of the centroid matrix, numpy-vectorized per
+Arrow batch), and store the corpus partitioned by ``cell``.
 
 Search: for each query, score only the ``nprobe`` nearest cells'
 vectors — the candidate join carries (query × probed-cell) pairs instead
 of (query × corpus), cutting scored pairs by ~n_cells/nprobe while the
 per-cell layout keeps scans partition-pruned.
 
+A null or all-zero vector has no cosine direction: both assigners drop
+it and the trainer never samples it.
+
 Exact baseline for recall measurement: ``similarity.cosine_topk``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from couch_to_postgres_spark.extensions.similarity import _as_double, _norm
+
+#: the trainer's driver budget, in doubles (sampled rows × dim): 2**22
+#: doubles is 32 MB
+SAMPLE_DOUBLES = 1 << 22
+
+#: Lloyd stopping rule: stop once no centroid moves farther than
+#: ``_TOL`` (MLlib ``KMeans``' tolerance), or after ``_MAX_ITER`` steps.
+#: MLlib caps at 10. On the sf0.1 embeddings this fit converges in 22-39
+#: steps: capped at 10, its recall@10 at nprobe 1 and 2 falls below the
+#: MLlib fit's; run to convergence, it rises above
+_MAX_ITER = 50
+_TOL = 1e-4
+
+
+def nonzero_norm(vec: Column) -> Column:
+    """True where cosine to ``vec`` is defined: a non-null vector with a
+    nonzero norm. Null and all-zero vectors are false, never null."""
+    return F.coalesce(_norm(_as_double(vec)) > 0, F.lit(False))
 
 
 def quantize_embeddings(
@@ -126,29 +151,80 @@ def train_centroids(
     seed: int = 42,
     max_sample: int = 100_000,
 ) -> list[list[float]]:
-    """KMeans coarse quantizer. Returns the centroid matrix (small —
-    n_cells × dim — safe to broadcast).
+    """k-means coarse quantizer, trained on the driver. Returns the
+    centroid matrix (n_cells × dim — small, safe to broadcast); fewer
+    rows when the sample holds fewer distinct vectors than ``n_cells``,
+    as MLlib's ``KMeans`` returns, and ``[]`` when it holds none.
 
-    Trains on a SAMPLE when the corpus exceeds ``max_sample`` rows: a
-    coarse quantizer needs the density shape, not every point, and a
-    100 TB corpus must never flow through iterative KMeans — 100k
-    uniformly-sampled vectors pin the centroids to well under the
-    quantization error the nprobe search already absorbs. The count is
-    one cheap metadata-ish pass vs ~10 full passes a full fit costs."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    Spark's share is two small jobs: one row probes the dimension, then
+    one collect brings back at most ``min(max_sample, SAMPLE_DOUBLES //
+    dim)`` rows — the whole frame when it fits, else a seeded uniform
+    sample (the rows with the smallest seeded random keys). A coarse
+    quantizer needs the density shape, not every point, so a 100 TB
+    corpus never flows through iterative k-means: 100k sampled vectors
+    pin the centroids well under the quantization error the nprobe
+    search already absorbs. Null and zero-norm vectors are left out.
 
-    n = corpus.count()
-    sample = (
-        corpus.sample(fraction=min(1.0, max_sample / n), seed=seed)
-        if n > max_sample
-        else corpus
+    The fit is seeded k-means++ initialisation and Lloyd iterations in
+    numpy, on Euclidean distance with MLlib's tolerance (1e-4) and a
+    50-step cap. The sample is sorted before the
+    fit, so the same sampled rows and seed give the same centroids
+    whatever order Spark returned them in."""
+    sample = _sample_vectors(corpus, vec_col, seed, max_sample)
+    return _kmeans(sample, n_cells, seed)
+
+
+def _sample_vectors(
+    corpus: DataFrame, vec_col: str, seed: int, max_sample: int
+) -> np.ndarray:
+    """The bounded training sample as a (rows × dim) matrix in
+    lexicographic row order; (0, 0) when no usable vector exists."""
+    usable = corpus.select(_as_double(F.col(vec_col)).alias("v")).filter(
+        nonzero_norm(F.col("v"))
     )
-    ml_df = sample.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_cells, seed=seed, maxIter=10).fit(ml_df)
-    return [list(map(float, c)) for c in model.clusterCenters()]
+    probe = usable.select(F.size("v").alias("dim")).first()
+    if probe is None:
+        return np.empty((0, 0))
+    cap = max(1, min(int(max_sample), SAMPLE_DOUBLES // probe["dim"]))
+    rows = usable.orderBy(F.rand(seed)).limit(cap).collect()
+    x = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    return x[np.lexsort(x.T[::-1])]
+
+
+def _kmeans(x: np.ndarray, k: int, seed: int) -> list[list[float]]:
+    """Seeded k-means++ then Lloyd on the rows of ``x``. k-means++ stops
+    early once every row coincides with a chosen centroid, so the
+    result never holds duplicate centroids; a cell left empty by a
+    Lloyd step keeps its centroid (MLlib's rule)."""
+    if len(x) == 0:
+        return []
+    rng = np.random.default_rng(seed)
+    picked = [int(rng.integers(len(x)))]
+    # exact differences, not the GEMM identity: a row equal to a chosen
+    # centroid must weigh exactly 0, or duplicates could be re-picked
+    d2 = np.sum((x - x[picked[0]]) ** 2, axis=1)
+    while len(picked) < k:
+        total = d2.sum()
+        if total <= 0:
+            break
+        picked.append(int(rng.choice(len(x), p=d2 / total)))
+        d2 = np.minimum(d2, np.sum((x - x[picked[-1]]) ** 2, axis=1))
+    c = x[picked]
+    xsq = np.einsum("ij,ij->i", x, x)
+    for _ in range(_MAX_ITER):
+        dist = xsq[:, None] - 2.0 * (x @ c.T) + np.einsum("ij,ij->i", c, c)
+        near = np.argmin(dist, axis=1)
+        counts = np.bincount(near, minlength=len(c))
+        sums = np.zeros_like(c)
+        np.add.at(sums, near, x)
+        new = np.where(
+            counts[:, None] > 0, sums / np.maximum(counts, 1)[:, None], c
+        )
+        moved = np.max(np.sum((new - c) ** 2, axis=1))
+        c = new
+        if moved <= _TOL * _TOL:
+            break
+    return c.tolist()
 
 
 def assign_cells(
@@ -165,8 +241,7 @@ def assign_cells(
     >1 for query-side probing. Vectorized numpy per Arrow batch.
     ``extra_cols`` ride through the projection (e.g. the vector
     index's ``seq``) so callers never pay a rejoin for columns the
-    assignment dropped."""
-    import numpy as np
+    assignment dropped. Null and zero-norm vectors get no cell."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -182,7 +257,7 @@ def assign_cells(
 
     _nearest = F.pandas_udf(_nearest_fn, ArrayType(IntegerType()))
 
-    return corpus.select(
+    return corpus.filter(nonzero_norm(F.col(vec_col))).select(
         F.col(id_col),
         *[F.col(c) for c in extra_cols],
         F.col(vec_col),
@@ -209,14 +284,11 @@ def assign_cells_hof(
     :func:`assign_cells`; prefer that numpy version for production runs
     (one GEMM per Arrow batch), this one where cross-engine
     reproducibility is the requirement. Centroids enter the plan as
-    literals — n_cells × dim expressions, fine for a coarse quantizer."""
+    literals — n_cells × dim expressions, fine for a coarse quantizer.
+    Null and zero-norm vectors get no cell, as in :func:`assign_cells`."""
     import math
 
-    from couch_to_postgres_spark.extensions.similarity import (
-        _as_double,
-        _dot,
-        _norm,
-    )
+    from couch_to_postgres_spark.extensions.similarity import _dot
 
     v = _as_double(F.col(vec_col))
     vn = _norm(v)
@@ -230,7 +302,7 @@ def assign_cells_hof(
             F.struct((-cos_r).alias("neg"), F.lit(i).alias("cell"))
         )
     probes = F.slice(F.sort_array(F.array(*entries)), 1, nprobe)
-    return corpus.select(
+    return corpus.filter(nonzero_norm(F.col(vec_col))).select(
         F.col(id_col),
         *[F.col(c) for c in extra_cols],
         F.col(vec_col),
@@ -532,12 +604,7 @@ def _score_probed(
     the cell-partitioned corpus, rank per query on rounded cosine."""
     from pyspark.sql import Window
 
-    from couch_to_postgres_spark.extensions.similarity import (
-        _as_double,
-        _dot,
-        _norm,
-        _not_self,
-    )
+    from couch_to_postgres_spark.extensions.similarity import _dot, _not_self
 
     c = corpus_cells.select(
         F.col(id_col).alias("neighbor_id"),

@@ -3,8 +3,9 @@
 Three kinds of stored-state access never need a Spark job:
 
 * **Tiny meta tables** (the search index's ``base/meta`` stats row, the
-  shingle-width marker, the vector quantizer) are read before any
-  indexed query can plan and rewritten by every maintenance pass.
+  shingle-width marker, the vector quantizer and its centroids) are read
+  before any indexed query can plan and rewritten by every maintenance
+  pass.
   :func:`read_meta_rows` / :func:`write_meta_rows` read and write them
   with pyarrow on the driver (~1 ms) instead of a job launch per touch.
 * **Schemas.** ``spark.read.parquet(path)`` without a schema runs a
@@ -59,6 +60,7 @@ _SPARK_TO_ARROW = {
     "float": pa.float32(),
     "string": pa.string(),
     "boolean": pa.bool_(),
+    "array<double>": pa.list_(pa.float64()),
 }
 
 
@@ -200,8 +202,9 @@ def parquet_rows(files_or_dirs: Iterable[str]) -> int:
 
 
 def _fields(schema: str) -> list[tuple[str, str]]:
-    """Parse a FLAT primitive DDL ('a int, b long, …') — all this
-    module handles; nested/array metas stay on the Spark path."""
+    """Parse a flat DDL ('a int, b long, …') of the types in
+    ``_SPARK_TO_ARROW`` — primitives and ``array<double>`` (the IVF
+    centroids); other nested types stay on the Spark path."""
     out = []
     for part in schema.split(","):
         name, typ = part.strip().rsplit(" ", 1)

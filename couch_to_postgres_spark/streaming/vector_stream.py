@@ -61,6 +61,7 @@ from couch_to_postgres_spark.extensions.ann import (
     _score_probed,
     assign_cells,
     assign_cells_hof,
+    nonzero_norm,
     train_centroids,
 )
 from couch_to_postgres_spark.streaming import lsm
@@ -83,6 +84,9 @@ _ASSIGNERS = {"vectorized": assign_cells, "hof": assign_cells_hof}
 _QUANTIZER_SCHEMA = (
     "assigner string, n_cells int, configured_cells int, layout_epoch long"
 )
+
+#: ``centroids`` schema: one row per cell
+_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
 
 #: ``base/meta`` schema (read-mostly fast-path stats + layout
 #: continuity + the epoch half of the fsck cross-check)
@@ -231,10 +235,7 @@ def init_vector_index(
                 "sample frame to train them on"
             )
         centroids = train_centroids(sample, n_cells, vec_col, seed)
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(_centroids_path(index_path))
+    _write_centroids(spark, _centroids_path(index_path), centroids)
     write_meta_rows(
         spark,
         _quantizer_path(index_path),
@@ -247,6 +248,17 @@ def init_vector_index(
         _QUANTIZER_SCHEMA,
     )
     return centroids
+
+
+def _write_centroids(
+    spark: SparkSession, path: str, centroids: list[list[float]]
+) -> None:
+    write_meta_rows(
+        spark,
+        path,
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        _CENTROIDS_SCHEMA,
+    )
 
 
 def _quantizer(
@@ -310,13 +322,16 @@ def flush_pending(
 ) -> "VectorIndexBatchStats | None":
     """Train the quantizer on the buffered upserts' LATEST versions,
     ingest the whole buffer as one batch, and retire the buffer. Trains
-    ``min(n_cells, buffered upserts)`` cells, recording ``n_cells`` as
-    ``configured_cells`` so a forced small-feed flush is visible in
-    `/_status`. No-op (returns None) when the buffer holds no upserts —
-    deletes alone can't train a quantizer, and they only ever tombstone
-    docs this index never held. Idempotent against a crash between the
-    quantizer write and the ingest: re-entry sees the quantizer and
-    ingests the still-present buffer (:func:`_drain_pending`'s path)."""
+    at most ``n_cells`` cells — one per distinct buffered vector when
+    there are fewer — recording ``n_cells`` as ``configured_cells`` so
+    a forced small-feed flush is visible in `/_status`. Nothing counts
+    the buffer: the trainer's bounded collect is the sample, and an
+    empty one means no upsert carries a usable (non-null, nonzero)
+    vector — a no-op returning None, since deletes alone can't train a
+    quantizer and only ever tombstone docs this index never held.
+    Idempotent against a crash between the quantizer write and the
+    ingest: re-entry sees the quantizer and ingests the still-present
+    buffer (:func:`_drain_pending`'s path)."""
     with writing(index_path):
         pend_path = _pending_path(index_path)
         pend = try_open_parquet(spark, pend_path)
@@ -336,24 +351,17 @@ def flush_pending(
                 )
                 .filter(~F.col("c.deleted"))
                 .select(F.col("c.vec").alias(vec_col))
-                .persist()
             )
-            try:
-                n_up = latest_up.count()
-                if n_up == 0:
-                    return None
-                init_vector_index(
-                    spark,
-                    index_path,
-                    sample=latest_up,
-                    n_cells=min(int(n_cells), n_up),
-                    vec_col=vec_col,
-                    assigner=assigner,
-                    seed=seed,
-                    configured_cells=int(n_cells),
-                )
-            finally:
-                latest_up.unpersist()
+            centroids = train_centroids(latest_up, int(n_cells), vec_col, seed)
+            if not centroids:
+                return None
+            init_vector_index(
+                spark,
+                index_path,
+                centroids=centroids,
+                assigner=assigner,
+                configured_cells=int(n_cells),
+            )
         stats = vector_index_batch(
             spark, index_path, pend, id_col=id_col, vec_col=vec_col
         )
@@ -372,8 +380,10 @@ def vector_index_batch(
 ) -> VectorIndexBatchStats:
     """Apply one micro-batch of changes. ``changes`` rows are
     (seq, id, deleted, embedding) — upserts carry the new vector,
-    deletes carry ``deleted=true`` (vector ignored). Multiple changes
-    to one doc in a batch collapse to the max-seq one. Cost is
+    deletes carry ``deleted=true`` (vector ignored). An upsert whose
+    vector is null or all-zero has no cosine direction to index, so it
+    is a delete for this index too. Multiple changes to one doc in a
+    batch collapse to the max-seq one. Cost is
     O(changed docs) and the JOB budget is three launches (two for an
     upsert-only batch): one folded stats aggregate that also
     materializes the per-id collapse, the cells append (seq rides the
@@ -395,7 +405,10 @@ def vector_index_batch(
                 F.max_by(
                     F.struct(
                         F.col(seq_col).cast("long").alias("seq"),
-                        F.col(deleted_col).cast("boolean").alias("deleted"),
+                        (
+                            F.col(deleted_col).cast("boolean")
+                            | ~nonzero_norm(F.col(vec_col))
+                        ).alias("deleted"),
                         F.col(vec_col).alias("vec"),
                     ),
                     F.col(seq_col),
@@ -647,12 +660,10 @@ def compact_vector_index(
         if live_rows is None:
             live.unpersist()
             return {"mode": "noop", "n_live": 0}
-        live_rows = live_rows.persist()
         stage = staging(index_path, "compacting-vec")
         n_live = _stage_base(
             spark, live_rows, stage, id_col, vec_col, id_buckets
         )
-        live_rows.unpersist()
         staged_meta = os.path.join(stage, "meta")
         write_meta_rows(
             spark,
@@ -1084,10 +1095,7 @@ def rebuild_vector_quantizer(
             _BASE_META_SCHEMA,
         )
         staged_centroids = os.path.join(stage, "centroids")
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(staged_centroids)
+        _write_centroids(spark, staged_centroids, centroids)
         staged_quantizer = os.path.join(stage, "quantizer")
         write_meta_rows(
             spark,

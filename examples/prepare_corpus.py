@@ -14,10 +14,11 @@ corpus, Spark-first.
 Run: python examples/prepare_corpus.py [sf_dir]
 """
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

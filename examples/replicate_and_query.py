@@ -8,10 +8,11 @@
 Run: python examples/replicate_and_query.py [sf_dir]
 """
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

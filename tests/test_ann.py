@@ -54,6 +54,64 @@ def test_ivf_recall_vs_bruteforce(spark, emb, centroids):
     assert recall >= 0.5, recall
 
 
+def _frame(spark, vecs):
+    return spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+
+
+def test_train_centroids_same_seed_same_centroids(emb):
+    assert train_centroids(emb, n_cells=8, seed=3) == train_centroids(
+        emb, n_cells=8, seed=3
+    )
+
+
+def test_train_centroids_fewer_distinct_rows_than_cells(spark):
+    """Like MLlib's KMeans: 5 rows holding 2 distinct vectors give 2
+    centroids for k=4, never duplicates. Zero-norm rows have no cosine
+    direction and are left out of the sample."""
+    rows = [[1.0, 0.0]] * 3 + [[0.0, 2.0]] * 2 + [[0.0, 0.0]] * 4
+    cents = train_centroids(_frame(spark, rows), n_cells=4)
+    assert sorted(cents) == [[0.0, 2.0], [1.0, 0.0]]
+    assert train_centroids(_frame(spark, [[0.0, 0.0]]), n_cells=4) == []
+
+
+def test_train_centroids_sample_stays_within_budget(spark, monkeypatch):
+    """A frame above the cap still trains, on a seeded sample whose
+    rows × dim stay within the driver budget (and within max_sample)."""
+    import random
+
+    from couch_to_postgres_spark.extensions import ann
+
+    rnd = random.Random(9)
+    df = _frame(spark, [[rnd.gauss(0, 1) for _ in range(16)] for _ in range(500)])
+    shapes = []
+    fit = ann._kmeans
+    monkeypatch.setattr(
+        ann, "_kmeans", lambda x, k, seed: shapes.append(x.shape) or fit(x, k, seed)
+    )
+    monkeypatch.setattr(ann, "SAMPLE_DOUBLES", 16 * 100)
+    assert len(ann.train_centroids(df, n_cells=8)) == 8
+    assert len(ann.train_centroids(df, n_cells=8, max_sample=40)) == 8
+    assert shapes == [(100, 16), (40, 16)]
+
+
+@pytest.mark.parametrize("assigner", ["vectorized", "hof"])
+def test_assigners_drop_zero_norm_vectors(spark, assigner):
+    from couch_to_postgres_spark.extensions.ann import assign_cells_hof
+
+    assign = {"vectorized": assign_cells, "hof": assign_cells_hof}[assigner]
+    df = spark.createDataFrame(
+        [(1, [0.9, 0.1]), (2, [0.0, 0.0]), (3, None), (4, [0.1, -0.9])],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        (r["vec_id"], r["cell"])
+        for r in assign(df, [[1.0, 0.0], [0.0, -1.0]]).collect()
+    }
+    assert got == {(1, 0), (4, 1)}
+
+
 def test_simhash64_properties(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(50)
     d0 = docs.first()

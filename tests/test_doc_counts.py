@@ -2,8 +2,11 @@
 match the live __spark_entry__ contract (regenerate with
 ``python tools/update_counts.py``)."""
 
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_doc_query_counts_in_sync():
@@ -11,7 +14,7 @@ def test_doc_query_counts_in_sync():
         [sys.executable, "tools/update_counts.py", "--check"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, (
         f"doc counts drifted from __spark_entry__ "
@@ -52,7 +55,7 @@ def test_driver_prefix_integrity():
 
     # duplicate-key scan over the SOURCE of both dict literals (the dict
     # object can't show clobbers; the text can)
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(ROOT, "__spark_entry__.py")).read()
     for anchor in ('"e26_sessionize_skew_safe": e26', '"b05_flagship": """'):
         assert src.count(anchor) >= 1
     entry_keys = re.findall(r'^        "([A-Za-z0-9_]+)": [A-Za-z0-9_]+,$', src, re.M)

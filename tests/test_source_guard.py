@@ -6,7 +6,7 @@ the Spark fallback. And stored-state directory swaps go through
 ``extensions/ann.py``) renames or moves paths itself. And the LSM
 bucket rule (``F.hash``) appears under ``streaming/`` only in
 ``lsm.py``, which the vector index uses instead of reaching into the
-search index."""
+search index. And the coarse quantizer trains without ``pyspark.ml``."""
 
 import ast
 import os
@@ -206,3 +206,51 @@ def test_bucket_rule_lives_in_lsm():
         "bucket with lsm.bucket / lsm.term_buckets and take LSM helpers "
         f"from streaming.lsm: {found}"
     )
+
+
+def _ml_imports(source: str) -> list[int]:
+    """Line numbers of imports from ``pyspark.ml`` (any submodule, any
+    import form)."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module or ""]
+        else:
+            continue
+        if any(n == "pyspark.ml" or n.startswith("pyspark.ml.") for n in names):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_ml_import_detector_sees_every_form():
+    src = (
+        "from pyspark.ml.clustering import KMeans\n"
+        "import pyspark.ml\n"
+        "from pyspark.ml import Pipeline\n"
+        "from pyspark.mllib_like import x\n"
+        "from pyspark.sql import functions as F\n"
+    )
+    assert _ml_imports(src) == [1, 2, 3]
+
+
+def test_quantizer_and_indexes_train_without_mllib():
+    """The coarse quantizer trains on the driver in numpy: nothing under
+    ``streaming/``, nor ``extensions/ann.py`` or ``extensions/dedup.py``,
+    imports ``pyspark.ml`` (MLlib's iterative ``KMeans`` cost ~20 Spark
+    jobs per fit)."""
+    files = [
+        os.path.join(STREAMING, n)
+        for n in sorted(os.listdir(STREAMING))
+        if n.endswith(".py")
+    ] + [
+        os.path.join(PACKAGE, "extensions", n) for n in ("ann.py", "dedup.py")
+    ]
+    found = {}
+    for path in files:
+        with open(path) as f:
+            lines = _ml_imports(f.read())
+        if lines:
+            found[os.path.relpath(path, PACKAGE)] = lines
+    assert not found, f"pyspark.ml imports: {found}"

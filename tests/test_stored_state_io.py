@@ -345,3 +345,43 @@ def test_read_partitioned_mirror_equals_spark_inferred_view(spark, state):
     assert got.schema == base.schema
     assert got.filter(F.col("id") == "d3").count() == 0  # deleted in delta
     assert got.count() == 40  # d0..d39, minus d3, plus d50
+
+
+def test_quantizer_bootstrap_job_budget(spark, tmp_path):
+    """The driver-side trainer pays a dimension probe and one bounded
+    collect (2 jobs; MLlib ``KMeans`` took 23 on the same frame). A
+    500-upsert buffered bootstrap — append, then a flush that trains,
+    writes the centroids and marker, ingests and retires the buffer —
+    stays within 14 jobs (36 with MLlib), and recording explicit
+    centroids launches none."""
+    import random
+
+    from couch_to_postgres_spark.extensions.ann import train_centroids
+    from couch_to_postgres_spark.streaming.vector_stream import (
+        append_pending,
+        flush_pending,
+        vector_index_status,
+    )
+
+    rnd = random.Random(5)
+    vecs = [[rnd.gauss(0, 1) for _ in range(16)] for _ in range(500)]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    cents, n = _jobs(spark, lambda: train_centroids(emb, n_cells=16))
+    assert len(cents) == 16 and n <= 2
+
+    changes = spark.createDataFrame(
+        [(i, i, False, v) for i, v in enumerate(vecs)],
+        "seq long, vec_id long, deleted boolean, embedding array<double>",
+    )
+    p = str(tmp_path / "boot")
+    _, n = _jobs(spark, lambda: (
+        append_pending(spark, p, changes), flush_pending(spark, p, n_cells=16)
+    ))
+    assert n <= 14
+    status = vector_index_status(spark, p)
+    assert status["n_cells"] == 16 and status["live_vectors"] == 500
+
+    q = str(tmp_path / "explicit")
+    assert _jobs(spark, lambda: init_vector_index(spark, q, centroids=cents))[1] == 0

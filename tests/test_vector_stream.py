@@ -389,6 +389,34 @@ def test_batch_job_budget(spark, index):
     assert n_mixed <= 6
 
 
+@pytest.mark.parametrize("assigner", ["vectorized", "hof"])
+def test_zero_norm_upsert_tombstones_the_doc(spark, tmp_path, assigner):
+    """An all-zero embedding has no cosine direction: under either
+    assigner the batch succeeds, the upsert retires the doc's earlier
+    vector, and exhaustive probing still equals the exact ranking over
+    the non-zero live vectors."""
+    from couch_to_postgres_spark.extensions.similarity import cosine_topk
+
+    p = str(tmp_path / "zero_norm")
+    init_vector_index(spark, p, centroids=ANCHORS, assigner=assigner)
+    vector_index_batch(
+        spark, p, _changes(spark, [(i, i, False, v) for i, v in V0.items()])
+    )
+    st = vector_index_batch(spark, p, _changes(spark, [
+        (10, 3, False, [0.0, 0.0]), (11, 7, False, [0.5, -0.5]),
+    ]))
+    assert (st.upserts, st.deletes) == (1, 1)
+    model = {i: v for i, v in {**V0, 7: [0.5, -0.5]}.items() if i != 3}
+    live = {r["vec_id"] for r in live_vector_ids(spark, p).collect()}
+    assert live == set(model)
+    queries = _queries(spark, model)
+    corpus = spark.createDataFrame(
+        list(model.items()), "vec_id long, embedding array<double>"
+    )
+    got = _rows(vector_topk_live(spark, p, queries, k=4, nprobe=len(ANCHORS)))
+    assert got == _rows(cosine_topk(queries, corpus, k=4))
+
+
 def test_pending_bootstrap_defers_tiny_first_batch(spark, tmp_path):
     """A 2-upsert trickle first batch must NOT freeze a 2-cell
     quantizer (ADVICE r10): it buffers; the flush trains the full
