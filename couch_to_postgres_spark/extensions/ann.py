@@ -20,15 +20,23 @@ Exact baseline for recall measurement: ``similarity.cosine_topk``.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.extensions.similarity import _as_double, _norm
 
-#: the trainer's driver budget, in doubles (sampled rows × dim): 2**22
-#: doubles is 32 MB
+#: the trainer's driver budget, in doubles: 2**22 doubles is 32 MB. It
+#: caps the sample (rows × dim) unless :data:`ROWS_PER_CELL` asks for
+#: more, and every Lloyd temporary (rows × cells) whatever the sample
 SAMPLE_DOUBLES = 1 << 22
+
+#: the sample keeps at least this many rows per requested cell (up to
+#: ``max_sample``), so high-dimensional vectors still train every cell:
+#: FAISS warns below 39 training points per centroid
+ROWS_PER_CELL = 39
 
 #: Lloyd stopping rule: stop once no centroid moves farther than
 #: ``_TOL`` (MLlib ``KMeans``' tolerance), or after ``_MAX_ITER`` steps.
@@ -119,8 +127,6 @@ def random_projection(
     state to ship (unlike PCA, which needs a covariance/SVD job). Each
     component is a sequential JVM fold in double precision, matching the
     SQL-oracle evaluation order. Emits ``(id, proj array<double>)``."""
-    import math
-
     r = jl_projection_matrix(in_dim, out_dim, seed)
     scale = 1.0 / math.sqrt(out_dim)
     v = F.col(vec_col).cast("array<double>")
@@ -156,39 +162,70 @@ def train_centroids(
     rows when the sample holds fewer distinct vectors than ``n_cells``,
     as MLlib's ``KMeans`` returns, and ``[]`` when it holds none.
 
-    Spark's share is two small jobs: one row probes the dimension, then
-    one collect brings back at most ``min(max_sample, SAMPLE_DOUBLES //
-    dim)`` rows — the whole frame when it fits, else a seeded uniform
-    sample (the rows with the smallest seeded random keys). A coarse
-    quantizer needs the density shape, not every point, so a 100 TB
-    corpus never flows through iterative k-means: 100k sampled vectors
-    pin the centroids well under the quantization error the nprobe
-    search already absorbs. Null and zero-norm vectors are left out.
+    Spark's share is one aggregate (the usable row count and the
+    dimension) and one collect of at most ``cap = min(max_sample,
+    max(SAMPLE_DOUBLES // dim, ROWS_PER_CELL * n_cells))`` rows — the
+    whole frame when it fits, else a seeded uniform sample: the rows
+    whose seeded random key falls under a threshold set from the count,
+    so executors ship about ``cap`` rows whatever the corpus size and
+    partitioning, and the driver keeps the ``cap`` smallest keys. A
+    coarse quantizer needs the density shape, not every point, so a
+    100 TB corpus never flows through iterative k-means. Null and
+    zero-norm vectors are left out.
 
     The fit is seeded k-means++ initialisation and Lloyd iterations in
     numpy, on Euclidean distance with MLlib's tolerance (1e-4) and a
-    50-step cap. The sample is sorted before the
-    fit, so the same sampled rows and seed give the same centroids
-    whatever order Spark returned them in."""
-    sample = _sample_vectors(corpus, vec_col, seed, max_sample)
+    50-step cap; each Lloyd step scores rows in blocks of at most
+    ``SAMPLE_DOUBLES`` distances. The sample is sorted before the fit,
+    so the same sampled rows and seed give the same centroids whatever
+    order Spark returned them in."""
+    sample = _sample_vectors(corpus, vec_col, seed, max_sample, n_cells)
     return _kmeans(sample, n_cells, seed)
 
 
 def _sample_vectors(
-    corpus: DataFrame, vec_col: str, seed: int, max_sample: int
+    corpus: DataFrame, vec_col: str, seed: int, max_sample: int, k: int
 ) -> np.ndarray:
     """The bounded training sample as a (rows × dim) matrix in
     lexicographic row order; (0, 0) when no usable vector exists."""
     usable = corpus.select(_as_double(F.col(vec_col)).alias("v")).filter(
         nonzero_norm(F.col("v"))
     )
-    probe = usable.select(F.size("v").alias("dim")).first()
-    if probe is None:
+    n, dim = usable.agg(F.count(F.lit(1)), F.first(F.size("v"))).first()
+    if n == 0:
         return np.empty((0, 0))
-    cap = max(1, min(int(max_sample), SAMPLE_DOUBLES // probe["dim"]))
-    rows = usable.orderBy(F.rand(seed)).limit(cap).collect()
+    cap = min(int(max_sample), max(SAMPLE_DOUBLES // dim, ROWS_PER_CELL * k))
+    cap = max(1, cap)
+    keyed = usable.select("v", F.rand(seed).alias("key"))
+    rows = keyed.filter(F.col("key") < _keep_fraction(cap, n)).collect()
+    rows = sorted(rows, key=lambda r: r["key"])[:cap]
     x = np.asarray([r["v"] for r in rows], dtype=np.float64)
     return x[np.lexsort(x.T[::-1])]
+
+
+def _keep_fraction(cap: int, n: int) -> float:
+    """Bernoulli rate at which ``n`` rows yield at least ``cap`` with
+    probability 1 - 1e-4 (Spark's ``takeSample`` bound for sampling
+    without replacement); 1.0 keeps every row."""
+    if n <= cap:
+        return 1.0
+    frac = cap / n
+    gamma = -math.log(1e-4) / n
+    return min(1.0, frac + gamma + math.sqrt(gamma * gamma + 2 * gamma * frac))
+
+
+def _nearest(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest centroid (Euclidean), scored in row
+    blocks so no temporary exceeds ``SAMPLE_DOUBLES`` distances: the
+    argmax of ``x·c - ‖c‖²/2`` is the argmin of ``‖x - c‖²``."""
+    half = 0.5 * np.einsum("ij,ij->i", c, c)
+    step = max(1, SAMPLE_DOUBLES // len(c))
+    return np.concatenate(
+        [
+            np.argmax(x[i : i + step] @ c.T - half, axis=1)
+            for i in range(0, len(x), step)
+        ]
+    )
 
 
 def _kmeans(x: np.ndarray, k: int, seed: int) -> list[list[float]]:
@@ -210,10 +247,8 @@ def _kmeans(x: np.ndarray, k: int, seed: int) -> list[list[float]]:
         picked.append(int(rng.choice(len(x), p=d2 / total)))
         d2 = np.minimum(d2, np.sum((x - x[picked[-1]]) ** 2, axis=1))
     c = x[picked]
-    xsq = np.einsum("ij,ij->i", x, x)
     for _ in range(_MAX_ITER):
-        dist = xsq[:, None] - 2.0 * (x @ c.T) + np.einsum("ij,ij->i", c, c)
-        near = np.argmin(dist, axis=1)
+        near = _nearest(x, c)
         counts = np.bincount(near, minlength=len(c))
         sums = np.zeros_like(c)
         np.add.at(sums, near, x)
@@ -286,8 +321,6 @@ def assign_cells_hof(
     reproducibility is the requirement. Centroids enter the plan as
     literals — n_cells × dim expressions, fine for a coarse quantizer.
     Null and zero-norm vectors get no cell, as in :func:`assign_cells`."""
-    import math
-
     from couch_to_postgres_spark.extensions.similarity import _dot
 
     v = _as_double(F.col(vec_col))

@@ -305,10 +305,17 @@ def append_pending(
         return pending_upsert_count(spark, index_path)
 
 
-def pending_upsert_count(spark: SparkSession, index_path: str) -> int:
-    """Upsert rows buffered in ``pending`` (0 when no buffer exists)."""
+def pending_upsert_count(
+    spark: SparkSession, index_path: str, vec_col: str = "embedding"
+) -> int:
+    """Upsert rows buffered in ``pending`` whose vector can train the
+    quantizer — non-null and nonzero, the trainer's own rule (0 when no
+    buffer exists)."""
     pend = try_open_parquet(spark, _pending_path(index_path))
-    return pend.filter(~F.col("deleted")).count() if pend is not None else 0
+    if pend is None:
+        return 0
+    usable = ~F.col("deleted") & nonzero_norm(F.col(vec_col))
+    return pend.filter(usable).count()
 
 
 def flush_pending(
@@ -324,11 +331,12 @@ def flush_pending(
     ingest the whole buffer as one batch, and retire the buffer. Trains
     at most ``n_cells`` cells — one per distinct buffered vector when
     there are fewer — recording ``n_cells`` as ``configured_cells`` so
-    a forced small-feed flush is visible in `/_status`. Nothing counts
-    the buffer: the trainer's bounded collect is the sample, and an
-    empty one means no upsert carries a usable (non-null, nonzero)
-    vector — a no-op returning None, since deletes alone can't train a
-    quantizer and only ever tombstone docs this index never held.
+    a forced small-feed flush is visible in `/_status`. The buffer is
+    not counted here: the trainer's probe counts the usable latest
+    upserts. When none carries a usable (non-null, nonzero) vector the
+    buffer is retired and None returned: with no quantizer the index
+    holds no doc, so what is left are tombstones for docs it never
+    held, and they cannot train a quantizer.
     Idempotent against a crash between the quantizer write and the
     ingest: re-entry sees the quantizer and ingests the still-present
     buffer (:func:`_drain_pending`'s path)."""
@@ -354,6 +362,7 @@ def flush_pending(
             )
             centroids = train_centroids(latest_up, int(n_cells), vec_col, seed)
             if not centroids:
+                publish(index_path, [(pend_path, None)])
                 return None
             init_vector_index(
                 spark,

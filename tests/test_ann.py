@@ -78,7 +78,8 @@ def test_train_centroids_fewer_distinct_rows_than_cells(spark):
 
 def test_train_centroids_sample_stays_within_budget(spark, monkeypatch):
     """A frame above the cap still trains, on a seeded sample whose
-    rows × dim stay within the driver budget (and within max_sample)."""
+    rows × dim stay within the driver budget (and within max_sample),
+    unless the per-cell floor asks for more rows."""
     import random
 
     from couch_to_postgres_spark.extensions import ann
@@ -91,9 +92,65 @@ def test_train_centroids_sample_stays_within_budget(spark, monkeypatch):
         ann, "_kmeans", lambda x, k, seed: shapes.append(x.shape) or fit(x, k, seed)
     )
     monkeypatch.setattr(ann, "SAMPLE_DOUBLES", 16 * 100)
+    assert len(ann.train_centroids(df, n_cells=2)) == 2
+    assert len(ann.train_centroids(df, n_cells=2, max_sample=40)) == 2
+    # 8 cells need 8 × ROWS_PER_CELL = 312 rows, more than 1,600 doubles
     assert len(ann.train_centroids(df, n_cells=8)) == 8
-    assert len(ann.train_centroids(df, n_cells=8, max_sample=40)) == 8
-    assert shapes == [(100, 16), (40, 16)]
+    assert shapes == [(100, 16), (40, 16), (312, 16)]
+
+
+def test_train_centroids_ships_about_cap_rows(spark, monkeypatch):
+    """Executors ship about ``cap`` rows, not ``cap`` per partition: 40
+    partitions of 50 rows each, every one smaller than a 100-row cap,
+    send the driver fewer than 2 × cap rows (all 2,000 would arrive if
+    each partition sent its own top ``cap``)."""
+    from couch_to_postgres_spark.extensions import ann
+
+    df = spark.range(1, 2001, numPartitions=40).select(
+        F.array(*[F.sin(F.col("id") * (j + 1)) for j in range(16)]).alias(
+            "embedding"
+        )
+    )
+    shipped, shapes = [], []
+    frame_cls = type(df)
+    collect = frame_cls.collect
+    monkeypatch.setattr(
+        frame_cls, "collect", lambda self: shipped.append(len(r := collect(self))) or r
+    )
+    fit = ann._kmeans
+    monkeypatch.setattr(
+        ann, "_kmeans", lambda x, k, seed: shapes.append(x.shape) or fit(x, k, seed)
+    )
+    monkeypatch.setattr(ann, "SAMPLE_DOUBLES", 16 * 100)
+    assert len(ann.train_centroids(df, n_cells=2)) == 2
+    assert shapes == [(100, 16)]
+    assert 100 <= max(shipped) < 200, shipped
+
+
+def test_lloyd_scores_in_blocks_within_budget(monkeypatch):
+    """The nearest-centroid step never holds more than SAMPLE_DOUBLES
+    distances at once, and blocking changes neither the assignment nor
+    the fit."""
+    import numpy as np
+
+    from couch_to_postgres_spark.extensions import ann
+
+    rng = np.random.default_rng(4)
+    x = rng.normal(size=(300, 8))
+    c = x[:12]
+    brute = np.argmin(((x[:, None, :] - c[None, :, :]) ** 2).sum(-1), axis=1)
+    whole = ann._kmeans(x, 12, seed=1)
+    blocks = []
+    argmax = np.argmax
+    monkeypatch.setattr(ann, "SAMPLE_DOUBLES", 60)
+    monkeypatch.setattr(
+        np, "argmax", lambda a, axis=None: blocks.append(a.size) or argmax(a, axis=axis)
+    )
+    assert (ann._nearest(x, c) == brute).all()
+    assert len(blocks) == 60 and max(blocks) <= 60
+    monkeypatch.undo()
+    monkeypatch.setattr(ann, "SAMPLE_DOUBLES", 60)
+    assert np.allclose(ann._kmeans(x, 12, seed=1), whole)
 
 
 @pytest.mark.parametrize("assigner", ["vectorized", "hof"])

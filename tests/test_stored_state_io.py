@@ -348,12 +348,12 @@ def test_read_partitioned_mirror_equals_spark_inferred_view(spark, state):
 
 
 def test_quantizer_bootstrap_job_budget(spark, tmp_path):
-    """The driver-side trainer pays a dimension probe and one bounded
-    collect (2 jobs; MLlib ``KMeans`` took 23 on the same frame). A
-    500-upsert buffered bootstrap — append, then a flush that trains,
-    writes the centroids and marker, ingests and retires the buffer —
-    stays within 14 jobs (36 with MLlib), and recording explicit
-    centroids launches none."""
+    """The driver-side trainer pays one count-and-dimension aggregate
+    (2 jobs under AQE) and one bounded collect: 3 jobs, where MLlib
+    ``KMeans`` took 23 on the same frame. A 500-upsert buffered
+    bootstrap — append, then a flush that trains, writes the centroids
+    and marker, ingests and retires the buffer — stays within 14 jobs
+    (36 with MLlib), and recording explicit centroids launches none."""
     import random
 
     from couch_to_postgres_spark.extensions.ann import train_centroids
@@ -369,7 +369,7 @@ def test_quantizer_bootstrap_job_budget(spark, tmp_path):
         list(enumerate(vecs)), "vec_id long, embedding array<double>"
     )
     cents, n = _jobs(spark, lambda: train_centroids(emb, n_cells=16))
-    assert len(cents) == 16 and n <= 2
+    assert len(cents) == 16 and n <= 3
 
     changes = spark.createDataFrame(
         [(i, i, False, v) for i, v in enumerate(vecs)],

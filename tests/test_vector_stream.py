@@ -484,6 +484,28 @@ def test_flush_pending_noop_without_upserts(spark, tmp_path):
     assert vector_index_status(spark, p)["n_cells"] is None
 
 
+def test_untrainable_buffer_is_not_counted_and_retires(spark, tmp_path):
+    """Only upserts that can train the quantizer count toward the flush
+    trigger, and a buffer whose latest versions hold no usable vector
+    is retired by the flush instead of being retried on every batch."""
+    from couch_to_postgres_spark.streaming.vector_stream import (
+        append_pending,
+        flush_pending,
+        pending_upsert_count,
+    )
+
+    p = str(tmp_path / "untrainable")
+    n = append_pending(spark, p, _changes(spark, [
+        (1, 1, False, [0.0, 0.0]), (2, 2, False, [0.6, 0.8]),
+    ]))
+    assert n == 1 == pending_upsert_count(spark, p)
+    append_pending(spark, p, _changes(spark, [(3, 2, True, None)]))
+    assert flush_pending(spark, p, n_cells=4) is None
+    assert not os.path.isdir(os.path.join(p, "pending"))
+    status = vector_index_status(spark, p)
+    assert status["n_cells"] is None and status["pending_upserts"] == 0
+
+
 def test_field_removal_tombstones_stale_vector(spark, tmp_path):
     """Pipeline-level (ADVICE r10): a doc indexed with an embedding,
     then UPDATED to a version WITHOUT the field, must leave the ANN
