@@ -365,6 +365,8 @@ def build_ivf_index(
     the same assigner for every later append/query against this index."""
     import os
 
+    from couch_to_postgres_spark.streaming.meta_io import write_meta_rows
+
     spark = corpus.sparkSession
     if centroids is None:
         centroids = train_centroids(corpus, n_cells, vec_col, seed)
@@ -373,10 +375,12 @@ def build_ivf_index(
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(path, "cells")
     )
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
+    write_meta_rows(
+        spark,
+        os.path.join(path, "centroids"),
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    )
     return centroids
 
 

@@ -144,8 +144,6 @@ def _probe_terms(
     the driver-side df lookup is ≤ len(terms) rows."""
     import os
 
-    from pyspark.errors.exceptions.captured import AnalysisException
-
     if not terms:
         # an empty probe list would NOT mean "no pruning" downstream:
         # _candidate_ids filters _nt == len(probe) == 0 over an empty
@@ -159,29 +157,23 @@ def _probe_terms(
     base = os.path.join(index_path, "base")
     dfs_root = os.path.join(base, "dfs")
     meta = read_meta_rows(spark, os.path.join(base, "meta"))
-    if not meta or "n_live" not in meta[0]:
+    if not meta:
         return terms
     n_live = float(meta[0]["n_live"]) or 1.0
-    if lsm.has_partition_prefix(dfs_root, "token_bucket="):
-        # bucketed dfs layout: open only the terms' bucket dirs by name,
-        # so a phrase probe's planning never lists every dir
-        dfs = lsm.open_dirs(
-            spark,
-            dfs_root,
-            [
-                f"token_bucket={b}"
-                for b in lsm.term_buckets(terms, int(meta[0]["token_buckets"]))
-            ],
-        )
-        if dfs is None:
-            # no bucket dir for any term: every term has df 0 — all are
-            # maximally rare, probe them all
-            return terms
-    else:
-        try:
-            dfs = spark.read.parquet(dfs_root)  # legacy flat dfs
-        except AnalysisException:
-            return terms
+    # open only the terms' bucket dirs by name, so a phrase probe's
+    # planning never lists every dir
+    dfs = lsm.open_dirs(
+        spark,
+        dfs_root,
+        [
+            f"token_bucket={b}"
+            for b in lsm.term_buckets(terms, int(meta[0]["token_buckets"]))
+        ],
+    )
+    if dfs is None:
+        # no bucket dir for any term (or an empty base): every term has
+        # df 0 — all are maximally rare, probe them all
+        return terms
     # the two-level dfs layout stores per-(bucket, id_sub) PARTIAL
     # counts — summing is a no-op on a single-row-per-token dfs
     rows = (

@@ -243,9 +243,9 @@ class Daemon:
     def watchdog(self, trigger: dict | None = None) -> dict:
         """One supervision pass: stop feeds disabled/missing in the
         registry (A11), restart enabled feeds whose query died (A12),
-        start newly-enabled feeds, and compact partitioned mirrors whose
-        buckets accumulated small files (the off-peak maintenance the
-        partitioned sink calls for — serialized against in-flight merges
+        start newly-enabled feeds, and compact mirrors whose buckets
+        accumulated small files (the off-peak maintenance the
+        partitioned layout calls for — serialized against in-flight merges
         by the per-path lock). Returns what it did."""
         from couch_to_postgres_spark.streaming.partitioned import (
             compact_mirror,
@@ -413,8 +413,8 @@ class Daemon:
 
     def status(self) -> dict:
         """The `/_status` payload (bin/daemon.js:282-301): per-feed alive
-        flag, streaming progress, mirror doc count, and — for partitioned
-        mirrors — layout health (bucket count, base/delta row accounting,
+        flag, streaming progress, mirror doc count, and — once the mirror
+        exists — layout health (bucket count, base/delta row accounting,
         small-file pressure), the numbers an operator needs to judge
         compaction debt."""
         from couch_to_postgres_spark.streaming.partitioned import (
@@ -522,10 +522,10 @@ class Daemon:
         return out
 
     def fsck(self) -> dict:
-        """Integrity report per partitioned feed mirror
+        """Integrity report per feed mirror
         (:func:`partitioned.validate_mirror`) — the `/_fsck` control-plane
         surface an operator hits before trusting pruned reads after an
-        incident. Flat/absent mirrors report layout='flat'."""
+        incident. A feed with no mirror yet reports ``{"ok": None}``."""
         from couch_to_postgres_spark.streaming.partitioned import (
             read_meta,
             validate_mirror,
@@ -535,7 +535,7 @@ class Daemon:
         for fc in load_registry(self.registry_path):
             mp = self.mirror_path(fc)
             if read_meta(mp) is None:
-                out[fc.name] = {"layout": "flat", "ok": None}
+                out[fc.name] = {"ok": None}
             else:
                 out[fc.name] = validate_mirror(self.spark, mp)
             # index-flagged feeds get index-side integrity checks

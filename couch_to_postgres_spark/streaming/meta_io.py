@@ -220,19 +220,11 @@ def read_meta_rows(spark: SparkSession, path: str) -> list[dict]:
     table doesn't exist yet. Local paths never launch a Spark job.
     Reads are schema-free (parquet self-describes) — only writes need
     the DDL. Handles any column types pyarrow does, including the IVF
-    centroid arrays. When the canonical ``write_meta_rows`` part file
-    is present it is read ALONE — ``write_meta_rows`` always writes the
-    complete row set into it, so a stale foreign part (a pre-fast-path
-    Spark ``coalesce(1)`` write awaiting its one-time-upgrade unlink)
-    can never surface as a phantom extra row mid-transition
-    (ADVICE r11: the dataset read returned TWO rows in the
-    replace→unlink window and rows[0] was nondeterministic)."""
+    centroid arrays, and any part-file naming (a Spark-written table
+    reads the same)."""
     local = _local(path)
     if local is not None:
-        canonical = os.path.join(local, _META_PART)
         try:
-            if os.path.isfile(canonical):
-                return pq.read_table(canonical).to_pylist()
             return pq.read_table(local).to_pylist()
         except FileNotFoundError:
             return []
@@ -255,14 +247,9 @@ def write_meta_rows(
     disappears — a lock-free reader racing the swap sees the old row or
     the new row, never ``[]`` (an r10 staged-dir rename had a
     rmtree→rename window in which e.g. ``query_postings`` silently
-    skipped the whole compacted base — ADVICE r10). Stale foreign part
-    files (a dir a Spark ``coalesce(1)`` write laid down before this
-    fast path existed) are unlinked after the replace; in that
-    one-time-transition window ``read_meta_rows`` prefers the canonical
-    part, so the stale sibling is invisible to this module's readers
-    (ADVICE r11 — the prior dataset read could surface BOTH rows
-    between the replace and the unlink). Non-local: the original
-    coalesce(1) Spark write."""
+    skipped the whole compacted base — ADVICE r10). Every local meta
+    table is written here, so the canonical part is the directory's
+    only data file. Non-local: the original coalesce(1) Spark write."""
     local = _local(path)
     if local is None:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
@@ -283,9 +270,3 @@ def write_meta_rows(
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
-    for f in os.listdir(local):
-        if not f.startswith((".", "_")) and f != _META_PART:
-            try:
-                os.unlink(os.path.join(local, f))
-            except OSError:
-                pass  # a concurrent GC got it first — already gone

@@ -1,8 +1,8 @@
 """Partitioned mirror with selective rewrite + merge-on-read deltas — the
 pure-parquet analog of a table-format MERGE, and the layout that makes
-per-batch cost O(batch) instead of O(mirror). Since round 2 this is the
-DEFAULT sink of ``pipeline.follow`` and the Daemon (the flat MVCC sink
-remains for tiny mirrors via ``sink="flat"``).
+per-batch cost O(batch) instead of O(mirror). It is the one mirror
+layout: ``pipeline.follow``, ``pipeline.follow_couch`` and the Daemon
+all merge into it.
 
 Layout::
 
@@ -35,7 +35,9 @@ replays append duplicate (id, seq) rows that resolve to the same state.
 ``num_buckets`` is part of the LAYOUT, not a per-call knob: the bucket
 function must be identical across every merge or lookups silently miss.
 It is persisted in the meta at layout time and resolved from there on
-every subsequent merge/compaction.
+every subsequent merge/compaction. The meta file is written last at
+bootstrap, so a path without one holds no mirror: a bootstrap that
+crashed before its meta write is redone by the replayed batch.
 """
 
 from __future__ import annotations
@@ -108,8 +110,7 @@ def write_meta(path: str, meta: dict) -> None:
 
 def read_meta(path: str) -> dict | None:
     """The layout's persisted meta (num_buckets + row accounting), or
-    None for a missing/legacy mirror (legacy = written before meta
-    existed: infer num_buckets from the bucket dirs)."""
+    None when the path holds no mirror yet."""
     meta = os.path.join(path, META_FILE)
     if os.path.exists(meta):
         with open(meta) as f:
@@ -124,13 +125,6 @@ def read_meta(path: str) -> dict | None:
                     f"(num_buckets must match the layout) or rebuild "
                     f"with write_partitioned_mirror."
                 ) from e
-    if os.path.exists(path):
-        buckets = [d for d in os.listdir(path) if d.startswith("bucket=")]
-        if buckets:
-            # pre-meta legacy layout: infer N as max bucket dir + 1 (the
-            # initial full load materializes essentially every bucket)
-            n = max(int(d.split("=", 1)[1]) for d in buckets) + 1
-            return {"num_buckets": n, "total_rows": None, "delta_rows": 0}
     return None
 
 
@@ -214,7 +208,10 @@ def _mor_view(
 
 
 def read_partitioned_mirror(spark: SparkSession, path: str) -> DataFrame:
-    if os.path.exists(path):
+    """The mirror's merge-on-read view; empty while the path holds no
+    mirror (no meta file — bucket dirs a crashed bootstrap left are not
+    a mirror)."""
+    if read_meta(path) is not None:
         return _mor_view(spark, path)
     return spark.createDataFrame([], MIRROR_SCHEMA)
 
@@ -239,8 +236,10 @@ def _update_count_views(
     applied on top, so bootstrapping from post would double-count the
     batch). Crash window: a crash between the data commit and the view
     swap leaves the view one batch behind; replay nets zero and does NOT
-    repair it — the repair is a view-dir delete + bootstrap, same
-    contract as the flat sink (pipeline._update_count_view)."""
+    repair it — the repair is a view-dir delete, after which the next
+    batch bootstraps the view (the summary-table-plus-periodic-repair
+    pattern; a table format with multi-table transactions closes the
+    window by committing mirror and view together)."""
     from couch_to_postgres_spark.operators.views import (
         apply_count_delta,
         count_view_delta,
@@ -371,15 +370,9 @@ def _upsert_locked(
                 )
             return touched
 
-        total_rows = meta.get("total_rows")
         if mode == "auto":
-            if total_rows is None:
-                use_delta = False  # legacy mirror without accounting
-            else:
-                touched_rows_est = total_rows * len(touched) / num_buckets
-                use_delta = (
-                    n_batch * DELTA_WRITE_AMP_THRESHOLD < touched_rows_est
-                )
+            touched_rows_est = meta["total_rows"] * len(touched) / num_buckets
+            use_delta = n_batch * DELTA_WRITE_AMP_THRESHOLD < touched_rows_est
         else:
             use_delta = mode == "delta"
 
@@ -455,7 +448,7 @@ def _append_delta(
         .parquet(delta_dir)
     )
     n_appended = parquet_rows(set(_data_files(delta_dir)) - before)
-    meta["delta_rows"] = int(meta.get("delta_rows") or 0) + n_appended
+    meta["delta_rows"] = int(meta["delta_rows"]) + n_appended
     write_meta(path, meta)
     if count_views:
         post = apply_changes(pre, batch, type_filter=type_filter, map_hook=map_hook)
@@ -515,8 +508,7 @@ def _swap_buckets(path: str, stage: str, buckets: list[int], meta: dict) -> None
     (staged as the new meta file) is the last step.
 
     ``total_rows`` advances by the footer rows swapped in minus those
-    swapped out — O(touched) file opens, no Spark job (a legacy mirror
-    without accounting counts every base footer once). ``delta_rows``
+    swapped out — O(touched) file opens, no Spark job. ``delta_rows``
     is the remaining delta log's footer rows, bounded by the fold
     threshold."""
     staged = [os.path.join(stage, f"bucket={b}") for b in buckets]
@@ -524,10 +516,7 @@ def _swap_buckets(path: str, stage: str, buckets: list[int], meta: dict) -> None
     deltas = [os.path.join(_delta_path(path), f"bucket={b}") for b in buckets]
     for d in staged:  # a bucket emptied by deletions swaps in empty
         os.makedirs(d, exist_ok=True)
-    total = meta.get("total_rows")
-    if total is None:
-        total = parquet_rows([path])
-    meta["total_rows"] = total + parquet_rows(staged) - parquet_rows(live)
+    meta["total_rows"] += parquet_rows(staged) - parquet_rows(live)
     meta["delta_rows"] = parquet_rows([_delta_path(path)]) - parquet_rows(deltas)
     write_meta(stage, meta)
     steps = []
@@ -582,8 +571,8 @@ def fold_deltas(
     buckets = _delta_buckets(path)
     if not buckets:
         return []
-    delta_rows = int(meta.get("delta_rows") or 0)
-    total_rows = meta.get("total_rows")
+    delta_rows = int(meta["delta_rows"])
+    total_rows = meta["total_rows"]
     if not force and total_rows and delta_rows < total_rows * DELTA_FOLD_FRACTION:
         return []
     num_buckets = int(meta["num_buckets"])
@@ -645,8 +634,7 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     * **key uniqueness** — no id appears in two base buckets;
     * **row accounting** — meta's ``total_rows`` matches the base and
       its ``delta_rows`` matches the log (both are maintained
-      incrementally from footers; a legacy mirror without accounting
-      has no ``total_rows`` to check);
+      incrementally from footers);
     * **no unfinished publish** — no stranded staging dir or publish
       plan (the next writer completes a plan; until then the layout is
       mid-swap).
@@ -668,8 +656,8 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     delta_actual = (
         open_parquet(spark, _delta_path(path)).count() if _has_delta(path) else 0
     )
-    delta_meta = int(meta.get("delta_rows") or 0)
-    total_meta = meta.get("total_rows")
+    delta_meta = int(meta["delta_rows"])
+    total_meta = int(meta["total_rows"])
     stranded = [
         d
         for d in (
@@ -684,7 +672,7 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
     ok = (
         misplaced == 0
         and dup_keys == 0
-        and (total_meta is None or int(total_meta) == base_rows)
+        and total_meta == base_rows
         and delta_actual == delta_meta
         and not stranded
     )
@@ -796,33 +784,3 @@ def compact_mirror(
                 steps.append((src, tmp))
             publish(path, steps, stage)
         return sorted(set(folded) | set(todo))
-
-
-def follow_partitioned(
-    spark: SparkSession,
-    changes_path: str,
-    mirror_path: str,
-    checkpoint_path: str,
-    num_buckets: int | None = None,
-    type_filter: str | None = None,
-    map_hook: Callable[[Column], Column] | None = None,
-    max_files_per_trigger: int | None = None,
-    trigger: dict | None = None,
-    query_name: str | None = None,
-):
-    """Back-compat alias: ``pipeline.follow`` now defaults to this sink."""
-    from couch_to_postgres_spark.streaming.pipeline import follow
-
-    return follow(
-        spark,
-        changes_path,
-        mirror_path,
-        checkpoint_path,
-        type_filter=type_filter,
-        map_hook=map_hook,
-        max_files_per_trigger=max_files_per_trigger,
-        trigger=trigger,
-        query_name=query_name,
-        sink="partitioned",
-        num_buckets=num_buckets,
-    )

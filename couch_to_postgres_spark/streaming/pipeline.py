@@ -13,191 +13,40 @@ reference's trailing `since` checkpoint, lib/index.js:62-94); the
 rev-aware merge makes replays no-ops, so the mirror state is effectively
 exactly-once — the same argument the reference makes (lib/index.js:110-128).
 
-Mirror persistence is pure parquet with an atomic directory swap
-(write to ``<path>.tmp`` → rename). Where Delta/Iceberg is available the
-same ``apply_changes`` output feeds ``MERGE INTO`` instead; nothing else
+The mirror is the bucket-partitioned parquet layout of
+:mod:`streaming.partitioned`: ``_mirror_meta.json``, ``bucket=N/`` base
+dirs and a ``_delta/`` log, every directory swap published through
+``commit.publish``. A path with no meta file holds no mirror yet; the
+first batch bootstraps one. Where Delta/Iceberg is available the same
+``apply_changes`` output feeds ``MERGE INTO`` instead; nothing else
 changes.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from couch_to_postgres_spark.operators.cdc import apply_changes
-from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
 from couch_to_postgres_spark.sources.changes import read_change_stream
-from couch_to_postgres_spark.streaming.commit import publish, writing
+from couch_to_postgres_spark.streaming import partitioned
+from couch_to_postgres_spark.streaming.commit import writing
 from couch_to_postgres_spark.streaming.meta_io import open_parquet
 
 
-CURRENT_LINK = "current"
-KEEP_VERSIONS = 2
-
-
-def _current_version(mirror_path: str) -> str | None:
-    """Resolve the live version directory, or None when empty mirror.
-    Supports the legacy flat layout (parquet files directly at the path)."""
-    link = os.path.join(mirror_path, CURRENT_LINK)
-    if os.path.islink(link) or os.path.exists(link):
-        return os.path.realpath(link)
-    if os.path.exists(mirror_path) and any(
-        f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(mirror_path)
-    ):
-        return mirror_path  # legacy flat layout
-    return None
-
-
 def read_mirror(spark: SparkSession, mirror_path: str) -> DataFrame:
-    """Current mirror state, whatever the layout — the partitioned
-    (bucket=…) default, the flat MVCC version layout, or the legacy flat
-    layout; empty mirror when the table doesn't exist yet (auto-creation
-    parity: bin/daemon.js:233-262).
-
-    MVCC reads (flat layout): the ``current`` symlink is resolved to its
-    immutable version directory BEFORE planning, so a concurrent merge
-    swapping the link never yanks files out from under a running scan —
-    old versions are retained for ``KEEP_VERSIONS`` swaps. (The
-    partitioned layout's analog is the atomic per-bucket directory swap.)
-    """
-    from couch_to_postgres_spark.streaming.partitioned import (
-        read_meta,
-        read_partitioned_mirror,
-    )
-
-    if read_meta(mirror_path) is not None:
-        return read_partitioned_mirror(spark, mirror_path)
-    version = _current_version(mirror_path)
-    if version is not None:
-        return open_parquet(spark, version)
-    return spark.createDataFrame([], MIRROR_SCHEMA)
+    """Current mirror state, deltas resolved; an empty mirror when the
+    path holds none yet (auto-creation parity: bin/daemon.js:233-262)."""
+    return partitioned.read_partitioned_mirror(spark, mirror_path)
 
 
 def read_count_view(spark: SparkSession, mirror_path: str, name: str) -> DataFrame:
-    """Current state of a live count view maintained by ``upsert_mirror``
+    """Current state of a live count view the mirror merge maintains
     (``count_views=...``). Columns ``(key, cnt)``."""
     return open_parquet(spark, os.path.join(mirror_path, "_views", name))
-
-
-def _update_count_view(
-    spark: SparkSession,
-    mirror_path: str,
-    name: str,
-    key: Column,
-    pre: DataFrame,
-    post: DataFrame,
-    touched: DataFrame,
-) -> None:
-    """Advance one live view by the batch's O(touched) count delta.
-
-    Crash-consistency note (documented, not hidden): the view lands after
-    the mirror's symlink swap, so a crash in between leaves the view one
-    batch behind — and because the replayed merge no-ops, the delta
-    recomputed on replay is zero and does NOT repair it. The repair path
-    is a full rebuild (delete the view dir; next batch bootstraps from the
-    mirror) — the summary-table-plus-periodic-repair pattern. A table
-    format with multi-table transactions (Delta/Iceberg) closes the window
-    by committing mirror and view in one transaction."""
-    from couch_to_postgres_spark.operators.views import (
-        apply_count_delta,
-        count_view_delta,
-    )
-
-    vdir = os.path.join(mirror_path, "_views", name)
-    with writing(mirror_path):
-        if os.path.exists(vdir):
-            view = open_parquet(spark, vdir)
-        else:
-            # bootstrap: one full GROUP BY over the PRE state, then the
-            # delta brings it to post — after this, never a full recompute
-            view = pre.groupBy(key.alias("key")).agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-        new = apply_count_delta(view, count_view_delta(pre, post, touched, key))
-        tmp = vdir + ".tmp"
-        new.write.mode("overwrite").parquet(tmp)  # materializes before the swap
-        publish(mirror_path, [(vdir, tmp)])
-
-
-def upsert_mirror(
-    spark: SparkSession,
-    mirror_path: str,
-    batch: DataFrame,
-    type_filter: str | None = None,
-    map_hook: Callable[[Column], Column] | None = None,
-    count_views: dict[str, Column] | None = None,
-) -> None:
-    """Merge one change batch into the parquet mirror, atomically and
-    MVCC-safe for concurrent readers.
-
-    The merged state lands in a fresh immutable version directory
-    (``v-<n>``); the ``current`` symlink is swapped atomically (symlink
-    rename); older versions are garbage-collected after ``KEEP_VERSIONS``
-    swaps so in-flight readers of the previous version finish cleanly.
-    A crash mid-write leaves the old version live; replaying the batch
-    after restart converges (idempotent merge). At 100 TB the same scheme
-    is what table formats (Delta/Iceberg) do with manifest files — the
-    merge plan itself (broadcast-anti-join, no mirror shuffle) is
-    unchanged.
-    """
-    import time
-
-    current = read_mirror(spark, mirror_path)
-    # Persist the batch: apply_changes references it twice (touched-key
-    # anti-join side + upsert union side); without this the whole
-    # batch-dedup window computes twice per merge. The count both
-    # materializes the cache and sizes the join strategy: micro-batches
-    # broadcast their key set (zero mirror exchange); backfill-sized
-    # batches (> ~1M keys) fall back to shuffled sort-merge + AQE skew
-    # handling rather than OOMing the driver with a giant broadcast.
-    batch = batch.persist()
-    try:
-        n = batch.count()
-        merged = apply_changes(
-            current,
-            batch,
-            type_filter=type_filter,
-            map_hook=map_hook,
-            broadcast_changes=n <= 1_000_000,
-        )
-        os.makedirs(mirror_path, exist_ok=True)
-        version_name = f"v-{time.time_ns()}"
-        version_dir = os.path.join(mirror_path, version_name)
-        merged.write.mode("overwrite").parquet(version_dir)
-        # atomic publish: rename of a symlink replaces it in one step
-        link = os.path.join(mirror_path, CURRENT_LINK)
-        tmp_link = os.path.join(mirror_path, f".{CURRENT_LINK}.{version_name}")
-        os.symlink(version_name, tmp_link)
-        os.replace(tmp_link, link)
-        if count_views:
-            # live views advance by O(touched) deltas between the pre
-            # state (`current`, already resolved to its immutable version)
-            # and the just-written post version — never a full recompute
-            post = open_parquet(spark, version_dir)
-            touched = batch.select("id").distinct()
-            for name, key in count_views.items():
-                _update_count_view(
-                    spark, mirror_path, name, key, current, post, touched
-                )
-    finally:
-        batch.unpersist()
-    # GC old versions (keep the most recent KEEP_VERSIONS for readers)
-    versions = sorted(
-        (d for d in os.listdir(mirror_path) if d.startswith("v-")), reverse=True
-    )
-    for stale in versions[KEEP_VERSIONS:]:
-        shutil.rmtree(os.path.join(mirror_path, stale), ignore_errors=True)
-    # migrate-away cleanup: drop legacy flat-layout files at the top level
-    for f in os.listdir(mirror_path):
-        if f.endswith(".parquet") or f == "_SUCCESS":
-            p = os.path.join(mirror_path, f)
-            if os.path.isfile(p):
-                os.remove(p)
 
 
 def _latest_text_changes(
@@ -374,148 +223,71 @@ def _feed_vector_index(
         vector_index_batch(spark, vector_index_path, changes)
 
 
-def follow(
-    spark: SparkSession,
-    changes_path: str,
+def _start_merge(
+    stream: DataFrame,
     mirror_path: str,
     checkpoint_path: str,
-    type_filter: str | None = None,
-    map_hook: Callable[[Column], Column] | None = None,
-    max_files_per_trigger: int | None = None,
-    trigger: dict | None = None,
-    query_name: str | None = None,
-    count_views: dict[str, Column] | None = None,
-    quarantine_path: str | None = None,
-    sink: str = "partitioned",
-    num_buckets: int | None = None,
-    search_index_path: str | None = None,
-    search_text: Callable[[Column], Column] | None = None,
-    shingle_index_path: str | None = None,
-    shingle_n: int = 3,
-    vector_index_path: str | None = None,
-    vector_field: str = "$.embedding",
-    vector_cells: int = 16,
+    trigger: dict | None,
+    query_name: str | None,
+    quarantine_path: str | None,
+    type_filter: str | None,
+    map_hook: Callable[[Column], Column] | None,
+    count_views: dict[str, Column] | None,
+    num_buckets: int | None,
+    search_index_path: str | None,
+    search_text: Callable[[Column], Column] | None,
+    shingle_index_path: str | None,
+    shingle_n: int,
+    vector_index_path: str | None,
+    vector_field: str,
+    vector_cells: int,
 ) -> StreamingQuery:
-    """Start one feed's replication query (the `engine.follow(db)` API —
-    the reference's `new PostgresCouchDB(...).start()`,
-    bin/daemon.js:120-129).
-
-    ``search_index_path`` additionally maintains the streaming BM25
-    index (``streaming/search_stream.py``) from the SAME micro-batches —
-    the mirror becomes a searchable live corpus with one flag, at
-    O(changed docs) per batch on top of the merge. The index sees
-    exactly what the mirror sees: the per-key latest change after
-    ``type_filter`` (shared ``filtered_latest`` — the two states cannot
-    drift on filter semantics) with ``map_hook`` applied, tokenized by
-    ``search_text`` (doc-JSON column → text column; default strips JSON
-    punctuation so keys and values index as terms). Replay-safe for the
-    index's own reason: re-appended rows are byte-identical, liveness is
-    max-seq.
-
-    ``shingle_index_path`` maintains the decontamination SHINGLE index
-    the same way (``_feed_shingle_index``: the identical change frame
-    through ``stats_stream.shingle_changes``), so benchmark
-    decontamination reads live index state instead of re-shingling the
-    mirror per run; ``shingle_n`` picks the fingerprinted n-gram width
-    and is recorded in the index so mismatched readers fail loudly.
-
-    ``sink`` picks the mirror layout: ``"partitioned"`` (default) merges
-    into the bucket-partitioned mirror — per-batch cost O(touched
-    buckets), the only plan that holds at 100 TB where a steady-state
-    micro-batch touches a sliver of the mirror; ``"flat"`` is the
-    whole-mirror-rewrite MVCC sink, fine for tiny mirrors and kept for
-    them. An existing mirror's layout wins over the argument (a flat
-    mirror keeps merging flat rather than silently forking state).
-    ``num_buckets`` only matters at partitioned bootstrap (None =
-    auto-size from the first batch); afterwards the persisted layout
-    value is authoritative.
-
-    ``trigger`` defaults to ``availableNow`` (drain-and-stop, the batch
-    catch-up mode); pass ``{"processingTime": "20 seconds"}`` for the
-    reference's steady-state cadence (lib/index.js:63).
-
-    ``quarantine_path`` turns on poison-pill handling: change-log records
-    that fail JSON parsing are appended there (dead-letter, with the raw
-    line) and the remaining records merge normally — the feed keeps
-    draining instead of crash-looping on one bad record. At-least-once
-    like the mirror itself: a replayed batch re-appends its corrupt rows,
-    so consumers of the quarantine dedupe on the raw line.
-    """
-    if sink not in ("partitioned", "flat"):
-        raise ValueError(f"unknown sink {sink!r}: use 'partitioned' or 'flat'")
-    stream = read_change_stream(
-        spark,
-        changes_path,
-        max_files_per_trigger,
-        with_corrupt_column=quarantine_path is not None,
+    """Start the replication query over ``stream``: each micro-batch
+    merges into the partitioned mirror and feeds the flagged index
+    twins. The one writer behind :func:`follow` and
+    :func:`follow_couch`, which differ only in the stream they build
+    and in ``follow``'s quarantine split."""
+    indexed = (
+        search_index_path is not None
+        or shingle_index_path is not None
+        or vector_index_path is not None
     )
 
     def _merge(batch: DataFrame, epoch_id: int) -> None:
-        from couch_to_postgres_spark.streaming.partitioned import (
-            upsert_partitioned_mirror,
-        )
-
         raw = None
-        if quarantine_path is not None:
-            # keep ALL columns in the quarantine query: Spark's analyzer
-            # rejects any query over a raw JSON scan that references only
-            # _corrupt_record (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the
-            # parsed columns are NULL on poison rows anyway, and the
-            # persist keeps the JSON parse single-pass across the
-            # quarantine write and the merge
-            raw = batch = batch.persist()
-            bad = batch.filter(F.col("_corrupt_record").isNotNull())
-            if bad.count() > 0:
-                # rename on the way out: a stored JSON file whose only
-                # field is literally `_corrupt_record` would trip the
-                # same analyzer rule for whoever reads the quarantine
-                bad.withColumnRenamed("_corrupt_record", "raw_record").write.mode(
-                    "append"
-                ).json(quarantine_path)
-            batch = batch.filter(F.col("_corrupt_record").isNull()).drop(
-                "_corrupt_record"
-            )
-        elif (
-            search_index_path is not None
-            or shingle_index_path is not None
-            or vector_index_path is not None
-        ):
-            # the index feed re-runs the batch source on top of the
-            # mirror merge's own actions (and search_index_batch itself
-            # runs several) — persist once so the change-log scan is
-            # single-pass per epoch instead of re-read per action
+        if quarantine_path is not None or indexed:
+            # the quarantine split and the index feeds re-run the batch
+            # source on top of the mirror merge's own actions (and
+            # search_index_batch itself runs several) — persist once so
+            # the source is read once per epoch instead of per action
             raw = batch = batch.persist()
         try:
-            # layout of an EXISTING mirror wins over the sink argument.
-            # Meta check FIRST: a partitioned write leaves a top-level
-            # _SUCCESS marker that _current_version would misread as the
-            # legacy flat layout.
-            from couch_to_postgres_spark.streaming.partitioned import read_meta
-
-            use_partitioned = sink == "partitioned"
-            if read_meta(mirror_path) is not None:
-                use_partitioned = True
-            elif _current_version(mirror_path) is not None:
-                use_partitioned = False
-            if use_partitioned:
-                upsert_partitioned_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    num_buckets=num_buckets,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            else:
-                upsert_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
+            if quarantine_path is not None:
+                # keep ALL columns in the quarantine query: Spark's
+                # analyzer rejects any query over a raw JSON scan that
+                # references only _corrupt_record
+                # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the parsed
+                # columns are NULL on poison rows anyway
+                bad = batch.filter(F.col("_corrupt_record").isNotNull())
+                if bad.count() > 0:
+                    # rename on the way out: a stored JSON file whose
+                    # only field is literally `_corrupt_record` would
+                    # trip the same analyzer rule for its readers
+                    bad.withColumnRenamed(
+                        "_corrupt_record", "raw_record"
+                    ).write.mode("append").json(quarantine_path)
+                batch = batch.filter(
+                    F.col("_corrupt_record").isNull()
+                ).drop("_corrupt_record")
+            partitioned.upsert_partitioned_mirror(
+                batch.sparkSession,
+                mirror_path,
+                batch,
+                num_buckets=num_buckets,
+                type_filter=type_filter,
+                map_hook=map_hook,
+                count_views=count_views,
+            )
             if search_index_path is not None:
                 _feed_search_index(
                     batch, search_index_path, type_filter, map_hook,
@@ -552,6 +324,84 @@ def follow(
     return writer.start()
 
 
+def follow(
+    spark: SparkSession,
+    changes_path: str,
+    mirror_path: str,
+    checkpoint_path: str,
+    type_filter: str | None = None,
+    map_hook: Callable[[Column], Column] | None = None,
+    max_files_per_trigger: int | None = None,
+    trigger: dict | None = None,
+    query_name: str | None = None,
+    count_views: dict[str, Column] | None = None,
+    quarantine_path: str | None = None,
+    num_buckets: int | None = None,
+    search_index_path: str | None = None,
+    search_text: Callable[[Column], Column] | None = None,
+    shingle_index_path: str | None = None,
+    shingle_n: int = 3,
+    vector_index_path: str | None = None,
+    vector_field: str = "$.embedding",
+    vector_cells: int = 16,
+) -> StreamingQuery:
+    """Start one feed's replication query (the `engine.follow(db)` API —
+    the reference's `new PostgresCouchDB(...).start()`,
+    bin/daemon.js:120-129).
+
+    Each micro-batch merges into the bucket-partitioned mirror
+    (:func:`partitioned.upsert_partitioned_mirror`): per-batch cost
+    O(touched buckets), or O(batch) when it appends to the delta log.
+    ``num_buckets`` only matters at bootstrap (None = auto-size from
+    the first batch); afterwards the persisted layout value is
+    authoritative.
+
+    ``search_index_path`` additionally maintains the streaming BM25
+    index (``streaming/search_stream.py``) from the SAME micro-batches —
+    the mirror becomes a searchable live corpus with one flag, at
+    O(changed docs) per batch on top of the merge. The index sees
+    exactly what the mirror sees: the per-key latest change after
+    ``type_filter`` (shared ``filtered_latest`` — the two states cannot
+    drift on filter semantics) with ``map_hook`` applied, tokenized by
+    ``search_text`` (doc-JSON column → text column; default strips JSON
+    punctuation so keys and values index as terms). Replay-safe for the
+    index's own reason: re-appended rows are byte-identical, liveness is
+    max-seq.
+
+    ``shingle_index_path`` maintains the decontamination SHINGLE index
+    the same way (``_feed_shingle_index``: the identical change frame
+    through ``stats_stream.shingle_changes``), so benchmark
+    decontamination reads live index state instead of re-shingling the
+    mirror per run; ``shingle_n`` picks the fingerprinted n-gram width
+    and is recorded in the index so mismatched readers fail loudly.
+    ``vector_index_path`` maintains the IVF vector twin from the
+    embedding at ``vector_field`` (``_feed_vector_index``).
+
+    ``trigger`` defaults to ``availableNow`` (drain-and-stop, the batch
+    catch-up mode); pass ``{"processingTime": "20 seconds"}`` for the
+    reference's steady-state cadence (lib/index.js:63).
+
+    ``quarantine_path`` turns on poison-pill handling: change-log records
+    that fail JSON parsing are appended there (dead-letter, with the raw
+    line) and the remaining records merge normally — the feed keeps
+    draining instead of crash-looping on one bad record. At-least-once
+    like the mirror itself: a replayed batch re-appends its corrupt rows,
+    so consumers of the quarantine dedupe on the raw line.
+    """
+    stream = read_change_stream(
+        spark,
+        changes_path,
+        max_files_per_trigger,
+        with_corrupt_column=quarantine_path is not None,
+    )
+    return _start_merge(
+        stream, mirror_path, checkpoint_path, trigger, query_name,
+        quarantine_path, type_filter, map_hook, count_views, num_buckets,
+        search_index_path, search_text, shingle_index_path, shingle_n,
+        vector_index_path, vector_field, vector_cells,
+    )
+
+
 def follow_couch(
     spark: SparkSession,
     url: str,
@@ -566,7 +416,6 @@ def follow_couch(
     trigger: dict | None = None,
     query_name: str | None = None,
     count_views: dict[str, Column] | None = None,
-    sink: str = "partitioned",
     num_buckets: int | None = None,
     username: str | None = None,
     password: str | None = None,
@@ -587,10 +436,8 @@ def follow_couch(
     connection, newline-delimited incremental lines — lib/index.js:50-53);
     ``limit`` is the A2 admission-control page bound. No quarantine option: the source
     parses upstream and surfaces transport errors typed (no_db_file ≠
-    transient). ``search_index_path``/``search_text``/
-    ``shingle_index_path`` maintain the live BM25 / decontamination
-    shingle indexes from the same micro-batches, exactly as in
-    :func:`follow`."""
+    transient). The merge, the mirror layout and the index twins are
+    exactly those of :func:`follow`."""
     from couch_to_postgres_spark.sources.couchdb_source import register
 
     register(spark)
@@ -608,80 +455,12 @@ def follow_couch(
     ):
         if v is not None:
             reader = reader.option(k, v)
-    stream = reader.load()
-
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        from couch_to_postgres_spark.streaming.partitioned import (
-            read_meta,
-            upsert_partitioned_mirror,
-        )
-
-        use_partitioned = sink == "partitioned"
-        if read_meta(mirror_path) is not None:
-            use_partitioned = True
-        elif _current_version(mirror_path) is not None:
-            use_partitioned = False
-        raw = None
-        if (
-            search_index_path is not None
-            or shingle_index_path is not None
-            or vector_index_path is not None
-        ):
-            # persist: the index feed would otherwise re-pull the
-            # micro-batch from the live _changes source on top of the
-            # merge's own actions (see follow._merge)
-            raw = batch = batch.persist()
-        try:
-            if use_partitioned:
-                upsert_partitioned_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    num_buckets=num_buckets,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            else:
-                upsert_mirror(
-                    batch.sparkSession,
-                    mirror_path,
-                    batch,
-                    type_filter=type_filter,
-                    map_hook=map_hook,
-                    count_views=count_views,
-                )
-            if search_index_path is not None:
-                _feed_search_index(
-                    batch, search_index_path, type_filter, map_hook,
-                    search_text,
-                )
-            if shingle_index_path is not None:
-                _feed_shingle_index(
-                    batch, shingle_index_path, type_filter, map_hook,
-                    search_text, shingle_n=shingle_n,
-                )
-            if vector_index_path is not None:
-                _feed_vector_index(
-                    batch, vector_index_path, type_filter, map_hook,
-                    vector_field=vector_field, vector_cells=vector_cells,
-                )
-        finally:
-            if raw is not None:
-                raw.unpersist()
-
-    writer = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
+    return _start_merge(
+        reader.load(), mirror_path, checkpoint_path, trigger, query_name,
+        None, type_filter, map_hook, count_views, num_buckets,
+        search_index_path, search_text, shingle_index_path, shingle_n,
+        vector_index_path, vector_field, vector_cells,
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def mirror_doc_count(spark: SparkSession, mirror_path: str) -> int:

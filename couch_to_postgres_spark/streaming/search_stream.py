@@ -221,8 +221,8 @@ def _search_index_batch_locked(
                 F.when(
                     ~F.col("deleted"),
                     # a NULL-text upsert (custom search_text hook) holds
-                    # zero postings; bare size(NULL) is -1 (legacy
-                    # sizeOfNull) and would skew the stat
+                    # zero postings; bare size(NULL) is -1 (under
+                    # spark.sql.legacy.sizeOfNull) and would skew the stat
                     F.greatest(
                         F.coalesce(
                             F.size(F.array_distinct(words)), F.lit(0)
@@ -494,8 +494,9 @@ def query_postings(
             [f"token_bucket={b}" for b in lsm.term_buckets(terms, n_buckets)],
         )
     else:
-        # legacy flat base (or a non-local FS where the dir probe is
-        # blind): read-attempt the whole component as before
+        # no bucket dirs to name — a never-compacted index, an empty
+        # base, or a non-local path where the dir probe is blind:
+        # read-attempt the whole component
         base = try_open_parquet(spark, base_postings_path)
     tail = try_open_parquet(spark, postings_path)
     # never-cast-ids: whichever component is missing takes the id dtype
@@ -619,8 +620,8 @@ def _bm25_pruned_topk(
     engaged).
 
     Structural gates (→ ``None``): stamped (k1, b) differ from the
-    query's, k > stored top-G, legacy base without the impact layer or
-    histograms, no positive cut anywhere (pruning would read
+    query's, k > stored top-G, a base compacted with ``impacts=False``
+    (NULL impact columns), no positive cut anywhere (pruning would read
     everything the full path reads), or an empty live corpus.
     ``candidates=`` filtering is gated by the CALLER: θ bounds the
     k-th best index-wide score, which is not a bound for the k-th best
@@ -1199,27 +1200,24 @@ def bm25_topk_from_index(
             [(t, float(dft_reuse[t])) for t in terms if t in dft_reuse],
             "token string, dft double",
         )
-    elif fast:
-        if lsm.has_partition_prefix(dfs_root, "token_bucket="):
-            # bucketed dfs layout: open only the query terms' bucket
-            # dirs by name. No dir at all means no live doc holds any
-            # query term — an empty dfs states exactly that
-            dfs_df = lsm.open_dirs(
-                spark,
-                dfs_root,
-                [
-                    f"token_bucket={b}"
-                    for b in lsm.term_buckets(terms, int(m["token_buckets"]))
-                ],
-                empty_schema="token string, dft double",
-            )
-        else:
-            dfs_df = try_open_parquet(spark, dfs_root)  # legacy flat dfs
+    elif fast and lsm.has_partition_prefix(dfs_root, "token_bucket="):
+        # open only the query terms' bucket dirs by name (an empty base
+        # has none and takes the exact aggregate below). No dir at all
+        # means no live doc holds any query term — an empty dfs states
+        # exactly that
+        dfs_df = lsm.open_dirs(
+            spark,
+            dfs_root,
+            [
+                f"token_bucket={b}"
+                for b in lsm.term_buckets(terms, int(m["token_buckets"]))
+            ],
+            empty_schema="token string, dft double",
+        )
     if dft_local is not None:
         dft = dft_local
     elif dfs_df is not None:
-        # two-level layout stores per-(bucket, id_sub) PARTIAL counts;
-        # summing is also correct (a no-op) on a single-row-per-token dfs
+        # the dfs layout stores per-(bucket, id_sub) PARTIAL counts
         dft = (
             dfs_df.filter(F.col("token").isin(terms))
             .groupBy("token")
@@ -1574,13 +1572,12 @@ def compact_index(
     ``impacts=False`` skips the MaxScore bound layer — the
     denormalized dl/impact0 posting columns, the per-pair impact sort,
     the top-G arrays and histograms — and stamps the meta's impact
-    columns ``NULL`` as an explicit "disabled by choice" sentinel (a
-    LEGACY base, whose meta predates the columns entirely, still
-    upgrades via one full rewrite). Use it for fingerprint-token
-    indexes (the shingle/decontamination twin): their md5 tokens are
-    probed by equality, never BM25-ranked, so the bound layer is pure
-    write cost in the steady-state fold; every ranked read gates off
-    the sentinel and takes the exact full path.
+    columns ``NULL`` as an explicit "disabled by choice" sentinel. Use
+    it for fingerprint-token indexes (the shingle/decontamination
+    twin): their md5 tokens are probed by equality, never BM25-ranked,
+    so the bound layer is pure write cost in the steady-state fold;
+    every ranked read gates off the sentinel and takes the exact full
+    path.
 
     ``out_path`` must not share component directories with
     ``index_path``: the dfs/doclen derivations read back files this
@@ -1807,11 +1804,9 @@ def compact_index_inplace(
         if impacts is None:
             # mode continuity: an index compacted without the impact
             # layer (the explicit NULL sentinel) stays that way across
-            # rewrites; a legacy or fresh index defaults to impacts
+            # rewrites; a never-compacted index defaults to impacts
             impacts = not (
-                meta_rows
-                and "impact_hist_bins" in meta_rows[0]
-                and meta_rows[0]["impact_hist_bins"] is None
+                meta_rows and meta_rows[0]["impact_hist_bins"] is None
             )
         stage = staging(index_path, "compacting")
         compact_index(
@@ -1862,12 +1857,9 @@ def compact_index_incremental(
       ``id_bucket``; meta moves by the exact churn delta.
 
     Falls back to a full :func:`compact_index_inplace` when the index
-    has never been compacted, has an empty base, or carries a legacy
-    layout (flat dfs, no ``id_sub``, no impact stamp); a legacy flat
-    ``attrs`` file migrates into ``base/attrs`` with one doc-count-sized
-    pass. Returns a stats dict (``mode`` = ``full`` | ``noop`` |
-    ``incremental``, pair/bucket counts, affected dir lists) the daemon
-    watchdog logs."""
+    has never been compacted or has an empty base. Returns a stats dict
+    (``mode`` = ``full`` | ``noop`` | ``incremental``, pair/bucket
+    counts, affected dir lists) the daemon watchdog logs."""
     with writing(index_path):
         doclen_path, postings_path, tomb_path = _paths(index_path)
         base_doclen_path, base_postings_path, meta_path = _base_paths(
@@ -1885,7 +1877,7 @@ def compact_index_incremental(
             return {"mode": "full"}
         m = meta_rows[0]
         n_buckets = int(m["token_buckets"])
-        n_sub = m.get("id_subbuckets")
+        n_sub = int(m["id_subbuckets"])
 
         tail_dl, tomb = read_components(
             spark,
@@ -1903,17 +1895,11 @@ def compact_index_incremental(
                 "total_buckets": n_buckets,
             }
 
-        # a base without the current layout (id_bucket/token_bucket
-        # dirs, id_subbuckets and the impact columns in meta) upgrades
-        # by one full rewrite: folding impact-bearing rows into
-        # impact-less dirs would leave the base schema-mixed. An empty
-        # base has no prior avgdl to stamp fold rows with, and its
-        # rewrite is tail-sized anyway.
+        # an empty base (no live doc, or no live posting) has no
+        # bucket dirs to fold into and no prior avgdl to stamp fold
+        # rows with; its full rewrite is tail-sized anyway
         if (
-            n_sub is None
-            or "impact_k1" not in m
-            or "impact_hist_bins" not in m
-            or int(m["n_live"]) == 0
+            int(m["n_live"]) == 0
             or not lsm.has_partition_prefix(base_doclen_path, "id_bucket=")
             or not lsm.has_partition_prefix(
                 base_postings_path, "token_bucket="
@@ -1923,7 +1909,6 @@ def compact_index_incremental(
                 spark, index_path, id_col=id_col, impacts=impacts_default
             )
             return {"mode": "full"}
-        n_sub = int(n_sub)
         # an index compacted with ``impacts=False`` (the shingle twin)
         # carries the impact meta columns as NULL and its folds stay
         # impact-less: no bound columns, no impact sort, plain df
@@ -2143,7 +2128,7 @@ def compact_index_incremental(
 
         tails = [doclen_path, postings_path, tomb_path]
         if attrs_mode is not None:
-            # the flat attrs tail is folded into base/attrs
+            # the attrs tail is folded into base/attrs
             tails.append(os.path.join(index_path, "attrs"))
         lsm.fold_publish(
             index_path,
@@ -2180,71 +2165,45 @@ def _fold_attrs(
     n_buckets: int,
     id_col: str,
 ) -> tuple[str | None, list[tuple[str, str, list[str]]]]:
-    """Stage the fold of per-doc attrs (latest row per live doc) and
-    return its mode (``pruned`` | ``migrated``) with its publish groups
-    for :func:`lsm.fold_publish` — ``(None, [])`` when the index has no
-    attrs. On an id-bucketed ``base/attrs`` only the
-    churn's id buckets rewrite; a legacy flat ``attrs`` file migrates
-    into that layout with one doc-count-sized pass."""
+    """Stage the fold of per-doc attrs (latest row per live doc) into
+    the churn's ``id_bucket`` dirs of ``base/attrs`` and return its mode
+    (``pruned``) with its publish groups for :func:`lsm.fold_publish` —
+    ``(None, [])`` when the index has no attrs. A base with no attrs
+    dirs yet needs no other path: every attrs tail row's doc is churned
+    (``stats_index_batch`` writes attrs only beside a doclen tail append
+    or a tombstone), so the tail alone is the fold's input."""
     base_attrs_root = os.path.join(index_path, "base", "attrs")
-    staged_attrs = os.path.join(stage, "attrs")
     tail_attrs = try_open_parquet(spark, os.path.join(index_path, "attrs"))
-    if lsm.has_partition_prefix(base_attrs_root, "id_bucket="):
-        base_a_aff = lsm.open_dirs(spark, base_attrs_root, id_dirs)
-        if base_a_aff is not None:
-            base_a_aff = base_a_aff.drop("id_bucket")
-        parts = [df for df in (base_a_aff, tail_attrs) if df is not None]
-        if not parts:
-            return None, []
-        other = [c for c in parts[0].columns if c not in (id_col, "seq")]
-        cand_a = parts[0]
-        for df in parts[1:]:
-            cand_a = cand_a.unionByName(df, allowMissingColumns=True)
-        # every attrs tail row's doc is churned (stats_index_batch
-        # writes attrs only beside a doclen tail append): non-churned
-        # rows pass through, churned docs re-enter with their max-seq
-        # attrs, restricted to the live set
-        new_a = (
-            cand_a.join(churned, on=id_col, how="left_semi")
-            .groupBy(id_col)
-            .agg(
-                F.max("seq").alias("seq"),
-                *[F.max_by(c, "seq").alias(c) for c in other],
-            )
-            .join(churned_live.select(id_col), id_col, "left_semi")
-            .select(id_col, *other, "seq")
-        )
-        staged_a = (
-            base_a_aff.join(churned, on=id_col, how="left_anti")
-            .select(id_col, *other, "seq")
-            .unionByName(new_a)
-            if base_a_aff is not None
-            else new_a
-        )
-        mode, groups = "pruned", [(base_attrs_root, staged_attrs, id_dirs)]
-    elif tail_attrs is not None:
-        # the flat file holds latest rows for every doc, so this one
-        # migration pass is doc-count-sized
-        other = [c for c in tail_attrs.columns if c not in (id_col, "seq")]
-        alive = (
-            open_parquet(spark, _base_paths(index_path)[0])
-            .select(id_col)
-            .join(churned, on=id_col, how="left_anti")
-            .unionByName(churned_live.select(id_col))
-        )
-        staged_a = (
-            tail_attrs.groupBy(id_col)
-            .agg(
-                F.max("seq").alias("seq"),
-                *[F.max_by(c, "seq").alias(c) for c in other],
-            )
-            .join(alive, id_col, "left_semi")
-            .select(id_col, *other, "seq")
-        )
-        mode = "migrated"
-        groups = [(os.path.join(index_path, "base"), stage, ["attrs"])]
-    else:
+    base_a_aff = lsm.open_dirs(spark, base_attrs_root, id_dirs)
+    if base_a_aff is not None:
+        base_a_aff = base_a_aff.drop("id_bucket")
+    parts = [df for df in (base_a_aff, tail_attrs) if df is not None]
+    if not parts:
         return None, []
+    other = [c for c in parts[0].columns if c not in (id_col, "seq")]
+    cand_a = parts[0]
+    for df in parts[1:]:
+        cand_a = cand_a.unionByName(df, allowMissingColumns=True)
+    # non-churned rows pass through, churned docs re-enter with their
+    # max-seq attrs, restricted to the live set
+    new_a = (
+        cand_a.join(churned, on=id_col, how="left_semi")
+        .groupBy(id_col)
+        .agg(
+            F.max("seq").alias("seq"),
+            *[F.max_by(c, "seq").alias(c) for c in other],
+        )
+        .join(churned_live.select(id_col), id_col, "left_semi")
+        .select(id_col, *other, "seq")
+    )
+    staged_a = (
+        base_a_aff.join(churned, on=id_col, how="left_anti")
+        .select(id_col, *other, "seq")
+        .unionByName(new_a)
+        if base_a_aff is not None
+        else new_a
+    )
+    staged_attrs = os.path.join(stage, "attrs")
     (
         staged_a.withColumn("id_bucket", lsm.bucket(id_col, n_buckets))
         .repartition(F.col("id_bucket"))
@@ -2252,7 +2211,7 @@ def _fold_attrs(
         .partitionBy("id_bucket")
         .parquet(staged_attrs)
     )
-    return mode, groups
+    return "pruned", [(base_attrs_root, staged_attrs, id_dirs)]
 
 
 def search_index_stream(
@@ -2343,8 +2302,8 @@ def index_status(
     * ``live_docs`` — the live corpus size, exact: meta's ``n_live`` on
       a churn-free base, adjusted by the churned ids' live delta
       (:func:`_live_delta_for_churn`) on a bucketed base with churn, and
-      the skinny :func:`live_doclen` count on a never-compacted or
-      legacy index;
+      the skinny :func:`live_doclen` count on a never-compacted index
+      or an empty base with churn;
     * ``tail_doclen_rows`` / ``tombstones`` — the churn since the last
       compaction, which every query merges; ``compaction_debt`` is churn
       rows per live doc, the number an operator alarms on;
@@ -2362,14 +2321,13 @@ def index_status(
     if (
         n_live is None
         and meta_rows
-        and "n_live" in meta_rows[0]
         and lsm.has_partition_prefix(base_doclen_path, "id_bucket=")
     ):
         n_live = int(meta_rows[0]["n_live"]) + _live_delta_for_churn(
             spark, index_path, id_col, token_buckets
         )
     if n_live is None:
-        # never-compacted or legacy base: exact skinny aggregate
+        # never-compacted index or empty base: exact skinny aggregate
         n_live = live_doclen(spark, index_path, id_col).count()
     return {
         "live_docs": n_live,

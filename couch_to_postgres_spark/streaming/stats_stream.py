@@ -444,7 +444,8 @@ def _check_shingle_n(
     """Reader-side guard: if the index records its shingle width
     (:func:`record_shingle_n` — every daemon-maintained index does),
     a query declaring a different width raises instead of returning
-    all-zero overlaps. An unmarked (legacy / hand-built) index passes —
+    all-zero overlaps. An unmarked index (one built by feeding
+    :func:`shingle_changes` to ``search_index_batch`` directly) passes —
     the caller is asserting the width themselves."""
     existing = read_meta_rows(spark, _shingle_meta_path(index_path))
     if existing and int(existing[0]["shingle_n"]) != int(shingle_n):

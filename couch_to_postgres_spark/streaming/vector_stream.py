@@ -39,7 +39,7 @@ Plan shape:
   (:func:`compact_vector_index_incremental`): only the churned ids'
   old and new ``cell=N`` dirs and their ``id_bucket=H`` dirs rewrite;
   the full live-only rewrite (:func:`compact_vector_index`) is the
-  first-compaction and legacy-layout path;
+  first-compaction path;
 * quantizer drift is watched on skinny frames
   (:func:`vector_index_balance`) and repaired by the operator-scheduled
   :func:`rebuild_vector_quantizer`.
@@ -650,9 +650,8 @@ def compact_vector_index(
     id_buckets: int = DEFAULT_ID_BUCKETS,
 ) -> dict:
     """Full fold of base ∪ tail into a live-only base, clearing the tail
-    and tombstones — the first-compaction and legacy-layout path (it
-    lays down the id-bucketed ``base/ids`` sidecar the incremental fold
-    needs). Steady-state maintenance is
+    and tombstones — the first-compaction path (it lays down the
+    id-bucketed ``base/ids`` sidecar the incremental fold needs). Steady-state maintenance is
     :func:`compact_vector_index_incremental`; this rewrite is
     corpus-proportional. Runs under the per-path lock and publishes in
     one ``commit.publish``."""
@@ -681,12 +680,11 @@ def compact_vector_index(
             _BASE_META_SCHEMA,
         )
         live.unpersist()
-        # a legacy tail "ids" dir retires with the other tails
         lsm.fold_publish(
             index_path,
             [(os.path.join(index_path, "base"), stage, ["cells", "ids"])],
             (meta_path, staged_meta),
-            [cells_path, tomb_path, os.path.join(index_path, "ids")],
+            [cells_path, tomb_path],
             stage,
         )
         return {"mode": "full", "n_live": n_live}
@@ -722,7 +720,8 @@ def compact_vector_index_incremental(
       ``id_bucket=H`` dirs are never opened (bit-identical, by test).
 
     Falls back to :func:`compact_vector_index` when the index has never
-    been compacted or has a flat ``base/ids``. Returns the stats dict
+    been compacted or its base holds no ``id_bucket`` dirs (every live
+    vector folded away). Returns the stats dict
     the daemon watchdog logs (``mode`` = ``full`` | ``noop`` |
     ``incremental``, churn and affected-dir counts, ``n_live``)."""
     with writing(index_path):
@@ -731,10 +730,8 @@ def compact_vector_index_incremental(
         # cleared on entry: the full fallback below never visits it
         stage = staging(index_path, "compacting-vec-incr")
         meta_rows = read_meta_rows(spark, meta_path)
-        if (
-            not meta_rows
-            or "id_buckets" not in meta_rows[0]
-            or not lsm.has_partition_prefix(base_ids_path, "id_bucket=")
+        if not meta_rows or not lsm.has_partition_prefix(
+            base_ids_path, "id_bucket="
         ):
             done = compact_vector_index(spark, index_path, id_col, vec_col)
             return {**done, "mode": "full"}

@@ -31,7 +31,6 @@ SLOW_TESTS = {
     "test_cdc_properties.py::test_replay_is_fixpoint",
     "test_compact_incremental.py::test_id_subbuckets_auto_size",
     "test_compact_incremental.py::test_incremental_attrs_carry_through",
-    "test_compact_incremental.py::test_incremental_attrs_migrates_legacy_flat_layout",
     "test_compact_incremental.py::test_incremental_equals_full_and_untouched_buckets_bit_identical",
     "test_compact_incremental.py::test_incremental_falls_back_to_full_without_base",
     "test_compact_incremental.py::test_incremental_string_ids_delete_all_churn",
@@ -59,7 +58,6 @@ SLOW_TESTS = {
     "test_search_stream.py::test_maxscore_exact_after_avgdl_drift_folds",
     "test_search_stream.py::test_maxscore_gates_fall_back_exactly",
     "test_search_stream.py::test_maxscore_keeps_boundary_ties",
-    "test_search_stream.py::test_maxscore_legacy_meta_falls_back_then_fold_upgrades",
     "test_search_stream.py::test_maxscore_pruned_read_exact_and_engaged",
     "test_search_stream.py::test_maxscore_randomized_equivalence",
     "test_search_stream.py::test_randomized_lifecycle_equivalence",

@@ -361,71 +361,3 @@ def test_incremental_attrs_carry_through(spark, tmp_path):
         assert after_attrs.get(d) == before_attrs[d], f"{d} rewritten"
     # the flat attrs tail is folded away (retired into .trash)
     assert not os.path.isdir(os.path.join(index, "attrs"))
-
-
-def test_incremental_attrs_migrates_legacy_flat_layout(spark, tmp_path):
-    """An index whose attrs were compacted by the pre-r10 code carries
-    ONE flat latest-rows file; the first incremental fold migrates it
-    into the id-bucketed base/attrs layout (one final doc-count-sized
-    pass, attrs_mode='migrated'), after which folds are churn-scoped."""
-    from couch_to_postgres_spark.streaming.stats_stream import (
-        live_attrs,
-        stats_index_batch,
-    )
-
-    index = str(tmp_path / "legacy_attrs_idx")
-    rows = [(s, d, False, f"s{d % 2}", t)
-            for s, (d, t) in enumerate(DOCS, start=1)]
-    stats_index_batch(
-        spark, index,
-        spark.createDataFrame(
-            rows,
-            "seq long, doc_id long, deleted boolean, source string, text string",
-        ),
-    )
-    compact_index_inplace(spark, index, token_buckets=N_BUCKETS)
-    # simulate the legacy layout: flatten base/attrs back into the flat
-    # attrs file the old compactor used to write
-    import shutil
-
-    legacy = spark.read.parquet(os.path.join(index, "base", "attrs")).drop(
-        "id_bucket"
-    )
-    legacy_rows = legacy.collect()
-    shutil.rmtree(os.path.join(index, "base", "attrs"))
-    spark.createDataFrame(legacy_rows, legacy.schema).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(index, "attrs"))
-
-    stats_index_batch(
-        spark, index,
-        spark.createDataFrame(
-            [(50, 3, False, "s7", "replacement text for doc three")],
-            "seq long, doc_id long, deleted boolean, source string, text string",
-        ),
-    )
-    done = compact_index_incremental(spark, index)
-    assert done["mode"] == "incremental"
-    assert done["attrs_mode"] == "migrated"
-    assert os.path.isdir(os.path.join(index, "base", "attrs"))
-    assert not os.path.isdir(os.path.join(index, "attrs"))
-    got = {
-        r["doc_id"]: r["source"]
-        for r in live_attrs(spark, index).collect()
-    }
-    assert got[3] == "s7" and len(got) == len(DOCS)
-    # a second fold on the migrated layout is churn-scoped
-    stats_index_batch(
-        spark, index,
-        spark.createDataFrame(
-            [(60, 4, False, "s8", "fourth doc rewritten")],
-            "seq long, doc_id long, deleted boolean, source string, text string",
-        ),
-    )
-    done2 = compact_index_incremental(spark, index)
-    assert done2["attrs_mode"] == "pruned"
-    got2 = {
-        r["doc_id"]: r["source"]
-        for r in live_attrs(spark, index).collect()
-    }
-    assert got2[4] == "s8" and got2[3] == "s7"

@@ -3,8 +3,13 @@ with checkpoint resume, end-to-end into the CDC merge."""
 
 import pytest
 
+from couch_to_postgres_spark.sources.changes import write_change_log
 from couch_to_postgres_spark.sources.couchdb_source import register
-from couch_to_postgres_spark.streaming.pipeline import read_mirror, upsert_mirror
+from couch_to_postgres_spark.streaming.pipeline import (
+    follow,
+    follow_couch,
+    read_mirror,
+)
 from tests.test_writeback import RecordingCouch
 
 
@@ -52,25 +57,12 @@ def test_batch_read(spark, couch):
 
 
 def test_stream_to_mirror_with_resume(spark, couch, tmp_path):
-    register(spark)
     couch.changes_pages = [PAGES[0]]
 
     def run_query():
-        stream = (
-            spark.readStream.format("couchdb")
-            .option("url", couch.url)
-            .option("database", "db")
-            .load()
-        )
-        return (
-            stream.writeStream.foreachBatch(
-                lambda batch, _eid: upsert_mirror(
-                    batch.sparkSession, str(tmp_path / "mirror"), batch
-                )
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return follow_couch(
+            spark, couch.url, "db",
+            str(tmp_path / "mirror"), str(tmp_path / "ckpt"),
         )
 
     q = run_query()
@@ -86,3 +78,98 @@ def test_stream_to_mirror_with_resume(spark, couch, tmp_path):
     state2 = {r["id"]: r["doc"] for r in mirror.collect()}
     assert set(state2) == {"a", "b"}  # c deleted before ever landing
     assert '"2-z"' in state2["a"]  # the rev-2 update applied
+
+
+def _vec_doc(i, rev, text, emb):
+    doc = {"_id": f"d{i}", "_rev": rev, "text": text}
+    if emb is not None:
+        doc["embedding"] = emb
+    return doc
+
+
+#: eight embedded docs, then a page that updates one, deletes one and
+#: drops another's embedding (a tombstone for the vector twin only)
+INDEXED_PAGES = [
+    page(
+        [
+            {
+                "seq": i + 1,
+                "id": f"d{i}",
+                "doc": _vec_doc(
+                    i, "1-a", f"alpha word{i}", [float(i), float(8 - i)]
+                ),
+            }
+            for i in range(8)
+        ],
+        8,
+    ),
+    page(
+        [
+            {"seq": 9, "id": "d1", "doc": _vec_doc(1, "2-b", "beta", [9.0, 1.0])},
+            {"seq": 10, "id": "d2", "deleted": True},
+            {"seq": 11, "id": "d3", "doc": _vec_doc(3, "2-c", "gamma", None)},
+        ],
+        11,
+    ),
+]
+
+
+def test_follow_couch_feeds_index_twins_like_follow(spark, couch, tmp_path):
+    """follow and follow_couch share one merge: the couch feed, with the
+    search and vector twins on, lands the same mirror rows and the same
+    live index ids as ``follow`` over the same changes written as a
+    change-log file. The couch source runs one batch per start, so it
+    takes the two pages in two resumed runs; ``follow`` drains the log
+    in one."""
+    from couch_to_postgres_spark.streaming.search_stream import live_doclen
+    from couch_to_postgres_spark.streaming.vector_stream import (
+        live_vector_ids,
+    )
+
+    register(spark)
+    couch.changes_pages = list(INDEXED_PAGES)
+    changes = (
+        spark.read.format("couchdb")
+        .option("url", couch.url)
+        .option("database", "db")
+        .load()
+    )
+    write_change_log(changes, str(tmp_path / "log"), num_files=1)
+
+    def run(name, start, runs):
+        root = tmp_path / name
+        for pages in runs:
+            couch.changes_pages = list(pages)
+            start(
+                mirror_path=str(root / "mirror"),
+                checkpoint_path=str(root / "ckpt"),
+                search_index_path=str(root / "sidx"),
+                vector_index_path=str(root / "vidx"),
+                vector_cells=2,
+            ).awaitTermination(120)
+        return (
+            sorted(map(tuple, read_mirror(spark, str(root / "mirror")).collect())),
+            sorted(
+                r["doc_id"]
+                for r in live_doclen(spark, str(root / "sidx")).collect()
+            ),
+            sorted(
+                r["vec_id"]
+                for r in live_vector_ids(spark, str(root / "vidx")).collect()
+            ),
+        )
+
+    from_file = run(
+        "file", lambda **kw: follow(spark, str(tmp_path / "log"), **kw), [[]]
+    )
+    from_couch = run(
+        "couch",
+        lambda **kw: follow_couch(spark, couch.url, "db", **kw),
+        [[p] for p in INDEXED_PAGES],
+    )
+    assert from_couch == from_file
+    mirror_rows, doclen_ids, vector_ids = from_couch
+    live = [f"d{i}" for i in range(8) if i != 2]
+    assert [r[0] for r in mirror_rows] == live
+    assert doclen_ids == live
+    assert vector_ids == [d for d in live if d != "d3"]

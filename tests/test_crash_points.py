@@ -133,6 +133,48 @@ def test_mirror_fold_crash_sweep(spark, tmp_path, mirror_with_delta):
     _sweep(tmp_path, mirror_with_delta, write, _mirror_observe(spark))
 
 
+def test_mirror_bootstrap_crash_before_meta(spark, tmp_path, monkeypatch):
+    """A bootstrap does no rename: it writes the bucket dirs, then the
+    meta file. A crash between the two leaves bucket dirs and no meta,
+    which means no mirror yet — the replayed batch bootstraps again, at
+    the bucket count it sizes (16), not one read off the dirs the crash
+    left (the batch leaves the highest buckets empty)."""
+    import zlib
+
+    from couch_to_postgres_spark.streaming import partitioned
+
+    ids = ["d0", "d1", "d3", "d4", "d6"]
+    assert max(zlib.crc32(i.encode()) % 16 for i in ids) < 15
+    batch = spark.createDataFrame(
+        [
+            (n + 1, i, False, f'{{"_id":"{i}","_rev":"1-a","n":{n}}}')
+            for n, i in enumerate(ids)
+        ],
+        CHANGES_SCHEMA,
+    )
+    real = partitioned.write_meta
+    calls = [0]
+
+    def write_meta(path, meta):
+        calls[0] += 1
+        if calls[0] == 1:
+            raise Crash("write_meta")
+        real(path, meta)
+
+    monkeypatch.setattr(partitioned, "write_meta", write_meta)
+    path = str(tmp_path / "mirror")
+    with pytest.raises(Crash):
+        upsert_partitioned_mirror(spark, path, batch)
+    assert any(d.startswith("bucket=") for d in os.listdir(path))
+    assert read_partitioned_mirror(spark, path).count() == 0  # no mirror yet
+    upsert_partitioned_mirror(spark, path, batch)
+    check = validate_mirror(spark, path)
+    assert check["ok"], check
+    assert check["num_buckets"] == 16
+    assert read_partitioned_mirror(spark, path).count() == len(ids)
+    assert [i for i, _ in _state(spark, path)] == sorted(ids)
+
+
 DOCS = [
     (1, "spark merges the window rows"),
     (2, "window functions rank rows"),

@@ -138,10 +138,10 @@ def test_datasource_longpoll_with_reconnect_end_to_end(spark, couch, tmp_path):
     stream still lands the rows — resume + backoff through the whole
     Spark source path."""
     from couch_to_postgres_spark.sources.couchdb_source import register
-    from couch_to_postgres_spark.streaming.pipeline import (
-        read_mirror,
-        upsert_mirror,
+    from couch_to_postgres_spark.streaming.partitioned import (
+        upsert_partitioned_mirror,
     )
+    from couch_to_postgres_spark.streaming.pipeline import read_mirror
 
     register(spark)
     couch.fail_changes = 1
@@ -159,7 +159,7 @@ def test_datasource_longpoll_with_reconnect_end_to_end(spark, couch, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            lambda batch, _eid: upsert_mirror(
+            lambda batch, _eid: upsert_partitioned_mirror(
                 batch.sparkSession, str(tmp_path / "mirror"), batch
             )
         )

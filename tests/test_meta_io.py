@@ -113,21 +113,6 @@ def test_overwrite_is_atomic_in_place(spark, tmp_path):
     assert read_meta_rows(spark, p)[0]["n_live"] == 200
 
 
-def test_overwrite_upgrades_spark_written_dir(spark, tmp_path):
-    """A dir a Spark coalesce(1) write laid down (foreign part names,
-    _SUCCESS marker) converges to the single canonical part on the
-    first driver-side rewrite — stale parts unlinked, no duplicates."""
-    p = str(tmp_path / "meta_legacy")
-    spark.createDataFrame([(64, 4, 100, 5.0)], DDL).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(p)
-    write_meta_rows(spark, p, [(64, 4, 300, 7.0)], DDL)
-    rows = read_meta_rows(spark, p)
-    assert len(rows) == 1 and rows[0]["n_live"] == 300
-    files = [f for f in os.listdir(p) if not f.startswith((".", "_"))]
-    assert files == ["part-00000-meta.parquet"]
-
-
 def test_concurrent_reader_never_sees_empty(spark, tmp_path):
     """The ADVICE-r10 regression pin: a lock-free reader racing the
     atomic in-place swap sees the old row or the new row, NEVER [] —
@@ -157,28 +142,3 @@ def test_concurrent_reader_never_sees_empty(spark, tmp_path):
         stop.set()
         t.join(timeout=30)
     assert not failures, f"reader saw non-1-row meta: {failures[:3]}"
-
-
-def test_canonical_part_preferred_over_stale_foreign_part(spark, tmp_path):
-    """ADVICE r11: during the one-time upgrade of a Spark-written dir,
-    between the canonical part's os.replace and the legacy part's
-    unlink, a dataset read returns TWO rows. read_meta_rows must prefer
-    the canonical part alone whenever it exists — the stale sibling is
-    invisible, for single- and multi-row metas alike."""
-    import shutil
-
-    p = str(tmp_path / "meta_two_parts")
-    # legacy Spark-written dir (foreign part name)
-    spark.createDataFrame([(64, 4, 100, 5.0)], DDL).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(p)
-    legacy = [f for f in os.listdir(p) if not f.startswith((".", "_"))]
-    assert len(legacy) == 1
-    saved = str(tmp_path / "saved.parquet")
-    shutil.copyfile(os.path.join(p, legacy[0]), saved)
-    # upgrade write, then RESTORE the legacy part — the frozen
-    # mid-transition state (replace done, unlink not yet)
-    write_meta_rows(spark, p, [(64, 4, 300, 7.0)], DDL)
-    shutil.copyfile(saved, os.path.join(p, legacy[0]))
-    rows = read_meta_rows(spark, p)
-    assert len(rows) == 1 and rows[0]["n_live"] == 300

@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 from couch_to_postgres_spark.operators.cdc import apply_changes, latest_changes
 from couch_to_postgres_spark.operators.mirror import CHANGES_SCHEMA, docs_mirror
 from couch_to_postgres_spark.sources.changes import changes_from_events, write_change_log
+from couch_to_postgres_spark.streaming.pipeline import follow
 from couch_to_postgres_spark.streaming.partitioned import (
-    follow_partitioned,
+    read_meta,
     read_partitioned_mirror,
     upsert_partitioned_mirror,
     write_partitioned_mirror,
@@ -90,7 +91,7 @@ def test_partition_pruned_read(spark, sf_dir, tmp_path):
 def test_streaming_follow_partitioned(spark, sf_dir, tmp_path):
     changes = changes_from_events(spark, sf_dir, delete_type="error").cache()
     write_change_log(changes, str(tmp_path / "log"))
-    q = follow_partitioned(
+    q = follow(
         spark,
         str(tmp_path / "log"),
         str(tmp_path / "mirror"),
@@ -98,6 +99,7 @@ def test_streaming_follow_partitioned(spark, sf_dir, tmp_path):
         num_buckets=N_BUCKETS,
     )
     q.awaitTermination(120)
+    assert read_meta(str(tmp_path / "mirror"))["num_buckets"] == N_BUCKETS
     latest = latest_changes(changes)
     expected = {
         r["id"]: r["doc"] for r in latest.filter(~F.col("deleted")).collect()

@@ -19,7 +19,8 @@ from couch_to_postgres_spark.operators.mirror import docs_mirror
 from couch_to_postgres_spark.sinks.writeback import writeback_bulk
 from couch_to_postgres_spark.sources.bridge import drain_once
 from couch_to_postgres_spark.sources.couchdb import CouchClient
-from couch_to_postgres_spark.streaming.pipeline import follow, read_mirror, upsert_mirror
+from couch_to_postgres_spark.streaming.partitioned import write_partitioned_mirror
+from couch_to_postgres_spark.streaming.pipeline import follow, read_mirror
 from tests.test_writeback import RecordingCouch
 
 
@@ -34,13 +35,13 @@ def test_full_writeback_round_trip(spark, sf_dir, couch, tmp_path):
     mirror_path = str(tmp_path / "mirror")
     # 0. a replicated mirror exists (rev 1-* docs)
     base = docs_mirror(spark, sf_dir, with_rev=True)
-    base.write.parquet(mirror_path)
+    write_partitioned_mirror(base, mirror_path, 4)
     n0 = base.count()
 
     # 1. mirror-side UPDATE…WHERE: bump a field on a 25-doc subset and
     #    write it back (the reference's trigger path, README.md:620-621)
     subset = (
-        spark.read.parquet(mirror_path)
+        read_mirror(spark, mirror_path)
         .filter(json_get("doc", "source") == "src1")
         .withColumn("doc", json_object_set_key("doc", "flagged", F.lit("yes")))
     )
@@ -96,11 +97,11 @@ def test_round_trip_with_conflicting_revs(spark, sf_dir, couch, tmp_path):
     replay is all-NOOP."""
     mirror_path = str(tmp_path / "mirror")
     base = docs_mirror(spark, sf_dir, with_rev=True)
-    base.write.parquet(mirror_path)
+    write_partitioned_mirror(base, mirror_path, 4)
     n0 = base.count()
 
     subset = (
-        spark.read.parquet(mirror_path)
+        read_mirror(spark, mirror_path)
         .filter(json_get("doc", "source") == "src1")
         .withColumn("doc", json_object_set_key("doc", "flagged", F.lit("yes")))
     )

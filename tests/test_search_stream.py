@@ -788,8 +788,8 @@ def test_maxscore_exact_after_avgdl_drift_folds(spark, tmp_path):
 
 def test_maxscore_gates_fall_back_exactly(spark, tmp_path):
     """Every gate must fall back to the exact full path, never fork
-    semantics: non-stamped (k1, b), k above the stored top-G, a
-    candidates= filter, and a legacy meta without the impact layer."""
+    semantics: non-stamped (k1, b), k above the stored top-G and a
+    candidates= filter."""
     docs = _synth_corpus(n=80)
     idx = _compacted(spark, tmp_path, docs, "gates_idx")
     qtab = spark.createDataFrame(
@@ -819,50 +819,6 @@ def test_maxscore_gates_fall_back_exactly(spark, tmp_path):
     got = bm25_topk_from_index(spark, idx, qtab, k=5, candidates=cands, diag=diag)
     assert diag["pruned"] is False
     assert {r["doc_id"] for r in got.collect()} <= set(range(1, 31))
-
-
-def test_maxscore_legacy_meta_falls_back_then_fold_upgrades(spark, tmp_path):
-    """A pre-impact-layer base (meta without impact_k1) must (a) read
-    via the exact full path and (b) be upgraded by the next incremental
-    fold via one full rewrite — after which the pruned read engages."""
-    from couch_to_postgres_spark.streaming.meta_io import (
-        read_meta_rows,
-        write_meta_rows,
-    )
-    from couch_to_postgres_spark.streaming.search_stream import (
-        compact_index_incremental,
-    )
-
-    docs = _synth_corpus(n=60)
-    idx = _compacted(spark, tmp_path, docs, "legacy_idx")
-    meta_path = os.path.join(idx, "base", "meta")
-    row = read_meta_rows(spark, meta_path)[0]
-    write_meta_rows(
-        spark, meta_path,
-        [(int(row["token_buckets"]), int(row["id_subbuckets"]),
-          int(row["n_live"]), float(row["sum_dl"]))],
-        "token_buckets int, id_subbuckets int, n_live long, sum_dl double",
-    )
-    qtab = spark.createDataFrame([(1, "common")], "query_id int, term string")
-    diag = {}
-    got = bm25_topk_from_index(spark, idx, qtab, k=5, diag=diag)
-    assert diag["pruned"] is False
-    assert _rows(got) == _rows(_fresh(spark, docs, qtab, k=5))
-    # churn + fold: the legacy gate takes the full-upgrade path
-    search_index_batch(spark, idx, _changes(
-        spark, [(9001, 1, False, "common rewritten text")]
-    ))
-    st = compact_index_incremental(spark, idx)
-    assert st["mode"] == "full"
-    live_docs = [(1, "common rewritten text")] + [
-        (d, t) for d, t in docs if d != 1
-    ]
-    diag = {}
-    got = bm25_topk_from_index(
-        spark, idx, qtab, k=5, diag=diag, pruned="force"
-    )
-    assert diag["pruned"] is True
-    assert _rows(got) == _rows(_fresh(spark, live_docs, qtab, k=5))
 
 
 def test_maxscore_randomized_equivalence(spark, tmp_path):

@@ -6,7 +6,10 @@ the Spark fallback. And stored-state directory swaps go through
 ``extensions/ann.py``) renames or moves paths itself. And the LSM
 bucket rule (``F.hash``) appears under ``streaming/`` only in
 ``lsm.py``, which the vector index uses instead of reaching into the
-search index. And the coarse quantizer trains without ``pyspark.ml``."""
+search index. And the coarse quantizer trains without ``pyspark.ml``.
+And the mirror has one layout and one batch merge: ``pipeline.py``
+starts one ``foreachBatch`` writer, and no module brings back the
+flat sink (``upsert_mirror``, ``CURRENT_LINK``, a ``sink`` parameter)."""
 
 import ast
 import os
@@ -254,3 +257,74 @@ def test_quantizer_and_indexes_train_without_mllib():
         if lines:
             found[os.path.relpath(path, PACKAGE)] = lines
     assert not found, f"pyspark.ml imports: {found}"
+
+
+def _foreach_batch_calls(source: str) -> list[int]:
+    """Line numbers of ``<x>.writeStream.foreachBatch(…)`` calls."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "foreachBatch"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "writeStream"
+    )
+
+
+def _flat_sink_defs(source: str) -> list[tuple[int, str]]:
+    """``(line, what)`` for each definition of ``upsert_mirror`` or
+    ``CURRENT_LINK``, and each function parameter named ``sink``."""
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if node.name == "upsert_mirror":
+                found.append((node.lineno, "def upsert_mirror"))
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if arg.arg == "sink":
+                    found.append((node.lineno, f"{node.name}(sink=)"))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id == "CURRENT_LINK":
+                    found.append((node.lineno, "CURRENT_LINK"))
+    return sorted(found)
+
+
+def test_merge_detectors_see_every_form():
+    src = (
+        "CURRENT_LINK = 'current'\n"
+        "def upsert_mirror(spark, path, batch):\n"
+        "    pass\n"
+        "def follow(spark, path, *, sink='partitioned'):\n"
+        "    a = stream.writeStream.foreachBatch(merge)\n"
+        "    b = stream.writeStream.foreachBatch(other).start()\n"
+        "    w.foreachBatch(merge)\n"
+    )
+    assert _foreach_batch_calls(src) == [5, 6]
+    assert _flat_sink_defs(src) == [
+        (1, "CURRENT_LINK"), (2, "def upsert_mirror"), (4, "follow(sink=)"),
+    ]
+
+
+def test_one_mirror_layout_and_one_batch_merge():
+    """``follow`` and ``follow_couch`` share one merge and one writer
+    setup, so ``pipeline.py`` holds a single ``foreachBatch`` writer; and
+    the flat MVCC sink stays deleted from every library module."""
+    found = {}
+    with open(os.path.join(STREAMING, "pipeline.py")) as f:
+        calls = _foreach_batch_calls(f.read())
+    if len(calls) > 1:
+        found["streaming/pipeline.py foreachBatch writers"] = calls
+    for root, dirs, files in os.walk(PACKAGE):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                defs = _flat_sink_defs(f.read())
+            if defs:
+                found[os.path.relpath(path, PACKAGE)] = defs
+    assert not found, f"a second merge or flat-sink code: {found}"

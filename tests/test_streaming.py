@@ -27,7 +27,6 @@ from couch_to_postgres_spark.streaming.pipeline import (
     follow,
     mirror_doc_count,
     read_mirror,
-    upsert_mirror,
 )
 
 
@@ -117,25 +116,6 @@ def test_count_reconciliation_after_stream(spark, sf_dir, tmp):
     q = follow(spark, f"{tmp}/log", f"{tmp}/mirror", f"{tmp}/ckpt")
     q.awaitTermination(120)
     assert mirror_doc_count(spark, f"{tmp}/mirror") == len(expected_state(changes))
-
-
-def test_upsert_mirror_mvcc_layout(spark, sf_dir, tmp):
-    """Versioned layout: 'current' symlink, bounded version retention,
-    reads resolve to an immutable version dir (safe under concurrent
-    swaps)."""
-    import os
-
-    changes = changes_from_events(spark, sf_dir, delete_type="error")
-    for _ in range(3):
-        upsert_mirror(spark, f"{tmp}/mirror", changes)
-    link = f"{tmp}/mirror/current"
-    assert os.path.islink(link)
-    versions = [d for d in os.listdir(f"{tmp}/mirror") if d.startswith("v-")]
-    assert len(versions) == 2  # KEEP_VERSIONS
-    assert os.path.realpath(link).startswith(
-        os.path.realpath(f"{tmp}/mirror")
-    )
-    assert read_mirror(spark, f"{tmp}/mirror").count() > 0
 
 
 def make_two_feed_registry(spark, sf_dir, tmp):
@@ -248,6 +228,17 @@ def test_control_plane_http(spark, sf_dir, tmp):
         d.stop_all()
 
 
+def test_fsck_reports_absent_mirror_without_layout(spark, tmp):
+    """A registered feed whose mirror does not exist yet (no meta file)
+    reports ``ok=None`` on `/_fsck` and claims no layout."""
+    save_registry(
+        f"{tmp}/registry.json",
+        [FeedConfig(name="fresh", changes_path=f"{tmp}/log")],
+    )
+    d = Daemon(spark, f"{tmp}/registry.json", f"{tmp}/data")
+    assert d.fsck() == {"fresh": {"ok": None}}
+
+
 def test_live_count_view_tracks_stream(spark, sf_dir, tmp):
     """A streamed feed maintains its count view incrementally per batch;
     after the drain the view equals a fresh GROUP BY over the mirror —
@@ -295,27 +286,6 @@ def test_follow_default_sink_is_partitioned(spark, sf_dir, tmp):
     assert any(
         d.startswith("bucket=") for d in os.listdir(f"{tmp}/mirror")
     )
-    assert mirror_state(spark, f"{tmp}/mirror") == expected_state(changes)
-
-
-def test_follow_respects_existing_flat_layout(spark, sf_dir, tmp):
-    """A mirror already in the flat MVCC layout keeps merging flat even
-    under the partitioned default — layout continuity beats the argument
-    (no silent state fork)."""
-    import os
-
-    from couch_to_postgres_spark.streaming.partitioned import read_meta
-
-    changes = changes_from_events(spark, sf_dir, delete_type="error").cache()
-    first = changes.filter(F.col("seq") < 600)
-    rest = changes.filter(F.col("seq") >= 600)
-    # seed a FLAT mirror directly
-    upsert_mirror(spark, f"{tmp}/mirror", first)
-    assert os.path.islink(f"{tmp}/mirror/current")
-    write_change_log(rest, f"{tmp}/log")
-    q = follow(spark, f"{tmp}/log", f"{tmp}/mirror", f"{tmp}/ckpt")
-    q.awaitTermination(120)
-    assert read_meta(f"{tmp}/mirror") is None  # still flat
     assert mirror_state(spark, f"{tmp}/mirror") == expected_state(changes)
 
 
