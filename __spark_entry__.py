@@ -811,7 +811,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.col("vec_id").cast("long").alias("seq"),
                 "vec_id", F.lit(False).alias("deleted"), "embedding",
             ))
-            # first fold lays the v2 base (full rewrite internally)
+            # the first batch bootstrapped the base: this fold is a noop
             compact_vector_index_incremental(spark, work)
             partner = e.select(
                 F.col("vec_id").alias("pid"),

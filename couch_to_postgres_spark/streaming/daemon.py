@@ -284,8 +284,10 @@ class Daemon:
             # accumulated more churn than the threshold (tail+tombstone
             # rows per live doc — what every from-index read must
             # merge), fold the tail into only the buckets it touched
-            # (VERDICT r08 #2); the first compaction of a fresh index
-            # falls back to the full rewrite internally. The telemetry
+            # (VERDICT r08 #2). A feed's first batch bootstraps the
+            # base, so a fresh index carries no debt; one whose first
+            # batch found it non-empty gets the full rewrite on its
+            # first fold, internally. The telemetry
             # the fold already computes (VERDICT r09 #5) rides the
             # watchdog result and the feed's `/_status` row. The
             # SHINGLE twin compacts WITHOUT the MaxScore impact layer

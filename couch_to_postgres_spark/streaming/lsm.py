@@ -19,6 +19,9 @@ and impacts for search; cell assignment for vectors).
 * **The read-mostly gate** (:func:`base_is_live`): stats-bearing meta,
   no tail, no tombstones — the base is then the live set, unique per
   doc, and readers skip the dedup and the liveness join.
+* **The bootstrap rule** (:func:`is_empty`): a batch carrying upserts
+  that reaches an index holding nothing is written as its compacted
+  base, not as a tail.
 * **Churn discovery** (:func:`churn`): the ids with a tail version or a
   tombstone, their count and their id buckets, from one job.
 * **The fold's bookkeeping** (:func:`meta_delta`, :func:`fold_publish`):
@@ -39,8 +42,9 @@ from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.streaming.commit import publish
 from couch_to_postgres_spark.streaming.meta_io import (
+    component_rows,
     open_parquet,
-    read_components,
+    read_meta_rows,
     try_open_parquet,
 )
 
@@ -160,6 +164,19 @@ def base_is_live(
     )
 
 
+def is_empty(
+    spark: SparkSession, meta_path: str, tail_path: str, tomb_path: str
+) -> bool:
+    """True when the index holds nothing: no meta row, no tail row and
+    no tombstone — the state in which a batch's upserts bootstrap the
+    base. Meta table and footers only: no Spark job on a local path."""
+    return (
+        not read_meta_rows(spark, meta_path)
+        and not component_rows(spark, tail_path)
+        and not component_rows(spark, tomb_path)
+    )
+
+
 def churn(
     tail_ids: DataFrame, tomb: DataFrame, id_col: str, n_buckets: int
 ) -> tuple[DataFrame, int, list[int]]:
@@ -222,19 +239,14 @@ def tail_status(
     spark: SparkSession,
     tail_path: str,
     tomb_path: str,
-    id_col: str,
     meta_rows: list[dict],
 ) -> tuple[int, int, int | None]:
     """``(tail rows, tombstones, n_live)``; ``n_live`` is meta's exact
     count when the base is stats-bearing and there is no churn, else
-    ``None`` (the caller counts the live set its own way)."""
-    tail, tomb = read_components(
-        spark,
-        [(tail_path, f"{id_col} long"), (tomb_path, f"{id_col} long")],
-        id_col,
-    )
-    tail_rows = tail.count()
-    n_tomb = tomb.count()
+    ``None`` (the caller counts the live set its own way). The counts
+    are footer sums on local paths: no Spark job."""
+    tail_rows = component_rows(spark, tail_path)
+    n_tomb = component_rows(spark, tomb_path)
     n_live = None
     if meta_rows and "n_live" in meta_rows[0] and not tail_rows and not n_tomb:
         n_live = int(meta_rows[0]["n_live"])

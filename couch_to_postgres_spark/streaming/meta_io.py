@@ -19,14 +19,16 @@ Three kinds of stored-state access never need a Spark job:
   exactly the schema Spark would give them.
 * **Row counts.** :func:`parquet_rows` sums the footers' ``num_rows``
   over the same file set Spark would read — the mirror's row
-  accounting costs file opens, not a job per recount.
+  accounting and the indexes' tail counts (:func:`component_rows`)
+  cost file opens, not a job per recount.
 
 All of this applies to LOCAL paths — the only filesystem the
 rename-based publish step (``commit.publish``) operates on anyway. For any other scheme (hdfs://, s3a://, …) the meta tables and
 opens take the Spark route — as does an open of a local path with no
 data file yet, so PATH_NOT_FOUND and empty-directory errors surface
-exactly as Spark raises them — and :func:`parquet_rows` refuses the
-path (its one caller, the partitioned mirror, is local-only). The file
+exactly as Spark raises them — :func:`component_rows` counts with
+Spark, and :func:`parquet_rows` refuses the path (the partitioned
+mirror, its other caller, is local-only). The file
 formats are interchangeable both ways: pyarrow writes a plain part file
 into the same directory layout Spark produces, and both readers skip
 ``_``/``.``-prefixed names (``_SUCCESS``, ``.crc``, staging temps).
@@ -199,6 +201,16 @@ def parquet_rows(files_or_dirs: Iterable[str]) -> int:
             raise ValueError(f"parquet_rows reads local paths only: {p}")
         total += sum(pq.read_metadata(f).num_rows for f in _data_files(local))
     return total
+
+
+def component_rows(spark: SparkSession, path: str) -> int:
+    """Rows of one stored component (0 when it does not exist): the
+    footers' sum on a local path, no Spark job; elsewhere a Spark
+    count of whatever :func:`try_open_parquet` opens."""
+    if _local(path) is not None:
+        return parquet_rows([path])
+    df = try_open_parquet(spark, path)
+    return 0 if df is None else df.count()
 
 
 def _fields(schema: str) -> list[tuple[str, str]]:

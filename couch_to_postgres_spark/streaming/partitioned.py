@@ -51,6 +51,7 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from couch_to_postgres_spark.operators.cdc import apply_changes, latest_changes
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
@@ -67,6 +68,9 @@ from couch_to_postgres_spark.streaming.meta_io import (
 )
 
 DEFAULT_BUCKETS = 64
+#: the largest auto-sized bucket count; every auto count is a power of
+#: two dividing it
+MAX_BUCKETS = 65536
 META_FILE = "_mirror_meta.json"
 DELTA_DIR = "_delta"
 #: auto-sizing target: rows per bucket (≈100 MB at ~1 KB/doc — a bucket
@@ -90,13 +94,13 @@ def bucket_of(id_col: Column, num_buckets: int = DEFAULT_BUCKETS) -> Column:
 
 def auto_num_buckets(n_rows: int) -> int:
     """Size the bucket count from the mirror's (initial-load) row count:
-    next power of two of rows/TARGET, clamped to [16, 65536]. Powers of
-    two keep future split/merge rebucketing cheap (bucket b of 2N is
-    b or b+N of N)."""
+    next power of two of rows/TARGET, clamped to [16, MAX_BUCKETS].
+    Powers of two keep future split/merge rebucketing cheap (bucket b of
+    2N is b or b+N of N)."""
     if n_rows <= 0:
         return 16
     raw = max(1, round(n_rows / TARGET_ROWS_PER_BUCKET))
-    return int(min(65536, max(16, 2 ** math.ceil(math.log2(raw)))))
+    return int(min(MAX_BUCKETS, max(16, 2 ** math.ceil(math.log2(raw)))))
 
 
 def write_meta(path: str, meta: dict) -> None:
@@ -329,24 +333,27 @@ def _upsert_locked(
 ) -> list[int]:
     meta = read_meta(path)
     num_buckets = resolve_num_buckets(path, num_buckets)
-    batch = batch.persist()
+    # a batch the caller already cached (the pipeline's shared raw
+    # batch, read again by the index twins) keeps its cache entry:
+    # only a persist made here is undone here
+    own_cache = batch.storageLevel == StorageLevel.NONE
+    if own_cache:
+        batch = batch.persist()
     try:
+        # one job materializes the persist and yields BOTH the batch
+        # size and the touched buckets (driver-bounded: <= the grouping's
+        # bucket count) — this runs per micro-batch, so job launches are
+        # the trickle-feed floor. An auto-sized bootstrap groups by the
+        # finest bucket count: every auto count divides MAX_BUCKETS, so
+        # ``fine % N`` is the bucket under the N the batch size picks.
+        grouping = MAX_BUCKETS if num_buckets is None else num_buckets
+        bucket_rows = batch.groupBy(
+            bucket_of(F.col("id"), grouping).alias("bucket")
+        ).count().collect()
+        n_batch = sum(int(r["count"]) for r in bucket_rows)
         if num_buckets is None:
-            n_batch = batch.count()
             num_buckets = auto_num_buckets(n_batch)
-            bucket_rows = batch.groupBy(
-                bucket_of(F.col("id"), num_buckets).alias("bucket")
-            ).count().collect()
-        else:
-            # one job materializes the persist and yields BOTH the batch
-            # size and the touched buckets (driver-bounded: <= num_buckets
-            # rows) — this runs per micro-batch, so job launches are the
-            # trickle-feed floor
-            bucket_rows = batch.groupBy(
-                bucket_of(F.col("id"), num_buckets).alias("bucket")
-            ).count().collect()
-            n_batch = sum(int(r["count"]) for r in bucket_rows)
-        touched = sorted(r["bucket"] for r in bucket_rows)
+        touched = sorted({r["bucket"] % num_buckets for r in bucket_rows})
         if not touched:
             return []
         if meta is None:  # bootstrap: always a full layout write
@@ -402,7 +409,8 @@ def _upsert_locked(
             )
         return touched
     finally:
-        batch.unpersist()
+        if own_cache:
+            batch.unpersist()
 
 
 def _append_delta(

@@ -137,6 +137,9 @@ def _feed_shingle_index(
             _latest_text_changes(batch, type_filter, map_hook, search_text),
             shingle_n=shingle_n,
         ),
+        # a bootstrapped shingle base takes the impact-less layout the
+        # daemon's folds keep for the twin
+        impacts_default=False,
     )
 
 
@@ -437,7 +440,14 @@ def follow_couch(
     ``limit`` is the A2 admission-control page bound. No quarantine option: the source
     parses upstream and surfaces transport errors typed (no_db_file ≠
     transient). The merge, the mirror layout and the index twins are
-    exactly those of :func:`follow`."""
+    exactly those of :func:`follow`.
+
+    The ``couchdb`` source does not support ``Trigger.AvailableNow``:
+    Spark falls back to one batch, so with the default trigger one
+    start drains one ``_changes`` page (``limit`` rows), not the whole
+    backlog — restart it, or pass a ``processingTime`` trigger, to
+    catch up. A drain-to-the-end start waits until Spark's Python data
+    sources can report an available-now end offset."""
     from couch_to_postgres_spark.sources.couchdb_source import register
 
     register(spark)

@@ -7,21 +7,27 @@ State (plain parquet under one index root):
 * ``doclen`` — (doc_id, dl, seq), one row per ingested doc version;
 * ``postings`` — (doc_id, token, tf, seq), per-version term frequencies;
 * ``tombstones`` — (doc_id, seq) delete markers;
-* ``base/`` (after :func:`compact_index`) — the compacted base:
-  ``base/doclen`` (live rows, ``id_bucket=N`` dirs, each row carrying
-  the doc's token buckets), ``base/postings`` and ``base/dfs`` in
-  ``token_bucket=N/id_sub=M`` dirs, ``base/meta`` (1-row: bucket
-  counts, ``n_live``/``sum_dl``, the impact-bound stamp).
+* ``base/`` — the compacted base, laid down by a compaction
+  (:func:`compact_index`) or by the first batch carrying upserts into
+  an empty index: ``base/doclen`` (live rows, ``id_bucket=N`` dirs,
+  each row carrying the doc's token buckets), ``base/postings`` and
+  ``base/dfs`` in ``token_bucket=N/id_sub=M`` dirs, ``base/meta``
+  (1-row: bucket counts, ``n_live``/``sum_dl``, the impact-bound
+  stamp).
 
-The three tail dirs keep receiving appends after compaction, and reads
-merge base ∪ tail. Liveness, bucketing, churn discovery, the
+The three tail dirs receive every batch after the base exists, and
+reads merge base ∪ tail. Liveness, bucketing, churn discovery, the
 read-mostly gate and the fold's publish are the shared LSM core
 (:mod:`streaming.lsm`); this module supplies the payload — the
 postings, dfs and impact fold and BM25 scoring over it.
 
 Plan shape:
 
-* ingest is O(changed docs): tokenize the batch, append skinny rows;
+* ingest is O(changed docs): tokenize the batch, append skinny rows.
+  A batch reaching an empty index (no meta, no tail, no tombstone —
+  footers only, no job) is written once, as the base a full fold of
+  its tail would give, so an initial sync never writes a tail and then
+  folds it;
 * query-time liveness is one partial-aggregated groupBy over the skinny
   doclen/tombstone files, never postings or text;
 * the postings scan is filtered to the query terms before any shuffle,
@@ -52,6 +58,7 @@ from couch_to_postgres_spark.extensions.text import _words
 from couch_to_postgres_spark.streaming import lsm
 from couch_to_postgres_spark.streaming.commit import publish, staging, writing
 from couch_to_postgres_spark.streaming.meta_io import (
+    component_rows,
     open_parquet,
     read_components,
     read_meta_rows,
@@ -121,6 +128,7 @@ def search_index_batch(
     id_col: str = "doc_id",
     seq_col: str = "seq",
     deleted_col: str = "deleted",
+    impacts_default: bool = True,
 ) -> SearchIndexBatchStats:
     """Apply one micro-batch of changes to the search index.
 
@@ -129,6 +137,19 @@ def search_index_batch(
     Multiple changes to one doc within a batch collapse to the max-seq
     one (same last-write-wins discipline as ``operators.cdc``). Cost is
     O(changed docs): tokenize the batch, append three skinny files.
+
+    Bootstrap: a batch carrying upserts that reaches an EMPTY index (no
+    ``base/meta``, no tail doclen row, no tombstone — read from the meta
+    table and the footers, no Spark job) is written as the index's
+    compacted base instead of a tail, the layout
+    :func:`compact_index` would fold that tail into, so the first
+    compaction has nothing to do. ``impacts_default`` picks that base's
+    impact mode exactly as it does for
+    :func:`compact_index_incremental`'s first fold (the pipeline passes
+    False for the fingerprint-token shingle twin). The base is staged in
+    a sibling and lands in one ``commit.publish``: a crash before it
+    leaves the index empty and the replayed batch bootstraps again; a
+    crash after it makes the replay append a tail.
 
     Write-order INVARIANT (load-bearing): ``doclen`` is appended BEFORE
     ``postings``. :func:`bm25_topk_from_index`'s read-mostly fast path
@@ -145,7 +166,8 @@ def search_index_batch(
     out from under a half-written batch."""
     with writing(index_path):
         return _search_index_batch_locked(
-            spark, index_path, changes, text_col, id_col, seq_col, deleted_col
+            spark, index_path, changes, text_col, id_col, seq_col,
+            deleted_col, impacts_default,
         )
 
 
@@ -157,8 +179,17 @@ def _search_index_batch_locked(
     id_col: str,
     seq_col: str,
     deleted_col: str,
+    impacts_default: bool,
+    attrs: DataFrame | None = None,
 ) -> SearchIndexBatchStats:
+    """The batch under the index's lock. ``attrs`` (id, *attrs, seq) —
+    the upserts' per-doc attribute rows :func:`stats_stream.stats_index_batch`
+    records — land beside the batch: appended to the ``attrs`` tail, or
+    written into the bootstrapped ``base/attrs`` for the live docs."""
     doclen_path, postings_path, tomb_path = _paths(index_path)
+    empty = lsm.is_empty(
+        spark, _base_paths(index_path)[2], doclen_path, tomb_path
+    )
 
     latest = (
         changes.groupBy(id_col)
@@ -197,17 +228,22 @@ def _search_index_batch_locked(
         )
         .persist()
     )
+    words = F.col("toks") if _TOKENIZE_ONCE else _words("text")
+    # NULL-text upserts (custom search_text hook) hold zero tokens; bare
+    # size(NULL) is -1 (under spark.sql.legacy.sizeOfNull) and would
+    # skew the stats
+    dl = F.greatest(F.coalesce(F.size(words), F.lit(0)), F.lit(0))
     # ONE job yields every batch stat — including the postings count,
     # which equals Σ per-upsert distinct tokens (exactly what the
-    # (id, token, seq) groupBy below emits one row per) — and
-    # materializes the persist. A micro-batch used to pay 6-7 job
-    # launches here, pure fixed overhead at trickle-feed batch sizes.
+    # (id, token, seq) groupBy below emits one row per) and the live
+    # length sum a bootstrapped base's meta records — and materializes
+    # the persist. A micro-batch used to pay 6-7 job launches here,
+    # pure fixed overhead at trickle-feed batch sizes.
     # (An Observation on the postings write would be one job fewer
     # still, but a runtime-empty observed write — a delete-only batch —
     # gets its CollectMetrics optimizer-eliminated and the dangling
     # observation corrupts the session for later RDD-closure jobs;
     # found by test_quality_classifier after the delete-all-churn test.)
-    words = F.col("toks") if _TOKENIZE_ONCE else _words("text")
     counts = latest.agg(
         F.coalesce(F.sum("_n_changes"), F.lit(0)).alias("arrived"),
         F.coalesce(
@@ -220,9 +256,6 @@ def _search_index_batch_locked(
             F.sum(
                 F.when(
                     ~F.col("deleted"),
-                    # a NULL-text upsert (custom search_text hook) holds
-                    # zero postings; bare size(NULL) is -1 (under
-                    # spark.sql.legacy.sizeOfNull) and would skew the stat
                     F.greatest(
                         F.coalesce(
                             F.size(F.array_distinct(words)), F.lit(0)
@@ -233,6 +266,9 @@ def _search_index_batch_locked(
             ),
             F.lit(0),
         ).alias("n_postings"),
+        F.coalesce(
+            F.sum(F.when(~F.col("deleted"), dl)), F.lit(0)
+        ).alias("sum_dl"),
     ).collect()[0]
     arrived, n_up, n_del, n_postings = (
         int(counts["arrived"]), int(counts["n_up"]),
@@ -242,29 +278,54 @@ def _search_index_batch_locked(
     upserts = latest.filter(~F.col("deleted"))
     doclen_rows = upserts.select(
         F.col(id_col),
-        # NULL-text upserts hold zero tokens (same guard as n_postings)
-        F.greatest(F.coalesce(F.size(words), F.lit(0)), F.lit(0))
-        .cast("double")
-        .alias("dl"),
+        dl.cast("double").alias("dl"),
         F.col("seq").cast("long").alias("seq"),
     )
+    # each posting carries its version's dl: the bootstrapped base
+    # stores it, the tail write drops it
     postings_rows = (
         upserts.select(
-            F.col(id_col), F.col("seq"), F.explode(words).alias("token")
+            F.col(id_col),
+            F.col("seq").cast("long").alias("seq"),
+            dl.cast("double").alias("dl"),
+            F.explode(words).alias("token"),
         )
-        .groupBy(id_col, "token", "seq")
+        .groupBy(id_col, "token", "seq", "dl")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .select(id_col, "token", "tf", F.col("seq").cast("long").alias("seq"))
     )
-    # doclen FIRST — the from-index fast path's safety depends on this
-    # order (see the docstring's write-order invariant)
-    doclen_rows.write.mode("append").parquet(doclen_path)
-    postings_rows.write.mode("append").parquet(postings_path)
-
-    if n_del:
-        latest.filter(F.col("deleted")).select(
-            F.col(id_col), F.col("seq").cast("long").alias("seq")
-        ).write.mode("append").parquet(tomb_path)
+    if empty and n_up:
+        # deletes in a bootstrap batch name docs the index never held:
+        # like a full fold, the base keeps no tombstone
+        stage = staging(index_path, "bootstrapping")
+        _write_base(
+            spark, stage, doclen_rows, postings_rows,
+            None if attrs is None
+            else attrs.join(doclen_rows.select(id_col), id_col, "left_semi"),
+            n_live=n_up, sum_dl=float(counts["sum_dl"]),
+            id_col=id_col, token_buckets=64, id_subbuckets=None,
+            impacts=impacts_default,
+        )
+        os.makedirs(index_path, exist_ok=True)
+        publish(
+            index_path,
+            [(os.path.join(index_path, "base"), os.path.join(stage, "base"))],
+            stage,
+        )
+    else:
+        # doclen FIRST — the from-index fast path's safety depends on
+        # this order (see the docstring's write-order invariant)
+        doclen_rows.write.mode("append").parquet(doclen_path)
+        postings_rows.select(id_col, "token", "tf", "seq").write.mode(
+            "append"
+        ).parquet(postings_path)
+        if n_del:
+            latest.filter(F.col("deleted")).select(
+                F.col(id_col), F.col("seq").cast("long").alias("seq")
+            ).write.mode("append").parquet(tomb_path)
+        if attrs is not None:
+            attrs.write.mode("append").parquet(
+                os.path.join(index_path, "attrs")
+            )
 
     latest.unpersist()
     return SearchIndexBatchStats(
@@ -1521,18 +1582,99 @@ def compact_index(
     id_subbuckets: int | None = None,
     impacts: bool = True,
 ) -> None:
-    """Rewrite the index keeping only LIVE rows, into ``out_path/base``:
-    ``base/doclen`` (live rows only), ``base/postings`` laid out in
-    ``pmod(hash(token), token_buckets)`` partition directories so
-    query-term scans prune to the buckets holding the query's terms
-    (bucket count recorded in ``base/meta`` for the read path), no
-    tombstones (no dead versions survive). ``out_path``'s tail dirs
-    start absent — :func:`search_index_batch` keeps appending there and
+    """Rewrite the index keeping only LIVE rows, into ``out_path/base``
+    (the layout :func:`_write_base` lays down): no tombstones, no dead
+    versions, no replay copies. ``out_path``'s tail dirs start absent —
+    :func:`search_index_batch` keeps appending there and
     :func:`bm25_topk_from_index` reads base ∪ tail (the
     log-structured-merge discipline): the append-only tail stays cheap
     to write, the compacted base cheap to read; read amplification
     between compactions is bounded by the update rate, not corpus size.
     ``index_path`` may itself carry a base — compaction merges it.
+
+    This function is the base's SOURCE for a whole index: the live
+    doclen set (:func:`live_doclen`), every posting of a live version
+    (:func:`_full_postings`) and the latest attrs row per live doc
+    (:func:`_all_attrs`). A first batch reaching an empty index feeds
+    the same writer from the batch itself
+    (:func:`_search_index_batch_locked`).
+
+    ``out_path`` must not share component directories with
+    ``index_path``: the dfs/doclen derivations read back files the
+    writer has already written under ``out_path`` (and the staged
+    postings cache can lazily recompute through lineage that re-reads
+    ``index_path``), so an overlapping
+    target would mix half-written state into its own inputs.
+    :func:`compact_index_inplace` (staging sibling + atomic swap) is
+    the supported same-path flow and guarantees this."""
+    live = live_doclen(spark, index_path, id_col).persist()
+    # corpus stats up front: n_live sizes the id_sub fan-out and avgdl
+    # stamps the per-posting impact bounds the writer lays down
+    st = live.agg(
+        F.count(F.lit(1)).alias("n_live"), F.sum("dl").alias("sum_dl")
+    ).collect()[0]
+    # the inner join against live (id, seq) both restricts to live
+    # versions and DENORMALIZES dl onto every posting row — the read
+    # path then never joins doclen for per-doc length.
+    # replay dedup AFTER the live join: the join
+    # already hash-exchanges postings by (id, seq), and HashPartitioning
+    # on a SUBSET of the dedup keys satisfies the dedup aggregate's
+    # ClusteredDistribution on (id, token, seq) — so ordered this way
+    # the dedup rides the join's exchange instead of paying its own
+    # full posting-scale Exchange (3 → 2 posting-scale exchanges in the
+    # full rewrite), and it runs on the post-join LIVE rows (dead
+    # versions already dropped) instead of every replay/dead row.
+    # Semantics are unchanged: replay copies are byte-identical, live
+    # has exactly one row per (id, seq), and the inner join is 1:1 —
+    # dedup before or after commutes exactly (OPTIMIZATION_r14.md has
+    # the measurement).
+    postings = (
+        _full_postings(spark, index_path, id_col)
+        .join(live.select(id_col, "seq", "dl"), on=[id_col, "seq"])
+        .dropDuplicates([id_col, "token", "seq"])
+    )
+    # per-doc attribute state (stats_stream's doc→source map, or any
+    # other seq-wins attrs file) survives compaction as the max-seq row
+    # per LIVE doc
+    attrs = _all_attrs(spark, index_path, id_col)
+    if attrs is not None:
+        other = [c for c in attrs.columns if c not in (id_col, "seq")]
+        attrs = (
+            attrs.groupBy(id_col)
+            .agg(
+                F.max("seq").alias("seq"),
+                *[F.max_by(c, "seq").alias(c) for c in other],
+            )
+            .join(live.select(id_col), id_col)
+            .select(id_col, *other, "seq")
+        )
+    _write_base(
+        spark, out_path, live, postings, attrs,
+        n_live=int(st["n_live"]), sum_dl=float(st["sum_dl"] or 0.0),
+        id_col=id_col, token_buckets=token_buckets,
+        id_subbuckets=id_subbuckets, impacts=impacts,
+    )
+    live.unpersist()
+
+
+def _write_base(
+    spark: SparkSession,
+    out_path: str,
+    live: DataFrame,
+    postings: DataFrame,
+    attrs: DataFrame | None,
+    n_live: int,
+    sum_dl: float,
+    id_col: str,
+    token_buckets: int,
+    id_subbuckets: int | None,
+    impacts: bool,
+) -> None:
+    """Lay down a compacted base under ``out_path/base`` from its
+    source: ``live`` (id, dl, seq) — one row per live doc; ``postings``
+    (id, seq, token, tf, dl) — every posting of a live version, unique
+    per (id, token, seq); ``attrs`` (id, *attrs, seq) — one row per
+    live doc, or None; and the live set's ``n_live``/``sum_dl``.
 
     Base layout (everything the incremental compactor's cost model
     depends on — see :func:`compact_index_incremental`):
@@ -1546,11 +1688,14 @@ def compact_index(
       count and any churned doc touches it — measured 69% of all rows
       behind 46/5120 "affected buckets". Sub-bucketing by id caps the
       rewrite unit at bucket_rows/id_subbuckets, and a churned doc
-      lands in exactly ONE id_sub. ``id_subbuckets=None`` (the
-      default) sizes the fan-out from the live doc count
-      (:func:`_auto_id_subbuckets`): 1 at small corpora — where the
-      layout degenerates to the flat one and the fan-out would be pure
-      write overhead — growing ×4 per ×10 docs (4 at 600 k, 16 at 6 M);
+      lands in exactly ONE id_sub. ``id_subbuckets=None`` sizes the
+      fan-out from the live doc count (:func:`_auto_id_subbuckets`): 1
+      at small corpora — where the layout degenerates to the flat one
+      and the fan-out would be pure write overhead — growing ×4 per
+      ×10 docs (4 at 600 k, 16 at 6 M). Each row carries the doc's
+      ``dl`` and the ``impact0`` bound column (idf-free BM25 term under
+      the stamped k1/b/avgdl) the MaxScore pruned read skips blocks
+      with;
     * ``base/dfs`` partitioned the same way, holding PARTIAL per-token
       document frequencies (readers sum partials over a token's
       sub-dirs — vocab-slice cheap) so the incremental compactor can
@@ -1561,7 +1706,11 @@ def compact_index(
       and carrying a ``buckets`` column — the doc's distinct token
       buckets. A churned doc's OLD rows can then be located without any
       postings scan: read the doc's doclen row (id-bucket-pruned) and
-      explode ``buckets``.
+      explode ``buckets``;
+    * ``base/attrs`` in the same id buckets as doclen, so a fold
+      rewrites only the id buckets its churn touched;
+    * ``base/meta``: bucket counts, ``n_live``/``sum_dl`` and the
+      impact-bound stamp.
 
     Every partitioned write clusters rows by the partition column
     first: without the repartition every shuffle task writes a file
@@ -1577,63 +1726,25 @@ def compact_index(
     twin): their md5 tokens are probed by equality, never BM25-ranked,
     so the bound layer is pure write cost in the steady-state fold;
     every ranked read gates off the sentinel and takes the exact full
-    path.
-
-    ``out_path`` must not share component directories with
-    ``index_path``: the dfs/doclen derivations read back files this
-    function has already written under ``out_path`` (and the staged
-    postings cache can lazily recompute through lineage that re-reads
-    ``index_path``), so an overlapping
-    target would mix half-written state into its own inputs.
-    :func:`compact_index_inplace` (staging sibling + atomic swap) is
-    the supported same-path flow and guarantees this."""
+    path."""
     base_doclen_path, base_postings_path, meta_path = _base_paths(out_path)
-    live = live_doclen(spark, index_path, id_col).persist()
-    # corpus stats up front: n_live sizes the id_sub fan-out and avgdl
-    # stamps the per-posting impact bounds written below
-    st = live.agg(
-        F.count(F.lit(1)).alias("n_live"), F.sum("dl").alias("sum_dl")
-    ).collect()[0]
-    n_live_now = int(st["n_live"])
-    sum_dl_now = float(st["sum_dl"] or 0.0)
-    avgdl_now = (sum_dl_now / n_live_now) if n_live_now else 1.0
+    avgdl = (sum_dl / n_live) if n_live else 1.0
     if id_subbuckets is None:
-        id_subbuckets = _auto_id_subbuckets(n_live_now)
-    postings = _full_postings(spark, index_path, id_col)
-    # the inner join against live (id, seq) both restricts to live
-    # versions and DENORMALIZES dl onto every posting row — the read
-    # path then never joins doclen for per-doc length, and the stored
-    # ``impact0`` (idf-free BM25 term under the stamped k1/b/avgdl)
-    # gives the MaxScore pruned read its block-skippable bound column.
+        id_subbuckets = _auto_id_subbuckets(n_live)
+    staged = (
+        postings.select(id_col, "seq", "token", "tf", "dl")
+        .withColumn("token_bucket", lsm.bucket("token", token_buckets))
+        .withColumn("id_sub", lsm.bucket(id_col, id_subbuckets))
+    )
     # Rows sort (token, impact0 desc) within each partition dir so
     # parquet row-group/page statistics carry tight (token, impact0)
     # ranges — a pushed ``token = t AND impact0 >= cut`` predicate
     # skips the provably-losing blocks at the storage layer (block-max
     # pruning, Ding & Suel 2011 / Turtle & Flood 1995 — public
     # knowledge, re-expressed as columnar statistics).
-    # replay dedup AFTER the live join: the join
-    # already hash-exchanges postings by (id, seq), and HashPartitioning
-    # on a SUBSET of the dedup keys satisfies the dedup aggregate's
-    # ClusteredDistribution on (id, token, seq) — so ordered this way
-    # the dedup rides the join's exchange instead of paying its own
-    # full posting-scale Exchange (3 → 2 posting-scale exchanges in the
-    # full rewrite), and it runs on the post-join LIVE rows (dead
-    # versions already dropped) instead of every replay/dead row.
-    # Semantics are unchanged: replay copies are byte-identical, live
-    # has exactly one row per (id, seq), and the inner join is 1:1 —
-    # dedup before or after commutes exactly (OPTIMIZATION_r14.md has
-    # the measurement).
-    joined = postings.join(
-        live.select(id_col, "seq", "dl"), on=[id_col, "seq"]
-    ).dropDuplicates([id_col, "token", "seq"])
-    staged = (
-        joined
-        .withColumn("token_bucket", lsm.bucket("token", token_buckets))
-        .withColumn("id_sub", lsm.bucket(id_col, id_subbuckets))
-    )
     if impacts:
         staged = staged.withColumn(
-            "impact0", _impact0_expr(IMPACT_K1, IMPACT_B, avgdl_now)
+            "impact0", _impact0_expr(IMPACT_K1, IMPACT_B, avgdl)
         ).repartition(
             F.col("token_bucket"), F.col("id_sub")
         ).sortWithinPartitions(
@@ -1664,16 +1775,26 @@ def compact_index(
     # probe-planning statistic (rarest-term selection in
     # phrase_candidate_ids; the read-mostly BM25 df fast path). Derived
     # from the base postings just written (read back page-cache-hot and
-    # column-pruned — the impacts-mode Arrow aggregator ships only
-    # (token, impact0) file bytes plus the two dir-name partition
-    # columns across the Python boundary) so it is exactly consistent
+    # column-pruned in impact-less mode) so it is exactly consistent
     # with them; tail appends after this compaction are simply unknown
     # to it, which only ever makes a term LOOK rarer — safe for probe
-    # selection, never used for correctness.
-    written = staged if impacts else open_parquet(spark, base_postings_path)
-    dfs_frame = _dfs_rows(written, impacts=impacts)
+    # selection, never used for correctness. A base with no posting
+    # (every live doc tokenless) reads back as an empty frame.
+    id_t = dict(live.dtypes)[id_col]
+    if impacts:
+        written = staged
+    else:
+        (written,) = read_components(
+            spark,
+            [(
+                base_postings_path,
+                f"{id_col} {id_t}, seq long, token string, tf double, "
+                "token_bucket int, id_sub int",
+            )],
+            id_col,
+        )
     (
-        dfs_frame
+        _dfs_rows(written, impacts=impacts)
         .repartition(F.col("token_bucket"), F.col("id_sub"))
         .write.mode("overwrite")
         .partitionBy("token_bucket", "id_sub")
@@ -1700,41 +1821,25 @@ def compact_index(
         .partitionBy("id_bucket")
         .parquet(base_doclen_path)
     )
-    # carry per-doc attribute state (stats_stream's doc→source map, or
-    # any other seq-wins attrs file) through compaction: keep the max-seq
-    # row per LIVE doc, written into ``base/attrs`` partitioned by the
-    # SAME id hash bucket as doclen (r10: the flat attrs rewrite was the
-    # incremental compactor's last doc-count-proportional residual — a
-    # bucketed base lets the fold rewrite only the id buckets its churn
-    # touched). Future ``stats_index_batch`` appends land in the flat
-    # ``attrs`` tail and win by max-seq in every reader.
-    attrs = _all_attrs(spark, index_path, id_col)
+    # attrs in the SAME id hash buckets as doclen (r10: the flat attrs
+    # rewrite was the incremental compactor's last
+    # doc-count-proportional residual — a bucketed base lets the fold
+    # rewrite only the id buckets its churn touched). Future
+    # ``stats_index_batch`` appends land in the flat ``attrs`` tail and
+    # win by max-seq in every reader.
     if attrs is not None:
-        other = [c for c in attrs.columns if c not in (id_col, "seq")]
-        latest = attrs.groupBy(id_col).agg(
-            F.max("seq").alias("seq"),
-            *[F.max_by(c, "seq").alias(c) for c in other],
-        )
         (
-            latest.join(live.select(id_col), id_col)
-            .select(
-                id_col,
-                *other,
-                "seq",
-                lsm.bucket(id_col, token_buckets).alias("id_bucket"),
-            )
+            attrs.withColumn("id_bucket", lsm.bucket(id_col, token_buckets))
             .repartition(F.col("id_bucket"))
             .write.mode("overwrite")
             .partitionBy("id_bucket")
             .parquet(os.path.join(out_path, "base", "attrs"))
         )
-    live.unpersist()
     if impacts:
         staged.unpersist()
-    # corpus stats ride the meta file (computed up front, before the
-    # postings write needed avgdl): with no tail yet, a query takes
+    # corpus stats ride the meta file: with no tail yet, a query takes
     # N/avgdl from here and skips the per-query corpus-wide doclen
-    # aggregate entirely — the read-mostly fast path. A full compaction
+    # aggregate entirely — the read-mostly fast path. A base write
     # stamps every partition with TODAY's avgdl, so the impact bracket
     # collapses to a point (r_max = s_min = 1 until the first fold).
     # 1-row meta parquet (not a driver-side json write): same directory
@@ -1746,12 +1851,12 @@ def compact_index(
         [(
             int(token_buckets),
             int(id_subbuckets),
-            n_live_now,
-            sum_dl_now,
+            n_live,
+            sum_dl,
             float(IMPACT_K1) if impacts else None,
             float(IMPACT_B) if impacts else None,
-            avgdl_now if impacts else None,
-            avgdl_now if impacts else None,
+            avgdl if impacts else None,
+            avgdl if impacts else None,
             int(IMPACT_TOP_G) if impacts else None,
             int(IMPACT_HIST_BINS) if impacts else None,
         )],
@@ -1879,6 +1984,17 @@ def compact_index_incremental(
         n_buckets = int(m["token_buckets"])
         n_sub = int(m["id_subbuckets"])
 
+        # footer counts: a churn-free index (a bootstrapped or freshly
+        # folded base) answers noop without a Spark job
+        if not component_rows(spark, doclen_path) and not component_rows(
+            spark, tomb_path
+        ):
+            return {
+                "mode": "noop",
+                "churned_docs": 0,
+                "affected_pairs": 0,
+                "total_buckets": n_buckets,
+            }
         tail_dl, tomb = read_components(
             spark,
             [
@@ -1887,13 +2003,6 @@ def compact_index_incremental(
             ],
             id_col,
         )
-        if tail_dl.isEmpty() and tomb.isEmpty():
-            return {
-                "mode": "noop",
-                "churned_docs": 0,
-                "affected_pairs": 0,
-                "total_buckets": n_buckets,
-            }
 
         # an empty base (no live doc, or no live posting) has no
         # bucket dirs to fold into and no prior avgdl to stamp fold
@@ -2170,8 +2279,9 @@ def _fold_attrs(
     (``pruned``) with its publish groups for :func:`lsm.fold_publish` —
     ``(None, [])`` when the index has no attrs. A base with no attrs
     dirs yet needs no other path: every attrs tail row's doc is churned
-    (``stats_index_batch`` writes attrs only beside a doclen tail append
-    or a tombstone), so the tail alone is the fold's input."""
+    (``stats_index_batch`` appends attrs only beside a doclen tail
+    append; a batch that bootstraps the base writes its attrs into
+    ``base/attrs``), so the tail alone is the fold's input."""
     base_attrs_root = os.path.join(index_path, "base", "attrs")
     tail_attrs = try_open_parquet(spark, os.path.join(index_path, "attrs"))
     base_a_aff = lsm.open_dirs(spark, base_attrs_root, id_dirs)
@@ -2313,7 +2423,7 @@ def index_status(
     base_doclen_path, _, meta_path = _base_paths(index_path)
     meta_rows = read_meta_rows(spark, meta_path)
     tail_rows, n_tomb, n_live = lsm.tail_status(
-        spark, doclen_path, tomb_path, id_col, meta_rows
+        spark, doclen_path, tomb_path, meta_rows
     )
     token_buckets = (
         int(meta_rows[0]["token_buckets"]) if meta_rows else None

@@ -14,8 +14,10 @@ This module adds the one missing piece, a per-doc ATTRIBUTE file
 (doc → source, same append-only seq-wins discipline), and answers the
 QA reports from state alone:
 
-* ingest is O(changed docs): :func:`stats_index_batch` delegates to
-  :func:`search_index_batch` and appends one skinny attrs file;
+* ingest is O(changed docs): :func:`stats_index_batch` runs the
+  :func:`search_index_batch` step and appends one skinny attrs file
+  (or, on an empty index, writes the attrs into the base that batch
+  bootstraps);
 * reports read skinny state: live postings ⋈ live attrs → (source,
   token, count) — bytes proportional to the index, never corpus text;
 * scoring reuses :func:`extensions.text.kl_from_group_counts` /
@@ -48,6 +50,7 @@ from couch_to_postgres_spark.extensions.text import (
     hapax_from_group_counts,
     kl_from_group_counts,
 )
+from couch_to_postgres_spark.streaming.commit import writing
 from couch_to_postgres_spark.streaming.meta_io import (
     read_meta_rows,
     try_open_parquet,
@@ -55,13 +58,9 @@ from couch_to_postgres_spark.streaming.meta_io import (
 )
 from couch_to_postgres_spark.streaming.search_stream import (
     SearchIndexBatchStats,
+    _search_index_batch_locked,
     live_doclen,
-    search_index_batch,
 )
-
-
-def _attrs_path(index_path: str) -> str:
-    return os.path.join(index_path, "attrs")
 
 
 def stats_index_batch(
@@ -81,11 +80,6 @@ def stats_index_batch(
     tombstones. Replay-safe for the same reason the search ingest is:
     re-appended rows are byte-identical and liveness is max-seq."""
     attr_cols = ["source"] if attr_cols is None else list(attr_cols)
-    stats = search_index_batch(
-        spark, index_path, changes,
-        text_col=text_col, id_col=id_col,
-        seq_col=seq_col, deleted_col=deleted_col,
-    )
     latest_up = (
         changes.filter(~F.col(deleted_col).cast("boolean"))
         .groupBy(id_col)
@@ -100,8 +94,14 @@ def stats_index_batch(
         )
         .select(id_col, *[f"a.{c}" for c in attr_cols], "a.seq")
     )
-    latest_up.write.mode("append").parquet(_attrs_path(index_path))
-    return stats
+    # the attrs land with the batch: in the attrs tail, or in the
+    # base a first batch bootstraps (every attrs tail row's doc then
+    # has a tail version or a tombstone, which the fold relies on)
+    with writing(index_path):
+        return _search_index_batch_locked(
+            spark, index_path, changes, text_col, id_col, seq_col,
+            deleted_col, impacts_default=True, attrs=latest_up,
+        )
 
 
 def live_attrs(

@@ -22,8 +22,9 @@ State (plain parquet under one index root):
   dirs, one row per ingested version; liveness reads only its
   (vec_id, seq) columns;
 * ``tombstones`` — (vec_id, seq) delete markers;
-* ``base/`` — the compacted base: ``base/cells`` (live rows, one per
-  doc, ``cell=N`` dirs), ``base/ids`` ((vec_id, seq, cell) in
+* ``base/`` — the compacted base, laid down by a fold or by the first
+  batch carrying upserts into an empty index: ``base/cells`` (live
+  rows, one per doc, ``cell=N`` dirs), ``base/ids`` ((vec_id, seq, cell) in
   ``id_bucket=H`` dirs — the skinny liveness sidecar, from which a
   fold finds a churned doc's old cell without a base/cells scan) and
   ``base/meta`` (1-row: n_cells, n_live, id_buckets, layout_epoch).
@@ -31,7 +32,9 @@ State (plain parquet under one index root):
 Plan shape:
 
 * ingest is O(changed docs): one Arrow pass assigns cells, two skinny
-  appends (cells, tombstones);
+  appends (cells, tombstones). A batch reaching an empty index (a
+  quantizer, no meta, no tail, no tombstone — footers only, no job) is
+  written once, as the base a full fold of its tail would give;
 * a query probes ``nprobe`` cells: base cell dirs are opened by name,
   the tail is update-rate-bounded, and liveness joins only skinny
   (id, seq) projections — skipped on a read-mostly base;
@@ -39,7 +42,7 @@ Plan shape:
   (:func:`compact_vector_index_incremental`): only the churned ids'
   old and new ``cell=N`` dirs and their ``id_bucket=H`` dirs rewrite;
   the full live-only rewrite (:func:`compact_vector_index`) is the
-  first-compaction path;
+  first compaction of an index whose first batch found it non-empty;
 * quantizer drift is watched on skinny frames
   (:func:`vector_index_balance`) and repaired by the operator-scheduled
   :func:`rebuild_vector_quantizer`.
@@ -67,6 +70,7 @@ from couch_to_postgres_spark.extensions.ann import (
 from couch_to_postgres_spark.streaming import lsm
 from couch_to_postgres_spark.streaming.commit import publish, staging, writing
 from couch_to_postgres_spark.streaming.meta_io import (
+    component_rows,
     read_components,
     read_meta_rows,
     try_open_parquet,
@@ -399,15 +403,24 @@ def vector_index_batch(
     assigner's passthrough — no rejoin), and the tombstone append.
     The read-mostly gate reads the cells/tombstone data dirs
     themselves, so there is no sidecar write and no write-order
-    invariant to preserve."""
+    invariant to preserve.
+
+    Bootstrap: a batch carrying upserts that reaches an EMPTY index (a
+    quantizer but no ``base/meta``, no tail cells and no tombstones —
+    read from the meta table and the footers, no Spark job) is written
+    as the compacted base instead of a tail (:func:`_publish_base`),
+    so the first compaction has nothing to do. A crash after its
+    publish makes the replay append a tail: the at-least-once path."""
     cells_path, tomb_path = _paths(index_path)
+    _, _, meta_path = _base_paths(index_path)
     with writing(index_path):
         # quantizer read INSIDE the lock: a rebuild
         # (:func:`rebuild_vector_quantizer`) swaps centroids + base
         # under the same lock, and a batch assigning cells with the
         # OLD centroids into the NEW layout would write tail rows that
         # probed reads silently miss
-        assigner, cents, _ = _quantizer(spark, index_path)
+        assigner, cents, n_cells = _quantizer(spark, index_path)
+        empty = lsm.is_empty(spark, meta_path, cells_path, tomb_path)
         latest = (
             changes.groupBy(id_col)
             .agg(
@@ -443,17 +456,26 @@ def vector_index_batch(
             upserts = latest.filter(~F.col("deleted")).select(
                 id_col, "seq", F.col("vec").alias(vec_col)
             )
-            (
-                _ASSIGNERS[assigner](
-                    upserts, cents, id_col, vec_col, nprobe=1,
-                    extra_cols=("seq",),
+            assigned = _ASSIGNERS[assigner](
+                upserts, cents, id_col, vec_col, nprobe=1,
+                extra_cols=("seq",),
+            ).select(id_col, "seq", vec_col, "cell")
+            if empty:
+                # the base a full fold of this tail would give; a crash
+                # before its publish leaves the index empty, so the
+                # replayed batch bootstraps again
+                _publish_base(
+                    spark, index_path, assigned, "bootstrapping-vec",
+                    n_cells, _layout_epoch(spark, index_path),
+                    DEFAULT_ID_BUCKETS, id_col, vec_col,
                 )
-                .select(id_col, "seq", vec_col, "cell")
-                .write.mode("append")
-                .partitionBy("cell")
-                .parquet(cells_path)
-            )
-        if n_del:
+            else:
+                assigned.write.mode("append").partitionBy("cell").parquet(
+                    cells_path
+                )
+        # a bootstrap's deletes name docs the index never held: like a
+        # full fold, the base keeps no tombstone
+        if n_del and not (empty and n_up):
             latest.filter(F.col("deleted")).select(
                 id_col, "seq"
             ).write.mode("append").parquet(tomb_path)
@@ -613,7 +635,8 @@ def _stage_base(
     staged base under ``stage``: ``cells`` in ``cell=N`` dirs, then the
     ``ids`` sidecar in ``id_bucket=H`` dirs derived from the staged
     files, never from the rows' lineage. Returns the staged live
-    count."""
+    count, from the staged files' footers (no Spark job on a local
+    path)."""
     staged_cells = os.path.join(stage, "cells")
     rows.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
         "cell"
@@ -639,7 +662,7 @@ def _stage_base(
         .partitionBy("id_bucket")
         .parquet(os.path.join(stage, "ids"))
     )
-    return int(staged_c.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"])
+    return component_rows(spark, staged_cells)
 
 
 def compact_vector_index(
@@ -650,13 +673,13 @@ def compact_vector_index(
     id_buckets: int = DEFAULT_ID_BUCKETS,
 ) -> dict:
     """Full fold of base ∪ tail into a live-only base, clearing the tail
-    and tombstones — the first-compaction path (it lays down the
-    id-bucketed ``base/ids`` sidecar the incremental fold needs). Steady-state maintenance is
+    and tombstones — the first-compaction path of an index with no base
+    (it lays down the id-bucketed ``base/ids`` sidecar the incremental
+    fold needs). Steady-state maintenance is
     :func:`compact_vector_index_incremental`; this rewrite is
     corpus-proportional. Runs under the per-path lock and publishes in
     one ``commit.publish``."""
     _, _, n_cells = _quantizer(spark, index_path)
-    cells_path, tomb_path = _paths(index_path)
     _, _, meta_path = _base_paths(index_path)
     with writing(index_path):
         # refuse a torn rebuild before any work
@@ -668,26 +691,48 @@ def compact_vector_index(
         if live_rows is None:
             live.unpersist()
             return {"mode": "noop", "n_live": 0}
-        stage = staging(index_path, "compacting-vec")
-        n_live = _stage_base(
-            spark, live_rows, stage, id_col, vec_col, id_buckets
-        )
-        staged_meta = os.path.join(stage, "meta")
-        write_meta_rows(
-            spark,
-            staged_meta,
-            [(int(n_cells), n_live, int(id_buckets), fold_epoch)],
-            _BASE_META_SCHEMA,
+        n_live = _publish_base(
+            spark, index_path, live_rows, "compacting-vec", n_cells,
+            fold_epoch, id_buckets, id_col, vec_col,
         )
         live.unpersist()
-        lsm.fold_publish(
-            index_path,
-            [(os.path.join(index_path, "base"), stage, ["cells", "ids"])],
-            (meta_path, staged_meta),
-            [cells_path, tomb_path],
-            stage,
-        )
         return {"mode": "full", "n_live": n_live}
+
+
+def _publish_base(
+    spark: SparkSession,
+    index_path: str,
+    rows: DataFrame,
+    tag: str,
+    n_cells: int,
+    epoch: int,
+    id_buckets: int,
+    id_col: str,
+    vec_col: str,
+) -> int:
+    """Stage ``rows`` (one live ``(id, seq, vec, cell)`` per doc) as the
+    index's whole base in the ``tag`` sibling (:func:`_stage_base`),
+    stamp its meta and publish it, retiring the tails. Returns the live
+    count."""
+    cells_path, tomb_path = _paths(index_path)
+    _, _, meta_path = _base_paths(index_path)
+    stage = staging(index_path, tag)
+    n_live = _stage_base(spark, rows, stage, id_col, vec_col, id_buckets)
+    staged_meta = os.path.join(stage, "meta")
+    write_meta_rows(
+        spark,
+        staged_meta,
+        [(int(n_cells), n_live, int(id_buckets), epoch)],
+        _BASE_META_SCHEMA,
+    )
+    lsm.fold_publish(
+        index_path,
+        [(os.path.join(index_path, "base"), stage, ["cells", "ids"])],
+        (meta_path, staged_meta),
+        [cells_path, tomb_path],
+        stage,
+    )
+    return n_live
 
 
 def compact_vector_index_incremental(
@@ -740,6 +785,18 @@ def compact_vector_index_incremental(
         # refuse a torn rebuild before any work
         fold_epoch = _fold_epoch(spark, index_path, meta_rows)
 
+        # footer counts: a churn-free index (a bootstrapped or freshly
+        # folded base) answers noop without a Spark job
+        if not component_rows(spark, cells_path) and not component_rows(
+            spark, tomb_path
+        ):
+            return {
+                "mode": "noop",
+                "churned_docs": 0,
+                "affected_cells": 0,
+                "total_cells": n_cells,
+                "n_live": int(meta_rows[0]["n_live"]),
+            }
         schema = f"{id_col} long, seq long"
         tail, tomb = read_components(
             spark, [(cells_path, schema), (tomb_path, schema)], id_col
@@ -751,14 +808,6 @@ def compact_vector_index_incremental(
                 id_col, "seq", F.lit(None).cast("int").alias("cell")
             )
         )
-        if tail_skinny.isEmpty() and tomb.isEmpty():
-            return {
-                "mode": "noop",
-                "churned_docs": 0,
-                "affected_cells": 0,
-                "total_cells": n_cells,
-                "n_live": int(meta_rows[0]["n_live"]),
-            }
 
         churned, n_churned, aff_id_buckets = lsm.churn(
             tail_skinny, tomb, id_col, n_id_buckets
@@ -920,7 +969,7 @@ def vector_index_status(
     _, _, meta_path = _base_paths(index_path)
     meta_rows = read_meta_rows(spark, meta_path)
     tail_rows, n_tomb, n_live = lsm.tail_status(
-        spark, cells_path, tomb_path, id_col, meta_rows
+        spark, cells_path, tomb_path, meta_rows
     )
     q = read_meta_rows(spark, _quantizer_path(index_path))
     if n_live is None:

@@ -24,12 +24,14 @@ from couch_to_postgres_spark.streaming.search_stream import (
     compact_index_incremental,
     live_postings,
     search_index_batch,
+    search_index_fsck,
 )
 from couch_to_postgres_spark.streaming.vector_stream import (
     compact_vector_index_incremental,
     init_vector_index,
     live_vector_ids,
     vector_index_batch,
+    vector_index_fsck,
     vector_topk_live,
 )
 
@@ -217,6 +219,64 @@ def test_search_incremental_fold_crash_sweep(spark, tmp_path):
     _sweep(tmp_path, pre, write, observe)
 
 
+def _search_observe(spark):
+    def observe(path):
+        assert search_index_fsck(spark, path)["ok"]
+        return sorted(
+            tuple(r) for r in live_postings(spark, path).select(
+                "doc_id", "token", "tf", "seq"
+            ).collect()
+        )
+
+    return observe
+
+
+def test_search_bootstrap_crash_sweep(spark, tmp_path):
+    """The first batch into an empty index publishes its base: a crash
+    at the publish's rename is completed by the replayed batch's
+    writer, which then appends the batch as a tail."""
+    pre = str(tmp_path / "pre")
+    os.makedirs(pre)
+    batch = _text_changes(
+        spark,
+        [(s, d, False, t) for s, (d, t) in enumerate(DOCS, 1)]
+        + [(9, 3, True, None)],
+    )
+
+    def write(path):
+        search_index_batch(spark, path, batch)
+
+    assert _sweep(tmp_path, pre, write, _search_observe(spark)) == 1
+
+
+def test_search_bootstrap_crash_before_publish(spark, tmp_path, monkeypatch):
+    """A crash after the base is staged but before its publish leaves
+    the index empty: the replayed batch bootstraps again, no tail."""
+    from couch_to_postgres_spark.streaming import search_stream
+
+    path = str(tmp_path / "idx")
+    batch = _text_changes(
+        spark, [(s, d, False, t) for s, (d, t) in enumerate(DOCS, 1)]
+    )
+
+    def crash(*args, **kwargs):
+        raise Crash("publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(search_stream, "publish", crash)
+        with pytest.raises(Crash):
+            search_index_batch(spark, path, batch)
+    assert os.path.isdir(path + ".bootstrapping")
+    assert not os.path.exists(os.path.join(path, "base"))
+    search_index_batch(spark, path, batch)
+    assert not os.path.exists(os.path.join(path, "doclen"))
+    assert not os.path.exists(path + ".bootstrapping")
+    clean = str(tmp_path / "clean")
+    search_index_batch(spark, clean, batch)
+    observe = _search_observe(spark)
+    assert observe(path) == observe(clean)
+
+
 ANCHORS = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [0.0, -1.0]]
 
 
@@ -258,3 +318,25 @@ def test_vector_incremental_fold_crash_sweep(spark, tmp_path):
         return ids, top
 
     _sweep(tmp_path, pre, write, observe)
+
+
+def test_vector_bootstrap_crash_sweep(spark, tmp_path):
+    """The first batch into an empty vector index publishes base cells,
+    the ids sidecar and base meta: a crash at any of those renames is
+    completed by the replayed batch's writer."""
+    pre = str(tmp_path / "pre")
+    init_vector_index(spark, pre, centroids=ANCHORS, assigner="hof")
+    batch = _vec_changes(
+        spark,
+        [(1, 1, False, [0.9, 0.1]), (2, 2, False, [0.1, 0.9]),
+         (3, 3, False, [-0.7, 0.2]), (4, 3, True, None)],
+    )
+
+    def write(path):
+        vector_index_batch(spark, path, batch)
+
+    def observe(path):
+        assert vector_index_fsck(spark, path)["ok"]
+        return sorted(tuple(r) for r in live_vector_ids(spark, path).collect())
+
+    assert _sweep(tmp_path, pre, write, observe) == 3

@@ -504,6 +504,9 @@ def test_null_text_upsert_counts_zero_postings(spark, index):
     must contribute ZERO postings and dl=0 — bare size(NULL) is -1
     (legacy sizeOfNull) and skewed both the batch-stats telemetry and
     the doclen row (ADVICE r10)."""
+    # a delete-only first batch leaves the index non-empty, so the
+    # upserts land as a tail doclen row instead of bootstrapping the base
+    search_index_batch(spark, index, _changes(spark, [(0, 99, True, None)]))
     st = search_index_batch(spark, index, _changes(spark, [
         (1, 1, False, "spark merges rows"),
         (2, 2, False, None),
@@ -529,6 +532,9 @@ def test_search_index_fsck(spark, index, tmp_path):
         search_index_fsck,
     )
 
+    # a delete-only first batch leaves the index non-empty, so the docs
+    # land as a tail instead of bootstrapping the base
+    search_index_batch(spark, index, _changes(spark, [(0, 99, True, None)]))
     search_index_batch(spark, index, _changes(spark, [
         (1, 1, False, "spark merges rows"),
         (2, 2, False, "window rows sort"),

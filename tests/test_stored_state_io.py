@@ -352,8 +352,10 @@ def test_quantizer_bootstrap_job_budget(spark, tmp_path):
     (2 jobs under AQE) and one bounded collect: 3 jobs, where MLlib
     ``KMeans`` took 23 on the same frame. A 500-upsert buffered
     bootstrap — append, then a flush that trains, writes the centroids
-    and marker, ingests and retires the buffer — stays within 14 jobs
-    (36 with MLlib), and recording explicit centroids launches none."""
+    and marker, ingests the buffer as the index's base and retires the
+    buffer — and the first fold after it stay within 17 jobs together
+    (13 + 11 when the flush wrote a tail the fold then rewrote), and
+    recording explicit centroids launches none."""
     import random
 
     from couch_to_postgres_spark.extensions.ann import train_centroids
@@ -376,12 +378,83 @@ def test_quantizer_bootstrap_job_budget(spark, tmp_path):
         "seq long, vec_id long, deleted boolean, embedding array<double>",
     )
     p = str(tmp_path / "boot")
-    _, n = _jobs(spark, lambda: (
-        append_pending(spark, p, changes), flush_pending(spark, p, n_cells=16)
+    (_, _, fold), n = _jobs(spark, lambda: (
+        append_pending(spark, p, changes),
+        flush_pending(spark, p, n_cells=16),
+        compact_vector_index_incremental(spark, p),
     ))
-    assert n <= 14
+    assert n <= 17
+    assert fold["mode"] == "noop"
     status = vector_index_status(spark, p)
     assert status["n_cells"] == 16 and status["live_vectors"] == 500
 
     q = str(tmp_path / "explicit")
     assert _jobs(spark, lambda: init_vector_index(spark, q, centroids=cents))[1] == 0
+
+
+def test_bootstrap_sizing_matches_count_then_group(spark, tmp_path, monkeypatch):
+    """An auto-sized bootstrap takes the batch size and the touched
+    buckets from one grouped collect at the finest bucket count: on
+    every batch size it picks the ``num_buckets`` and touches the
+    buckets that counting the batch and then grouping it by the chosen
+    count gave. A small rows-per-bucket target makes the auto count
+    range over 16..256 on small batches."""
+    from couch_to_postgres_spark.streaming import partitioned
+    from couch_to_postgres_spark.streaming.partitioned import (
+        auto_num_buckets,
+        bucket_of,
+    )
+
+    monkeypatch.setattr(partitioned, "TARGET_ROWS_PER_BUCKET", 8)
+    for n in (1, 5, 90, 300, 2000):
+        batch = _mirror_changes(
+            spark, [(i, f"k{i}", False, _doc(i, "a")) for i in range(n)]
+        )
+        want_n = auto_num_buckets(batch.count())
+        want = sorted(
+            r["b"] for r in batch.select(
+                bucket_of(F.col("id"), want_n).alias("b")
+            ).distinct().collect()
+        )
+        path = str(tmp_path / f"m{n}")
+        assert upsert_partitioned_mirror(spark, path, batch) == want, n
+        assert read_meta(path)["num_buckets"] == want_n, n
+        assert validate_mirror(spark, path)["ok"], n
+    assert want_n == 256
+
+
+def test_mirror_bootstrap_job_budget(spark, tmp_path):
+    """An auto-sized bootstrap of an 80-doc batch sizes its layout from
+    one grouped collect instead of a count and then a grouped collect:
+    8 jobs, 10 before."""
+    batch = _mirror_changes(
+        spark, [(i, f"d{i}", False, _doc(i, "a")) for i in range(80)]
+    )
+    path = str(tmp_path / "mirror")
+    _, n = _jobs(spark, lambda: upsert_partitioned_mirror(spark, path, batch))
+    assert n <= 8
+    assert read_partitioned_mirror(spark, path).count() == 80
+
+
+def test_upsert_keeps_a_callers_cache(spark, tmp_path):
+    """A batch the caller already persisted (the pipeline's shared raw
+    batch, which the index twins read after the mirror merge) is still
+    cached after the merge; a batch the merge cached itself is not."""
+    from pyspark.storagelevel import StorageLevel
+
+    rows = [(i, f"d{i}", False, _doc(i, "a")) for i in range(100)]
+    shared = _mirror_changes(spark, rows).persist()
+    try:
+        shared.count()
+        upsert_partitioned_mirror(spark, str(tmp_path / "a"), shared)
+        assert shared.storageLevel != StorageLevel.NONE
+        upsert_partitioned_mirror(
+            spark, str(tmp_path / "a"),
+            _mirror_changes(spark, [(200, "d1", True, None)]),
+        )
+        assert shared.storageLevel != StorageLevel.NONE
+    finally:
+        shared.unpersist()
+    own = _mirror_changes(spark, rows)
+    upsert_partitioned_mirror(spark, str(tmp_path / "b"), own)
+    assert own.storageLevel == StorageLevel.NONE

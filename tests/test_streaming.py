@@ -118,6 +118,21 @@ def test_count_reconciliation_after_stream(spark, sf_dir, tmp):
     assert mirror_doc_count(spark, f"{tmp}/mirror") == len(expected_state(changes))
 
 
+def _seed_tombstone(spark, index_path):
+    """A delete-only first batch, for a doc no feed holds: the index is
+    then not empty, so a feed's drain lands as a tail instead of
+    bootstrapping the base — the all-tail state the watchdog's first
+    (full) compaction starts from."""
+    from couch_to_postgres_spark.streaming.search_stream import (
+        search_index_batch,
+    )
+
+    search_index_batch(spark, index_path, spark.createDataFrame(
+        [(0, "never-indexed", True, None)],
+        "seq long, doc_id string, deleted boolean, text string",
+    ))
+
+
 def make_two_feed_registry(spark, sf_dir, tmp):
     changes = changes_from_events(spark, sf_dir, delete_type="error").cache()
     write_change_log(changes.filter(F.col("id").cast("long") < 8), f"{tmp}/log_a")
@@ -452,11 +467,12 @@ def test_daemon_feed_search_index(spark, sf_dir, tmp):
         ],
     )
     d = Daemon(spark, f"{tmp}/registry.json", f"{tmp}/data")
+    sidx = f"{tmp}/data/search/feed_alpha"
+    _seed_tombstone(spark, sidx)
     d.find_feeds()
     d.await_all()
     import os as _os
 
-    sidx = f"{tmp}/data/search/feed_alpha"
     assert _os.path.isdir(sidx)
     assert not _os.path.isdir(f"{tmp}/data/search/feed_beta")
     n_mirror = mirror_doc_count(spark, f"{tmp}/data/mirrors/feed_alpha.parquet")
@@ -508,9 +524,10 @@ def test_watchdog_compacts_search_index_on_debt(spark, sf_dir, tmp):
         spark, f"{tmp}/registry.json", f"{tmp}/data",
         search_compaction_debt=0.2,
     )
+    sidx = f"{tmp}/data/search/search_feed"
+    _seed_tombstone(spark, sidx)
     d.find_feeds()
     d.await_all()
-    sidx = f"{tmp}/data/search/search_feed"
     qtab = spark.createDataFrame(
         [(1, "click"), (1, "view")], "query_id int, term string"
     )
@@ -616,10 +633,11 @@ def test_daemon_feed_shingle_index(spark, sf_dir, tmp):
         spark, f"{tmp}/registry.json", f"{tmp}/data",
         search_compaction_debt=0.2,
     )
+    shidx = f"{tmp}/data/shingles/shingle_feed"
+    _seed_tombstone(spark, shidx)
     d.find_feeds()
     d.await_all()
 
-    shidx = f"{tmp}/data/shingles/shingle_feed"
     assert _os.path.isdir(shidx)
     corpus = read_mirror(spark, f"{tmp}/data/mirrors/shingle_feed.parquet").select(
         F.col("id").alias("doc_id"),
@@ -722,6 +740,8 @@ def test_daemon_maintains_vector_index(spark, sf_dir, tmp):
     twins."""
     from couch_to_postgres_spark.extensions.ann import _score_probed
     from couch_to_postgres_spark.streaming.vector_stream import (
+        init_vector_index,
+        vector_index_batch,
         vector_index_status,
         vector_topk_live,
     )
@@ -769,10 +789,19 @@ def test_daemon_maintains_vector_index(spark, sf_dir, tmp):
         spark, f"{tmp}/registry.json", f"{tmp}/data",
         search_compaction_debt=0.2,
     )
+    vidx = f"{tmp}/data/vectors/vec_feed"
+    # a quantizer trained on the feed's embeddings and a tombstone for a
+    # doc the feed never holds: the index is then not empty, so the
+    # drain lands as a tail and the watchdog's first pass runs the full
+    # fold
+    init_vector_index(spark, vidx, sample=emb, n_cells=4)
+    vector_index_batch(spark, vidx, spark.createDataFrame(
+        [(0, "never-indexed", True, None)],
+        "seq long, vec_id string, deleted boolean, embedding array<double>",
+    ))
     d.find_feeds()
     d.await_all()
 
-    vidx = f"{tmp}/data/vectors/vec_feed"
     import os as _os
 
     assert _os.path.isdir(vidx)

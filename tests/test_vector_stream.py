@@ -260,6 +260,9 @@ def test_incremental_compact_equals_full_and_restores_fast_path(
         compact_vector_index_incremental,
     )
 
+    # a delete-only first batch leaves the index non-empty, so the
+    # inserts land as a tail instead of bootstrapping the base
+    vector_index_batch(spark, index, _changes(spark, [(0, 99, True, None)]))
     vector_index_batch(
         spark, index,
         _changes(spark, [(i, i, False, v) for i, v in V0.items()]),
@@ -377,6 +380,9 @@ def test_batch_job_budget(spark, index):
         sc.setJobGroup("idle", "idle")
         return len(sc.statusTracker().getJobIdsForGroup(tag))
 
+    # a delete-only first batch: the upserts below then append a tail
+    # instead of bootstrapping the empty index's base
+    vector_index_batch(spark, index, _changes(spark, [(0, 99, True, None)]))
     n_up = jobs("vjb-up", lambda: vector_index_batch(
         spark, index,
         _changes(spark, [(i, i, False, v) for i, v in V0.items()]),
@@ -712,6 +718,9 @@ def test_stale_staging_dirs_are_harmless(spark, index):
         rebuild_vector_quantizer,
     )
 
+    # a delete-only first batch leaves the index non-empty, so the
+    # inserts land as a tail and the fold below is the full one
+    vector_index_batch(spark, index, _changes(spark, [(0, 99, True, None)]))
     vector_index_batch(
         spark, index,
         _changes(spark, [(i, i, False, v) for i, v in V0.items()]),
@@ -860,6 +869,11 @@ def test_string_id_full_lifecycle(spark, tmp_path):
     p = str(tmp_path / "sid_idx")
     init_vector_index(spark, p, centroids=ANCHORS, assigner="hof")
     model = {f"doc-{i}": v for i, v in V0.items()}
+    # a delete-only first batch leaves the index non-empty, so the
+    # inserts land as a tail and the first fold is the full one
+    vector_index_batch(
+        spark, p, _schanges(spark, [(0, "doc-99", True, None)])
+    )
     vector_index_batch(
         spark, p,
         _schanges(
