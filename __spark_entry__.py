@@ -2667,8 +2667,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def x_zorder(spark, sf_dir):
         # Z-order (Morton) clustering key over (user_id, event time):
         # exact integer bucket-scale + bit-interleave, the multi-column
-        # data-skipping layout primitive (see sinks/layout.write_zordered;
-        # the empirical row-group-extent shrink is pinned in test_skew)
+        # data-skipping layout primitive (sinks/layout.py)
         from couch_to_postgres_spark.sinks.layout import zorder_value
 
         # µs epochs: integer-exact on both engines (second-granularity

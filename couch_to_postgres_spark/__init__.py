@@ -6,7 +6,11 @@ SQL-over-jsonb query surface) is re-expressed Spark-first:
 
 * the mirror table ``(id string, doc json-string)`` is a DataFrame / parquet
   table (``operators.mirror``),
-* the change feed is a Structured Streaming source (``sources.changes``),
+* the change feed is a Structured Streaming source — a live CouchDB
+  ``_changes`` feed through ``format("couchdb")``
+  (``sources.couchdb_source``) or a change-log file stream
+  (``sources.changes``) — whose position (the couch ``since``) lives in
+  the query's checkpoint,
 * the idempotent rev-compare upsert is a batch merge (``operators.cdc``),
 * the SQL-over-jsonb query surface is the DataFrame/Spark-SQL builders in
   ``operators.query`` backed by the JSON function layer in ``functions.json``,

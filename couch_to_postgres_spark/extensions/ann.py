@@ -405,10 +405,9 @@ def append_to_ivf_index(
     append_to_ivf_index(spark, path, b))``).
 
     Quantizer drift: appended vectors keep the original centroids, so
-    cell balance degrades as the input distribution shifts — monitor with
-    :func:`ivf_index_stats` and rebuild (:func:`build_ivf_index`) when
-    max/mean cell size crosses ~2-4×, the standard IVF maintenance
-    discipline. Returns the number of vectors appended."""
+    cell balance degrades as the input distribution shifts — rebuild
+    (:func:`build_ivf_index`) when max/mean cell size crosses ~2-4×, the
+    standard IVF maintenance discipline. Returns the number of vectors appended."""
     import os
 
     from couch_to_postgres_spark.streaming.meta_io import read_meta_rows
@@ -437,8 +436,8 @@ def remove_from_ivf_index(
     """Tombstone deletes — the CDC-delete side of index maintenance.
 
     O(batch): the id set appends under ``tombstones/``; no cell file is
-    touched. Queries anti-join the (bounded, see compact) tombstone set;
-    :func:`compact_ivf_index` folds them physically. Returns ids written."""
+    touched. Queries anti-join the tombstone set; a rebuild
+    (:func:`build_ivf_index`) drops them physically. Returns ids written."""
     import os
 
     t = ids.select(F.col(id_col)).distinct()
@@ -472,95 +471,6 @@ def _live_cells(spark, path: str, cells: DataFrame) -> DataFrame:
     if t is not None:
         return cells.join(t, on=t.columns[0], how="left_anti")
     return cells
-
-
-def compact_ivf_index(spark, path: str) -> list[int]:
-    """Physically drop tombstoned vectors: rewrite ONLY the cells that
-    contain them (per-directory staged swap), then clear the tombstone
-    log. Run off-peak when the tombstone set grows — it bounds both the
-    read-side anti-join and deleted-data retention. Returns the rewritten
-    cell ids.
-
-    The tombstone PROBE is filesystem-agnostic (read-attempt, see
-    ``_read_tombstones``); the rewritten cells and the tombstone retire
-    go out in one ``streaming.commit.publish``. The READ paths
-    (``_live_cells``, ``ivf_topk_indexed``) never depend on local-FS
-    semantics."""
-    import os
-
-    from couch_to_postgres_spark.streaming.commit import (
-        publish,
-        staging,
-        writing,
-    )
-
-    with writing(path):
-        t = _read_tombstones(spark, path)
-        if t is None:
-            return []
-        cells_dir = os.path.join(path, "cells")
-        id_col = t.columns[0]
-        all_cells = spark.read.parquet(cells_dir)
-        affected = sorted(
-            r["cell"]
-            for r in all_cells.join(t, on=id_col, how="left_semi")
-            .select("cell")
-            .distinct()
-            .collect()
-        )
-        stage = staging(path, "compacting-ivf")
-        steps = []
-        for c in affected:
-            src = os.path.join(cells_dir, f"cell={c}")
-            tmp = os.path.join(stage, f"cell={c}")
-            (
-                spark.read.parquet(src)
-                .join(t, on=id_col, how="left_anti")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            steps.append((src, tmp))
-        steps.append((os.path.join(path, "tombstones"), None))
-        publish(path, steps, stage)
-        return affected
-
-
-def ivf_index_stats(spark, path: str) -> DataFrame:
-    """Index health monitor: per-cell vector count, file count, and the
-    global balance ratio (max/mean cell size) as columns — the numbers
-    that schedule compaction (files) and quantizer retrain (balance).
-    One pass over the cell partition column + filenames (never the
-    vector data); file counts via ``input_file_name()`` so the listing
-    is filesystem-agnostic (HDFS/S3), not a driver-local ``os.listdir``."""
-    import os
-
-    from pyspark.sql import functions as F2
-
-    cells_dir = os.path.join(path, "cells")
-    t = _read_tombstones(spark, path)
-    n_tomb = t.count() if t is not None else 0
-    stats = (
-        spark.read.parquet(cells_dir)
-        # project the (nondeterministic) filename BEFORE aggregating —
-        # Spark rejects input_file_name() inside aggregate arguments
-        .select("cell", F2.input_file_name().alias("_file"))
-        .groupBy("cell")
-        .agg(
-            F2.count(F2.lit(1)).alias("n_vecs"),
-            F2.countDistinct("_file").cast("int").alias("n_files"),
-        )
-    )
-    total = stats.agg(
-        F2.max("n_vecs").alias("_mx"), F2.avg("n_vecs").alias("_avg")
-    )
-    return stats.crossJoin(F2.broadcast(total)).select(
-        "cell",
-        "n_vecs",
-        "n_files",
-        F2.round(F2.col("_mx") / F2.col("_avg"), 3).alias("balance_ratio"),
-        F2.lit(n_tomb).alias("n_tombstones"),
-    )
 
 
 def ivf_topk_indexed(

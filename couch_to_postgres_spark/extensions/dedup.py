@@ -410,9 +410,7 @@ def simhash16(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     This exists to be bit-identical with a DuckDB SQL oracle (the parity
     gate's x_simhash); it evaluates an interpreted higher-order
     ``aggregate`` per bit (16× per row), which is the slow-lambda shape
-    the module header warns about. Production pipelines use
-    :func:`simhash64` — Arrow-batched, numpy-vectorized, one Python
-    crossing per batch — do NOT point this one at a real corpus.
+    the module header warns about — do NOT point it at a real corpus.
 
     Bit ``j`` (j=0..15) is the majority vote of the low bit of hex nibble
     ``j`` of ``md5(word)`` across the document's words (+1/-1 fold, sign).
@@ -439,53 +437,6 @@ def simhash16(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         term = F.when(bit_sum(j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
     return df.select(F.col(id_col), fp.cast("long").alias("simhash"))
-
-
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash via an Arrow-batched pandas UDF (numpy-vectorized
-    md5-derived word hashes). The production-scale variant of
-    :func:`simhash16`: one Python crossing per Arrow batch, all bit math
-    vectorized; no shuffle (pure map). Property-tested rather than
-    SQL-oracled (64-bit bit-fold has no reasonable SQL form)."""
-    import pandas as pd
-    from pyspark.sql.types import LongType
-
-    def _simhash_fn(texts):
-        import hashlib
-
-        import numpy as np
-
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            words = [w for w in (t or "").split(" ") if w]
-            if not words:
-                continue
-            hs = np.array(
-                [
-                    int.from_bytes(hashlib.md5(w.encode()).digest()[:8], "big")
-                    for w in words
-                ],
-                dtype=np.uint64,
-            )
-            # bit matrix (n_words × 64) → ±1 fold → sign
-            bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(
-                np.int32
-            )
-            votes = (2 * bits - 1).sum(axis=0)
-            fp = np.uint64(0)
-            for j in np.nonzero(votes > 0)[0]:
-                fp |= np.uint64(1) << np.uint64(j)
-            out[i] = np.int64(fp.astype(np.int64))
-        return pd.Series(out)
-
-    _simhash = F.pandas_udf(_simhash_fn, LongType())
-    return df.select(F.col(id_col), _simhash(F.col(text_col)).alias("simhash64"))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit fingerprints (bit_count of XOR
-    — JVM intrinsic)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_bucket_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -1262,8 +1213,7 @@ def semantic_dedup_incremental(
 ) -> DataFrame:
     """Incremental SemDeDup against a persisted IVF index: classify an
     arriving embedding batch against the index's LIVE set without
-    rescanning the corpus — the semantic twin of
-    ``streaming.dedup_stream`` (exact/MinHash) and the dedup consumer of
+    rescanning the corpus — the dedup consumer of
     ``ann.build_ivf_index``'s maintenance contract (append/tombstone).
 
     Per-batch plan, sized for a 100 TB accepted corpus:

@@ -1,53 +1,18 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
+columns with typed metadata, shaped JVM-side.
 
-The decode kernels themselves are STUBS (the image/audio libraries are not
-in this container): ``decode_image_stub`` raises ``NotImplementedError``
-and ``fake_decode_features`` is the deterministic stand-in used by tests.
-Everything Spark-side — schema, partition sizing, UDF signatures, Arrow
-batch shapes — is real and tested; swapping a real decoder in changes only
-the inner Python function.
-
-Scale notes: binary payloads dominate row size, so the pipeline
-(a) repartitions by byte budget, not row count, before the decode pass, and
-(b) keeps metadata columns separate from payloads so metadata-only queries
-never read the blobs (parquet column pruning does the rest).
+``attach_binary`` wraps a text table as an asset table (the payload is
+the deterministic stand-in for a media blob) and ``frame_sample``
+explodes a payload into byte-window frames; a real decoder replaces
+only the byte-window kernel. Metadata columns stay separate from the
+payloads, so metadata-only queries never read the blobs (parquet column
+pruning does the rest).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-#: schema of a multimodal asset row: opaque payload + typed metadata.
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-        StructField("content_md5", StringType()),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("feat_mean", LongType()),
-        StructField("feat_first", LongType()),
-    ]
-)
 
 
 def attach_binary(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -62,90 +27,6 @@ def attach_binary(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         F.octet_length(payload).cast("long").alias("n_bytes"),
         F.md5(payload).alias("content_md5"),
     )
-
-
-def have_pillow() -> bool:
-    """Capability probe: is a real image decoder importable? The module
-    upgrades itself when run in a container that has Pillow; here (no
-    media libs) every real kernel degrades to the documented stub/fake."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def decode_image_features(payload: bytes) -> tuple[int, int]:
-    """REAL decode → feature kernel (Pillow path): grayscale-decode the
-    image and return (mean pixel, first pixel) — the same contract as
-    :func:`fake_decode_features` (two ints in [0, 255]). Raises
-    ``NotImplementedError`` when no image library is present, exactly
-    like the original stub."""
-    if not have_pillow():
-        raise NotImplementedError(
-            "image decoding requires an image library not present in this "
-            "container; use fake_decode_features for the pipeline shape"
-        )
-    import io
-
-    import PIL.Image
-
-    img = PIL.Image.open(io.BytesIO(payload)).convert("L")
-    px = list(img.getdata())
-    if not px:
-        return (0, 0)
-    return (sum(px) // len(px), px[0])
-
-
-#: back-compat name for the declared stub
-decode_image_stub = decode_image_features
-
-
-def fake_decode_features(payload: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for decode → feature-extract: (mean byte,
-    first byte). Same contract as decode_image_features; used by tests
-    and by default in containers without media libraries."""
-    if not payload:
-        return (0, 0)
-    return (sum(payload) // len(payload), payload[0])
-
-
-def best_decoder():
-    """The decode kernel this environment supports: the real Pillow path
-    when importable, the deterministic fake otherwise. Both honor the
-    same contract — (mean, first) ints in [0, 255] — so the pipeline
-    shape is identical either way (pinned by test_multimodal parity)."""
-    return decode_image_features if have_pillow() else fake_decode_features
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """REAL resize kernel (Pillow path): decode, resize to width×height,
-    return the raw grayscale bytes — ``width*height`` bytes, the same
-    length contract as :func:`fake_resize`. Raises ``NotImplementedError``
-    without an image library (the original stub behavior)."""
-    if not have_pillow():
-        raise NotImplementedError("image resize requires an image library")
-    import io
-
-    import PIL.Image
-
-    img = PIL.Image.open(io.BytesIO(payload)).convert("L")
-    return img.resize((max(1, width), max(1, height))).tobytes()
-
-
-#: back-compat name for the declared stub
-resize_stub = resize_image
-
-
-def fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in: truncate/cycle payload to width×height
-    bytes (keeps batch shapes and byte budgets honest in tests)."""
-    target = max(1, width * height)
-    if not payload:
-        return b"\x00" * target
-    reps = (target // len(payload)) + 1
-    return (payload * reps)[:target]
 
 
 def frame_sample(
@@ -178,75 +59,3 @@ def frame_sample(
         F.col("f.frame").alias("frame"),
         F.octet_length("f.frame").cast("long").alias("frame_bytes"),
     )
-
-
-def resize_assets(
-    assets: DataFrame, width: int = 8, height: int = 8, resizer=None
-) -> DataFrame:
-    """Resize pass via mapInPandas (Arrow-batched). ``resizer`` is the
-    per-payload kernel — default ``fake_resize`` (deterministic); pass
-    :func:`resize_image` in a Pillow-equipped environment. Both honor the
-    same width×height-bytes output contract, so the plumbing is
-    kernel-agnostic."""
-    from pyspark.sql.types import BinaryType
-
-    resizer = resizer or fake_resize
-    out_schema = StructType(
-        [
-            StructField("asset_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("n_bytes", LongType()),
-        ]
-    )
-
-    def _kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            resized = [resizer(p, width, height) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": resized,
-                    "n_bytes": [len(r) for r in resized],
-                }
-            )
-
-    return assets.mapInPandas(_kernel, out_schema)
-
-
-def extract_features(
-    assets: DataFrame, batch_budget_bytes: int = 64 << 20, decoder=None
-) -> DataFrame:
-    """Decode/feature-extract pass over asset payloads via ``mapInPandas``.
-
-    ``decoder`` is the per-payload kernel — default
-    ``fake_decode_features`` (deterministic); pass ``best_decoder()`` to
-    use the real Pillow path when the environment has it. Both kernels
-    share the (mean, first) ∈ [0,255]² contract.
-
-    Arrow streams batches of rows into Python; the kernel is per-batch
-    vectorizable. ``batch_budget_bytes`` drives a repartition so each task
-    holds a bounded payload volume — the knob that keeps 100 TB of blobs
-    from OOMing fixed-size executors (row-count partitioning would not).
-    """
-    decoder = decoder or fake_decode_features
-    total = assets.agg(F.sum("n_bytes")).first()[0] or 0
-    n_parts = max(1, int(total // batch_budget_bytes) + 1)
-
-    def _kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            feats = [decoder(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "feat_mean": [f[0] for f in feats],
-                    "feat_first": [f[1] for f in feats],
-                }
-            )
-
-    return assets.repartition(n_parts).mapInPandas(_kernel, FEATURE_SCHEMA)

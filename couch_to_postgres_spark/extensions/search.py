@@ -50,24 +50,6 @@ from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.extensions.text import _words
 
-#: r14 — batch query-set dedup: queries whose (distinct) term sets are
-#: EQUAL provably produce identical (id, score, rank) rows — score is a
-#: sum over the query's distinct terms of per-(doc, term) contributions
-#: and the ranking window orders by (score, id) only — so the batch
-#: scores ONE representative per distinct term set and expands the
-#: tiny ranked result to the duplicate query_ids with a broadcast map
-#: join at the end (common-subexpression elimination across the batch:
-#: eval-set retrieval batches routinely repeat questions). Every
-#: downstream cost is cut by the duplication factor: the per-(doc,
-#: token) hit rows fan out to distinct SETS wanting the token instead
-#: of every query, shrinking the scoring join, the (query, doc)
-#: aggregate's exchange and the per-query ranking window alike. Costs
-#: nothing when all sets are distinct: the mapping is derived from the
-#: (query_id, term) collect the function already does for the map-side
-#: term prune, and the expansion join is skipped outright.
-#: Exactness pinned by test_bm25_batch_query_set_dedup_exact.
-_DEDUP_QUERY_SETS = True
-
 
 def bm25_topk(
     df: DataFrame,
@@ -147,16 +129,20 @@ def bm25_topk_batch(
     terms = sorted(set().union(*qsets.values())) if qsets else []
     if not terms:
         raise ValueError("bm25_topk_batch: queries must be non-empty")
-    # group query_ids by their distinct-term signature; queries is
-    # replaced by one representative per signature when any collide
-    # (identical term sets => identical scores and ranks; see
-    # _DEDUP_QUERY_SETS)
+    # query-set dedup: queries whose distinct term sets are EQUAL
+    # produce identical (id, score, rank) rows — score sums per-(doc,
+    # term) contributions over the set and the ranking orders by (score,
+    # id) — so the batch scores one representative per set and a
+    # broadcast join expands the ranked rows to the member query_ids at
+    # the end. Every downstream cost (scoring join, (query, doc)
+    # aggregate, ranking window) falls by the duplication factor; with
+    # all sets distinct the expansion is skipped.
     rep_of_sig: dict = {}
     expand_rows = []
     for qid in sorted(qsets, key=repr):
         r0 = rep_of_sig.setdefault(frozenset(qsets[qid]), qid)
         expand_rows.append((r0, qid))
-    dedup = _DEDUP_QUERY_SETS and len(rep_of_sig) < len(qsets)
+    dedup = len(rep_of_sig) < len(qsets)
     if dedup:
         rep_ids = sorted(rep_of_sig.values(), key=repr)
         queries = queries.filter(F.col(query_id_col).isin(rep_ids))

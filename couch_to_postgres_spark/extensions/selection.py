@@ -438,30 +438,3 @@ def dsir_resample(
     )
 
 
-def ngram_lm_stream_attach(
-    spark,
-    stream_df,
-    state_path: str,
-    checkpoint_path: str,
-    text_col: str = "text",
-    n: int = 2,
-    prefix_len: int = 2,
-    trigger: dict | None = None,
-):
-    """Attach :func:`ngram_lm_stream` maintenance to a streaming
-    DataFrame. The epoch id IS the replay guard here (bucket counts are
-    not idempotent under re-merge), so this wiring — checkpointed
-    offsets + ``batch_id=epoch_id`` — is the at-least-once contract the
-    marker check depends on. Returns the started StreamingQuery."""
-    from couch_to_postgres_spark.extensions.sketch import (
-        _attach_state_stream,
-    )
-
-    def _step(batch, epoch_id):
-        ngram_lm_stream(
-            batch.sparkSession, state_path, batch,
-            text_col=text_col, n=n, prefix_len=prefix_len,
-            batch_id=int(epoch_id),
-        )
-
-    return _attach_state_stream(stream_df, _step, checkpoint_path, trigger)

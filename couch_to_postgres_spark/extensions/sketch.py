@@ -163,28 +163,6 @@ def sketch_jaccard(
     )
 
 
-def union_sketch(sketches: DataFrame, k: int = 64) -> DataFrame:
-    """Collapse a per-group sketch table into ONE corpus-level sketch —
-    the bottom-k of the union of every group's domain. One row:
-    ``(sketch, k_used, u_k)``; feed to :func:`distinct_estimate` for
-    the global distinct count (the cross-source dedup upper bound: how
-    many distinct values survive if all sources merged).
-
-    Mergeability makes this exact w.r.t. the sketches: bottomk(∪ A_g)
-    = k smallest of ∪ bottomk(A_g). Cost is G·k hashes through one
-    driver-free aggregate — the base data is never touched."""
-    top = sketches.agg(
-        _merge_sketches(F.collect_list("sketch"), k).alias("sketch")
-    )
-    return top.select(
-        "sketch",
-        F.size("sketch").alias("k_used"),
-        F.when(
-            F.size("sketch") >= k, hash_u(F.element_at("sketch", k))
-        ).alias("u_k"),
-    )
-
-
 def merge_sketch_tables(
     old: DataFrame, new: DataFrame, group_col: str, k: int = 64
 ) -> DataFrame:
@@ -471,67 +449,3 @@ def reservoir_stream(
         return _commit_versioned(spark, state_path, kept, batch_id=batch_id)
 
 
-def _attach_state_stream(stream_df, step, checkpoint_path: str, trigger):
-    """Shared writeStream wiring for the versioned-state maintainers —
-    checkpointed foreachBatch, ``availableNow`` by default (the repo's
-    streaming-test trigger), matching ``search_index_stream``'s shape."""
-    writer = (
-        stream_df.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if trigger is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
-def sketch_stream_attach(
-    spark,
-    stream_df,
-    state_path: str,
-    checkpoint_path: str,
-    group_col: str,
-    value,
-    k: int = 64,
-    trigger: dict | None = None,
-):
-    """Attach :func:`sketch_stream` maintenance to a streaming DataFrame
-    — the full writeStream wiring (checkpointed offsets + the epoch id
-    passed through as ``batch_id`` so `/_status` reports which batch
-    committed last). Returns the started StreamingQuery."""
-
-    def _step(batch, epoch_id):
-        sketch_stream(
-            batch.sparkSession, state_path, batch, group_col, value,
-            k=k, batch_id=int(epoch_id),
-        )
-
-    return _attach_state_stream(stream_df, _step, checkpoint_path, trigger)
-
-
-def reservoir_stream_attach(
-    spark,
-    stream_df,
-    state_path: str,
-    checkpoint_path: str,
-    group_col: str,
-    k: int = 100,
-    id_col: str = "doc_id",
-    salt: str = "res1",
-    seq_col: str | None = None,
-    trigger: dict | None = None,
-):
-    """Attach :func:`reservoir_stream` maintenance to a streaming
-    DataFrame — checkpointed, epoch id recorded as ``batch_id``, CDC
-    payload churn resolved by ``seq_col`` when the feed carries one."""
-
-    def _step(batch, epoch_id):
-        reservoir_stream(
-            batch.sparkSession, state_path, batch, group_col,
-            k=k, id_col=id_col, salt=salt, seq_col=seq_col,
-            batch_id=int(epoch_id),
-        )
-
-    return _attach_state_stream(stream_df, _step, checkpoint_path, trigger)

@@ -4,7 +4,6 @@ from couch_to_postgres_spark.functions.json import (
     json_get_typed,
     json_keys,
     json_object_set_key,
-    json_object_set_key_udf,
     json_to_recordset,
     register_sql_functions,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "json_get_typed",
     "json_keys",
     "json_object_set_key",
-    "json_object_set_key_udf",
     "json_to_recordset",
     "register_sql_functions",
 ]

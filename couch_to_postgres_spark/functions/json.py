@@ -13,8 +13,9 @@ Reference parity map:
 
 Everything here is built-in ``pyspark.sql.functions`` (JVM-side, inside
 whole-stage codegen). The single exception is the *general* (nested-doc)
-``json_object_set_key_udf``, which is an Arrow-batched pandas UDF — the flat
-``map_concat`` route is the hot path and stays JVM-side.
+``json_object_set_key_nested`` SQL function (:func:`register_sql_functions`),
+an Arrow-batched pandas UDF — the flat ``map_concat`` route is the hot path
+and stays JVM-side.
 """
 
 from __future__ import annotations
@@ -80,8 +81,9 @@ def json_object_set_key(doc: Column | str, key: str, value: Column) -> Column:
     JVM-only route: parse to ``map<string,string>`` → ``map_concat`` →
     ``to_json``. Scalar values survive as their string form (numbers lose
     the unquoted representation — acceptable because the query surface is
-    typed-on-read via :func:`json_get_typed`). For nested docs use
-    :func:`json_object_set_key_udf`.
+    typed-on-read via :func:`json_get_typed`). For nested docs use the
+    ``json_object_set_key_nested`` SQL function
+    (:func:`register_sql_functions`).
     """
     d = F.coalesce(_col(doc), F.lit("{}"))
     merged = F.map_concat(
@@ -105,22 +107,6 @@ def _set_key_pandas(docs, keys, values):
             obj[key] = value
         out.append(json.dumps(obj, separators=(",", ":")))
     return pd.Series(out)
-
-
-def json_object_set_key_udf(doc: Column | str, key: Column, value: Column) -> Column:
-    """General (nested-preserving) ``json_object_set_key``: Arrow-batched
-    pandas UDF. ``value`` is parsed as JSON when possible (so '{"a":1}'
-    nests) else stored as a string. Slow path — only for nested docs.
-    """
-    fn = F.pandas_udf(_set_key_pandas, StringType())
-    return fn(_col(doc), key, value)
-
-
-def rev_number(rev: Column | str) -> Column:
-    """Numeric prefix of a CouchDB rev string '<n>-<hash>'
-    (reference lib/index.js:107-108). Logging/diagnostics only — merge
-    semantics compare full rev strings (lib/index.js:110)."""
-    return F.split(_col(rev), "-").getItem(0).cast("long")
 
 
 def register_sql_functions(spark: SparkSession) -> None:

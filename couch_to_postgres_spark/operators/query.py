@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.functions.json import (
-    json_agg,
     json_get,
     json_get_typed,
     json_keys,
@@ -63,11 +62,6 @@ def ordering_pitfall(mirror: DataFrame) -> DataFrame:
         .over(Window.orderBy(v.cast("long").asc(), F.col("id")))
         .alias("rank_num"),
     )
-
-
-def distinct_field(mirror: DataFrame, key: str) -> DataFrame:
-    """B9: ``SELECT DISTINCT doc->>'k'`` (README.md:209,226-238)."""
-    return mirror.select(json_get("doc", key).alias(key)).distinct()
 
 
 def group_count(mirror: DataFrame, key: str) -> DataFrame:
@@ -127,20 +121,6 @@ def row_number_chunks(mirror: DataFrame, chunk_size: int = 50) -> DataFrame:
         mirror.withColumn("chunk", ((rn - F.lit(1)) / F.lit(chunk_size)).cast("long") + 1)
         .groupBy("chunk")
         .agg(F.count(F.lit(1)).alias("docs_in_chunk"))
-    )
-
-
-def bulk_payloads(mirror: DataFrame, chunk_size: int = 50) -> DataFrame:
-    """A17/B16: chunk docs and json_agg each chunk into one `_bulk_docs`
-    payload (README.md:513-530). Returns (chunk, docs_in_chunk, payload)."""
-    rn = F.row_number().over(Window.orderBy("id"))
-    return (
-        mirror.withColumn("chunk", ((rn - F.lit(1)) / F.lit(chunk_size)).cast("long") + 1)
-        .groupBy("chunk")
-        .agg(
-            F.count(F.lit(1)).alias("docs_in_chunk"),
-            json_agg(F.col("doc")).alias("payload"),
-        )
     )
 
 

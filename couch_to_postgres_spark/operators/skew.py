@@ -1,10 +1,5 @@
-"""Skew and layout utilities for the 100 TB path.
+"""Skew utilities for the 100 TB path.
 
-* **Bucketed mirror** — for backfill-scale merges (batch ≈ mirror size, so
-  the broadcast plan of ``apply_changes`` doesn't apply), store the mirror
-  bucketed by ``id``: both sides of the sort-merge join then read
-  pre-shuffled buckets and the Exchange disappears from the mirror side
-  entirely (one-time cost at write, amortized over every subsequent merge).
 * **Salted aggregation** — hot grouping keys (one giant feed, one dominant
   doc type) overload a single reducer. Salting splits each key into
   ``n_salts`` sub-keys for the partial phase and re-aggregates exactly.
@@ -15,27 +10,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def save_mirror_bucketed(
-    mirror: DataFrame, table_name: str, num_buckets: int = 32
-) -> None:
-    """Persist the mirror as a bucketed+sorted managed table. Downstream
-    equi-joins/merges on ``id`` read co-located buckets — no exchange on
-    the mirror side even in the sort-merge plan."""
-    (
-        mirror.write.mode("overwrite")
-        .bucketBy(num_buckets, "id")
-        .sortBy("id")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def bucketed_mirror(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def with_salt(df: DataFrame, key: str | Column, n_salts: int = 16) -> DataFrame:

@@ -8,14 +8,13 @@ on one extracted field): stored-variant ≈ 0.45 s vs JSON-string ≈ 2.4 s —
 5×. Semantics are unchanged, so variant-backed queries share the string
 mirror's DuckDB oracles.
 
-Interop: ``to_variant`` / ``to_json_string`` convert between the two
-representations; the CDC merge keeps working on either (it only touches
-``id`` and passes ``doc`` through).
+Interop: ``to_variant`` converts a string-doc mirror; the CDC merge keeps
+working on either (it only touches ``id`` and passes ``doc`` through).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -24,20 +23,10 @@ def to_variant(mirror: DataFrame, doc_col: str = "doc") -> DataFrame:
     return mirror.withColumn(doc_col, F.parse_json(F.col(doc_col)))
 
 
-def to_json_string(mirror: DataFrame, doc_col: str = "doc") -> DataFrame:
-    """(id, doc variant) → (id, doc json-string) for sinks that need text
-    (writeback payloads, change-log files)."""
-    return mirror.withColumn(doc_col, F.to_json(F.col(doc_col)))
-
-
 def write_variant_mirror(mirror: DataFrame, path: str) -> None:
     """Materialize a string-doc mirror as variant-doc parquet (the stored
     layout queries should run against)."""
     to_variant(mirror).write.mode("overwrite").parquet(path)
-
-
-def read_variant_mirror(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def vget(doc: Column | str, key: str) -> Column:
@@ -45,11 +34,6 @@ def vget(doc: Column | str, key: str) -> Column:
     path may be nested 'a.b')."""
     c = F.col(doc) if isinstance(doc, str) else doc
     return F.variant_get(c, f"$.{key}", "string")
-
-
-def vget_typed(doc: Column | str, key: str, dtype: str) -> Column:
-    c = F.col(doc) if isinstance(doc, str) else doc
-    return F.variant_get(c, f"$.{key}", dtype)
 
 
 def vkeys(doc: Column | str) -> Column:
@@ -80,13 +64,3 @@ def key_expansion_variant(vmirror: DataFrame, type_key: str) -> DataFrame:
     )
 
 
-def infer_doc_schema(vmirror: DataFrame, sample: int = 1000) -> str:
-    """Dynamic-schema discovery: merged variant schema over a sample
-    (the engine-level answer to `SELECT DISTINCT jsonb_object_keys(doc)` —
-    full typed structure, not just key names)."""
-    row = (
-        vmirror.limit(sample)
-        .select(F.schema_of_variant_agg("doc").alias("s"))
-        .head()
-    )
-    return row["s"]

@@ -16,15 +16,22 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from couch_to_postgres_spark.streaming.commit import publish, staging, writing
+from couch_to_postgres_spark.streaming.meta_io import open_parquet
+
 
 class MaterializedView:
     """A named, refreshable materialized aggregate.
 
     ``build`` is the view definition (mirror → rowset); ``refresh()``
-    recomputes and atomically swaps the parquet; readers always see a
-    complete snapshot. Register-then-query matches the couch pattern of
-    hitting a prebuilt view; calling ``build`` directly is the fresh
-    GROUP BY path — the same trade-off the reference documents.
+    recomputes it into a staging sibling of ``path`` and lands it with
+    one ``commit.publish`` rooted at ``path``'s parent directory (which
+    holds the publish plan and the ``.trash`` of retired views). A crash
+    at either rename leaves a plan that the next ``read()`` or
+    ``refresh()`` completes, so readers always open a complete view.
+    Register-then-query matches the couch pattern of hitting a prebuilt
+    view; calling ``build`` directly is the fresh GROUP BY path — the
+    same trade-off the reference documents.
     """
 
     def __init__(
@@ -38,24 +45,21 @@ class MaterializedView:
         self.name = name
         self.path = path
         self.build = build
+        self._root = os.path.dirname(os.path.abspath(path))
 
     def refresh(self) -> None:
-        tmp = self.path + ".tmp"
-        self.build().write.mode("overwrite").parquet(tmp)
-        old = self.path + ".old"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        import shutil
-
-        shutil.rmtree(old, ignore_errors=True)
+        with writing(self._root):
+            stage = staging(self.path, "refresh")
+            self.build().write.mode("overwrite").parquet(stage)
+            publish(self._root, [(self.path, stage)])
         self.register()
 
     def register(self) -> None:
         self.read().createOrReplaceTempView(self.name)
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        with writing(self._root):  # completes a refresh a crash cut short
+            return open_parquet(self.spark, self.path)
 
 
 def count_view_delta(

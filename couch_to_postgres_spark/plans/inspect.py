@@ -64,7 +64,3 @@ def num_exchanges(df: DataFrame, over: str | None = None) -> int:
     return len(lines)
 
 
-def whole_stage_codegen_ids(df: DataFrame) -> set[int]:
-    """Distinct WholeStageCodegen span ids — wider spans (fewer ids for the
-    same operator count) mean fewer JVM call boundaries."""
-    return {int(m) for m in re.findall(r"WholeStageCodegen \((\d+)\)", executed_plan(df))}

@@ -1,59 +1,15 @@
-"""Time-partitioned storage layout for event-shaped tables.
+"""Z-order (Morton) clustering key for multi-column range filters.
 
 The reference stores every doc in one flat table and full-scans it
-(README.md:206-242). At 100 TB the layout IS the index: hive-style
-``event_date=…`` partitions let every time-bounded query prune to the
-touched days at PLANNING time (``PartitionFilters`` in the scan — zero
-I/O for other days), and in-partition sorting by a secondary key gives
-parquet row-group min/max stats a chance to skip pages on that key too
-(stats pruning happens at the reader, it does not show in the plan).
+(README.md:206-242). Sorting parquet files by an interleaved key of
+several columns keeps each row group's min/max ranges tight on all of
+them at once, so reader-side statistics skip row groups for a filter on
+any of the clustered columns.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from couch_to_postgres_spark.session import event_timestamp
-
-
-def write_time_partitioned(
-    events: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    sort_col: str | None = "user_id",
-    mode: str = "overwrite",
-) -> None:
-    """Write events hive-partitioned by event date (derived from the
-    timestamp-like ``ts_col``), optionally sorted inside each partition so
-    row-group stats on ``sort_col`` are tight. One shuffle-free pass:
-    ``partitionBy`` splits files per in-flight task; for a strict
-    one-file-per-day layout repartition on the date first (more write
-    parallelism ≠ better here — file count per day is the knob that
-    matters for the reader)."""
-    ev = events.withColumn(
-        "event_date", F.to_date(event_timestamp(events, ts_col))
-    )
-    if sort_col is not None:
-        ev = ev.sortWithinPartitions("event_date", sort_col)
-    ev.write.partitionBy("event_date").mode(mode).parquet(path)
-
-
-def read_time_range(
-    spark: SparkSession,
-    path: str,
-    start: dt.date | str,
-    end: dt.date | str,
-) -> DataFrame:
-    """Scan only the partitions inside ``[start, end)`` — the date filter
-    lands in the scan's ``PartitionFilters`` (pinned in test_plans), so
-    days outside the range are never listed, opened, or read."""
-    df = spark.read.parquet(path)
-    return df.filter(
-        (F.col("event_date") >= F.lit(start)) & (F.col("event_date") < F.lit(end))
-    )
 
 
 def zorder_value(cols, mins, maxs, bits: int = 8):
@@ -105,70 +61,3 @@ def zorder_value(cols, mins, maxs, bits: int = 8):
                 F.shiftleft(F.shiftright(s, bit).bitwiseAND(F.lit(1)), pos)
             )
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    num_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` clustered by the Z-order of ``cols``: range-partition
-    on the z-value, sort within partitions, drop the helper column.
-
-    Why this is a 100 TB layout primitive: a single-column sort gives
-    tight parquet row-group min/max stats on ONE key; Z-order clustering
-    gives *simultaneously* tight bounding boxes on ALL interleaved keys,
-    so the reader's row-group stats pruning works for filters on any of
-    them (the same trick behind Delta/Iceberg OPTIMIZE ZORDER — here as
-    a plain parquet write). The range partitioner samples the z-values
-    (one pass) and the sort is per-partition, never global."""
-    bounds = df.agg(
-        *[F.min(c).alias(f"lo{i}") for i, c in enumerate(cols)],
-        *[F.max(c).alias(f"hi{i}") for i, c in enumerate(cols)],
-    ).first()
-    mins = [bounds[f"lo{i}"] for i in range(len(cols))]
-    maxs = [bounds[f"hi{i}"] for i in range(len(cols))]
-    if any(v is None for v in mins + maxs):
-        if df.limit(1).count() == 0:
-            # empty input: a legitimate pipeline no-op — write the empty
-            # dataset (schema preserved) rather than erroring
-            df.write.mode(mode).parquet(path)
-            return
-        raise ValueError(
-            f"write_zordered: NULL bounds for {cols} on a non-empty frame "
-            "(all-NULL cluster column) — cannot cluster"
-        )
-    z = zorder_value(cols, mins, maxs, bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def rowgroup_extents(path: str, column: str) -> list[tuple]:
-    """Per-row-group (min, max) stats of ``column`` across the parquet
-    files at ``path`` (pyarrow footer read — no data I/O). The empirical
-    check that a clustered layout actually tightened the reader's
-    pruning bounds."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == column and col.statistics is not None:
-                    out.append((col.statistics.min, col.statistics.max))
-    return out

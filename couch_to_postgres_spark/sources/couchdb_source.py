@@ -19,7 +19,6 @@ the initial-sync path.
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -174,5 +173,3 @@ def register(spark) -> None:
     spark.dataSource.register(CouchDBDataSource)
 
 
-def doc_json(doc: dict | None) -> str | None:
-    return json.dumps(doc, separators=(",", ":")) if doc is not None else None

@@ -1,8 +1,8 @@
 """The one publish step for stored state.
 
 Every writer that replaces directories of a stored-state root (the
-partitioned mirror, its count views, the search, vector and IVF
-indexes) stages the new pieces in a sibling of the root
+partitioned mirror, the search and vector indexes, a materialized
+view) stages the new pieces in a sibling of the root
 (:func:`staging`) and publishes them with :func:`publish`, inside
 :func:`writing`:
 

@@ -24,9 +24,10 @@ Three kinds of stored-state access never need a Spark job:
 
 All of this applies to LOCAL paths — the only filesystem the
 rename-based publish step (``commit.publish``) operates on anyway. For any other scheme (hdfs://, s3a://, …) the meta tables and
-opens take the Spark route — as does an open of a local path with no
-data file yet, so PATH_NOT_FOUND and empty-directory errors surface
-exactly as Spark raises them — :func:`component_rows` counts with
+opens take the Spark route — as does an :func:`open_parquet` of a local
+path with no data file yet, so PATH_NOT_FOUND and empty-directory errors
+surface exactly as Spark raises them (:func:`try_open_parquet` answers
+None for such a path from a stat) — :func:`component_rows` counts with
 Spark, and :func:`parquet_rows` refuses the path (the partitioned
 mirror, its other caller, is local-only). The file
 formats are interchangeable both ways: pyarrow writes a plain part file
@@ -151,10 +152,15 @@ def open_parquet(
 
 
 def try_open_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """:func:`open_parquet`, or None where Spark's reader refuses the
-    path (PATH_NOT_FOUND, or no data file to infer a schema from) —
-    the read-attempt probe, correct on HDFS/S3 where a local stat is
-    blind."""
+    """:func:`open_parquet`, or None where the path holds no data. A
+    local path with no data file answers None from a stat, with no
+    reader call; any other path asks Spark's reader and answers None
+    where it refuses (PATH_NOT_FOUND, or no data file to infer a schema
+    from) — the read-attempt probe, correct on HDFS/S3 where a local
+    stat is blind."""
+    local = _local(path)
+    if local is not None and next(_data_files(local), None) is None:
+        return None
     try:
         return open_parquet(spark, path)
     except AnalysisException:

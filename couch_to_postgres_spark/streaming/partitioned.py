@@ -85,18 +85,14 @@ DELTA_WRITE_AMP_THRESHOLD = 20
 #: ~1/fraction
 DELTA_FOLD_FRACTION = 0.05
 
-#: delta row shape: change events + append-order epoch
-DELTA_SCHEMA = "epoch long, seq long, id string, deleted boolean, doc string"
-
 def bucket_of(id_col: Column, num_buckets: int = DEFAULT_BUCKETS) -> Column:
     return F.pmod(F.crc32(id_col.cast("binary")), F.lit(num_buckets)).cast("int")
 
 
 def auto_num_buckets(n_rows: int) -> int:
     """Size the bucket count from the mirror's (initial-load) row count:
-    next power of two of rows/TARGET, clamped to [16, MAX_BUCKETS].
-    Powers of two keep future split/merge rebucketing cheap (bucket b of
-    2N is b or b+N of N)."""
+    next power of two of rows/TARGET, clamped to [16, MAX_BUCKETS], so
+    every auto count divides MAX_BUCKETS."""
     if n_rows <= 0:
         return 16
     raw = max(1, round(n_rows / TARGET_ROWS_PER_BUCKET))
@@ -220,49 +216,6 @@ def read_partitioned_mirror(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame([], MIRROR_SCHEMA)
 
 
-def _update_count_views(
-    spark: SparkSession,
-    path: str,
-    count_views: dict[str, Column],
-    pre: DataFrame,
-    post: DataFrame,
-    touched_ids: DataFrame,
-    full_pre: DataFrame,
-) -> None:
-    """Advance live count views by the batch's O(touched) delta.
-
-    ``pre``/``post`` are the TOUCHED-BUCKET slices of the mirror (the
-    delta join is a semi-join on touched ids, which only live in touched
-    buckets — untouched rows net zero by construction, so pruned inputs
-    give the identical delta at a fraction of the scan). ``full_pre`` is
-    the WHOLE pre-merge mirror, used only to bootstrap a view that
-    doesn't exist yet (it must be the pre state, not post: the delta is
-    applied on top, so bootstrapping from post would double-count the
-    batch). Crash window: a crash between the data commit and the view
-    swap leaves the view one batch behind; replay nets zero and does NOT
-    repair it — the repair is a view-dir delete, after which the next
-    batch bootstraps the view (the summary-table-plus-periodic-repair
-    pattern; a table format with multi-table transactions closes the
-    window by committing mirror and view together)."""
-    from couch_to_postgres_spark.operators.views import (
-        apply_count_delta,
-        count_view_delta,
-    )
-
-    for name, key in count_views.items():
-        vdir = os.path.join(path, "_views", name)
-        if os.path.exists(vdir):
-            view = open_parquet(spark, vdir)
-        else:
-            view = full_pre.groupBy(key.alias("key")).agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-        new = apply_count_delta(view, count_view_delta(pre, post, touched_ids, key))
-        tmp = vdir + ".tmp"
-        new.write.mode("overwrite").parquet(tmp)
-        publish(path, [(vdir, tmp)])
-
-
 def upsert_partitioned_mirror(
     spark: SparkSession,
     path: str,
@@ -270,7 +223,6 @@ def upsert_partitioned_mirror(
     num_buckets: int | None = None,
     type_filter: str | None = None,
     map_hook: Callable[[Column], Column] | None = None,
-    count_views: dict[str, Column] | None = None,
     mode: str = "auto",
 ) -> list[int]:
     """Merge a change batch. Returns the touched bucket ids.
@@ -288,7 +240,7 @@ def upsert_partitioned_mirror(
         raise ValueError(f"unknown mode {mode!r}: use 'auto', 'delta' or 'rewrite'")
     with writing(path):
         return _upsert_locked(
-            spark, path, batch, num_buckets, type_filter, map_hook, count_views, mode
+            spark, path, batch, num_buckets, type_filter, map_hook, mode
         )
 
 
@@ -328,7 +280,6 @@ def _upsert_locked(
     num_buckets: int | None,
     type_filter: str | None,
     map_hook: Callable[[Column], Column] | None,
-    count_views: dict[str, Column] | None,
     mode: str,
 ) -> list[int]:
     meta = read_meta(path)
@@ -364,17 +315,6 @@ def _upsert_locked(
                 map_hook=map_hook,
             )
             write_partitioned_mirror(merged, path, num_buckets)
-            if count_views:
-                empty = spark.createDataFrame([], MIRROR_SCHEMA)
-                _update_count_views(
-                    spark,
-                    path,
-                    count_views,
-                    pre=empty,
-                    post=read_partitioned_mirror(spark, path),
-                    touched_ids=batch.select("id").distinct(),
-                    full_pre=empty,
-                )
             return touched
 
         if mode == "auto":
@@ -391,7 +331,6 @@ def _upsert_locked(
                 num_buckets,
                 type_filter,
                 map_hook,
-                count_views,
                 touched,
                 meta,
             )
@@ -403,7 +342,6 @@ def _upsert_locked(
                 num_buckets,
                 type_filter,
                 map_hook,
-                count_views,
                 touched,
                 meta,
             )
@@ -420,7 +358,6 @@ def _append_delta(
     num_buckets: int,
     type_filter: str | None,
     map_hook: Callable[[Column], Column] | None,
-    count_views: dict[str, Column] | None,
     touched: list[int],
     meta: dict,
 ) -> None:
@@ -428,10 +365,6 @@ def _append_delta(
     log. No base file is read or written. ``epoch`` stamps append order
     so read-side resolution replays batches in sequence."""
     prepared = _prepared_batch(batch, type_filter, map_hook)
-    # snapshot the PRE view before the append lands new files (Spark
-    # pins the file listing at DataFrame creation)
-    pre = _mor_view(spark, path, touched) if count_views else None
-    full_pre = _mor_view(spark, path) if count_views else None
     epoch = time.time_ns()
     delta_dir = _delta_path(path)
     rows = prepared.select(
@@ -458,17 +391,6 @@ def _append_delta(
     n_appended = parquet_rows(set(_data_files(delta_dir)) - before)
     meta["delta_rows"] = int(meta["delta_rows"]) + n_appended
     write_meta(path, meta)
-    if count_views:
-        post = apply_changes(pre, batch, type_filter=type_filter, map_hook=map_hook)
-        _update_count_views(
-            spark,
-            path,
-            count_views,
-            pre=pre,
-            post=post,
-            touched_ids=batch.select("id").distinct(),
-            full_pre=full_pre,
-        )
 
 
 def _rewrite_buckets(
@@ -478,7 +400,6 @@ def _rewrite_buckets(
     num_buckets: int,
     type_filter: str | None,
     map_hook: Callable[[Column], Column] | None,
-    count_views: dict[str, Column] | None,
     touched: list[int],
     meta: dict,
 ) -> None:
@@ -494,19 +415,6 @@ def _rewrite_buckets(
     merged.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(stage)
-    if count_views:
-        # delta BEFORE the swap: `current` plans over the pre-swap
-        # bucket dirs, which the swap below destroys; full_pre is the
-        # pre-swap whole mirror (only scanned if a view bootstraps)
-        _update_count_views(
-            spark,
-            path,
-            count_views,
-            pre=current,
-            post=open_parquet(spark, stage).drop("bucket"),
-            touched_ids=batch.select("id").distinct(),
-            full_pre=_mor_view(spark, path),
-        )
     _swap_buckets(path, stage, touched, meta)
 
 
@@ -595,41 +503,6 @@ def fold_deltas(
     return buckets
 
 
-def snapshot_mirror(path: str, dest: str) -> dict:
-    """Point-in-time snapshot — the constructive answer to the layout's
-    no-reader-MVCC trade: long scans read the SNAPSHOT while merges
-    continue on the live mirror.
-
-    Taken under the path lock (consistent: no swap lands mid-snapshot)
-    by HARD-LINKING every data file (base buckets, delta log, views,
-    meta) into ``dest`` — O(file count), zero data copied, and because
-    links share inodes, later swaps/GC on the source can delete paths
-    but never the snapshot's bytes. Falls back to copying when dest is
-    on a different filesystem. Read it with
-    :func:`read_partitioned_mirror` (deltas resolve as of the snapshot
-    moment); delete the directory to release it."""
-    with writing(path):
-        n_linked = n_copied = 0
-        for root, dirs, files in os.walk(path):
-            rel = os.path.relpath(root, path)
-            # skip the trash; keep everything live
-            if rel.split(os.sep, 1)[0] == ".trash":
-                dirs[:] = []
-                continue
-            out_root = dest if rel == "." else os.path.join(dest, rel)
-            os.makedirs(out_root, exist_ok=True)
-            for f in files:
-                src = os.path.join(root, f)
-                dst = os.path.join(out_root, f)
-                try:
-                    os.link(src, dst)
-                    n_linked += 1
-                except OSError:  # cross-device or FS without hard links
-                    shutil.copy2(src, dst)
-                    n_copied += 1
-        return {"files_linked": n_linked, "files_copied": n_copied}
-
-
 def validate_mirror(spark: SparkSession, path: str) -> dict:
     """Layout fsck for a partitioned mirror — the post-incident check a
     100 TB deployment runs before trusting pruned reads again.
@@ -671,7 +544,7 @@ def validate_mirror(spark: SparkSession, path: str) -> dict:
         for d in (
             *(
                 path.rstrip("/") + "." + tag
-                for tag in ("staging", "folding", "rebucket", "compact")
+                for tag in ("staging", "folding", "compact")
             ),
             os.path.join(path, PLAN_FILE),
         )
@@ -722,41 +595,6 @@ def point_lookup_partitioned(
     n = int(meta["num_buckets"])
     b = zlib.crc32(doc_id.encode("utf-8")) % n
     return _mor_view(spark, path, [b]).filter(F.col("id") == doc_id)
-
-
-def rebucket_mirror(
-    spark: SparkSession, path: str, new_num_buckets: int
-) -> int:
-    """Layout migration: rewrite the mirror under a new bucket count (the
-    one operation `resolve_num_buckets` refuses to do implicitly).
-
-    Run when the mirror outgrew its layout — rows/bucket drifted far from
-    TARGET_ROWS_PER_BUCKET. Powers of two keep the shuffle friendly
-    (bucket b of 2N receives only rows from bucket b mod N of N).
-    Pending deltas fold in transit (the rewrite reads the MoR view).
-    The new layout stages beside the live one; one publish moves its
-    bucket dirs in, retires the old buckets and the delta log, and
-    swaps the meta last. Count views are bucket-agnostic (keyed
-    aggregates) and stay in place. Returns the OLD bucket count."""
-    with writing(path):
-        meta = read_meta(path)
-        if meta is None:
-            raise ValueError(f"no partitioned mirror at {path}")
-        old_n = int(meta["num_buckets"])
-        if new_num_buckets == old_n:
-            return old_n
-        stage = staging(path, "rebucket")
-        write_partitioned_mirror(_mor_view(spark, path), stage, new_num_buckets)
-        new = {d for d in os.listdir(stage) if d.startswith("bucket=")}
-        old = {d for d in os.listdir(path) if d.startswith("bucket=")} - new
-        steps = [(os.path.join(path, d), os.path.join(stage, d)) for d in sorted(new)]
-        steps += [(os.path.join(path, d), None) for d in sorted(old)]
-        steps += [
-            (_delta_path(path), None),
-            (os.path.join(path, META_FILE), os.path.join(stage, META_FILE)),
-        ]
-        publish(path, steps, stage)
-        return old_n
 
 
 def compact_mirror(

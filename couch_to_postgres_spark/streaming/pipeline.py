@@ -8,10 +8,14 @@ Spark shape of the reference lifecycle::
       .option("checkpointLocation", ...)         # A8/A9 checkpointer
       .trigger(...)                              # cadence (20 s / availableNow)
 
-Delivery is at-least-once (offsets commit after the batch, like the
-reference's trailing `since` checkpoint, lib/index.js:62-94); the
-rev-aware merge makes replays no-ops, so the mirror state is effectively
-exactly-once — the same argument the reference makes (lib/index.js:110-128).
+The feed position is the stream offset — change-log files for
+``follow``, the couch ``since`` for ``follow_couch`` — and lives only in
+``checkpointLocation`` (Spark's offset log, the reference's
+``since_checkpoints`` row). Delivery is at-least-once (offsets commit
+after the batch, like the reference's trailing `since` checkpoint,
+lib/index.js:62-94); the rev-aware merge makes replays no-ops, so the
+mirror state is effectively exactly-once — the same argument the
+reference makes (lib/index.js:110-128).
 
 The mirror is the bucket-partitioned parquet layout of
 :mod:`streaming.partitioned`: ``_mirror_meta.json``, ``bucket=N/`` base
@@ -34,19 +38,12 @@ from pyspark.sql.streaming import StreamingQuery
 from couch_to_postgres_spark.sources.changes import read_change_stream
 from couch_to_postgres_spark.streaming import partitioned
 from couch_to_postgres_spark.streaming.commit import writing
-from couch_to_postgres_spark.streaming.meta_io import open_parquet
 
 
 def read_mirror(spark: SparkSession, mirror_path: str) -> DataFrame:
     """Current mirror state, deltas resolved; an empty mirror when the
     path holds none yet (auto-creation parity: bin/daemon.js:233-262)."""
     return partitioned.read_partitioned_mirror(spark, mirror_path)
-
-
-def read_count_view(spark: SparkSession, mirror_path: str, name: str) -> DataFrame:
-    """Current state of a live count view the mirror merge maintains
-    (``count_views=...``). Columns ``(key, cnt)``."""
-    return open_parquet(spark, os.path.join(mirror_path, "_views", name))
 
 
 def _latest_text_changes(
@@ -235,7 +232,6 @@ def _start_merge(
     quarantine_path: str | None,
     type_filter: str | None,
     map_hook: Callable[[Column], Column] | None,
-    count_views: dict[str, Column] | None,
     num_buckets: int | None,
     search_index_path: str | None,
     search_text: Callable[[Column], Column] | None,
@@ -289,7 +285,6 @@ def _start_merge(
                 num_buckets=num_buckets,
                 type_filter=type_filter,
                 map_hook=map_hook,
-                count_views=count_views,
             )
             if search_index_path is not None:
                 _feed_search_index(
@@ -337,7 +332,6 @@ def follow(
     max_files_per_trigger: int | None = None,
     trigger: dict | None = None,
     query_name: str | None = None,
-    count_views: dict[str, Column] | None = None,
     quarantine_path: str | None = None,
     num_buckets: int | None = None,
     search_index_path: str | None = None,
@@ -399,7 +393,7 @@ def follow(
     )
     return _start_merge(
         stream, mirror_path, checkpoint_path, trigger, query_name,
-        quarantine_path, type_filter, map_hook, count_views, num_buckets,
+        quarantine_path, type_filter, map_hook, num_buckets,
         search_index_path, search_text, shingle_index_path, shingle_n,
         vector_index_path, vector_field, vector_cells,
     )
@@ -418,7 +412,6 @@ def follow_couch(
     inactivity_ms: int | None = None,
     trigger: dict | None = None,
     query_name: str | None = None,
-    count_views: dict[str, Column] | None = None,
     num_buckets: int | None = None,
     username: str | None = None,
     password: str | None = None,
@@ -467,7 +460,7 @@ def follow_couch(
             reader = reader.option(k, v)
     return _start_merge(
         reader.load(), mirror_path, checkpoint_path, trigger, query_name,
-        None, type_filter, map_hook, count_views, num_buckets,
+        None, type_filter, map_hook, num_buckets,
         search_index_path, search_text, shingle_index_path, shingle_n,
         vector_index_path, vector_field, vector_cells,
     )

@@ -51,7 +51,6 @@ from dataclasses import dataclass
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from couch_to_postgres_spark.extensions.search import bm25_rank_components
 from couch_to_postgres_spark.extensions.text import _words
@@ -1010,12 +1009,8 @@ def _bm25_pruned_topk(
     # pass it through instead of reconstructing a doclen frame with a
     # distinct() and joining it back (two shuffles of the rescore slice)
     out = bm25_rank_components(
-        tf_cand
-        if _DL_CARRY_INDEX
-        else tf_cand.select(id_col, "token", "tf"),
-        None
-        if _DL_CARRY_INDEX
-        else tf_cand.select(id_col, "dl").distinct(),
+        tf_cand,
+        None,
         stats,
         dft_frame,
         engaged_queries,
@@ -1207,11 +1202,7 @@ def bm25_topk_from_index(
         # live per-doc length — ride it into scoring and skip the
         # doclen join there (query_postings silently omits the column
         # if a tail append raced the fast probe, degrading to the join)
-        with_dl=(
-            _DL_CARRY_INDEX
-            and fast
-            and meta_rows[0].get("impact_k1") is not None
-        ),
+        with_dl=fast and meta_rows[0].get("impact_k1") is not None,
     )
     if fast:
         # base-is-live invariant: every base postings row is live and
@@ -1540,21 +1531,6 @@ _SEARCH_META_SCHEMA = (
     "impact_avgdl_max double, impact_topg int, impact_hist_bins int"
 )
 
-
-#: INDEX-side dl-carry: on an impacts-mode compacted base
-#: with no tail, ride the postings' stored DENORMALIZED ``dl`` column
-#: into scoring instead of scanning base/doclen and joining it back by
-#: id (full fast path), and pass the pruned rescore's ``tf_cand.dl``
-#: through instead of reconstructing a doclen frame with distinct()+
-#: join (MaxScore path). Unlike a scan-path carry (measured negative in
-#: r14: a min(dl) aggregate riding every hit row), the stored dl costs
-#: NO aggregate state — it is parquet column bytes on rows the scan
-#: already reads — and the avoided work is a corpus-skinny doclen scan + join per
-#: query. MEASURED: in-process alternating A/B at sf0.1 won all 4
-#: pairs on q_bm25_from_index (2.57/3.45, 3.63/4.46, 3.38/3.70,
-#: 3.02/3.26 s carry/join). Exactness pinned by
-#: test_bm25_dl_carry_equals_doclen_join.
-_DL_CARRY_INDEX = True
 
 #: A/B knob — tokenize each micro-batch ONCE into the persisted
 #: `latest` cache (token arrays) instead of caching text and letting
@@ -2322,44 +2298,6 @@ def _fold_attrs(
         .parquet(staged_attrs)
     )
     return "pruned", [(base_attrs_root, staged_attrs, id_dirs)]
-
-
-def search_index_stream(
-    spark: SparkSession,
-    changes_stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seq_col: str = "seq",
-    deleted_col: str = "deleted",
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Attach incremental index maintenance to any streaming DataFrame of
-    changes (readStream frame with seq/id/deleted/text columns) —
-    checkpointed, at-least-once, replay-safe (see module docstring)."""
-
-    def _step(batch: DataFrame, epoch_id: int) -> None:
-        search_index_batch(
-            batch.sparkSession,
-            index_path,
-            batch,
-            text_col=text_col,
-            id_col=id_col,
-            seq_col=seq_col,
-            deleted_col=deleted_col,
-        )
-
-    writer = (
-        changes_stream.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if trigger is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def _live_delta_for_churn(

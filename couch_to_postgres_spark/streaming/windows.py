@@ -110,8 +110,7 @@ def session_rollup_native(
     watermark: str | None = None,
 ) -> DataFrame:
     """Gap sessionization via Spark's built-in ``session_window`` — the
-    idiomatic engine-native path (vs the custom stateful walk in
-    streaming/stateful.py, which exists for richer per-key logic). One
+    idiomatic engine-native path. One
     definition for batch and streams; on a stream the watermark finalizes
     and evicts closed sessions, so state is bounded by the active-session
     set, not history.

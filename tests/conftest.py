@@ -34,9 +34,6 @@ SLOW_TESTS = {
     "test_compact_incremental.py::test_incremental_equals_full_and_untouched_buckets_bit_identical",
     "test_compact_incremental.py::test_incremental_falls_back_to_full_without_base",
     "test_compact_incremental.py::test_incremental_string_ids_delete_all_churn",
-    "test_dedup_stream.py::test_dedup_stream_end_to_end",
-    "test_dedup_stream.py::test_empty_batch_then_real_batch",
-    "test_dedup_stream.py::test_incremental_batches_and_replay",
     "test_examples.py::test_example_runs_clean",
     "test_extensions.py::test_cap_per_group_distributed_equals_window_plan",
     "test_extensions.py::test_cross_near_dedup_drops_cross_dups_keeps_unique",

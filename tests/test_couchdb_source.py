@@ -74,6 +74,9 @@ def test_stream_to_mirror_with_resume(spark, couch, tmp_path):
     couch.changes_pages = [PAGES[1]]
     q2 = run_query()
     q2.awaitTermination(120)
+    # the resumed start asks for changes after the checkpointed offset
+    # (the couch ``since``): no state beside the checkpoint
+    assert "since=2" in couch.changes_requests[-1]
     mirror = read_mirror(spark, str(tmp_path / "mirror"))
     state2 = {r["id"]: r["doc"] for r in mirror.collect()}
     assert set(state2) == {"a", "b"}  # c deleted before ever landing

@@ -60,10 +60,11 @@ def renames_fail_at(k):
         os.rename = real
 
 
-def _sweep(tmp_path, pre, write, observe):
+def _sweep(tmp_path, pre, write, observe, after_crash=None):
     """Run ``write(path)`` on a copy of the ``pre`` tree crash-free and
-    then crashing at each of its renames; after each crash run ``write``
-    again (the next writer) and compare ``observe(path)``."""
+    then crashing at each of its renames; after each crash run
+    ``after_crash(path)`` if given, then ``write`` again (the next
+    writer) and compare ``observe(path)``."""
     clean = str(tmp_path / "clean")
     shutil.copytree(pre, clean)
     with renames_fail_at(None) as calls:
@@ -76,6 +77,8 @@ def _sweep(tmp_path, pre, write, observe):
         shutil.copytree(pre, path)
         with pytest.raises(Crash), renames_fail_at(k):
             write(path)
+        if after_crash is not None:
+            after_crash(path)
         write(path)
         assert observe(path) == want, f"crash at rename {k} of {n}"
     return n
@@ -340,3 +343,44 @@ def test_vector_bootstrap_crash_sweep(spark, tmp_path):
         return sorted(tuple(r) for r in live_vector_ids(spark, path).collect())
 
     assert _sweep(tmp_path, pre, write, observe) == 3
+
+
+def test_view_refresh_crash_sweep(spark, tmp_path):
+    """``MaterializedView.refresh`` lands the new view with one publish
+    (retire the live dir, rename the staged one in): after a crash at
+    either rename a reader still opens a complete view — the previous
+    one or the refreshed one, never a missing path — and the next
+    refresh converges."""
+    from couch_to_postgres_spark.operators.views import MaterializedView
+
+    rows = spark.createDataFrame(
+        [(i, "ab"[i % 2]) for i in range(20)], "n int, kind string"
+    )
+
+    def view(path, cut):
+        return MaterializedView(
+            spark, "crash_view", os.path.join(path, "view"),
+            build=lambda: rows.filter(F.col("n") < cut).groupBy("kind").count(),
+        )
+
+    def contents(v):
+        return sorted(tuple(r) for r in v.read().collect())
+
+    pre = str(tmp_path / "pre")
+    os.makedirs(pre)
+    view(pre, 6).refresh()
+    before = contents(view(pre, 6))
+
+    def after_crash(path):
+        assert contents(view(path, 20)) in (before, want)
+
+    want = [("a", 10), ("b", 10)]
+    assert (
+        _sweep(
+            tmp_path, pre,
+            write=lambda path: view(path, 20).refresh(),
+            observe=lambda path: contents(view(path, 20)),
+            after_crash=after_crash,
+        )
+        == 2
+    )

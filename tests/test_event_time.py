@@ -1,11 +1,10 @@
 """Event-time operators: windowed counts (stream ≡ batch), gap
-sessionization (stateful stream ≡ batch oracle)."""
+sessionization (session_window stream ≡ batch oracle)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.session import load_table
-from couch_to_postgres_spark.streaming.stateful import sessionize_stream
 from couch_to_postgres_spark.streaming.windows import (
     interval_join,
     sessionize_batch,
@@ -184,41 +183,6 @@ def test_sessionize_batch_properties(spark, events):
     # sessions are disjoint, ordered per user
     row = sess.filter(F.col("session_end_us") < F.col("session_start_us")).count()
     assert row == 0
-
-
-def test_stateful_sessionize_equals_batch(spark, events, events_stream_dir):
-    expected = {
-        (r["user_id"], r["session_no"]): (
-            r["n_events"], r["session_start_us"], r["session_end_us"],
-        )
-        for r in sessionize_batch(events, gap_minutes=60).collect()
-    }
-    stream = read_events_stream(spark, events, events_stream_dir)
-    q = (
-        sessionize_stream(stream, gap_minutes=60)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    # update mode: keep the final (max-n) row per (user, session)
-    got_rows = spark.sql(
-        """
-        SELECT user_id, session_no, max_by(n_events, n_events) AS n_events,
-               max_by(session_start_us, n_events) AS session_start_us,
-               max_by(session_end_us, n_events) AS session_end_us
-        FROM sessions GROUP BY user_id, session_no
-        """
-    ).collect()
-    got = {
-        (r["user_id"], r["session_no"]): (
-            r["n_events"], r["session_start_us"], r["session_end_us"],
-        )
-        for r in got_rows
-    }
-    assert got == expected
 
 
 def test_session_window_native_stream_equals_batch(

@@ -7,13 +7,7 @@ from pyspark.sql import functions as F
 from couch_to_postgres_spark.extensions import dedup as D
 from couch_to_postgres_spark.extensions import similarity as S
 from couch_to_postgres_spark.extensions import text as T
-from couch_to_postgres_spark.extensions.multimodal import (
-    FEATURE_SCHEMA,
-    attach_binary,
-    decode_image_stub,
-    extract_features,
-    fake_decode_features,
-)
+from couch_to_postgres_spark.extensions.multimodal import attach_binary
 
 
 @pytest.fixture(scope="module")
@@ -283,22 +277,18 @@ def test_fingerprint_normalizes_whitespace(spark):
 
 
 def test_multimodal_plumbing(spark, docs):
+    import hashlib
+
     assets = attach_binary(docs.limit(100))
     assert [f.name for f in assets.schema.fields] == [
         "asset_id", "media_type", "payload", "n_bytes", "content_md5",
     ]
-    feats = extract_features(assets, batch_budget_bytes=1 << 12)
-    assert feats.schema == FEATURE_SCHEMA
-    rows = feats.collect()
+    rows = assets.collect()
     assert len(rows) == 100
-    sample = assets.filter(F.col("asset_id") == rows[0]["asset_id"]).head()
-    expect = fake_decode_features(bytes(sample["payload"]))
-    assert (rows[0]["feat_mean"], rows[0]["feat_first"]) == expect
-
-
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"bytes")
+    for r in rows:
+        payload = bytes(r["payload"])
+        assert r["n_bytes"] == len(payload)
+        assert r["content_md5"] == hashlib.md5(payload).hexdigest()
 
 
 def test_frame_sampling(spark, docs):
@@ -316,135 +306,6 @@ def test_frame_sampling(spark, docs):
     )
     assert [r["offset"] for r in one] == [i * 64 for i in range(len(one))]
     assert all(1 <= r["frame_bytes"] <= 16 for r in one)
-
-
-def test_resize_assets(spark, docs):
-    from couch_to_postgres_spark.extensions.multimodal import (
-        fake_resize,
-        resize_assets,
-        resize_stub,
-    )
-
-    with pytest.raises(NotImplementedError):
-        resize_stub(b"x", 4, 4)
-    assets = attach_binary(docs.limit(20))
-    resized = resize_assets(assets, width=8, height=8).collect()
-    assert len(resized) == 20
-    assert all(r["n_bytes"] == 64 for r in resized)
-    sample = assets.filter(F.col("asset_id") == resized[0]["asset_id"]).head()
-    assert bytes(resized[0]["payload"]) == fake_resize(
-        bytes(sample["payload"]), 8, 8
-    )
-
-
-def test_multimodal_capability_probe_modes():
-    """The module self-upgrades: real kernels when Pillow is importable,
-    documented NotImplementedError + fake fallback otherwise. Assertions
-    run for WHICHEVER mode this container is in."""
-    from couch_to_postgres_spark.extensions import multimodal as M
-
-    if M.have_pillow():
-        import io
-
-        import PIL.Image
-
-        img = PIL.Image.new("L", (4, 4), color=128)
-        buf = io.BytesIO()
-        img.save(buf, format="PNG")
-        payload = buf.getvalue()
-        mean, first = M.decode_image_features(payload)
-        assert 0 <= mean <= 255 and 0 <= first <= 255
-        assert len(M.resize_image(payload, 8, 8)) == 64
-        assert M.best_decoder() is M.decode_image_features
-    else:
-        assert M.best_decoder() is M.fake_decode_features
-        with pytest.raises(NotImplementedError):
-            M.decode_image_features(b"x")
-        with pytest.raises(NotImplementedError):
-            M.resize_image(b"x", 2, 2)
-
-
-def test_multimodal_absence_mode_forced(monkeypatch):
-    """Forcing the probe off degrades cleanly regardless of environment."""
-    from couch_to_postgres_spark.extensions import multimodal as M
-
-    monkeypatch.setattr(M, "have_pillow", lambda: False)
-    assert M.best_decoder() is M.fake_decode_features
-    with pytest.raises(NotImplementedError):
-        M.decode_image_features(b"x")
-
-
-def test_multimodal_presence_mode_via_injected_pil(monkeypatch):
-    """Exercise the REAL decode/resize code path by injecting a minimal
-    PIL stand-in — proves the Pillow branch is wired correctly even in
-    this container, and that it honors the shared kernel contract."""
-    import sys
-    import types
-
-    from couch_to_postgres_spark.extensions import multimodal as M
-
-    class _Img:
-        def __init__(self, data):
-            self._data = list(data)
-
-        def convert(self, mode):
-            assert mode == "L"
-            return self
-
-        def getdata(self):
-            return self._data
-
-        def resize(self, wh):
-            w, h = wh
-            target = w * h
-            reps = (target // max(1, len(self._data))) + 1
-            return _Img((self._data * reps)[:target])
-
-        def tobytes(self):
-            return bytes(self._data)
-
-    pil_image = types.ModuleType("PIL.Image")
-    pil_image.open = lambda buf: _Img(buf.read())
-    pil_pkg = types.ModuleType("PIL")
-    pil_pkg.Image = pil_image
-    monkeypatch.setitem(sys.modules, "PIL", pil_pkg)
-    monkeypatch.setitem(sys.modules, "PIL.Image", pil_image)
-
-    assert M.have_pillow()
-    assert M.best_decoder() is M.decode_image_features
-    payload = bytes([10, 20, 30, 40])
-    mean, first = M.decode_image_features(payload)
-    assert (mean, first) == (25, 10)  # real branch: decoded pixel stats
-    out = M.resize_image(payload, 3, 3)
-    assert len(out) == 9  # contract: width*height bytes, same as fake
-    # empty image edge in the real branch
-    assert M.decode_image_features(b"") == (0, 0)
-
-
-def test_multimodal_kernel_contract_properties():
-    """Property: both decode kernels give (mean, first) ints in [0,255];
-    both resize kernels give exactly width*height bytes — so swapping the
-    real kernel in changes results, never shapes."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from couch_to_postgres_spark.extensions.multimodal import (
-        fake_decode_features,
-        fake_resize,
-    )
-
-    @settings(max_examples=50, deadline=None)
-    @given(
-        payload=st.binary(max_size=256),
-        w=st.integers(min_value=1, max_value=16),
-        h=st.integers(min_value=1, max_value=16),
-    )
-    def check(payload, w, h):
-        mean, first = fake_decode_features(payload)
-        assert 0 <= mean <= 255 and 0 <= first <= 255
-        assert len(fake_resize(payload, w, h)) == w * h
-
-    check()
 
 
 def test_hash_split_deterministic_and_proportional(spark, docs):
@@ -2226,10 +2087,10 @@ def test_bm25_batch_matches_single_query_form(spark):
     assert batch == singles
 
 
-def test_bm25_batch_query_set_dedup_exact(spark, monkeypatch):
+def test_bm25_batch_query_set_dedup_exact(spark):
     # r14: queries with EQUAL distinct-term sets are scored once per
     # set and the ranked rows expanded back — bit-identical to scoring
-    # every query (permuted term order, within-query duplicate terms,
+    # each distinct set alone (permuted term order, within-query duplicate terms,
     # and a max_df_frac that empties a whole set are all covered; the
     # candidates restriction is query-independent so it composes).
     from couch_to_postgres_spark.extensions import search
@@ -2253,18 +2114,33 @@ def test_bm25_batch_query_set_dedup_exact(spark, monkeypatch):
     )
     cands = df.select("doc_id").filter("doc_id % 2 = 0")
 
-    def run(**kw):
+    def run(queries, **kw):
         return sorted(
             (r["query_id"], r["doc_id"], r["score"], r["rank"])
-            for r in search.bm25_topk_batch(df, qtab, k=7, **kw).collect()
+            for r in search.bm25_topk_batch(df, queries, k=7, **kw).collect()
         )
 
+    # oracle: each distinct term set scored alone, its rows copied to
+    # every query_id that asks for that set
+    members: dict = {}
+    for r in qtab.collect():
+        members.setdefault(r["query_id"], set()).add(r["term"])
+    groups: dict = {}
+    for qid, terms in sorted(members.items()):
+        groups.setdefault(frozenset(terms), []).append(qid)
     for kw in ({}, {"max_df_frac": 0.5}, {"candidates": cands}):
-        monkeypatch.setattr(search, "_DEDUP_QUERY_SETS", True)
-        deduped = run(**kw)
-        monkeypatch.setattr(search, "_DEDUP_QUERY_SETS", False)
-        plain = run(**kw)
-        assert deduped == plain, kw
+        want = []
+        for terms, qids in groups.items():
+            alone = spark.createDataFrame(
+                [(qids[0], t) for t in sorted(terms)], "query_id int, term string"
+            )
+            want += [
+                (q, d, score, rank)
+                for _, d, score, rank in run(alone, **kw)
+                for q in qids
+            ]
+        deduped = run(qtab, **kw)
+        assert deduped == sorted(want), kw
     # the duplicate sets really produce rows for every member query_id
     got_qids = {t[0] for t in deduped}
     assert {1, 2, 3, 4, 5} <= got_qids and 6 not in got_qids

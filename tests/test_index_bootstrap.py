@@ -213,3 +213,59 @@ def test_delete_only_first_batch_does_not_bootstrap(spark, tmp_path):
     assert not os.path.exists(os.path.join(index, "base"))
     st = vector_index_status(spark, index)
     assert (st["tail_rows"], st["tombstones"], st["live_vectors"]) == (1, 1, 1)
+
+
+def test_tail_free_read_makes_no_reader_call_for_absent_tail(
+    spark, tmp_path, monkeypatch
+):
+    """A read of a bootstrapped (tail-free) index learns from a local
+    stat that its tail components are absent: Spark's reader is never
+    asked for the search ``doclen``/``postings``/``tombstones`` or the
+    vector ``cells``/``tombstones``, and the answers equal those of the
+    reader probe a non-local path takes."""
+    from couch_to_postgres_spark.streaming import meta_io
+    from couch_to_postgres_spark.streaming.search_stream import (
+        bm25_topk_from_index,
+    )
+    from couch_to_postgres_spark.streaming.vector_stream import vector_topk_live
+
+    sidx, vidx = str(tmp_path / "sidx"), str(tmp_path / "vidx")
+    search_index_batch(spark, sidx, _changes(spark, BATCH).drop("source"))
+    init_vector_index(spark, vidx, centroids=ANCHORS, assigner="hof")
+    vector_index_batch(spark, vidx, _vchanges(spark, VBATCH))
+    qtab = spark.createDataFrame(
+        [(1, "spark"), (1, "rows"), (2, "merge")], "query_id int, term string"
+    )
+    qvec = spark.createDataFrame(
+        [(101, [1.0, 0.2]), (102, [-0.3, 0.9])],
+        "vec_id long, embedding array<double>",
+    )
+
+    def answers():
+        return (
+            sorted(tuple(r) for r in bm25_topk_from_index(
+                spark, sidx, qtab, k=3).collect()),
+            sorted(tuple(r) for r in vector_topk_live(
+                spark, vidx, qvec, k=2, nprobe=len(ANCHORS)).collect()),
+        )
+
+    opened = []
+    real_open = meta_io.open_parquet
+
+    def recording_open(spark_, *paths, **kw):
+        opened.extend(paths)
+        return real_open(spark_, *paths, **kw)
+
+    monkeypatch.setattr(meta_io, "open_parquet", recording_open)
+    got = answers()
+    absent = [os.path.join(sidx, c) for c in ("doclen", "postings", "tombstones")]
+    absent += [os.path.join(vidx, c) for c in ("cells", "tombstones")]
+    for path in absent:
+        assert not os.path.exists(path), path
+        assert path not in opened, path
+    # the reader probe (every path taken as non-local) answers the same
+    monkeypatch.setattr(meta_io, "_local", lambda path: None)
+    opened.clear()
+    assert answers() == got
+    assert set(absent) & set(opened)
+    assert got[0] and got[1]

@@ -11,11 +11,8 @@ from couch_to_postgres_spark.functions.json import (
     json_get,
     json_keys,
     json_object_set_key,
-    json_object_set_key_udf,
     register_sql_functions,
-    rev_number,
 )
-from couch_to_postgres_spark.operators import query as Q
 from couch_to_postgres_spark.operators.mirror import MIRROR_SCHEMA
 
 # the README walkthrough fixture (reference README.md:89-98): myvar values
@@ -94,8 +91,12 @@ def test_set_key_udf_preserves_nesting(spark):
     df = spark.createDataFrame(
         [("x", '{"a":{"b":[1,2]},"c":"s"}')], MIRROR_SCHEMA
     )
+    register_sql_functions(spark)
     out = df.withColumn(
-        "doc", json_object_set_key_udf("doc", F.lit("d"), F.lit('{"n":1}'))
+        "doc",
+        F.call_function(
+            "json_object_set_key_nested", "doc", F.lit("d"), F.lit('{"n":1}')
+        ),
     ).head()
     parsed = json.loads(out["doc"])
     assert parsed["a"] == {"b": [1, 2]} and parsed["d"] == {"n": 1}
@@ -112,12 +113,6 @@ def test_json_agg_deterministic(spark):
     out1 = m.agg(json_agg(F.col("id")).alias("arr")).head()["arr"]
     out2 = m.repartition(7).agg(json_agg(F.col("id")).alias("arr")).head()["arr"]
     assert out1 == out2  # sort_array canonicalizes partition arrival order
-
-
-def test_rev_number(spark):
-    m = example(spark)
-    out = m.select(rev_number(json_get("doc", "_rev")).alias("n")).distinct().collect()
-    assert [r["n"] for r in out] == [1]
 
 
 def test_register_sql_functions(spark):
@@ -142,13 +137,3 @@ def test_register_sql_functions(spark):
         "FROM example WHERE id = 'test1'"
     ).head()
     assert json.loads(nrow["doc"])["d"] == {"n": 1}
-
-
-def test_bulk_payloads_shape(spark):
-    m = example(spark)
-    rows = Q.bulk_payloads(m, chunk_size=3).orderBy("chunk").collect()
-    assert [r["docs_in_chunk"] for r in rows] == [3, 3, 1]
-    for r in rows:
-        payload = json.loads(r["payload"])
-        assert isinstance(payload, list) and len(payload) == r["docs_in_chunk"]
-        assert all("_id" in d for d in payload)

@@ -251,6 +251,9 @@ def test_fold_deltas_restores_pure_base(spark, sf_dir, tmp_path):
         p.startswith("_delta/") for p in file_inventory(mirror_path)
     )
     assert state(read_partitioned_mirror(spark, mirror_path)) == expected
+    # the persisted layout is authoritative: a conflicting count raises
+    with pytest.raises(ValueError, match=f"num_buckets={N_BUCKETS}"):
+        upsert_partitioned_mirror(spark, mirror_path, changes, 2 * N_BUCKETS)
 
 
 def test_rewrite_after_delta_folds_touched_buckets(spark, sf_dir, tmp_path):
@@ -272,92 +275,6 @@ def test_rewrite_after_delta_folds_touched_buckets(spark, sf_dir, tmp_path):
     upsert_partitioned_mirror(spark, mirror_path, bulk, N_BUCKETS, mode="rewrite")
     expected = state(apply_changes(apply_changes(base, small), bulk))
     assert state(read_partitioned_mirror(spark, mirror_path)) == expected
-
-
-def test_delta_path_maintains_count_views(spark, sf_dir, tmp_path):
-    """Count views advance by O(touched) deltas on the append path too:
-    after delta merges the view equals a fresh GROUP BY of the MoR state."""
-    from pyspark.sql import functions as F2
-
-    from couch_to_postgres_spark.functions.json import json_get
-    from couch_to_postgres_spark.streaming.pipeline import read_count_view
-
-    mirror_path = str(tmp_path / "pmirror")
-    base = docs_mirror(spark, sf_dir, with_rev=True)
-    write_partitioned_mirror(base, mirror_path, N_BUCKETS)
-    views = {"by_lang": json_get("doc", "lang")}
-    changes = spark.createDataFrame(DELTA_CHANGES, CHANGES_SCHEMA)
-    upsert_partitioned_mirror(
-        spark, mirror_path, changes, N_BUCKETS, count_views=views, mode="delta"
-    )
-    nullsafe = lambda t: (t[0] is None, t[0] or "", t[1])  # noqa: E731
-    view = sorted(
-        map(tuple, read_count_view(spark, mirror_path, "by_lang").collect()),
-        key=nullsafe,
-    )
-    fresh = sorted(
-        map(
-            tuple,
-            read_partitioned_mirror(spark, mirror_path)
-            .groupBy(json_get("doc", "lang").alias("key"))
-            .agg(F2.count(F2.lit(1)).alias("cnt"))
-            .collect(),
-        ),
-        key=nullsafe,
-    )
-    assert view == fresh and len(view) > 0
-
-
-def test_rebucket_mirror_migrates_layout(spark, sf_dir, tmp_path):
-    """Layout migration: state (incl. pending deltas and count views)
-    survives a bucket-count change; the new layout is authoritative and
-    a stale explicit count now raises."""
-    import os
-
-    import pytest as _pytest
-
-    from couch_to_postgres_spark.functions.json import json_get
-    from couch_to_postgres_spark.streaming.partitioned import (
-        read_meta,
-        rebucket_mirror,
-    )
-    from couch_to_postgres_spark.streaming.pipeline import read_count_view
-
-    mirror_path = str(tmp_path / "pmirror")
-    base = docs_mirror(spark, sf_dir, with_rev=True)
-    write_partitioned_mirror(base, mirror_path, 16)
-    views = {"by_lang": json_get("doc", "lang")}
-    changes = spark.createDataFrame(DELTA_CHANGES, CHANGES_SCHEMA)
-    upsert_partitioned_mirror(
-        spark, mirror_path, changes, 16, count_views=views, mode="delta"
-    )
-    expected = state(read_partitioned_mirror(spark, mirror_path))
-    view_before = sorted(
-        map(tuple, read_count_view(spark, mirror_path, "by_lang").collect()),
-        key=str,
-    )
-
-    assert rebucket_mirror(spark, mirror_path, 32) == 16
-    meta = read_meta(mirror_path)
-    assert meta["num_buckets"] == 32 and meta["delta_rows"] == 0
-    assert state(read_partitioned_mirror(spark, mirror_path)) == expected
-    assert (
-        sorted(
-            map(tuple, read_count_view(spark, mirror_path, "by_lang").collect()),
-            key=str,
-        )
-        == view_before
-    )
-    # stale explicit bucket count is refused; the new one works
-    with _pytest.raises(ValueError, match="num_buckets=32"):
-        upsert_partitioned_mirror(spark, mirror_path, changes, 16)
-    upsert_partitioned_mirror(spark, mirror_path, changes, 32)
-    assert state(read_partitioned_mirror(spark, mirror_path)) == expected
-    assert max(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(mirror_path)
-        if d.startswith("bucket=")
-    ) > 15  # rows really spread into the new bucket range
 
 
 def test_point_lookup_partitioned_prunes_to_one_bucket(spark, sf_dir, tmp_path):
@@ -531,39 +448,3 @@ def test_mor_random_sequences_equal_sequential_apply(spark, sf_dir):
                 reference
             ), f"seed={seed} mode={mode} diverged"
         shutil.rmtree(work, ignore_errors=True)
-
-
-
-def test_snapshot_survives_full_rewrite_of_source(spark, sf_dir, tmp_path):
-    """The MVCC-on-demand path: a snapshot taken before a full bucket
-    rewrite still reads the EXACT pre-rewrite state afterwards (hard
-    links share inodes — source swaps and trash GC cannot touch them),
-    while the live mirror shows the new state. Pending deltas are part
-    of the snapshot moment."""
-    from couch_to_postgres_spark.streaming.partitioned import snapshot_mirror
-
-    mirror_path = str(tmp_path / "pmirror")
-    snap_path = str(tmp_path / "snap")
-    base = docs_mirror(spark, sf_dir, with_rev=True)
-    write_partitioned_mirror(base, mirror_path, N_BUCKETS)
-    delta = spark.createDataFrame(DELTA_CHANGES, CHANGES_SCHEMA)
-    upsert_partitioned_mirror(spark, mirror_path, delta, N_BUCKETS, mode="delta")
-    pre_state = state(read_partitioned_mirror(spark, mirror_path))
-
-    stats = snapshot_mirror(mirror_path, snap_path)
-    assert stats["files_linked"] > 0 and stats["files_copied"] == 0
-
-    # destroy the source state: rewrite every doc with a new rev
-    bulk = base.selectExpr(
-        "CAST(id AS LONG) + 1000 AS seq", "id", "false AS deleted", "doc"
-    ).withColumn("doc", F.regexp_replace("doc", '"1-', '"9-'))
-    upsert_partitioned_mirror(spark, mirror_path, bulk, N_BUCKETS, mode="rewrite")
-    # and expire the trash so the old source files are truly gone
-    from couch_to_postgres_spark.streaming.commit import _gc_trash
-
-    _gc_trash(mirror_path, grace_s=0.0)
-
-    live = state(read_partitioned_mirror(spark, mirror_path))
-    assert any('"9-' in doc for doc in live.values())
-    snap = state(read_partitioned_mirror(spark, snap_path))
-    assert snap == pre_state  # bit-exact pre-rewrite state, deltas included

@@ -262,55 +262,6 @@ def test_filtered_agg_single_scan(spark, sf_dir):
     assert "Join" not in plan, plan
 
 
-def test_time_partitioned_layout_prunes_partitions(spark, sf_dir, tmp_path):
-    """sinks/layout: a date-range read over the hive-partitioned events
-    layout must prune at planning time (PartitionFilters on event_date)
-    and touch only the in-range partition files."""
-    from couch_to_postgres_spark.sinks.layout import (
-        read_time_range,
-        write_time_partitioned,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_by_day")
-    write_time_partitioned(ev, path)
-
-    dates = sorted(
-        r["event_date"]
-        for r in spark.read.parquet(path).select("event_date").distinct().collect()
-    )
-    assert len(dates) >= 3, dates
-    start, end = dates[0], dates[2]  # first two days only
-    df = read_time_range(spark, path, start, end)
-
-    plan = executed_plan(df)
-    assert "PartitionFilters" in plan and "event_date" in plan, plan
-    # correctness: identical to a filter over the unpartitioned table
-    from couch_to_postgres_spark.session import event_timestamp
-
-    expected = ev.filter(
-        (F.to_date(event_timestamp(ev)) >= F.lit(start))
-        & (F.to_date(event_timestamp(ev)) < F.lit(end))
-    ).count()
-    assert df.count() == expected
-
-    # empirical pruning proof: corrupt every file of an out-of-range day;
-    # the ranged read must never open it (planning-time pruning), while a
-    # full scan fails on it
-    import os
-
-    import pytest as _pytest
-
-    corrupt_dir = os.path.join(path, f"event_date={dates[-1]}")
-    for fname in os.listdir(corrupt_dir):
-        if fname.endswith(".parquet"):
-            with open(os.path.join(corrupt_dir, fname), "wb") as fh:
-                fh.write(b"not a parquet file")
-    assert read_time_range(spark, path, start, end).count() == expected
-    with _pytest.raises(Exception):
-        spark.read.parquet(path).count()
-
-
 def test_encode_documents_broadcasts_vocab(spark, sf_dir):
     """x_encode: the vocab side must broadcast (it always fits); the only
     real exchange carries (doc, pos, tid) rows keyed by doc id — never a

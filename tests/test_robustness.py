@@ -11,7 +11,7 @@ from couch_to_postgres_spark.functions.json import (
     json_get,
     json_keys,
     json_object_set_key,
-    json_object_set_key_udf,
+    register_sql_functions,
 )
 from couch_to_postgres_spark.operators.cdc import apply_changes
 from couch_to_postgres_spark.operators.mirror import CHANGES_SCHEMA, MIRROR_SCHEMA
@@ -56,8 +56,12 @@ def test_set_key_preserves_tricky_values(spark, tricky_mirror):
     for r in out.collect():
         parsed = json.loads(r["doc"])  # stays valid JSON
         assert parsed["tag"] == "x"
+    register_sql_functions(spark)
     out2 = tricky_mirror.withColumn(
-        "doc", json_object_set_key_udf("doc", F.lit("tag"), F.lit("x"))
+        "doc",
+        F.call_function(
+            "json_object_set_key_nested", "doc", F.lit("tag"), F.lit("x")
+        ),
     )
     originals = dict(TRICKY)
     for r in out2.collect():

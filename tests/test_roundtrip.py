@@ -1,7 +1,8 @@
 """Entry point 4 of SURVEY.md §3 — the writeback round trip:
 
     mirror-side write → HTTP writeback → CouchDB assigns new revs →
-    `_changes` replays them → bridge → merge → mirror converges,
+    `_changes` replays them → `format("couchdb")` source → merge →
+    mirror converges,
     with the rev-compare suppressing echo for untouched docs.
 
 The couch side is the RecordingCouch test server, extended here to emit a
@@ -17,10 +18,8 @@ from couch_to_postgres_spark.functions.json import json_get, json_object_set_key
 from couch_to_postgres_spark.operators.cdc import change_stats
 from couch_to_postgres_spark.operators.mirror import docs_mirror
 from couch_to_postgres_spark.sinks.writeback import writeback_bulk
-from couch_to_postgres_spark.sources.bridge import drain_once
-from couch_to_postgres_spark.sources.couchdb import CouchClient
 from couch_to_postgres_spark.streaming.partitioned import write_partitioned_mirror
-from couch_to_postgres_spark.streaming.pipeline import follow, read_mirror
+from couch_to_postgres_spark.streaming.pipeline import follow_couch, read_mirror
 from tests.test_writeback import RecordingCouch
 
 
@@ -57,9 +56,10 @@ def test_full_writeback_round_trip(spark, sf_dir, couch, tmp_path):
         results.append({"seq": 1000 + i, "id": str(d["doc_id"]), "doc": new})
     couch.changes_pages = [{"results": results, "last_seq": 1000 + len(results)}]
 
-    # 3. the feed replays into the mirror via bridge + streaming merge
-    drain_once(CouchClient(couch.url), "articles", str(tmp_path / "log"), str(tmp_path / "state"))
-    q = follow(spark, str(tmp_path / "log"), mirror_path, str(tmp_path / "ckpt"))
+    # 3. the feed replays into the mirror via the couchdb source
+    q = follow_couch(
+        spark, couch.url, "articles", mirror_path, str(tmp_path / "ckpt")
+    )
     q.awaitTermination(120)
 
     final = read_mirror(spark, mirror_path)
@@ -132,11 +132,9 @@ def test_round_trip_with_conflicting_revs(spark, sf_dir, couch, tmp_path):
         seq += 1
     couch.changes_pages = [{"results": results, "last_seq": seq}]
 
-    drain_once(
-        CouchClient(couch.url), "articles",
-        str(tmp_path / "log"), str(tmp_path / "state"),
+    q = follow_couch(
+        spark, couch.url, "articles", mirror_path, str(tmp_path / "ckpt")
     )
-    q = follow(spark, str(tmp_path / "log"), mirror_path, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     final = read_mirror(spark, mirror_path)

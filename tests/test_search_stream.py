@@ -15,7 +15,6 @@ from couch_to_postgres_spark.streaming.search_stream import (
     compact_index,
     live_doclen,
     search_index_batch,
-    search_index_stream,
 )
 
 # a tiny corpus with real term overlap so BM25 has something to rank
@@ -266,7 +265,15 @@ def test_stream_end_to_end(spark, index, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed / "*"))
     )
-    q = search_index_stream(spark, stream, index, str(tmp_path / "ckpt"))
+    # one index batch per micro-batch, as pipeline.follow feeds the twin
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda batch, _: search_index_batch(spark, index, batch)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(300)
     qtab = _qtab(spark)
     got = bm25_topk_from_index(spark, index, qtab, k=6)
@@ -981,14 +988,11 @@ def test_maxscore_gate_short_circuits_from_meta(spark, tmp_path):
     assert _rows(got) == _rows(_fresh(spark, docs, qtab, k=10))
 
 
-def test_bm25_dl_carry_equals_doclen_join(spark, tmp_path, monkeypatch):
-    """r14 pin for the index-side dl-carry scoring shape: the stored-dl
-    passthrough (search_stream._DL_CARRY_INDEX, production default
-    True) must produce IDENTICAL rows to the r03-r13 corpus-doclen-join
-    shape on both the compacted read-mostly full fast path and the
-    forced MaxScore rescore."""
-    from couch_to_postgres_spark.streaming import search_stream as ss
-
+def test_bm25_dl_carry_equals_doclen_join(spark, tmp_path):
+    """Pin for the index-side dl-carry scoring shape: the stored-dl
+    passthrough must rank exactly like a fresh build (whose scoring
+    joins the corpus doclen) on both the compacted read-mostly full
+    fast path and the forced MaxScore rescore."""
     docs = _skewed_corpus()
     idx = _compacted(spark, tmp_path, docs, "dl_carry_idx")
     qtab = spark.createDataFrame(
@@ -997,25 +1001,10 @@ def test_bm25_dl_carry_equals_doclen_join(spark, tmp_path, monkeypatch):
         [(1, "hot"), (1, "x"), (2, "cold"), (2, "y")],
         "query_id int, term string",
     )
-
-    assert ss._DL_CARRY_INDEX is True  # production default
-
-    # index paths: both knob arms equal
-    def index_paths():
-        return {
-            "full": _rows(
-                bm25_topk_from_index(spark, idx, qtab, k=7, pruned=False)
-            ),
-            "forced": _rows(
-                bm25_topk_from_index(spark, idx, qtab, k=7, pruned="force")
-            ),
-        }
-
-    carried = index_paths()
-    monkeypatch.setattr(ss, "_DL_CARRY_INDEX", False)
-    assert index_paths() == carried
-    # and both equal the fresh-build oracle
-    assert carried["full"] == _rows(_fresh(spark, docs, qtab, k=7))
+    want = _rows(_fresh(spark, docs, qtab, k=7))
+    for pruned in (False, "force"):
+        got = bm25_topk_from_index(spark, idx, qtab, k=7, pruned=pruned)
+        assert _rows(got) == want, pruned
 
 
 def test_dfs_rows_arrow_equals_window(spark):

@@ -132,25 +132,6 @@ def test_hash_u_in_open_interval(spark):
     assert 0.0 < mm["lo"] and mm["hi"] < 1.0
 
 
-def test_union_sketch_global_estimate(spark):
-    # 3 groups with overlapping domains: union distinct = 800
-    rows = (
-        [("a", str(v)) for v in range(500)]
-        + [("b", str(v)) for v in range(300, 700)]
-        + [("c", str(v)) for v in range(600, 800)]
-    )
-    df = spark.createDataFrame(rows, "g string, v string")
-    per = S.bottomk_sketch(df, "g", "v", k=64)
-    glob = S.distinct_estimate(S.union_sketch(per, k=64), k=64).collect()[0]
-    assert abs(glob["distinct_est"] - 800) / 800 < 0.35
-    # exactness below k: tiny domains collapse to the exact union
-    tiny = df.filter(F.col("v").cast("int") < 10)
-    g2 = S.distinct_estimate(
-        S.union_sketch(S.bottomk_sketch(tiny, "g", "v", k=64), k=64), k=64
-    ).collect()[0]
-    assert g2["distinct_est"] == 10.0 and g2["u_k"] is None
-
-
 def test_stream_state_commit_is_versioned_and_crash_safe(spark, tmp_path):
     import os
 
@@ -366,97 +347,3 @@ def test_sketch_state_status_reports_health(spark, tmp_path):
     assert st["batch_id"] == 1
     assert st["committed_unix"] is not None
     assert st["versions_retained"] >= 1  # grace-window copy of v-0
-
-
-def test_state_stream_attach_end_to_end(spark, tmp_path):
-    """The writeStream wiring for the versioned-state maintainers:
-    checkpointed foreachBatch over a file stream, epoch ids recorded as
-    batch_id, final state equal to the one-shot computation over the
-    whole feed — for the reservoir, the sketch, and the n-gram LM."""
-    import os
-    import time
-
-    from couch_to_postgres_spark.extensions.sampling import cap_per_group
-    from couch_to_postgres_spark.extensions.selection import (
-        lm_counts_from_state,
-        ngram_bucket_counts,
-        ngram_lm_stream_attach,
-    )
-
-    full = spark.createDataFrame(
-        [
-            (i, "g%d" % (i % 2), "doc %d words about spark rows" % i)
-            for i in range(120)
-        ],
-        "doc_id long, source string, text string",
-    )
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    full.filter(F.col("doc_id") < 60).coalesce(1).write.parquet(
-        str(feed / "f1")
-    )
-    full.filter(F.col("doc_id") >= 60).coalesce(1).write.parquet(
-        str(feed / "f2")
-    )
-    now = time.time()
-    for i, d in enumerate(("f1", "f2")):
-        for f in (feed / d).iterdir():
-            os.utime(f, (now + i, now + i))
-
-    def stream():
-        return (
-            spark.readStream.schema(
-                "doc_id long, source string, text string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed / "*"))
-        )
-
-    res_state = str(tmp_path / "res_state")
-    q1 = S.reservoir_stream_attach(
-        spark, stream(), res_state, str(tmp_path / "ck_res"), "source", k=9
-    )
-    sk_state = str(tmp_path / "sk_state")
-    q2 = S.sketch_stream_attach(
-        spark, stream(), sk_state, str(tmp_path / "ck_sk"), "source",
-        F.col("text"), k=16,
-    )
-    lm_state = str(tmp_path / "lm_state")
-    q3 = ngram_lm_stream_attach(
-        spark, stream(), lm_state, str(tmp_path / "ck_lm")
-    )
-    for q in (q1, q2, q3):
-        q.awaitTermination(300)
-
-    got_res = sorted(
-        r["doc_id"] for r in S.read_sketch_state(spark, res_state).collect()
-    )
-    want_res = sorted(
-        r["doc_id"]
-        for r in cap_per_group(
-            full, "source", k=9, id_col="doc_id", salt="res1"
-        ).collect()
-    )
-    assert got_res == want_res
-
-    got_sk = {
-        r["source"]: r["sketch"]
-        for r in S.read_sketch_state(spark, sk_state).collect()
-    }
-    want_sk = {
-        r["source"]: r["sketch"]
-        for r in S.bottomk_sketch(full, "source", F.col("text"), k=16).collect()
-    }
-    assert got_sk == want_sk
-
-    got_lm = sorted(
-        (r["bucket"], r["c"])
-        for r in lm_counts_from_state(spark, lm_state).collect()
-    )
-    want_lm = sorted(
-        (r["bucket"], r["c"]) for r in ngram_bucket_counts(full).collect()
-    )
-    assert got_lm == want_lm
-    # the control-plane probe sees the last epoch id
-    st = S.sketch_state_status(spark, lm_state)
-    assert st is not None and st["batch_id"] is not None

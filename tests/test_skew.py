@@ -1,43 +1,10 @@
-"""Bucketed-layout and skew-salting scale utilities."""
+"""Skew-salting scale utilities and the z-order clustering key."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from couch_to_postgres_spark.functions.json import json_get
 from couch_to_postgres_spark.operators.mirror import CHANGES_SCHEMA, docs_mirror
-from couch_to_postgres_spark.operators.skew import (
-    bucketed_mirror,
-    salted_count,
-    save_mirror_bucketed,
-)
-from couch_to_postgres_spark.plans.inspect import executed_plan
-
-
-@pytest.fixture(scope="module")
-def bucketed(spark, sf_dir):
-    save_mirror_bucketed(docs_mirror(spark, sf_dir), "bucketed_docs", num_buckets=8)
-    yield bucketed_mirror(spark, "bucketed_docs")
-    spark.sql("DROP TABLE IF EXISTS bucketed_docs")
-
-
-def test_bucketed_join_skips_mirror_exchange(spark, bucketed):
-    """Backfill path: sort-merge join against the bucketed mirror needs no
-    exchange on the mirror side (the other side shuffles into the bucket
-    partitioning)."""
-    # force the sort-merge path (what a mirror-sized backfill batch gets)
-    big_batch = bucketed.select("id", F.lit(False).alias("deleted")).hint("merge")
-    joined = bucketed.join(big_batch.select("id"), "id")
-    plan = executed_plan(joined)
-    assert "SortMergeJoin" in plan
-    # bucketed scans on both sides (same table) → no shuffle exchange at all
-    assert "Exchange hashpartitioning" not in plan, plan
-
-
-def test_bucketed_vs_plain_same_result(spark, bucketed, sf_dir):
-    plain = docs_mirror(spark, sf_dir)
-    a = {r["id"] for r in bucketed.select("id").collect()}
-    b = {r["id"] for r in plain.select("id").collect()}
-    assert a == b
+from couch_to_postgres_spark.operators.skew import salted_count
 
 
 def test_salted_count_matches_plain(spark, sf_dir):
@@ -61,49 +28,6 @@ def test_salted_count_deterministic(spark, sf_dir):
     assert a == b
 
 
-def test_zorder_roundtrip_and_clustering(spark, sf_dir, tmp_path):
-    from couch_to_postgres_spark.sinks.layout import (
-        rowgroup_extents,
-        write_zordered,
-    )
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .withColumn("ts_s", F.unix_timestamp("ts"))
-    )
-    nat_path, z_path = str(tmp_path / "nat"), str(tmp_path / "zord")
-    # natural layout: insertion order (event_id), one file for a worst-case
-    # baseline of per-row-group user_id spread
-    ev.coalesce(1).write.parquet(nat_path)
-    write_zordered(ev, z_path, ["user_id", "ts_s"], bits=8, num_files=8)
-
-    # correctness: clustering is a layout change only
-    back = spark.read.parquet(z_path)
-    assert back.count() == ev.count()
-    a = sorted(map(tuple, ev.select("event_id", "user_id").collect()))
-    b = sorted(map(tuple, back.select("event_id", "user_id").collect()))
-    assert a == b
-
-    # clustering: mean per-row-group user_id extent must shrink vs the
-    # natural layout — tight bounding boxes on BOTH interleaved keys are
-    # what lets the parquet reader skip row groups for user filters
-    def mean_extent(path):
-        ex = rowgroup_extents(path, "user_id")
-        assert ex, path
-        return sum(hi - lo for lo, hi in ex) / len(ex)
-
-    nat, zord = mean_extent(nat_path), mean_extent(z_path)
-    assert zord < 0.7 * nat, (nat, zord)
-    # ...and the time dimension stays clustered too (z-order trades a bit
-    # of single-key tightness for simultaneous multi-key tightness)
-    ts_ex = rowgroup_extents(z_path, "ts_s")
-    full_span = (
-        ev.agg((F.max("ts_s") - F.min("ts_s")).alias("s")).first()["s"]
-    )
-    mean_ts = sum(hi - lo for lo, hi in ts_ex) / len(ts_ex)
-    assert mean_ts < 0.9 * full_span
-
-
 def test_zorder_value_exact_past_double_precision(spark):
     # regression: a multi-year microsecond span x 256 exceeds 2^53; the
     # scaling must stay exact (the double-division form truncated ~6% of
@@ -122,18 +46,6 @@ def test_zorder_value_exact_past_double_precision(spark):
     got = [r["z"] for r in df.select(z.alias("z")).collect()]
     want = [((v - lo) * 256) // span for v in vals]  # exact int reference
     assert got == want
-
-
-def test_write_zordered_empty_and_allnull(spark, tmp_path):
-    from couch_to_postgres_spark.sinks.layout import write_zordered
-
-    empty = spark.createDataFrame([], "a long, b long")
-    write_zordered(empty, str(tmp_path / "empty"), ["a", "b"])
-    assert spark.read.parquet(str(tmp_path / "empty")).count() == 0
-
-    allnull = spark.createDataFrame([(None, 1), (None, 2)], "a long, b long")
-    with pytest.raises(ValueError, match="NULL bounds"):
-        write_zordered(allnull, str(tmp_path / "nulls"), ["a", "b"])
 
 
 def test_zorder_value_no_long_overflow_and_clamp(spark):

@@ -9,10 +9,14 @@ bucket rule (``F.hash``) appears under ``streaming/`` only in
 search index. And the coarse quantizer trains without ``pyspark.ml``.
 And the mirror has one layout and one batch merge: ``pipeline.py``
 starts one ``foreachBatch`` writer, and no module brings back the
-flat sink (``upsert_mirror``, ``CURRENT_LINK``, a ``sink`` parameter)."""
+flat sink (``upsert_mirror``, ``CURRENT_LINK``, a ``sink`` parameter).
+And every public top-level library definition is reached from a root
+(``tools/reach.py``: the entry module, the benchmarks, the examples and
+the tools), or is a reference a named test checks reached code against."""
 
 import ast
 import os
+import sys
 
 STREAMING = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -132,7 +136,10 @@ def test_directory_swaps_go_through_commit():
         os.path.join(STREAMING, n)
         for n in sorted(os.listdir(STREAMING))
         if n.endswith(".py") and n != "commit.py"
-    ] + [os.path.join(PACKAGE, "extensions", "ann.py")]
+    ] + [
+        os.path.join(PACKAGE, "extensions", "ann.py"),
+        os.path.join(PACKAGE, "operators", "views.py"),
+    ]
     found = {}
     for path in files:
         with open(path) as f:
@@ -328,3 +335,132 @@ def test_one_mirror_layout_and_one_batch_merge():
             if defs:
                 found[os.path.relpath(path, PACKAGE)] = defs
     assert not found, f"a second merge or flat-sink code: {found}"
+
+
+REPO = os.path.dirname(PACKAGE)
+sys.path.insert(0, os.path.join(REPO, "tools"))
+
+import reach  # noqa: E402
+
+#: public library definitions that no root reaches, each kept because the
+#: named test uses it as the reference for code that is reached
+REACH_ALLOWLIST = {
+    "couch_to_postgres_spark.extensions.ann.dequantize":
+        "tests/test_ann.py::test_quantize_reconstruction_error_bounded",
+    "couch_to_postgres_spark.extensions.hybrid.rrf_fuse":
+        "tests/test_hybrid.py::test_local_fusion_bit_exact_with_spark_rrf",
+    "couch_to_postgres_spark.plans.inspect.executed_plan":
+        "tests/test_plans.py::test_cdc_merge_never_shuffles_mirror",
+    "couch_to_postgres_spark.plans.inspect.formatted_plan":
+        "tests/test_ann.py::test_persisted_index_matches_inmemory_and_prunes",
+    "couch_to_postgres_spark.plans.inspect.has_broadcast_hash_join":
+        "tests/test_plans.py::test_join_broadcasts_small_dim",
+    "couch_to_postgres_spark.plans.inspect.num_exchanges":
+        "tests/test_plans.py::test_shard_manifest_single_shuffle",
+    "couch_to_postgres_spark.plans.inspect.pushed_filters":
+        "tests/test_plans.py::test_point_lookup_pushes_filter_to_scan",
+    "couch_to_postgres_spark.plans.inspect.scan_read_schema":
+        "tests/test_plans.py::test_projection_prunes_columns",
+}
+
+
+def _unreached_public(root: str) -> list[str]:
+    """``module.name`` of every public top-level library definition under
+    ``root`` that ``tools/reach.py`` finds unreached."""
+    return sorted(
+        f"{r['module']}.{r['name']}"
+        for r in reach.Graph(root).unreached()
+        if r["public"]
+    )
+
+
+def test_reach_detector_sees_every_form(tmp_path):
+    files = {
+        "couch_to_postgres_spark/__init__.py": (
+            "from couch_to_postgres_spark.lib import exported\n"
+        ),
+        "couch_to_postgres_spark/lib.py": (
+            "__all__ = ['listed']\n"
+            "def direct(): pass\n"
+            "def via_attr(): pass\n"
+            "def aliased(): pass\n"
+            "def deco(f): return f\n"
+            "def helper(): pass\n"
+            "class Runner:\n"
+            "    def run(self): helper()\n"
+            "def by_name(): pass\n"
+            "def exported(): pass\n"
+            "def _setup(): pass\n"
+            "_setup()\n"
+            "def listed(): pass\n"
+            "def unused(): direct()\n"
+            "def _orphan(): pass\n"
+        ),
+        "examples/demo.py": (
+            "import couch_to_postgres_spark.lib as L\n"
+            "from couch_to_postgres_spark import exported\n"
+            "from couch_to_postgres_spark.lib import direct\n"
+            "from couch_to_postgres_spark.lib import aliased as al\n"
+            "from couch_to_postgres_spark.lib import deco, Runner\n"
+            "direct()\n"
+            "L.via_attr()\n"
+            "al()\n"
+            "@deco\n"
+            "def main(): Runner().run()\n"
+            "getattr(L, 'by_name')()\n"
+            "exported()\n"
+        ),
+        # tests are not roots
+        "tests/test_lib.py": (
+            "from couch_to_postgres_spark.lib import listed, unused\n"
+            "listed(); unused()\n"
+        ),
+    }
+    for rel, text in files.items():
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+    rows = reach.Graph(str(tmp_path)).unreached()
+    # a direct call, module.attr access, ``import … as``, decorator use,
+    # a helper reached through a reached class's method, a string-named
+    # attribute, a package re-export and an import-time call all reach;
+    # ``__all__`` and test references do not
+    assert sorted(r["name"] for r in rows) == ["_orphan", "listed", "unused"]
+    assert {r["name"]: r["public"] for r in rows} == {
+        "_orphan": False, "listed": True, "unused": True,
+    }
+    assert all(r["code_lines"] == 1 for r in rows)
+    assert _unreached_public(str(tmp_path)) == [
+        "couch_to_postgres_spark.lib.listed",
+        "couch_to_postgres_spark.lib.unused",
+    ]
+
+
+def test_every_public_definition_is_reached():
+    """A public library definition is reached from a root, or the
+    allowlist names the test that uses it as a reference; an entry that
+    is reached now, or whose test does not name it, is stale."""
+    unreached = _unreached_public(REPO)
+    assert sorted(set(unreached) - set(REACH_ALLOWLIST)) == [], (
+        "public definitions nothing reaches: delete them, or reach them "
+        "from an example"
+    )
+    assert sorted(set(REACH_ALLOWLIST) - set(unreached)) == [], (
+        "allowlisted definitions that are reached now"
+    )
+    for qualname, test in REACH_ALLOWLIST.items():
+        rel, func = test.split("::")
+        with open(os.path.join(REPO, rel)) as f:
+            tree = ast.parse(f.read())
+        body = next(
+            (n for n in tree.body
+             if isinstance(n, ast.FunctionDef) and n.name == func),
+            None,
+        )
+        assert body is not None, test
+        names = {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(body)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+        assert qualname.rsplit(".", 1)[1] in names, (qualname, test)

@@ -53,7 +53,7 @@ def _mirror_changes(spark, rows):
 
 @pytest.fixture(scope="module")
 def state(spark, tmp_path_factory):
-    """A mirror (base + ``_delta`` + ``_views`` + ``.trash``), a search
+    """A mirror (base + ``_delta`` + ``.trash``), a search
     index and a vector index, each with a compacted base plus a tail
     and tombstones."""
     root = tmp_path_factory.mktemp("stored_state")
@@ -65,7 +65,6 @@ def state(spark, tmp_path_factory):
             spark, [(i, f"d{i}", False, _doc(i, "a")) for i in range(40)]
         ),
         N_BUCKETS,
-        count_views={"by_type": json_get("doc", "type")},
     )
     # a bucket rewrite retires the replaced dirs into .trash
     upsert_partitioned_mirror(
@@ -73,7 +72,6 @@ def state(spark, tmp_path_factory):
         mirror,
         _mirror_changes(spark, [(41, "d1", False, _doc(1, "b"))]),
         N_BUCKETS,
-        count_views={"by_type": json_get("doc", "type")},
         mode="rewrite",
     )
     upsert_partitioned_mirror(
@@ -85,7 +83,6 @@ def state(spark, tmp_path_factory):
              (44, "d50", False, _doc(50, "c"))],
         ),
         N_BUCKETS,
-        count_views={"by_type": json_get("doc", "type")},
         mode="delta",
     )
 
@@ -123,7 +120,6 @@ def _components(state):
     return [
         m,
         os.path.join(m, "_delta"),
-        os.path.join(m, "_views", "by_type"),
         *(os.path.join(s, c) for c in (
             "doclen", "postings", "tombstones",
             "base/doclen", "base/postings", "base/dfs",
@@ -136,7 +132,7 @@ def _components(state):
 
 def test_fixture_has_every_sibling_kind(state):
     m = state["mirror"]
-    for sibling in ("_delta", "_views", ".trash", "_mirror_meta.json"):
+    for sibling in ("_delta", ".trash", "_mirror_meta.json"):
         assert os.path.exists(os.path.join(m, sibling)), sibling
     for c in _components(state):
         assert os.path.isdir(c), c

@@ -254,37 +254,6 @@ def test_fsck_reports_absent_mirror_without_layout(spark, tmp):
     assert d.fsck() == {"fresh": {"ok": None}}
 
 
-def test_live_count_view_tracks_stream(spark, sf_dir, tmp):
-    """A streamed feed maintains its count view incrementally per batch;
-    after the drain the view equals a fresh GROUP BY over the mirror —
-    including through deletes."""
-    from couch_to_postgres_spark.functions.json import json_get
-    from couch_to_postgres_spark.streaming.pipeline import read_count_view
-
-    changes = changes_from_events(spark, sf_dir, delete_type="error").cache()
-    write_change_log(changes, f"{tmp}/log", num_files=4)
-    q = follow(
-        spark,
-        f"{tmp}/log",
-        f"{tmp}/mirror",
-        f"{tmp}/ckpt",
-        max_files_per_trigger=1,  # several micro-batches, several deltas
-        count_views={"by_type": json_get("doc", "type")},
-    )
-    q.awaitTermination(180)
-    view = sorted(map(tuple, read_count_view(spark, f"{tmp}/mirror", "by_type").collect()))
-    fresh = sorted(
-        map(
-            tuple,
-            read_mirror(spark, f"{tmp}/mirror")
-            .groupBy(json_get("doc", "type").alias("key"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect(),
-        )
-    )
-    assert view == fresh and len(view) > 0
-
-
 def test_follow_default_sink_is_partitioned(spark, sf_dir, tmp):
     """follow() without sink args lands the mirror in the bucket-
     partitioned O(touched) layout (meta + bucket dirs), and read_mirror
@@ -338,69 +307,6 @@ def test_watchdog_compacts_fragmented_partitioned_mirror(spark, sf_dir, tmp):
     assert result["compacted"].get("frag-feed") == [2]
     assert max(bucket_file_counts(mirror).values()) <= 4
     assert read_partitioned_mirror(spark, mirror).count() == n_before
-
-
-def test_stream_static_enrichment_equals_batch(spark, sf_dir, tmp):
-    """Stream-static join: events drained through enrich_stream against a
-    static per-type dim must equal the batch join; plan uses a broadcast
-    hash join (zero shuffle on the stream side)."""
-    from couch_to_postgres_spark.plans.inspect import executed_plan
-    from couch_to_postgres_spark.session import load_table
-    from couch_to_postgres_spark.streaming.enrich import enrich_stream
-
-    ev = load_table(spark, sf_dir, "events")
-    dim = (
-        ev.groupBy("event_type")
-        .agg(F.round(F.sum("value"), 4).alias("type_total"))
-        .cache()
-    )
-    batch_df = enrich_stream(ev, dim, "event_type").select(
-        "event_id", "event_type", "type_total"
-    )
-    assert "BroadcastHashJoin" in executed_plan(batch_df), "dim must broadcast"
-    batch = {(r["event_id"]): (r["event_type"], r["type_total"])
-             for r in batch_df.collect()}
-
-    ev.write.mode("overwrite").json(f"{tmp}/ev_feed")
-    stream = spark.readStream.schema(ev.schema).json(f"{tmp}/ev_feed")
-    q = (
-        enrich_stream(stream, dim, "event_type")
-        .select("event_id", "event_type", "type_total")
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["event_id"]: (r["event_type"], r["type_total"])
-        for r in spark.sql("SELECT * FROM enriched").collect()
-    }
-    assert got == batch
-
-
-def test_stream_static_enrichment_left_keeps_unmatched(spark, sf_dir, tmp):
-    """A stream row whose key is missing from the dim survives with NULL
-    enrichment (left join contract — no silent loss)."""
-    from couch_to_postgres_spark.session import load_table
-    from couch_to_postgres_spark.streaming.enrich import enrich_stream
-
-    ev = load_table(spark, sf_dir, "events")
-    dim = (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_type"))
-        .filter(F.col("event_type") != "click")  # hole in the dim
-    )
-    out = enrich_stream(ev, dim, "event_type")
-    n_events = ev.count()
-    assert out.count() == n_events
-    clicks_null = (
-        out.filter(F.col("event_type") == "click")
-        .filter(F.col("n_type").isNotNull())
-        .count()
-    )
-    assert clicks_null == 0
 
 
 def test_follow_maintains_search_index(spark, sf_dir, tmp):
