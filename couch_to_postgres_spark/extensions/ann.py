@@ -407,7 +407,8 @@ def append_to_ivf_index(
     Quantizer drift: appended vectors keep the original centroids, so
     cell balance degrades as the input distribution shifts — rebuild
     (:func:`build_ivf_index`) when max/mean cell size crosses ~2-4×, the
-    standard IVF maintenance discipline. Returns the number of vectors appended."""
+    standard IVF maintenance discipline. Returns the number of vectors
+    appended."""
     import os
 
     from couch_to_postgres_spark.streaming.meta_io import read_meta_rows

@@ -1213,8 +1213,8 @@ def semantic_dedup_incremental(
 ) -> DataFrame:
     """Incremental SemDeDup against a persisted IVF index: classify an
     arriving embedding batch against the index's LIVE set without
-    rescanning the corpus — the dedup consumer of
-    ``ann.build_ivf_index``'s maintenance contract (append/tombstone).
+    rescanning the corpus — the dedup consumer of ``ann.build_ivf_index``'s
+    maintenance contract (append/tombstone).
 
     Per-batch plan, sized for a 100 TB accepted corpus:
 

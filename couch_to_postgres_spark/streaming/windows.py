@@ -110,10 +110,9 @@ def session_rollup_native(
     watermark: str | None = None,
 ) -> DataFrame:
     """Gap sessionization via Spark's built-in ``session_window`` — the
-    idiomatic engine-native path. One
-    definition for batch and streams; on a stream the watermark finalizes
-    and evicts closed sessions, so state is bounded by the active-session
-    set, not history.
+    idiomatic engine-native path. One definition for batch and streams;
+    on a stream the watermark finalizes and evicts closed sessions, so
+    state is bounded by the active-session set, not history.
 
     Boundary semantics: touching windows MERGE — an inter-event gap
     exactly equal to ``gap`` stays one session, so a NEW session needs a

@@ -165,9 +165,7 @@ class Graph:
 
     def _resolve_target(self, target: tuple, seen=None) -> list[tuple]:
         if target[0] == "mod":
-            return [("mod", target[1])] if target[1] in self.modules or (
-                target[1] == PACKAGE.split(".")[0]
-            ) else []
+            return [("mod", target[1])] if target[1] in self.modules else []
         return self._resolve_attr(target[1], target[2], seen)
 
     def _resolve_name(self, src: _Source, name: str) -> list[tuple]:
