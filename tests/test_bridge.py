@@ -1,13 +1,12 @@
-"""End-to-end over HTTP: a CouchDB-shaped server's _changes feed → bridge
-drain → file change log → streaming pipeline → parquet mirror."""
+"""End-to-end over HTTP: a CouchDB-shaped server's _changes feed →
+format("couchdb") source → CDC merge → parquet mirror, with the feed's
+``since`` kept only in the query's checkpoint."""
 
 import json
 
 import pytest
 
-from couch_to_postgres_spark.sources.bridge import drain_once, read_since
-from couch_to_postgres_spark.sources.couchdb import CouchClient
-from couch_to_postgres_spark.streaming.pipeline import follow, read_mirror
+from couch_to_postgres_spark.streaming.pipeline import follow_couch, read_mirror
 from tests.test_writeback import RecordingCouch
 
 
@@ -22,58 +21,40 @@ def page(results, last_seq):
     return {"results": results, "last_seq": last_seq}
 
 
-def doc(i, rev, v):
-    return {"seq": i, "id": f"d{i % 3}", "doc": {"_id": f"d{i % 3}", "_rev": rev, "v": v}}
-
-
 def test_http_to_mirror_end_to_end(spark, couch, tmp_path):
-    log_dir = str(tmp_path / "log")
-    state = str(tmp_path / "state.json")
-    client = CouchClient(couch.url)
+    mirror_path = str(tmp_path / "mirror")
+
+    def run_query():
+        return follow_couch(
+            spark, couch.url, "db", mirror_path, str(tmp_path / "ckpt")
+        )
 
     couch.changes_pages = [
         page(
             [
                 {"seq": 1, "id": "a", "doc": {"_id": "a", "_rev": "1-x", "v": 1}},
                 {"seq": 2, "id": "b", "doc": {"_id": "b", "_rev": "1-y", "v": 2}},
-            ],
-            2,
-        ),
-        page(
-            [
                 {"seq": 3, "id": "a", "doc": {"_id": "a", "_rev": "2-z", "v": 10}},
                 {"seq": 4, "id": "c", "deleted": True},
             ],
             4,
         ),
     ]
-    n = drain_once(client, "db", log_dir, state)
-    assert n == 4 and read_since(state) == 4
-
-    q = follow(spark, log_dir, str(tmp_path / "mirror"), str(tmp_path / "ckpt"))
+    q = run_query()
     q.awaitTermination(120)
     state_rows = {
         r["id"]: json.loads(r["doc"])
-        for r in read_mirror(spark, str(tmp_path / "mirror")).collect()
+        for r in read_mirror(spark, mirror_path).collect()
     }
     assert set(state_rows) == {"a", "b"}
     assert state_rows["a"]["_rev"] == "2-z" and state_rows["a"]["v"] == 10
 
-    # second drain: later changes only; resume from stored since
+    # later changes only: the restart resumes from the checkpointed since
     couch.changes_pages = [
         page([{"seq": 5, "id": "b", "deleted": True}], 5),
     ]
-    n2 = drain_once(client, "db", log_dir, state)
-    assert n2 == 1 and read_since(state) == 5
-    q2 = follow(spark, log_dir, str(tmp_path / "mirror"), str(tmp_path / "ckpt"))
+    q2 = run_query()
     q2.awaitTermination(120)
-    final = {r["id"] for r in read_mirror(spark, str(tmp_path / "mirror")).collect()}
+    assert "since=4" in couch.changes_requests[-1]
+    final = {r["id"] for r in read_mirror(spark, mirror_path).collect()}
     assert final == {"a"}
-
-
-def test_drain_empty_feed_is_noop(spark, couch, tmp_path):
-    client = CouchClient(couch.url)
-    couch.changes_pages = []
-    n = drain_once(client, "db", str(tmp_path / "log"), str(tmp_path / "s.json"))
-    assert n == 0
-    assert read_since(str(tmp_path / "s.json")) == 0
