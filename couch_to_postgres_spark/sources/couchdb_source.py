@@ -170,6 +170,12 @@ class CouchDBDataSource(DataSource):
 
 
 def register(spark) -> None:
-    spark.dataSource.register(CouchDBDataSource)
+    """Register the ``couchdb`` source, once per session: registering
+    it again replaces the first registration and makes Spark log a
+    WARN, and the daemon restarts a stopped feed through
+    ``follow_couch`` on every watchdog pass."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists("couchdb"):
+        spark.dataSource.register(CouchDBDataSource)
 
 

@@ -9,6 +9,14 @@ the `since` high-water mark itself lives in each query's
 ``checkpointLocation``, which is Spark's offset log); flipping
 ``enabled`` stops the feed on the next watchdog pass exactly like the
 reference's disable flow (bin/daemon.js:174-186).
+
+The reference supervises one kind of feed; here a feed also flags the
+index twins it maintains. The daemon reads them from the pipeline's
+twin table (:data:`pipeline.TWINS`) and loops over it wherever it
+touches them: :meth:`Daemon.index_paths` places each flagged twin under
+its directory, and the watchdog's debt-triggered folds, `/_status` and
+`/_fsck` run the table's calls per (feed, twin), in table order after
+the mirror.
 """
 
 from __future__ import annotations
@@ -16,13 +24,22 @@ from __future__ import annotations
 import json
 import os
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
 from couch_to_postgres_spark.operators.mirror import sanitize_table_name
-from couch_to_postgres_spark.streaming.pipeline import follow, mirror_doc_count
+from couch_to_postgres_spark.streaming import partitioned, vector_stream
+from couch_to_postgres_spark.streaming.pipeline import (
+    TWINS,
+    Twin,
+    follow,
+    follow_couch,
+    mirror_doc_count,
+)
 
 
 @dataclass
@@ -33,7 +50,9 @@ class FeedConfig:
     ``changes_path`` follows a file change-log directory (replay/test
     source); setting ``url`` instead follows a LIVE CouchDB database
     named ``name`` over HTTP (`format("couchdb")`) — the reference
-    daemon's actual mode — with optional ``feed="longpoll"``."""
+    daemon's actual mode — with optional ``feed="longpoll"``. The
+    ``*_index`` flags name the index twins of :data:`pipeline.TWINS`
+    the feed maintains from the same micro-batches."""
 
     name: str  # couch database name (may contain '-')
     changes_path: str = ""  # change-log directory (file source)
@@ -43,16 +62,14 @@ class FeedConfig:
     inactivity_ms: int | None = None  # longpoll hold window (default 30 s)
     search_index: bool = False  # also maintain the live BM25 index
     #: also maintain the live decontamination SHINGLE index (the same
-    #: LSM machinery over md5 shingle fingerprints — stats_stream.
-    #: shingle_changes ∘ search_index_batch) from the same micro-batches
+    #: LSM machinery over md5 shingle fingerprints)
     shingle_index: bool = False
-    #: shingle width the decontamination index fingerprints (ADVICE r09:
-    #: recorded in the index so a reader probing with a different n
-    #: fails loudly instead of silently matching nothing)
+    #: shingle width the decontamination index fingerprints (recorded in
+    #: the index so a reader probing with a different n fails loudly
+    #: instead of silently matching nothing)
     shingle_n: int = 3
-    #: also maintain the live VECTOR index (streaming/vector_stream.py —
-    #: seq-wins IVF over an embedding field in the doc JSON) from the
-    #: same micro-batches
+    #: also maintain the live VECTOR index (seq-wins IVF over an
+    #: embedding field in the doc JSON)
     vector_index: bool = False
     #: JSON path of the embedding array inside the doc
     vector_field: str = "$.embedding"
@@ -73,8 +90,14 @@ def load_registry(path: str) -> list[FeedConfig]:
 
 
 def save_registry(path: str, feeds: list[FeedConfig]) -> None:
-    with open(path, "w") as f:
+    """Replace the registry atomically (dot-temp + ``os.replace``): a
+    crash mid-write leaves the previous registry, never truncated JSON
+    that every later :func:`load_registry` would fail on."""
+    head, base = os.path.split(path)
+    tmp = os.path.join(head, f".{base}.tmp")
+    with open(tmp, "w") as f:
         json.dump([asdict(fc) for fc in feeds], f, indent=2)
+    os.replace(tmp, path)
 
 
 def set_feed_enabled(path: str, name: str, enabled: bool) -> None:
@@ -114,37 +137,32 @@ class Daemon:
         #: how many consecutive watchdog passes a pre-init vector
         #: bootstrap buffer must survive before the watchdog force-
         #: flushes it (trains the quantizer on whatever accumulated).
-        #: Flushing on the FIRST tick that sees pending rows (r11)
-        #: froze a 1-2-cell quantizer on any feed ramping slower than
-        #: vector_cells docs per supervisor cadence — the exact
-        #: degradation the buffer exists to prevent (ADVICE r11). The
-        #: grace lets a normal ramp reach the configured cell count;
-        #: a genuinely tiny feed becomes queryable after N ticks with
-        #: quantizer_degraded surfaced. Operators can skip the wait
-        #: with force_flush_pending() / GET /_flush_pending?feed=NAME.
+        #: Flushing on the first tick that sees pending rows would
+        #: freeze a 1-2-cell quantizer on any feed ramping slower than
+        #: vector_cells docs per supervisor cadence — the degradation
+        #: the buffer exists to prevent. The grace lets a normal ramp
+        #: reach the configured cell count; a genuinely tiny feed
+        #: becomes queryable after N ticks with quantizer_degraded
+        #: surfaced. Operators can skip the wait with
+        #: force_flush_pending() / GET /_flush_pending?feed=NAME.
         self.pending_flush_ticks = int(pending_flush_ticks)
         self._pending_ticks: dict[str, int] = {}
-        #: watchdog trigger: compact a feed's BM25 index when its
-        #: churn-rows-per-live-doc (`index_status`'s compaction_debt)
+        #: watchdog trigger: fold a feed's index twin when its
+        #: churn-rows-per-live-doc (the status' compaction_debt)
         #: exceeds this — read amplification between compactions is
         #: bounded by the update rate, and this bounds the update rate
         #: a read must absorb
         self.search_compaction_debt = search_compaction_debt
-        #: watchdog maintenance concurrency (r13, VERDICT r12 #3): one
-        #: pass used to run mirror compaction + search/shingle/vector
-        #: folds SERIALLY across all feeds, so a tick's wall time was
-        #: the SUM of every triggered fold and supervision of feed N
-        #: waited behind feed 1's maintenance. The units touch disjoint
-        #: index roots (per-feed, per-twin paths; the per-path locks
-        #: already serialize same-path safety) and Spark schedules
-        #: concurrent driver-thread actions natively — the same
-        #: discipline as the fold's own staged-write overlap and the
-        #: hybrid read's two-leg probe. Supervision (stop/restart/
-        #: start) always completes BEFORE any maintenance unit starts.
+        #: watchdog maintenance concurrency: the mirror compaction and
+        #: twin folds of one pass touch disjoint roots (per-feed,
+        #: per-twin paths; the per-path locks serialize same-path
+        #: safety), so they run on a small driver-thread pool and a
+        #: pass costs about the longest fold, not the sum. Supervision
+        #: (stop/restart/start) always completes before any
+        #: maintenance unit starts.
         self.maintenance_workers = int(maintenance_workers)
-        #: last watchdog-triggered index compaction per feed+twin
-        #: (VERDICT r09 #5): operators should see maintenance cost —
-        #: mode, affected pairs, churned docs, phase timings — on
+        #: last watchdog-triggered fold per feed and twin: operators see
+        #: maintenance cost (mode, affected pairs, churned docs) on
         #: `/_status` without reading logs
         self._last_maintenance: dict[str, dict] = {}
 
@@ -154,34 +172,14 @@ class Daemon:
     def checkpoint_path(self, fc: FeedConfig) -> str:
         return os.path.join(self.data_root, "checkpoints", fc.table)
 
-    def search_index_path(self, fc: FeedConfig) -> str | None:
-        """Per-feed live BM25 index root (``fc.search_index`` opt-in) —
-        the mirror's searchable twin, maintained from the same
-        micro-batches (pipeline ``_feed_search_index``)."""
-        if not fc.search_index:
-            return None
-        return os.path.join(self.data_root, "search", fc.table)
-
-    def shingle_index_path(self, fc: FeedConfig) -> str | None:
-        """Per-feed live decontamination shingle index root
-        (``fc.shingle_index`` opt-in) — maintained from the same
-        micro-batches as the mirror (pipeline ``_feed_shingle_index``),
-        so ``contamination_from_index`` / ``decontaminate_from_index``
-        answer benchmark-decontamination queries without ever
-        re-shingling the train corpus."""
-        if not fc.shingle_index:
-            return None
-        return os.path.join(self.data_root, "shingles", fc.table)
-
-    def vector_index_path(self, fc: FeedConfig) -> str | None:
-        """Per-feed live VECTOR index root (``fc.vector_index`` opt-in) —
-        the mirror's ANN twin, maintained from the same micro-batches
-        (pipeline ``_feed_vector_index``), so similarity search answers
-        from live index state instead of re-embedding-scanning the
-        mirror per query."""
-        if not fc.vector_index:
-            return None
-        return os.path.join(self.data_root, "vectors", fc.table)
+    def index_paths(self, fc: FeedConfig) -> dict[str, str]:
+        """Index root per twin the feed flags, keyed by twin name in
+        table order: ``<data_root>/<twin directory>/<table>``."""
+        return {
+            t.name: os.path.join(self.data_root, t.directory, fc.table)
+            for t in TWINS
+            if getattr(fc, t.flag)
+        }
 
     def sketch_state_root(self, fc: FeedConfig) -> str:
         """Where a feed's versioned sketch/reservoir state dirs live by
@@ -189,69 +187,89 @@ class Daemon:
         placed under ``<data_root>/state/<table>/<name>`` is discovered
         by :meth:`status` (no registry flag needed — presence of a
         committed ``_CURRENT`` pointer IS the opt-in), the same way
-        search-flagged feeds surface ``index_status``."""
+        index-flagged feeds surface their twins' status."""
         return os.path.join(self.data_root, "state", fc.table)
+
+    def _feed(self, name: str) -> FeedConfig | None:
+        return next(
+            (f for f in load_registry(self.registry_path) if f.name == name),
+            None,
+        )
 
     def find_feeds(self, trigger: dict | None = None) -> list[str]:
         """Start one streaming query per enabled registry feed not already
         running (A10). Mirror/checkpoint dirs are created on demand (A13).
         Returns the feed names started."""
-        from couch_to_postgres_spark.streaming.pipeline import follow_couch
-
         started = []
         for fc in load_registry(self.registry_path):
             if not fc.enabled or fc.name in self.queries:
                 continue
             os.makedirs(os.path.dirname(self.mirror_path(fc)), exist_ok=True)
+            paths = self.index_paths(fc)
+            kw = dict(
+                mirror_path=self.mirror_path(fc),
+                checkpoint_path=self.checkpoint_path(fc),
+                trigger=trigger,
+                query_name=f"feed:{fc.name}",
+                shingle_n=fc.shingle_n,
+                vector_field=fc.vector_field,
+                vector_cells=fc.vector_cells,
+                **{f"{t.flag}_path": paths.get(t.name) for t in TWINS},
+            )
             if fc.url:
                 q = follow_couch(
-                    self.spark,
-                    url=fc.url,
-                    database=fc.name,
-                    mirror_path=self.mirror_path(fc),
-                    checkpoint_path=self.checkpoint_path(fc),
-                    feed=fc.feed,
-                    inactivity_ms=fc.inactivity_ms,
-                    trigger=trigger,
-                    query_name=f"feed:{fc.name}",
-                    search_index_path=self.search_index_path(fc),
-                    shingle_index_path=self.shingle_index_path(fc),
-                    shingle_n=fc.shingle_n,
-                    vector_index_path=self.vector_index_path(fc),
-                    vector_field=fc.vector_field,
-                    vector_cells=fc.vector_cells,
+                    self.spark, url=fc.url, database=fc.name, feed=fc.feed,
+                    inactivity_ms=fc.inactivity_ms, **kw,
                 )
             else:
-                q = follow(
-                    self.spark,
-                    changes_path=fc.changes_path,
-                    mirror_path=self.mirror_path(fc),
-                    checkpoint_path=self.checkpoint_path(fc),
-                    trigger=trigger,
-                    query_name=f"feed:{fc.name}",
-                    search_index_path=self.search_index_path(fc),
-                    shingle_index_path=self.shingle_index_path(fc),
-                    shingle_n=fc.shingle_n,
-                    vector_index_path=self.vector_index_path(fc),
-                    vector_field=fc.vector_field,
-                    vector_cells=fc.vector_cells,
-                )
+                q = follow(self.spark, changes_path=fc.changes_path, **kw)
             self.queries[fc.name] = q
             started.append(fc.name)
         return started
 
+    def _mirror_unit(self, fc: FeedConfig) -> dict | None:
+        mp = self.mirror_path(fc)
+        if partitioned.read_meta(mp) is None:
+            return None
+        return partitioned.compact_mirror(self.spark, mp) or None
+
+    def _fold_unit(self, fc: FeedConfig, twin: Twin, path: str) -> dict | None:
+        """Compaction policy for one twin of one feed: when the index
+        has accumulated more churn than the threshold (tail and
+        tombstone rows per live doc — what every from-index read must
+        merge), fold the tail into only the buckets or cells it touched
+        and report the fold's telemetry."""
+        st = twin.status(self.spark, path)
+        if twin.name == "vector":
+            # the vector twin's one special step: force-flush a pre-init
+            # bootstrap buffer that survived pending_flush_ticks passes,
+            # so only a stalled trickle feed pays the degraded fit
+            # (_pending_ticks is touched by one unit per feed)
+            if st["n_cells"] is None and st["pending_upserts"]:
+                ticks = self._pending_ticks.get(fc.name, 0) + 1
+                if ticks < self.pending_flush_ticks:
+                    self._pending_ticks[fc.name] = ticks
+                else:
+                    vector_stream.flush_pending(
+                        self.spark, path, n_cells=fc.vector_cells
+                    )
+                    self._pending_ticks.pop(fc.name, None)
+                    st = twin.status(self.spark, path)
+            else:
+                self._pending_ticks.pop(fc.name, None)
+        debt = st.get("compaction_debt")
+        if debt is None or debt <= self.search_compaction_debt:
+            return None
+        done = twin.fold(self.spark, path)
+        return {"debt": debt, **{k: done.get(k) for k in twin.fold_fields}}
+
     def watchdog(self, trigger: dict | None = None) -> dict:
         """One supervision pass: stop feeds disabled/missing in the
         registry (A11), restart enabled feeds whose query died (A12),
-        start newly-enabled feeds, and compact mirrors whose buckets
-        accumulated small files (the off-peak maintenance the
-        partitioned layout calls for — serialized against in-flight merges
-        by the per-path lock). Returns what it did."""
-        from couch_to_postgres_spark.streaming.partitioned import (
-            compact_mirror,
-            read_meta,
-        )
-
+        start newly-enabled feeds, then maintenance: compact mirrors
+        whose buckets accumulated small files, and fold every index twin
+        past its compaction debt, serialized against in-flight merges by
+        the per-path locks. Returns what it did."""
         registry = {fc.name: fc for fc in load_registry(self.registry_path)}
         stopped, restarted = [], []
         for name, q in list(self.queries.items()):
@@ -264,164 +282,49 @@ class Daemon:
                 del self.queries[name]
                 restarted.append(name)
         started = self.find_feeds(trigger=trigger)
-        # ---- maintenance, AFTER supervision (r13, VERDICT r12 #3):
-        # every unit below (debt check + fold, per feed per twin)
-        # touches a DISJOINT index root, so the pass runs them on a
-        # small driver-thread pool — wall time ≈ the longest fold, not
-        # the sum across feeds — and a long fold can no longer delay
-        # stop/restart/start, which completed above. Same-path safety
-        # is the per-path locks', exactly as in the serial version;
-        # telemetry/bookkeeping is merged on the main thread.
-        def _mirror_unit(fc):
-            mp = self.mirror_path(fc)
-            if read_meta(mp) is None:
-                return None
-            return compact_mirror(self.spark, mp) or None
-
-        def _lsm_unit(fc, sip, twin):
-            # compaction POLICY for the searchable twin, not just the
-            # mechanism: when a search-flagged feed's index has
-            # accumulated more churn than the threshold (tail+tombstone
-            # rows per live doc — what every from-index read must
-            # merge), fold the tail into only the buckets it touched
-            # (VERDICT r08 #2). A feed's first batch bootstraps the
-            # base, so a fresh index carries no debt; one whose first
-            # batch found it non-empty gets the full rewrite on its
-            # first fold, internally. The telemetry
-            # the fold already computes (VERDICT r09 #5) rides the
-            # watchdog result and the feed's `/_status` row. The
-            # SHINGLE twin compacts WITHOUT the MaxScore impact layer
-            # (r13): its md5 fingerprint tokens are probed by equality,
-            # never BM25-ranked, and the bound layer (per-pair impact
-            # sort + top-G arrays + histograms) is the dominant write
-            # cost of a fold — pure overhead there.
-            from couch_to_postgres_spark.streaming.search_stream import (
-                compact_index_incremental,
-                index_status,
-            )
-
-            debt = index_status(self.spark, sip).get("compaction_debt")
-            if debt is None or debt <= self.search_compaction_debt:
-                return None
-            done = compact_index_incremental(
-                self.spark, sip, impacts_default=(twin == "search")
-            )
-            return {
-                "debt": debt,
-                "mode": done.get("mode"),
-                "affected_pairs": done.get("affected_pairs"),
-                "affected_buckets": done.get("affected_buckets"),
-                "total_buckets": done.get("total_buckets"),
-                "churned_docs": done.get("churned_docs"),
-            }
-
-        def _vector_unit(fc, vip):
-            # the VECTOR twin gets the same debt-triggered policy AND
-            # the same churn-proportional mechanism (r11). The watchdog
-            # also force-flushes a pre-init bootstrap buffer under the
-            # aging gate (ADVICE r11): only a buffer that survived
-            # pending_flush_ticks passes is flushed — a feed still
-            # ramping gets to reach vector_cells upserts and train
-            # full-width; only a genuinely stalled trickle feed pays
-            # the degraded fit. (_pending_ticks is touched by exactly
-            # one unit per feed — no cross-thread contention.)
-            from couch_to_postgres_spark.streaming.vector_stream import (
-                compact_vector_index_incremental,
-                flush_pending,
-                vector_index_status,
-            )
-
-            vst = vector_index_status(self.spark, vip)
-            if vst["n_cells"] is None and vst["pending_upserts"]:
-                ticks = self._pending_ticks.get(fc.name, 0) + 1
-                if ticks >= self.pending_flush_ticks:
-                    flush_pending(self.spark, vip, n_cells=fc.vector_cells)
-                    self._pending_ticks.pop(fc.name, None)
-                    vst = vector_index_status(self.spark, vip)
-                else:
-                    self._pending_ticks[fc.name] = ticks
-            else:
-                self._pending_ticks.pop(fc.name, None)
-            debt = vst.get("compaction_debt")
-            if debt is None or debt <= self.search_compaction_debt:
-                return None
-            done = compact_vector_index_incremental(self.spark, vip)
-            return {
-                "debt": debt,
-                "mode": done.get("mode"),
-                "n_live": done.get("n_live"),
-                "churned_docs": done.get("churned_docs"),
-                "affected_cells": done.get("affected_cells"),
-                "total_cells": done.get("total_cells"),
-            }
-
-        units: list = []  # (bucket_key, feed, twin_or_None, thunk)
+        units: list = []  # (result key, feed, twin or None, thunk)
         for fc in registry.values():
             if not fc.enabled:
                 continue
-            units.append(
-                ("compacted", fc, None, lambda fc=fc: _mirror_unit(fc))
-            )
-            for sip, twin, key in (
-                (self.search_index_path(fc), "search", "search_compacted"),
-                (self.shingle_index_path(fc), "shingle", "shingle_compacted"),
-            ):
-                if sip is not None:
-                    units.append(
-                        (key, fc, twin,
-                         lambda fc=fc, sip=sip, twin=twin: _lsm_unit(
-                             fc, sip, twin
-                         ))
-                    )
-            vip = self.vector_index_path(fc)
-            if vip is not None:
-                units.append(
-                    ("vector_compacted", fc, "vector",
-                     lambda fc=fc, vip=vip: _vector_unit(fc, vip))
-                )
-        buckets: dict[str, dict] = {
+            units.append(("compacted", fc, None, partial(self._mirror_unit, fc)))
+            paths = self.index_paths(fc)
+            units += [
+                (f"{t.name}_compacted", fc, t,
+                 partial(self._fold_unit, fc, t, paths[t.name]))
+                for t in TWINS
+                if t.name in paths
+            ]
+        out = {
+            "stopped": stopped,
+            "restarted": restarted,
+            "started": started,
             "compacted": {},
-            "search_compacted": {},
-            "shingle_compacted": {},
-            "vector_compacted": {},
+            **{f"{t.name}_compacted": {} for t in TWINS},
         }
         if units:
-            from concurrent.futures import ThreadPoolExecutor
-
             workers = max(1, min(self.maintenance_workers, len(units)))
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 results = list(pool.map(lambda u: u[3](), units))
             for (key, fc, twin, _), res in zip(units, results):
                 if res is None:
                     continue
-                buckets[key][fc.name] = res
+                out[key][fc.name] = res
                 if twin is not None:
                     self._last_maintenance.setdefault(fc.name, {})[
-                        twin
+                        twin.name
                     ] = res
-        compacted = buckets["compacted"]
-        search_compacted = buckets["search_compacted"]
-        shingle_compacted = buckets["shingle_compacted"]
-        vector_compacted = buckets["vector_compacted"]
-        return {
-            "stopped": stopped,
-            "restarted": restarted,
-            "started": started,
-            "compacted": compacted,
-            "search_compacted": search_compacted,
-            "shingle_compacted": shingle_compacted,
-            "vector_compacted": vector_compacted,
-        }
+        return out
 
     def status(self) -> dict:
         """The `/_status` payload (bin/daemon.js:282-301): per-feed alive
         flag, streaming progress, mirror doc count, and — once the mirror
         exists — layout health (bucket count, base/delta row accounting,
         small-file pressure), the numbers an operator needs to judge
-        compaction debt."""
-        from couch_to_postgres_spark.streaming.partitioned import (
-            bucket_file_counts,
-            read_meta,
+        compaction debt. Each flagged twin reports its index status
+        (live docs, churn, compaction debt; the vector twin also its
+        quantizer); unflagged twins report None."""
+        from couch_to_postgres_spark.extensions.sketch import (
+            sketch_state_status,
         )
 
         out = {}
@@ -430,60 +333,29 @@ class Daemon:
             alive = bool(q is not None and q.isActive)
             progress = q.lastProgress if q is not None else None
             mp = self.mirror_path(fc)
-            meta = read_meta(mp)
+            meta = partitioned.read_meta(mp)
             layout = None
             if meta is not None:
-                files = bucket_file_counts(mp)
+                files = partitioned.bucket_file_counts(mp)
                 layout = {
                     "num_buckets": meta.get("num_buckets"),
                     "total_rows": meta.get("total_rows"),
                     "delta_rows": meta.get("delta_rows"),
                     "max_files_per_bucket": max(files.values()) if files else 0,
                 }
-            # search-flagged feeds surface their live BM25 index health
-            # (live docs, post-compaction churn, compaction_debt — the
-            # alarm number); unflagged feeds report None
-            sip = self.search_index_path(fc)
-            search = None
-            if sip is not None:
-                from couch_to_postgres_spark.streaming.search_stream import (
-                    index_status,
-                )
-
-                search = index_status(self.spark, sip)
-            # shingle-flagged feeds surface the decontamination index's
-            # health the same way (it IS the same LSM index structure —
-            # live fingerprints, churn, compaction debt)
-            shp = self.shingle_index_path(fc)
-            shingle = None
-            if shp is not None:
-                from couch_to_postgres_spark.streaming.search_stream import (
-                    index_status,
-                )
-
-                shingle = index_status(self.spark, shp)
-            # vector-flagged feeds surface their ANN twin's health the
-            # same way (live vectors, churn, compaction debt, quantizer)
-            vip = self.vector_index_path(fc)
-            vector = None
-            if vip is not None:
-                from couch_to_postgres_spark.streaming.vector_stream import (
-                    vector_index_status,
-                )
-
-                vector = vector_index_status(self.spark, vip)
-            # versioned sketch/reservoir state health (VERDICT r07 #7):
-            # every committed state dir under the feed's conventional
-            # state root reports its live version, row count, and
-            # last-commit batch — the same operator surface the search
-            # index gets
+            paths = self.index_paths(fc)
+            twins = {
+                t.flag: t.status(self.spark, paths[t.name])
+                if t.name in paths
+                else None
+                for t in TWINS
+            }
+            # every committed sketch/reservoir state dir under the
+            # feed's conventional state root reports its live version,
+            # row count, and last-commit batch
             sketch_states = None
             sroot = self.sketch_state_root(fc)
             if os.path.isdir(sroot):
-                from couch_to_postgres_spark.extensions.sketch import (
-                    sketch_state_status,
-                )
-
                 found = {
                     name: sketch_state_status(
                         self.spark, os.path.join(sroot, name)
@@ -500,12 +372,8 @@ class Daemon:
                 "table": fc.table,
                 "doc_count": mirror_doc_count(self.spark, mp),
                 "layout": layout,
-                "search_index": search,
-                "shingle_index": shingle,
-                "vector_index": vector,
-                # last watchdog-triggered compaction per index twin
-                # (mode/affected_pairs/churned_docs) —
-                # maintenance cost belongs on the operator surface
+                **twins,
+                # last watchdog-triggered fold per index twin
                 "index_maintenance": self._last_maintenance.get(fc.name),
                 "sketch_states": sketch_states,
                 "last_progress": {
@@ -527,43 +395,22 @@ class Daemon:
         """Integrity report per feed mirror
         (:func:`partitioned.validate_mirror`) — the `/_fsck` control-plane
         surface an operator hits before trusting pruned reads after an
-        incident. A feed with no mirror yet reports ``{"ok": None}``."""
-        from couch_to_postgres_spark.streaming.partitioned import (
-            read_meta,
-            validate_mirror,
-        )
-
+        incident. A feed with no mirror yet reports ``{"ok": None}``.
+        Each flagged twin adds its index-side check under its flag: the
+        search and shingle twins' meta exactness and sampled
+        postings/dfs/doclen agreement, the vector twin's
+        sidecar/cells/meta/quantizer invariants."""
         out = {}
         for fc in load_registry(self.registry_path):
             mp = self.mirror_path(fc)
-            if read_meta(mp) is None:
+            if partitioned.read_meta(mp) is None:
                 out[fc.name] = {"ok": None}
             else:
-                out[fc.name] = validate_mirror(self.spark, mp)
-            # index-flagged feeds get index-side integrity checks
-            # beside the mirror's (r11): the vector twin's
-            # sidecar/cells/meta/quantizer invariants; the search and
-            # shingle twins' meta exactness + sampled postings/dfs/
-            # doclen-discovery agreement
-            vip = self.vector_index_path(fc)
-            if vip is not None:
-                from couch_to_postgres_spark.streaming.vector_stream import (
-                    vector_index_fsck,
-                )
-
-                out[fc.name]["vector_index"] = vector_index_fsck(
-                    self.spark, vip
-                )
-            for key, sip in (
-                ("search_index", self.search_index_path(fc)),
-                ("shingle_index", self.shingle_index_path(fc)),
-            ):
-                if sip is not None:
-                    from couch_to_postgres_spark.streaming.search_stream import (
-                        search_index_fsck,
-                    )
-
-                    out[fc.name][key] = search_index_fsck(self.spark, sip)
+                out[fc.name] = partitioned.validate_mirror(self.spark, mp)
+            paths = self.index_paths(fc)
+            for t in TWINS:
+                if t.name in paths:
+                    out[fc.name][t.flag] = t.fsck(self.spark, paths[t.name])
         return out
 
     def hybrid_topk(
@@ -583,20 +430,19 @@ class Daemon:
             hybrid_topk_live,
         )
 
-        registry = {f.name: f for f in load_registry(self.registry_path)}
-        if feed_name not in registry:
+        fc = self._feed(feed_name)
+        if fc is None:
             raise ValueError(f"unknown feed {feed_name!r}")
-        fc = registry[feed_name]
-        sip = self.search_index_path(fc)
-        vip = self.vector_index_path(fc)
-        if sip is None or vip is None:
-            missing = "search" if sip is None else "vector"
-            raise ValueError(
-                f"feed {feed_name!r} does not maintain a {missing} index "
-                f"twin — hybrid retrieval needs both"
-            )
+        paths = self.index_paths(fc)
+        for missing in ("search", "vector"):
+            if missing not in paths:
+                raise ValueError(
+                    f"feed {feed_name!r} does not maintain a {missing} "
+                    f"index twin — hybrid retrieval needs both"
+                )
         return hybrid_topk_live(
-            self.spark, sip, vip, term_queries, vector_queries, **kwargs
+            self.spark, paths["search"], paths["vector"], term_queries,
+            vector_queries, **kwargs,
         )
 
     def balance(self) -> dict:
@@ -606,15 +452,11 @@ class Daemon:
         OFF the watchdog tick: the report joins skinny frames per index
         (cheap but not free), and rebuild scheduling is an operator
         decision, never an automatic corpus-proportional job."""
-        from couch_to_postgres_spark.streaming.vector_stream import (
-            vector_index_balance,
-        )
-
         out = {}
         for fc in load_registry(self.registry_path):
-            vip = self.vector_index_path(fc)
+            vip = self.index_paths(fc).get("vector")
             out[fc.name] = (
-                vector_index_balance(self.spark, vip)
+                vector_stream.vector_index_balance(self.spark, vip)
                 if vip is not None
                 else None
             )
@@ -628,27 +470,17 @@ class Daemon:
         escape hatch for a feed the operator KNOWS is tiny — a 2-doc
         corpus becomes queryable immediately, with the degraded fit
         surfaced as ``quantizer_degraded`` in `/_status`."""
-        from couch_to_postgres_spark.streaming.vector_stream import (
-            flush_pending,
-            vector_index_status,
-        )
-
-        fc = next(
-            (
-                f
-                for f in load_registry(self.registry_path)
-                if f.name == feed_name
-            ),
-            None,
-        )
-        vip = self.vector_index_path(fc) if fc is not None else None
+        fc = self._feed(feed_name)
+        vip = self.index_paths(fc).get("vector") if fc is not None else None
         if vip is None:
             raise ValueError(
                 f"feed {feed_name!r} does not maintain a vector index"
             )
-        stats = flush_pending(self.spark, vip, n_cells=fc.vector_cells)
+        stats = vector_stream.flush_pending(
+            self.spark, vip, n_cells=fc.vector_cells
+        )
         self._pending_ticks.pop(feed_name, None)
-        st = vector_index_status(self.spark, vip)
+        st = vector_stream.vector_index_status(self.spark, vip)
         return {
             "flushed": stats is not None,
             "upserts": stats.upserts if stats is not None else 0,

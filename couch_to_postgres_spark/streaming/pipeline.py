@@ -24,20 +24,39 @@ dirs and a ``_delta/`` log, every directory swap published through
 first batch bootstraps one. Where Delta/Iceberg is available the same
 ``apply_changes`` output feeds ``MERGE INTO`` instead; nothing else
 changes.
+
+The index twins (BM25 search, decontamination shingles, IVF vectors) are
+declared once, in :data:`TWINS`. Each row names the twin's registry flag
+and storage directory, how one micro-batch feeds it, and the status,
+debt-triggered fold and fsck calls the daemon runs on it. The merge is
+one ``foreachBatch`` writer that fans out to its sinks: the mirror
+upsert, then each flagged twin's feed, in table order, over one per-key
+latest frame built once per batch. The table calls every entry point
+through its module at call time, so a wrapper set as a module attribute
+sees the call.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from couch_to_postgres_spark.operators.cdc import filtered_latest
 from couch_to_postgres_spark.sources.changes import read_change_stream
-from couch_to_postgres_spark.streaming import partitioned
+from couch_to_postgres_spark.streaming import (
+    partitioned,
+    search_stream,
+    stats_stream,
+    vector_stream,
+)
 from couch_to_postgres_spark.streaming.commit import writing
+from couch_to_postgres_spark.streaming.meta_io import read_meta_rows
 
 
 def read_mirror(spark: SparkSession, mirror_path: str) -> DataFrame:
@@ -46,93 +65,70 @@ def read_mirror(spark: SparkSession, mirror_path: str) -> DataFrame:
     return partitioned.read_partitioned_mirror(spark, mirror_path)
 
 
-def _latest_text_changes(
+def _latest_docs(
     batch: DataFrame,
     type_filter: str | None,
     map_hook: Callable[[Column], Column] | None,
-    search_text: Callable[[Column], Column] | None,
 ) -> DataFrame:
-    """The (seq, doc_id, deleted, text) change frame both index twins
-    consume: per-key latest change after the shared ``filtered_latest``
-    type-filter (index state cannot drift from the mirror on filter
-    semantics), ``map_hook`` applied before tokenization, the default
-    ``search_text`` stripping JSON punctuation so keys and values index
-    as terms; deletes carry NULL text (the tombstone does the work)."""
-    from couch_to_postgres_spark.operators.cdc import filtered_latest
-
-    lat = filtered_latest(batch, type_filter)
+    """The (seq, doc_id, deleted, doc) frame every twin feed reads: the
+    per-key latest change after the mirror's own ``filtered_latest``
+    type filter (index state cannot drift from the mirror on filter
+    semantics), with ``map_hook`` applied to the doc."""
     doc = F.col("doc")
     if map_hook is not None:
         doc = map_hook(doc)
+    return filtered_latest(batch, type_filter).select(
+        F.col("seq").cast("long").alias("seq"),
+        F.col("id").alias("doc_id"),
+        F.col("deleted").cast("boolean").alias("deleted"),
+        doc.alias("doc"),
+    )
+
+
+def _text_changes(
+    latest: DataFrame, search_text: Callable[[Column], Column] | None
+) -> DataFrame:
+    """(seq, doc_id, deleted, text) for the search and shingle twins:
+    ``search_text`` of the doc (default: JSON punctuation stripped, so
+    keys and values index as terms); deletes carry NULL text (the
+    tombstone does the work)."""
+    doc = F.col("doc")
     text = (
         search_text(doc)
         if search_text is not None
         else F.regexp_replace(doc, '[,:"{}]', " ")
     )
-    return lat.select(
-        F.col("seq").cast("long").alias("seq"),
-        F.col("id").alias("doc_id"),
-        F.col("deleted").cast("boolean").alias("deleted"),
+    return latest.select(
+        "seq", "doc_id", "deleted",
         F.when(F.col("deleted"), F.lit(None).cast("string"))
         .otherwise(text)
         .alias("text"),
     )
 
 
-def _feed_search_index(
-    batch: DataFrame,
-    search_index_path: str,
-    type_filter: str | None,
-    map_hook: Callable[[Column], Column] | None,
-    search_text: Callable[[Column], Column] | None,
+def _feed_search(latest: DataFrame, path: str, search_text=None, **_) -> None:
+    """One micro-batch into the streaming BM25 index."""
+    search_stream.search_index_batch(
+        latest.sparkSession, path, _text_changes(latest, search_text)
+    )
+
+
+def _feed_shingle(
+    latest: DataFrame, path: str, search_text=None, shingle_n: int = 3, **_
 ) -> None:
-    """Keep the streaming BM25 index in step with the mirror from the
-    SAME micro-batch (change frame: :func:`_latest_text_changes`).
-    Shared by ``follow`` and ``follow_couch``."""
-    from couch_to_postgres_spark.streaming.search_stream import (
-        search_index_batch,
-    )
-
-    search_index_batch(
-        batch.sparkSession,
-        search_index_path,
-        _latest_text_changes(batch, type_filter, map_hook, search_text),
-    )
-
-
-def _feed_shingle_index(
-    batch: DataFrame,
-    shingle_index_path: str,
-    type_filter: str | None,
-    map_hook: Callable[[Column], Column] | None,
-    search_text: Callable[[Column], Column] | None,
-    shingle_n: int = 3,
-) -> None:
-    """Keep the decontamination SHINGLE index in step with the mirror
-    from the SAME micro-batch (VERDICT r08 #4): the identical change
-    frame the BM25 twin consumes, re-expressed through
-    ``stats_stream.shingle_changes`` so the SAME LSM index machinery
-    maintains md5 shingle fingerprints as tokens — liveness, tombstones,
-    watchdog compaction, and ``contamination_from_index`` /
-    ``decontaminate_from_index`` all come for free. The shingle width
-    is recorded next to the index (``record_shingle_n``) so a reader
-    probing with a different ``shingle_n`` fails loudly instead of
-    silently matching nothing (ADVICE r09)."""
-    from couch_to_postgres_spark.streaming.search_stream import (
-        search_index_batch,
-    )
-    from couch_to_postgres_spark.streaming.stats_stream import (
-        record_shingle_n,
-        shingle_changes,
-    )
-
-    record_shingle_n(batch.sparkSession, shingle_index_path, shingle_n)
-    search_index_batch(
-        batch.sparkSession,
-        shingle_index_path,
-        shingle_changes(
-            _latest_text_changes(batch, type_filter, map_hook, search_text),
-            shingle_n=shingle_n,
+    """One micro-batch into the decontamination shingle index: the
+    search twin's text, re-expressed as md5 shingle fingerprints by
+    ``stats_stream.shingle_changes`` so the same LSM index maintains
+    them as tokens. The width is recorded next to the index, so a
+    reader probing with a different ``shingle_n`` fails loudly instead
+    of silently matching nothing."""
+    spark = latest.sparkSession
+    stats_stream.record_shingle_n(spark, path, shingle_n)
+    search_stream.search_index_batch(
+        spark,
+        path,
+        stats_stream.shingle_changes(
+            _text_changes(latest, search_text), shingle_n=shingle_n
         ),
         # a bootstrapped shingle base takes the impact-less layout the
         # daemon's folds keep for the twin
@@ -140,87 +136,136 @@ def _feed_shingle_index(
     )
 
 
-def _feed_vector_index(
-    batch: DataFrame,
-    vector_index_path: str,
-    type_filter: str | None,
-    map_hook: Callable[[Column], Column] | None,
+def _feed_vector(
+    latest: DataFrame,
+    path: str,
     vector_field: str = "$.embedding",
     vector_cells: int = 16,
+    **_,
 ) -> None:
-    """Keep the CDC-maintained VECTOR index
-    (:mod:`streaming.vector_stream`) in step with the mirror from the
-    SAME micro-batch: the per-key latest change after the shared
-    type-filter (index state cannot drift from the mirror on filter
-    semantics), the embedding extracted from the doc JSON at
-    ``vector_field``. An upsert WITHOUT the field is a TOMBSTONE for
-    this index only (the mirror and text twins still see the doc) — a
-    previously-embedded doc updated to a version without the field
-    must leave the ANN results, and a never-embedded doc's tombstone
-    is harmless (ADVICE r10; a feed can mix embedded and plain docs).
+    """One micro-batch into the IVF vector index
+    (:mod:`streaming.vector_stream`), the embedding read from the doc
+    JSON at ``vector_field``. An upsert without the field is a
+    tombstone for this index only (the mirror and text twins still see
+    the doc): a previously-embedded doc updated to a version without
+    the field must leave the ANN results, and a never-embedded doc's
+    tombstone is harmless.
 
-    Quantizer bootstrap: pre-init batches BUFFER into the index's
+    Quantizer bootstrap: pre-init batches buffer into the index's
     ``pending`` dir until enough upserts exist to train the full
-    configured cell count — a trickle feed's 1-2-doc first batch must
-    not freeze a 1-2-cell quantizer and silently degrade IVF pruning
-    to near-full scans (ADVICE r10). The flush trains on the buffered
-    latest versions, ingests the buffer as one batch, and FREEZES the
-    quantizer (standard IVF maintenance, rebuild off-peak on drift).
-    A small feed that never reaches ``vector_cells`` upserts is
-    force-flushed by the daemon watchdog (trained < configured is
+    configured cell count, so a trickle feed's 1-2-doc first batch does
+    not freeze a 1-2-cell quantizer. The flush trains on the buffered
+    latest versions, ingests the buffer as one batch, and freezes the
+    quantizer. A small feed that never reaches ``vector_cells`` upserts
+    is force-flushed by the daemon watchdog (trained < configured is
     then surfaced as ``quantizer_degraded`` in `/_status`)."""
-    from couch_to_postgres_spark.operators.cdc import filtered_latest
-    from couch_to_postgres_spark.streaming.meta_io import read_meta_rows
-    from couch_to_postgres_spark.streaming.vector_stream import (
-        _pending_path,
-        _quantizer_path,
-        append_pending,
-        flush_pending,
-        vector_index_batch,
-    )
-
-    spark = batch.sparkSession
-    lat = filtered_latest(batch, type_filter)
-    doc = F.col("doc")
-    if map_hook is not None:
-        doc = map_hook(doc)
+    spark = latest.sparkSession
     emb = F.from_json(
-        F.get_json_object(doc, vector_field), "array<double>"
+        F.get_json_object(F.col("doc"), vector_field), "array<double>"
     )
-    changes = lat.select(
-        F.col("seq").cast("long").alias("seq"),
-        F.col("id").alias("vec_id"),
+    changes = latest.select(
+        "seq",
+        F.col("doc_id").alias("vec_id"),
         # field-less upserts tombstone (never silently skip: the doc's
         # OLD vector would otherwise stay live in the index forever)
-        (F.col("deleted").cast("boolean") | emb.isNull()).alias("deleted"),
-        F.when(F.col("deleted").cast("boolean"), F.lit(None).cast(
-            "array<double>"
-        )).otherwise(emb).alias("embedding"),
+        (F.col("deleted") | emb.isNull()).alias("deleted"),
+        F.when(F.col("deleted"), F.lit(None).cast("array<double>"))
+        .otherwise(emb)
+        .alias("embedding"),
     )
     # the whole route decision runs under the index's path lock: the
-    # daemon watchdog's force-flush (flush_pending) can otherwise init
-    # the quantizer and retire the pending dir BETWEEN this thread's
-    # quantizer check and its append, sweeping the appended rows away
-    # un-ingested (ADVICE r11). The lock is reentrant, so the inner
-    # append/flush/batch calls re-acquire it safely.
-    with writing(vector_index_path):
-        if not read_meta_rows(spark, _quantizer_path(vector_index_path)):
-            buffered = append_pending(spark, vector_index_path, changes)
+    # watchdog's force-flush can otherwise init the quantizer and retire
+    # the pending dir between this thread's quantizer check and its
+    # append, sweeping the appended rows away un-ingested. The lock is
+    # reentrant, so the inner append/flush/batch calls re-acquire it.
+    with writing(path):
+        if not read_meta_rows(spark, vector_stream._quantizer_path(path)):
+            buffered = vector_stream.append_pending(spark, path, changes)
             if buffered >= 0:
                 if buffered >= int(vector_cells):
-                    flush_pending(
-                        spark, vector_index_path, n_cells=int(vector_cells)
+                    vector_stream.flush_pending(
+                        spark, path, n_cells=int(vector_cells)
                     )
                 return
             # -1: a concurrent flush initialized the index after our
             # check — fall through to the post-init ingest path
         # at-least-once recovery: a crash between quantizer init and the
         # pending ingest leaves the buffer behind — drain it first
-        if os.path.isdir(_pending_path(vector_index_path)):
-            flush_pending(
-                spark, vector_index_path, n_cells=int(vector_cells)
-            )
-        vector_index_batch(spark, vector_index_path, changes)
+        if os.path.isdir(vector_stream._pending_path(path)):
+            vector_stream.flush_pending(spark, path, n_cells=int(vector_cells))
+        vector_stream.vector_index_batch(spark, path, changes)
+
+
+@dataclass(frozen=True)
+class Twin:
+    """One index twin of the mirror, kept in step with it from the same
+    micro-batches."""
+
+    #: prefix of the watchdog's ``<name>_compacted`` result key
+    name: str
+    #: FeedConfig flag, `/_status` and `/_fsck` key; ``follow`` takes
+    #: the index root as ``<flag>_path``
+    flag: str
+    #: storage directory under the daemon's ``data_root``
+    directory: str
+    #: ``(latest, path, **options)``: one micro-batch into the index
+    feed: Callable[..., None]
+    status: Callable[[SparkSession, str], dict]
+    #: the debt-triggered fold the watchdog runs
+    fold: Callable[[SparkSession, str], dict]
+    fsck: Callable[[SparkSession, str], dict]
+    #: fold telemetry the watchdog reports after ``debt``
+    fold_fields: tuple[str, ...]
+
+
+_LSM_FOLD_FIELDS = (
+    "mode", "affected_pairs", "affected_buckets", "total_buckets",
+    "churned_docs",
+)
+
+TWINS: tuple[Twin, ...] = (
+    Twin(
+        "search", "search_index", "search", _feed_search,
+        lambda spark, p: search_stream.index_status(spark, p),
+        lambda spark, p: search_stream.compact_index_incremental(spark, p),
+        lambda spark, p: search_stream.search_index_fsck(spark, p),
+        _LSM_FOLD_FIELDS,
+    ),
+    Twin(
+        "shingle", "shingle_index", "shingles", _feed_shingle,
+        lambda spark, p: search_stream.index_status(spark, p),
+        # no MaxScore impact layer: fingerprint tokens are probed by
+        # equality, never BM25-ranked, and the impact layer is the
+        # dominant write cost of a fold
+        lambda spark, p: search_stream.compact_index_incremental(
+            spark, p, impacts_default=False
+        ),
+        lambda spark, p: search_stream.search_index_fsck(spark, p),
+        _LSM_FOLD_FIELDS,
+    ),
+    Twin(
+        "vector", "vector_index", "vectors", _feed_vector,
+        lambda spark, p: vector_stream.vector_index_status(spark, p),
+        lambda spark, p: vector_stream.compact_vector_index_incremental(
+            spark, p
+        ),
+        lambda spark, p: vector_stream.vector_index_fsck(spark, p),
+        ("mode", "n_live", "churned_docs", "affected_cells", "total_cells"),
+    ),
+)
+
+
+def _twin_feeds(
+    paths: dict[str, str | None], **options
+) -> list[Callable[[DataFrame], None]]:
+    """The per-batch feeds, in table order, of the twins whose index
+    root in ``paths`` (keyed by twin name) is set, each bound to its
+    root and the feed options."""
+    return [
+        partial(t.feed, path=paths[t.name], **options)
+        for t in TWINS
+        if paths[t.name] is not None
+    ]
 
 
 def _start_merge(
@@ -233,28 +278,17 @@ def _start_merge(
     type_filter: str | None,
     map_hook: Callable[[Column], Column] | None,
     num_buckets: int | None,
-    search_index_path: str | None,
-    search_text: Callable[[Column], Column] | None,
-    shingle_index_path: str | None,
-    shingle_n: int,
-    vector_index_path: str | None,
-    vector_field: str,
-    vector_cells: int,
+    feeds: list[Callable[[DataFrame], None]],
 ) -> StreamingQuery:
     """Start the replication query over ``stream``: each micro-batch
-    merges into the partitioned mirror and feeds the flagged index
-    twins. The one writer behind :func:`follow` and
-    :func:`follow_couch`, which differ only in the stream they build
-    and in ``follow``'s quarantine split."""
-    indexed = (
-        search_index_path is not None
-        or shingle_index_path is not None
-        or vector_index_path is not None
-    )
+    merges into the partitioned mirror, then runs the twin ``feeds``
+    over one per-key latest frame. The one writer behind :func:`follow`
+    and :func:`follow_couch`, which differ only in the stream they
+    build and in ``follow``'s quarantine split."""
 
     def _merge(batch: DataFrame, epoch_id: int) -> None:
         raw = None
-        if quarantine_path is not None or indexed:
+        if quarantine_path is not None or feeds:
             # the quarantine split and the index feeds re-run the batch
             # source on top of the mirror merge's own actions (and
             # search_index_batch itself runs several) — persist once so
@@ -286,21 +320,10 @@ def _start_merge(
                 type_filter=type_filter,
                 map_hook=map_hook,
             )
-            if search_index_path is not None:
-                _feed_search_index(
-                    batch, search_index_path, type_filter, map_hook,
-                    search_text,
-                )
-            if shingle_index_path is not None:
-                _feed_shingle_index(
-                    batch, shingle_index_path, type_filter, map_hook,
-                    search_text, shingle_n=shingle_n,
-                )
-            if vector_index_path is not None:
-                _feed_vector_index(
-                    batch, vector_index_path, type_filter, map_hook,
-                    vector_field=vector_field, vector_cells=vector_cells,
-                )
+            if feeds:
+                latest = _latest_docs(batch, type_filter, map_hook)
+                for feed in feeds:
+                    feed(latest)
         finally:
             # unpersist the RAW batch: the upsert only unpersists its
             # own (filtered) child, so without this a processingTime
@@ -366,13 +389,13 @@ def follow(
     max-seq.
 
     ``shingle_index_path`` maintains the decontamination SHINGLE index
-    the same way (``_feed_shingle_index``: the identical change frame
-    through ``stats_stream.shingle_changes``), so benchmark
-    decontamination reads live index state instead of re-shingling the
-    mirror per run; ``shingle_n`` picks the fingerprinted n-gram width
-    and is recorded in the index so mismatched readers fail loudly.
+    the same way (the identical text through
+    ``stats_stream.shingle_changes``), so benchmark decontamination
+    reads live index state instead of re-shingling the mirror per run;
+    ``shingle_n`` picks the fingerprinted n-gram width and is recorded
+    in the index so mismatched readers fail loudly.
     ``vector_index_path`` maintains the IVF vector twin from the
-    embedding at ``vector_field`` (``_feed_vector_index``).
+    embedding at ``vector_field``, training ``vector_cells`` cells.
 
     ``trigger`` defaults to ``availableNow`` (drain-and-stop, the batch
     catch-up mode); pass ``{"processingTime": "20 seconds"}`` for the
@@ -394,8 +417,12 @@ def follow(
     return _start_merge(
         stream, mirror_path, checkpoint_path, trigger, query_name,
         quarantine_path, type_filter, map_hook, num_buckets,
-        search_index_path, search_text, shingle_index_path, shingle_n,
-        vector_index_path, vector_field, vector_cells,
+        _twin_feeds(
+            {"search": search_index_path, "shingle": shingle_index_path,
+             "vector": vector_index_path},
+            search_text=search_text, shingle_n=shingle_n,
+            vector_field=vector_field, vector_cells=vector_cells,
+        ),
     )
 
 
@@ -461,8 +488,12 @@ def follow_couch(
     return _start_merge(
         reader.load(), mirror_path, checkpoint_path, trigger, query_name,
         None, type_filter, map_hook, num_buckets,
-        search_index_path, search_text, shingle_index_path, shingle_n,
-        vector_index_path, vector_field, vector_cells,
+        _twin_feeds(
+            {"search": search_index_path, "shingle": shingle_index_path,
+             "vector": vector_index_path},
+            search_text=search_text, shingle_n=shingle_n,
+            vector_field=vector_field, vector_cells=vector_cells,
+        ),
     )
 
 

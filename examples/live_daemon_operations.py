@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import threading
@@ -138,6 +139,13 @@ class TinyCouch:
 def main() -> None:
     spark = get_spark(app_name="live-daemon-example", cpus=8)
     work = tempfile.mkdtemp(prefix="live_daemon_")
+    try:
+        _walkthrough(spark, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _walkthrough(spark, work: str) -> None:
     couch = TinyCouch()
     couch.queue_changes([
         {"_id": f"doc{i}", "_rev": f"1-{i:08x}", "kind": "article", "words": i * 10}

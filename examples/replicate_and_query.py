@@ -11,6 +11,7 @@ Run: python examples/replicate_and_query.py [sf_dir]
 """
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -31,7 +32,13 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="example")
     work = tempfile.mkdtemp(prefix="example_")
+    try:
+        _walkthrough(spark, sf_dir, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
+
+def _walkthrough(spark, sf_dir: str, work: str) -> None:
     # 1. a change log (in production: pipeline.follow_couch reads a live
     #    CouchDB _changes feed through the format("couchdb") source)
     changes = changes_from_events(spark, sf_dir)

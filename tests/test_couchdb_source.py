@@ -83,6 +83,41 @@ def test_stream_to_mirror_with_resume(spark, couch, tmp_path):
     assert '"2-z"' in state2["a"]  # the rev-2 update applied
 
 
+def test_follow_couch_registers_the_source_once_per_session(
+    spark, couch, tmp_path, monkeypatch
+):
+    """A restarted feed reuses its session's ``couchdb`` registration:
+    two ``follow_couch`` starts in one session register the source once
+    (a second registration replaces the first and makes Spark log a
+    WARN)."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, ds):
+        calls.append(ds.name())
+        return real(self, ds)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    # a session with no registration yet, made active: Spark checks a
+    # new name against the active session's sources too
+    session = spark.newSession()
+    jvm_sessions = spark._jvm.org.apache.spark.sql.SparkSession
+    jvm_sessions.setActiveSession(session._jsparkSession)
+    try:
+        for pages in ([PAGES[0]], [PAGES[1]]):
+            couch.changes_pages = pages
+            follow_couch(
+                session, couch.url, "db",
+                str(tmp_path / "mirror"), str(tmp_path / "ckpt"),
+            ).awaitTermination(120)
+    finally:
+        jvm_sessions.setActiveSession(spark._jsparkSession)
+    assert calls == ["couchdb"]
+    mirror = read_mirror(session, str(tmp_path / "mirror"))
+    assert {r["id"] for r in mirror.collect()} == {"a", "b"}
+
 def _vec_doc(i, rev, text, emb):
     doc = {"_id": f"d{i}", "_rev": rev, "text": text}
     if emb is not None:

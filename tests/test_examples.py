@@ -4,6 +4,7 @@ own SparkSession in a subprocess, so these are true from-scratch drives of
 the public API surface — exactly what a reader would paste into a shell."""
 
 import os
+import re
 import subprocess
 import sys
 
@@ -37,11 +38,11 @@ def test_every_example_has_a_smoke_entry():
 
 
 @pytest.mark.parametrize("script,argv,env", EXAMPLES, ids=lambda v: v if isinstance(v, str) else "")
-def test_example_runs_clean(script, argv, env):
+def test_example_runs_clean(script, argv, env, tmp_path):
     proc = subprocess.run(
         [sys.executable, script, *argv],
         cwd=REPO,
-        env={**os.environ, **env},
+        env={**os.environ, **env, "TMPDIR": str(tmp_path)},
         capture_output=True,
         text=True,
         timeout=600,
@@ -51,3 +52,8 @@ def test_example_runs_clean(script, argv, env):
         f"--- stdout tail ---\n{proc.stdout[-2000:]}\n"
         f"--- stderr tail ---\n{proc.stderr[-2000:]}"
     )
+    # the example removes every work directory it made
+    with open(os.path.join(REPO, script)) as f:
+        prefixes = re.findall(r'mkdtemp\(prefix="([^"]+)"\)', f.read())
+    left = [n for n in os.listdir(tmp_path) if n.startswith(tuple(prefixes))]
+    assert not left, f"{script} left its work directories: {left}"

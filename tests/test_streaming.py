@@ -19,6 +19,7 @@ from couch_to_postgres_spark.sources.changes import (
 from couch_to_postgres_spark.streaming.daemon import (
     Daemon,
     FeedConfig,
+    load_registry,
     save_registry,
     serve_control_plane,
     set_feed_enabled,
@@ -253,6 +254,29 @@ def test_fsck_reports_absent_mirror_without_layout(spark, tmp):
     d = Daemon(spark, f"{tmp}/registry.json", f"{tmp}/data")
     assert d.fsck() == {"fresh": {"ok": None}}
 
+
+def test_save_registry_crash_keeps_previous_registry(tmp, monkeypatch):
+    """A save that dies partway through writing the JSON leaves the
+    previous registry loadable and unchanged: the rows go to a dot-temp
+    file, and only ``os.replace`` makes them live."""
+    path = f"{tmp}/registry.json"
+    before = [FeedConfig(name="feed-a", changes_path=f"{tmp}/log")]
+    save_registry(path, before)
+    with open(path) as f:
+        raw = f.read()
+
+    def dump_then_die(obj, fp, **kwargs):
+        fp.write(json.dumps(obj, **kwargs)[:20])
+        fp.flush()
+        raise OSError("write failed")
+
+    monkeypatch.setattr(json, "dump", dump_then_die)
+    with pytest.raises(OSError, match="write failed"):
+        set_feed_enabled(path, "feed-a", False)
+    monkeypatch.undo()
+    with open(path) as f:
+        assert f.read() == raw
+    assert load_registry(path) == before
 
 def test_follow_default_sink_is_partitioned(spark, sf_dir, tmp):
     """follow() without sink args lands the mirror in the bucket-

@@ -520,7 +520,8 @@ def test_field_removal_tombstones_stale_vector(spark, tmp_path):
     import json
 
     from couch_to_postgres_spark.streaming.pipeline import (
-        _feed_vector_index,
+        _feed_vector,
+        _latest_docs,
     )
 
     p = str(tmp_path / "field_idx")
@@ -537,7 +538,7 @@ def test_field_removal_tombstones_stale_vector(spark, tmp_path):
     ]
     # a never-embedded doc rides the same feed from the start
     docs.append((7, "7", False, json.dumps({"title": "plain"})))
-    _feed_vector_index(batch(docs), p, None, None, vector_cells=4)
+    _feed_vector(_latest_docs(batch(docs), None, None), p, vector_cells=4)
     q = spark.createDataFrame(
         [("q", [0.9, 0.2])], "vec_id string, embedding array<double>"
     )
@@ -547,9 +548,12 @@ def test_field_removal_tombstones_stale_vector(spark, tmp_path):
     }
     assert first == {str(i) for i in V0}
     # doc 1 updated WITHOUT the field -> must disappear from results
-    _feed_vector_index(
-        batch([(10, "1", False, json.dumps({"title": "no vec"}))]),
-        p, None, None, vector_cells=4,
+    _feed_vector(
+        _latest_docs(
+            batch([(10, "1", False, json.dumps({"title": "no vec"}))]),
+            None, None,
+        ),
+        p, vector_cells=4,
     )
     second = {
         r["neighbor_id"]
